@@ -114,10 +114,10 @@ object Sql {
     // count is exact (written by the committer that just produced the
     // files), and it replaces a whole Spark count job per mutation —
     // stream_merge_upsert pays that job once per micro-batch (round-13).
-    val n = {
+    val n = scala.util.Using.resource(Files.list(staging)) { listing =>
       import scala.jdk.CollectionConverters._
       val conf = spark.sessionState.newHadoopConf()
-      Files.list(staging).iterator().asScala
+      listing.iterator().asScala
         .filter(p => p.getFileName.toString.startsWith("part-") &&
                      p.getFileName.toString.endsWith(".parquet"))
         .map { p =>

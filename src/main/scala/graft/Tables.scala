@@ -17,17 +17,12 @@ object Tables {
 
   def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
-  // Memoize the DataFrame per (session, dir, table): building one creates a
-  // fresh InMemoryFileIndex (file listing + footer read), which ~100
+  // Memoized per (session, dir, table) in `Artifacts`: building one creates
+  // a fresh InMemoryFileIndex (file listing + footer read), which ~100
   // queries would otherwise repeat per table. Plans are immutable, so
   // sharing the object across queries is safe.
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // lazily evict entries of stopped sessions so the cache can't pin them
-    cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    cache.computeIfAbsent((spark, sfDir, name), { _ =>
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    Artifacts.memo(("table", spark, sfDir, name)) {
       // Spark 4 routes lower()/upper() under UTF8_BINARY through ICU case
       // mappings; CollationAwareUTF8String's static init costs tens of
       // executor-CPU-seconds once per JVM (measured 17-32 s wall on the
@@ -38,22 +33,15 @@ object Tables {
       spark.conf.set("spark.sql.icu.caseMappings.enabled", "false")
       if (name == "events") loadEvents(spark, sfDir)
       else spark.read.parquet(path(sfDir, name))
-    })
-  }
+    }
 
   // Memoized table row counts per (session, dir, table). The graph keys
   // size their minted graph modulus from |documents|, and each used to run
   // its own count job — at 400 queries that's dozens of redundant scans
   // per bench run (round-9 verdict item 7). The fixtures are immutable
   // for a session, so one count per (session, sf) is exact.
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Long]()
-
-  def rowCount(spark: SparkSession, sfDir: String, name: String): Long = {
-    countCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    countCache.computeIfAbsent((spark, sfDir, name),
-      _ => apply(spark, sfDir, name).count())
-  }
+  def rowCount(spark: SparkSession, sfDir: String, name: String): Long =
+    Artifacts.memo(("rowcount", spark, sfDir, name))(apply(spark, sfDir, name).count())
 
   /** Temp dirs removed recursively at JVM exit — `File.deleteOnExit` cannot
     * delete non-empty directories, so roundtrip/sink queries would leak a

@@ -209,6 +209,8 @@ case class EuclideanToConst(child: Expression, b: Array[Double])
     math.sqrt(acc)
   }
 
+  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("euclideanToConst", this,
       classOf[EuclideanToConst].getName)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Decl, Tables}
+import graft.{Artifacts, Decl, Tables}
 import graft.functions.{TextOps, VectorOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -287,7 +287,7 @@ object PipelineExt {
         // gates); centroids are 6-dp-rounded doubles cast to float and
         // cells are integers, so the parquet round-trip is bit-identical
         // to the localCheckpoints it replaces.
-        val ivfRoot = VecIndex.ensure("ivf", d) { root =>
+        val ivfRoot = Artifacts.dir("vecidx_ivf", d) { root =>
           var cent = ivfCentroidOf(
             emb.join(broadcast(ivfLabelSeed(s, d)), "label")
               .select(col("cid"), col("embedding")))

@@ -470,21 +470,15 @@ object AnnIndex {
   * (PairIndexSpec exercises the fallback with synthetic ≥ 2³¹ ids).
   */
 object PairIndex {
-  import graft.Tables
+  import graft.{Artifacts, Tables}
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions._
 
   val MaxPartDf = 40
-  private val dirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** build counter — the spec's one-build-serves-all gate */
-  private[graft] val builds = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Build-if-absent; computeIfAbsent makes concurrent consumers (Verify
-    * runs 4 queries at once) wait on ONE build. */
   private def ensure(s: SparkSession, d: String): String =
-    dirs.computeIfAbsent(d, _ => {
+    Artifacts.dir("pairidx", d) { root =>
       val n = s.sparkContext.defaultParallelism
-      val root = Tables.scratchDir("graft_pairidx").toString
       val edges = Tables(s, d, "orders")
         .join(Tables(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
@@ -511,9 +505,7 @@ object PairIndex {
         idr.isNullAt(0) || (idr.getLong(0) >= 0 && idr.getLong(1) < (1L << 31))
       buildPairs(e, cType, packed).write.parquet(s"$root/pairs")
       e.unpersist()
-      builds.incrementAndGet()
-      root
-    })
+    }
 
   /** The per-pair aggregation pipeline over the df-capped edge table
     * `e(c, p, df)`. The stored table is pre-aggregated PER PAIR (round-12
@@ -579,28 +571,20 @@ object PairIndex {
   * no cartesian), so the scale shape is unchanged — it just runs once.
   */
 object ShingleIndex {
-  import graft.Tables
+  import graft.Artifacts
   import org.apache.spark.sql.{DataFrame, SparkSession}
-
-  private val dirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** build counter — the spec's one-build-serves-all gate */
-  private[graft] val builds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private def ensure(s: SparkSession, d: String): String =
-    dirs.computeIfAbsent(d, _ => {
-      val root = Tables.scratchDir("graft_shingleidx").toString
-      val (base, cached) = PipelineExt.ngramIntersectionsLazy(s, d)
-      base.write.parquet(s"$root/inter")
-      cached.foreach(_.unpersist())
-      builds.incrementAndGet()
-      root
-    })
 
   /** The (id_a < id_b, n, sa, sb) pair universe within (lang, source)
     * groups: n = |shared df-capped shingles|, sa/sb = kept-shingle set
     * sizes of each side. */
-  def intersections(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensure(s, d)}/inter")
+  def intersections(s: SparkSession, d: String): DataFrame = {
+    val root = Artifacts.dir("shingleidx", d) { r =>
+      val (base, cached) = PipelineExt.ngramIntersectionsLazy(s, d)
+      base.write.parquet(s"$r/inter")
+      cached.foreach(_.unpersist())
+    }
+    s.read.parquet(s"$root/inter")
+  }
 }
 
 /** Shared VECTOR-INDEX warehouse for the ANN ladder — the trained
@@ -610,8 +594,8 @@ object ShingleIndex {
   * integer-quantized dimension table they all start from, each built
   * ONCE per (JVM, sf dir) and probed by every consumer (the
   * PairIndex/ShingleIndex precedent; round-12 verdict item 5). The
-  * builders live next to their keys — this object only owns the
-  * build-once machinery and the shared quantized table.
+  * builders live next to their keys (`Artifacts.dir("vecidx_<family>")`)
+  * — this object only owns the shared quantized table.
   *
   * Every artifact is exact under a parquet round-trip: the PQ/IVFPQ
   * trainings are integer arithmetic end to end, and the IVF centroids
@@ -620,32 +604,15 @@ object ShingleIndex {
   * stashed pre-change dumps at sf0.01 and sf0.1).
   */
 object VecIndex {
-  import graft.Tables
+  import graft.Artifacts
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions._
-
-  private val dirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-  /** artifact-build counter — the spec's one-build-serves-all gate */
-  private[graft] val builds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Build-if-absent for one named artifact family; computeIfAbsent makes
-    * concurrent consumers (Verify runs 4 queries at once) wait on ONE
-    * build. `build` receives the fresh scratch root to write into. */
-  private[graft] def ensure(artifact: String, d: String)
-                           (build: String => Unit): String =
-    dirs.computeIfAbsent((artifact, d), { _ =>
-      val root = Tables.scratchDir(s"graft_vecidx_$artifact").toString
-      build(root)
-      builds.incrementAndGet()
-      root
-    })
 
   /** The integer-quantized (vec_id, s_id, i, x) dimension table — the
     * substrate both PQ trainings start from, stored once instead of
     * localCheckpoint-ed per key. */
   private[graft] def quantized(s: SparkSession, d: String): DataFrame = {
-    val root = ensure("q", d) { r =>
+    val root = Artifacts.dir("vecidx_q", d) { r =>
       Round9.quantized(s, d).withColumn("s_id", expr("i div 8"))
         .write.parquet(s"$r/q")
     }

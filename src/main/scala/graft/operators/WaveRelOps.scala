@@ -2296,7 +2296,7 @@ object Round8b {
   * source mix, and an exact rolling median window.
   */
 object Round9b {
-  import graft.{Decl, Tables}
+  import graft.{Artifacts, Decl, Tables}
   import org.apache.spark.sql.expressions.Window
   import org.apache.spark.sql.functions._
 
@@ -2679,7 +2679,7 @@ object Round9b {
         // below is byte-for-byte the former inline code over the stored
         // quantized table; all values are exact integers, so the parquet
         // round-trip is bit-identical to the localCheckpoint it replaces.
-        val pqRoot = VecIndex.ensure("pq", d) { root =>
+        val pqRoot = Artifacts.dir("vecidx_pq", d) { root =>
           val q = VecIndex.quantized(s, d)
           // --- codebook training: per-subspace k=4 Lloyd, 2 iterations
           val seeds = Tables(s, d, "embeddings")

@@ -205,19 +205,15 @@ object Round11i {
   // pair packing? One tiny min/max aggregate per session — the one-time
   // guard that keeps a fixture regeneration from silently corrupting
   // decoded pairs (round-13 verdict item 7).
-  private val idRangeCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), java.lang.Boolean]()
   private[graft] def plantedIdsPacked(s: org.apache.spark.sql.SparkSession,
-                                      d: String): Boolean = {
-    idRangeCache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    idRangeCache.computeIfAbsent((s, d), { _ =>
+                                      d: String): Boolean =
+    graft.Artifacts.memo(("planted_ids_packed", s, d)) {
       val r = Tables(s, d, "embeddings")
         .agg(min(col("vec_id").cast("bigint")).as("mn"),
-             max(col("vec_id").cast("bigint")).as("mx")).head
+             max(col("vec_id").cast("bigint")).as("mx")).head()
       r.isNullAt(0) ||
         (r.getLong(0) >= 0L && r.getLong(1) + 1000000L < (1L << 31))
-    })
-  }
+    }
 
   val decls: Map[String, Decl] = Map(
     // Multiprobe SRP-LSH pair retrieval at cosine >= 0.90 over the PLANTED

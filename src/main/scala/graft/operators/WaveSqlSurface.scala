@@ -11,7 +11,7 @@ package graft.operators
   * estimate.
   */
 object Round10hh {
-  import graft.{Decl, Tables}
+  import graft.{Artifacts, Decl, Tables}
   import org.apache.spark.sql.functions._
 
 
@@ -129,7 +129,7 @@ object Round10hh {
         // the former inline code over the shared stored quantized table;
         // everything is exact integers, so the parquet round-trip is
         // bit-identical to the localCheckpoints it replaces.
-        val pqRoot = VecIndex.ensure("ivfpq", d) { root =>
+        val pqRoot = Artifacts.dir("vecidx_ivfpq", d) { root =>
           val q = VecIndex.quantized(s, d)
           val seeds = Tables(s, d, "embeddings")
             .select(col("vec_id")).orderBy("vec_id").limit(4)

@@ -3392,15 +3392,14 @@ object Round11p {
         // checkpoint the rest of the quantile family took is NOT available
         // here — the grid recompute is the price of the laziness contract.
         val counts = cal.groupBy("resc").agg(count(lit(1)).as("cnt"))
-        val kk = counts.agg(sum(col("cnt")).as("n_cal"))
+        val kk = counts.agg(coalesce(sum(col("cnt")), lit(0L)).as("n_cal"))
           .withColumn("k",
             ceil(lit(0.9) * (col("n_cal") + 1)).cast("bigint"))
         val qhat = PrefixSum.cumsumLong(counts, Seq(col("resc").asc),
                                         col("cnt"), "cum")
           .crossJoin(broadcast(kk))
           .filter(col("cum") >= col("k"))
-          .agg(min(col("resc")).as("qhat_cents"),
-               first(col("n_cal")).as("n_cal"))
+          .agg(min(col("resc")).as("qhat_cents"))
         // held-out coverage: P(|residual| <= qhat) on the test split
         val test = li.filter(col("split") === 2)
           .crossJoin(broadcast(fit))
@@ -3408,10 +3407,12 @@ object Round11p {
                         .cast("bigint")).as("resc"))
         test.crossJoin(broadcast(qhat))
           .agg(first(col("qhat_cents")).as("qhat_cents"),
-               first(col("n_cal")).as("n_cal"),
                count(lit(1)).as("n_test"),
                sum(when(col("resc") <= col("qhat_cents"), 1L).otherwise(0L))
                  .as("covered"))
+          // n_cal from the one-row total: the quantile filter's rows are
+          // empty whenever k > n_cal, e.g. on an empty calibration set
+          .crossJoin(broadcast(kk))
           .crossJoin(broadcast(fit))
           .select(col("n_cal"), col("n_test"),
                   round(col("slope"), 6).as("slope"),

@@ -21,19 +21,20 @@ class PairIndexSpec extends AnyFunSuite {
     .getOrCreate()
 
   private val sf = "/root/testdata/sf0.001"
+  private def builds = Artifacts.builds.count(_._1 == ("dir", "pairidx", sf).toString)
 
   test("one build serves adamic-adar, jaccard, and direct probes") {
-    val before = graft.operators.PairIndex.builds.get()
+    val before = builds
     val aa = SparkEntry.queries("graph_adamic_adar")(spark, sf).collect()
     val jn = SparkEntry.queries("graph_jaccard_neighbors")(spark, sf).collect()
     val d = graft.operators.PairIndex.deg(spark, sf).count()
     assert(aa.nonEmpty && jn.nonEmpty && d > 0)
-    val after = graft.operators.PairIndex.builds.get()
+    val after = builds
     assert(after - before <= 1,
            s"the pair exchange must be built at most once, built ${after - before}")
     // and the second consumer never re-derived it: the index dir serves
     graft.operators.PairIndex.pairs(spark, sf) // must not rebuild
-    assert(graft.operators.PairIndex.builds.get() == after)
+    assert(builds == after)
   }
 
   test("stored pair aggregates equal the reference self-join, ids keep their type") {

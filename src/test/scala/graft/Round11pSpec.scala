@@ -108,4 +108,16 @@ class Round11pSpec extends AnyFunSuite {
       assert(df.columns.contains("qhat_cents")) // still a live plan
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  test("agg_conformal_interval reports n_cal = 0 on an empty calibration set") {
+    // a schema-only copy of lineitem: every split, calibration included,
+    // is empty, so n_cal must be the integer 0, never NULL
+    val d = Tables.scratchDir("graft_empty_lineitem").toString
+    Tables(spark, sf, "lineitem").limit(0).write.parquet(s"$d/lineitem.parquet")
+    val r = SparkEntry.queries("agg_conformal_interval")(spark, d).collect()
+    assert(r.length == 1)
+    assert(!r(0).isNullAt(0) && r(0).getLong(0) == 0L,
+           s"n_cal on an empty calibration set: ${r(0).get(0)}")
+    assert(r(0).getLong(1) == 0L) // n_test
+  }
 }

@@ -20,18 +20,19 @@ class ShingleIndexSpec extends AnyFunSuite {
     .getOrCreate()
 
   private val sf = "/root/testdata/sf0.001"
+  private def builds = Artifacts.builds.count(_._1 == ("dir", "shingleidx", sf).toString)
 
   test("one build serves jaccard, containment, and connected components") {
-    val before = graft.operators.ShingleIndex.builds.get()
+    val before = builds
     val nj = SparkEntry.queries("dedup_ngram_jaccard")(spark, sf).collect()
     val ct = SparkEntry.queries("dedup_containment")(spark, sf).count()
     val cc = SparkEntry.queries("dedup_connected_components")(spark, sf).collect()
     assert(nj.nonEmpty && cc.nonEmpty && ct >= 0)
-    val after = graft.operators.ShingleIndex.builds.get()
+    val after = builds
     assert(after - before <= 1,
            s"the shingle intersection core must build at most once, built ${after - before}")
     graft.operators.ShingleIndex.intersections(spark, sf) // must not rebuild
-    assert(graft.operators.ShingleIndex.builds.get() == after)
+    assert(builds == after)
   }
 
   test("stored intersections equal the lazy builder's output exactly") {

@@ -157,7 +157,7 @@ class SketchParitySpec extends AnyFunSuite {
     assert(self.count() == 0, "self-intersection must equal the set size")
   }
 
-  test("EuclideanToConst equals the zip_with+aggregate fold bit-for-bit") {
+  private def euclideanToConstParity(): Unit = {
     // the k-center greedy pass's distance — against a real fixture vector
     // (the seed) and an arbitrary constant; equality is EXACT doubles
     val emb = Tables(spark, sf, "embeddings").select(col("vec_id"), col("embedding"))
@@ -174,5 +174,17 @@ class SketchParitySpec extends AnyFunSuite {
       assert(diverging.count() == 0,
         "euclidean_to_const diverges from the HOF fold")
     }
+  }
+
+  test("EuclideanToConst equals the zip_with+aggregate fold bit-for-bit") {
+    euclideanToConstParity()
+  }
+
+  test("EuclideanToConst parity holds under interpreted (NO_CODEGEN) execution") {
+    val confs = Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+                    "spark.sql.codegen.wholeStage" -> "false")
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try euclideanToConstParity()
+    finally confs.foreach { case (k, _) => spark.conf.unset(k) }
   }
 }

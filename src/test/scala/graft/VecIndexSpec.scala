@@ -25,14 +25,17 @@ class VecIndexSpec extends AnyFunSuite {
     .getOrCreate()
 
   private val sf = "/root/testdata/sf0.001"
+  private val families =
+    Set("q", "pq", "ivfpq", "ivf").map(f => ("dir", s"vecidx_$f", sf).toString)
+  private def builds = Artifacts.builds.count(b => families(b._1))
 
   test("one build serves the whole ANN ladder, twice over") {
-    val before = graft.operators.VecIndex.builds.get()
+    val before = builds
     val pq1 = SparkEntry.queries("sim_ann_pq")(spark, sf).collect()
     val ivfpq1 = SparkEntry.queries("sim_ann_ivfpq_residual")(spark, sf).collect()
     val ivf1 = SparkEntry.queries("sim_ann_ivf")(spark, sf).collect()
     assert(pq1.nonEmpty && ivfpq1.nonEmpty && ivf1.nonEmpty)
-    val afterFirst = graft.operators.VecIndex.builds.get()
+    val afterFirst = builds
     // 4 artifact families at most: q, pq, ivfpq, ivf
     assert(afterFirst - before <= 4,
            s"expected <= 4 artifact builds, saw ${afterFirst - before}")
@@ -40,7 +43,7 @@ class VecIndexSpec extends AnyFunSuite {
     val pq2 = SparkEntry.queries("sim_ann_pq")(spark, sf).collect()
     val ivfpq2 = SparkEntry.queries("sim_ann_ivfpq_residual")(spark, sf).collect()
     val ivf2 = SparkEntry.queries("sim_ann_ivf")(spark, sf).collect()
-    assert(graft.operators.VecIndex.builds.get() == afterFirst,
+    assert(builds == afterFirst,
            "a re-run re-trained an artifact instead of probing the store")
     assert(pq1.toSeq == pq2.toSeq && ivfpq1.toSeq == ivfpq2.toSeq &&
            ivf1.toSeq == ivf2.toSeq,
