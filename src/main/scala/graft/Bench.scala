@@ -3,21 +3,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Fixture tables are one parquet file each; without a minimum split
-      // count every scan pipeline runs on a single core.
-      .config("spark.sql.files.minPartitionNum", cpus)
-      // JVM (not ICU) case mappings: identical results on this data, and it
-      // skips CollationAwareUTF8String's ~20 s one-time static init
-      // (see Tables.apply).
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      // Match Verify/specs: NTZ-parquet timestamps re-tag losslessly to UTC.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm up the session (executor threads, codegen compiler, shuffle
     // machinery, broadcast thread pool, window exec, parquet file indexes)

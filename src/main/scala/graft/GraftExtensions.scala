@@ -6,11 +6,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extension entry point — wires graft's native Catalyst
-  * expressions into SQL. Enable with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.GraftExtensions`; after that
-  * `SELECT vec_dot(a.embedding, b.embedding)` works from plain SQL with the
-  * same codegen'd implementation the DataFrame API uses via
+  * expressions into SQL. Sessions built by `LocalSpark.sqlSurface` carry
+  * it; elsewhere use `--conf spark.sql.extensions=graft.GraftExtensions`.
+  * After that `SELECT vec_dot(a.embedding, b.embedding)` works from plain
+  * SQL with the same codegen'd implementation the DataFrame API uses via
   * `VectorOps.dot`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

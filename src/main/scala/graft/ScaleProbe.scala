@@ -111,14 +111,7 @@ object ScaleProbe {
     val rest = args.drop(if (tpchMode) 4 else 3).toSeq
     val keys =
       if (rest.nonEmpty) rest else if (tpchMode) tpchKeys else defaultKeys
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (tpchMode) mintTpch(spark, sfDir, workDir, factor)
     else mint(spark, sfDir, workDir, factor)

@@ -530,25 +530,8 @@ object Sql {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val warehouse = sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "spark-warehouse")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.ui.enabled", "false")
-      // cost-based optimization: ANALYZE TABLE statistics (persisted by
-      // GraftCatalog, replayed on restore) feed join reordering and better
-      // broadcast decisions — at 100 TB, stats-driven planning is the
-      // difference between a broadcast and a sort-merge of a dimension.
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      // JVM case mappings — skips ICU's one-time static-init stall, same
-      // results on this data (see Tables.apply).
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = LocalSpark.sqlSurface(warehouse).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Tables.views(spark, sfDir)
     val (tables, types) = GraftCatalog.restore(spark, warehouse)

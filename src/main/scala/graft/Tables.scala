@@ -51,12 +51,9 @@ object Tables {
     */
   private lazy val scratchRoot: java.nio.file.Path = {
     val root = java.nio.file.Files.createTempDirectory("graft_scratch_")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      try Files.walk(root).sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      catch { case _: Throwable => () }
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      try GraftCatalog.deleteRecursively(root)
+      catch { case _: Throwable => () }))
     root
   }
   private val scratchSeq = new java.util.concurrent.atomic.AtomicLong()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,16 +7,7 @@ object Verify {
     // args beyond (sfDir, outDir) narrow the dump to named queries — the
     // local single-query loop while building; the driver passes none.
     val (Array(sfDir, outDir), names) = args.splitAt(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // JVM case mappings — skips ICU's one-time static-init stall, same
-      // results on this data (see Tables.apply).
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val selected =
@@ -36,7 +26,7 @@ object Verify {
     // would unpersist another in-flight query's intermediates, forcing
     // deterministic-but-wasteful recomputes).
     val par = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "4").toInt
-    def runOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
+    def runOne(name: String, fn: Q): Unit =
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

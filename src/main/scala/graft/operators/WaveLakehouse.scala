@@ -200,7 +200,7 @@ object Round10q {
   * fit→apply pipeline (the learned transform broadcast over the scan).
   */
 object Round9n {
-  import graft.{Decl, Tables}
+  import graft.{Decl, GraftCatalog, Tables}
   import org.apache.spark.sql.functions._
 
 
@@ -218,7 +218,7 @@ object Round9n {
     // compaction, and vacuum is a pure metadata-diff + delete.
     "sink_snapshot_vacuum" -> Decl(
       (s, d) => {
-        import java.nio.file.{Files, Paths}
+        import java.nio.file.Files
         val dir = Tables.scratchDir("graft_vacuum")
         val orders = Tables(s, d, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"),
@@ -238,17 +238,15 @@ object Round9n {
         Files.writeString(dir.resolve("v2.manifest"), f3.toString)
         // retention expires v1 → live = {v2} → referenced = {f3}
         Files.delete(dir.resolve("v1.manifest"))
-        val live = Files.list(dir).iterator()
-        val referenced = scala.jdk.CollectionConverters.IteratorHasAsScala(live)
-          .asScala.filter(_.toString.endsWith(".manifest"))
-          .flatMap(m => Files.readString(m).split("\n")).toSet
+        val referenced = scala.util.Using.resource(Files.list(dir)) { live =>
+          scala.jdk.CollectionConverters.IteratorHasAsScala(live.iterator())
+            .asScala.filter(_.toString.endsWith(".manifest"))
+            .flatMap(m => Files.readString(m).split("\n")).toSet
+        }
         val removed = Seq(f1, f2, f3).count { f =>
-          if (!referenced.contains(f.toString)) {
-            // recursive delete of the parquet directory
-            Files.walk(f).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-              .forEach(p => Files.deleteIfExists(p))
-            true
-          } else false
+          val expired = !referenced.contains(f.toString)
+          if (expired) GraftCatalog.deleteRecursively(f)
+          expired
         }
         s.read.parquet(f3.toString)
           .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))

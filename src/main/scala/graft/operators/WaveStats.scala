@@ -610,7 +610,6 @@ object Round10jj {
   */
 object Round10k {
   import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
   import org.apache.spark.sql.functions._
 
 
@@ -3050,22 +3049,6 @@ object Round11d {
              |FROM lineitem WHERE l_partkey % 1000 = 7
              |GROUP BY l_partkey ORDER BY l_partkey""".stripMargin))
   )
-
-  /** Latest bloom-sink scratch dir (name sort = creation order) — for
-    * the footer-inspection spec. */
-  private[graft] def latestBloomDir(): java.nio.file.Path = {
-    val root = Tables.scratchRootForTest
-    val dirs = java.nio.file.Files.list(root).iterator()
-    var best: java.nio.file.Path = null
-    while (dirs.hasNext) {
-      val p = dirs.next()
-      if (p.getFileName.toString.startsWith("graft_bloom-") &&
-          (best == null ||
-           p.getFileName.toString > best.getFileName.toString)) best = p
-    }
-    require(best != null, "no graft_bloom scratch dir — run the key first")
-    best.resolve("li_bloom")
-  }
 }
 
 // ——— formerly Round11g.scala ———
@@ -7542,7 +7525,7 @@ object StatsWave94 {
   */
 object StatsWave99 {
   import graft.{Decl, Tables}
-  import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+  import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions._
 
   /** Shared CDF grid for the two distance keys: one PrefixSum pass over

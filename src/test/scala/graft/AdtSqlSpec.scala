@@ -1,8 +1,9 @@
 package graft
 
-import graft.adt.{Adt, AdtSql}
+import graft.adt.Adt
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The ADT SQL grammar (CREATE TYPE / constructors / MATCH) end-to-end
@@ -11,21 +12,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * typechecker's rejection behavior (the reference rejects ill-typed
   * queries before execution; so do we).
   */
-class AdtSqlSpec extends AnyFunSuite {
+class AdtSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach(_.stop())
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-  }
+  lazy val spark: SparkSession = SharedSpark.fresh(
+    LocalSpark.sqlSurface(Tables.scratchDir("graft_wh").toString, 4))
+
+  override def afterAll(): Unit = SharedSpark.release()
 
   private def declareOrderState(): Unit =
     spark.sql("CREATE TYPE OrderState = Open(priority TEXT) | Shipped(ship_date TIMESTAMP) | Returned")

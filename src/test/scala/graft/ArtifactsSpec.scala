@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * hash codes collide), concurrent callers of one key share ONE build, a
   * failed build caches nothing, and a stopped session's entries go.
   */
-class ArtifactsSpec extends AnyFunSuite {
+class ArtifactsSpec extends AnyFunSuite with SharedSpark {
 
   private def fresh(tag: String) = (s"ArtifactsSpec-$tag", System.nanoTime())
 
@@ -51,10 +51,6 @@ class ArtifactsSpec extends AnyFunSuite {
   }
 
   test("entries keyed by a stopped session are evicted") {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     val key = (fresh("evict"), spark)
     assert(Artifacts.memo(key)(1) == 1 && Artifacts.memo(key)(2) == 1)
     spark.stop()

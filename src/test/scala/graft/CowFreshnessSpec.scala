@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Copy-on-write DML freshness: a reader that LISTED the table's files
@@ -9,12 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * this spec pins that it is not — refreshByPath + the swap keep
   * fresh path reads exact).
   */
-class CowFreshnessSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CowFreshnessSpec extends AnyFunSuite with SharedSpark {
 
   test("a pre-DML reader sees the post-DML generation on a fresh read") {
     val wh = Tables.scratchDir("graft_cow_fresh").toString

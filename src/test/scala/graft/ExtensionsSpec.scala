@@ -1,24 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The SparkSessionExtensions entry point: a session built with
-  * `withExtensions(new GraftExtensions)` can call graft's native
-  * expressions from plain SQL. Runs with parallelExecution off (build.sbt)
-  * so replacing the shared default session is safe.
+/** The SparkSessionExtensions entry point: a `LocalSpark.sqlSurface`
+  * session can call graft's native expressions from plain SQL. Runs with
+  * parallelExecution off (build.sbt) so replacing the live session is safe;
+  * the session is released after the suite.
   */
-class ExtensionsSpec extends AnyFunSuite {
+class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  override def afterAll(): Unit = SharedSpark.release()
 
   test("vec_dot is callable from SQL via GraftExtensions") {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach(_.stop())
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = SharedSpark.fresh(
+      LocalSpark.sqlSurface(Tables.scratchDir("graft_wh").toString, 4))
     val d = spark.sql(
       """SELECT vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
         |               array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d""".stripMargin)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,7 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     summary reading ONLY delta + summary rows (listener-counted),
   *     and the result equals the full recompute bit for bit.
   */
-class MvRound12Spec extends AnyFunSuite
+class MvRound12Spec extends AnyFunSuite with SharedSpark
     with org.scalatest.BeforeAndAfterEach {
 
   // registrations must not leak across tests OR suites: the cost-pick
@@ -30,14 +29,6 @@ class MvRound12Spec extends AnyFunSuite
   // session (caught by a suite-order-dependent failure)
   override def beforeEach(): Unit = graft.plans.MvCatalog.clear(spark)
   override def afterEach(): Unit = graft.plans.MvCatalog.clear(spark)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.icu.caseMappings.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable
 
@@ -9,15 +7,7 @@ import scala.collection.mutable
   * driver-side Brandes (same %97 sources, same depth-4 truncation) to
   * 1e-6 on the sf0.001 and sf0.01 fixtures.
   */
-class Round10yySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.icu.caseMappings.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round10yySpec extends AnyFunSuite with SharedSpark {
 
   private def localBrandes(sf: String): Map[Long, Double] = {
     val ids = Tables(spark, sf, "documents").select("doc_id")

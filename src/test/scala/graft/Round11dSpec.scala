@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * a bloom filter for the indexed column and the lookup reconciles with
   * the base table.
   */
-class Round11dSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.icu.caseMappings.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round11dSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -72,9 +63,9 @@ class Round11dSpec extends AnyFunSuite {
     }
     // open the newest written file's footer: bloom filter offset must be
     // set for l_partkey in every row group
-    val dir = operators.Round11d.latestBloomDir()
-    val part = java.nio.file.Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
+    val dir = ScratchDirs.latestScratch("graft_bloom-").resolve("li_bloom")
+    val part = ScratchDirs.listDir(dir)
+      .filter(_.getFileName.toString.endsWith(".parquet")).head
     val conf = new org.apache.hadoop.conf.Configuration()
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -91,12 +82,6 @@ class Round11dSpec extends AnyFunSuite {
     } finally reader.close()
   }
 
-  private implicit class IterAsScala[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
-  }
   private implicit class ListAsScala[A](l: java.util.List[A]) {
     def asScala: Seq[A] = {
       val b = Seq.newBuilder[A]

@@ -1,27 +1,17 @@
 package graft
 
 import graft.streaming.StreamOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
-import java.sql.Timestamp
 
 /** Wave-64 bounds: the sliding HLL estimate is identical between the
   * MemoryStream path and the batch path (register-wise sketch merges are
   * order-independent) and within ±5% of exact distinct per window; the
   * analyzed statistics match exact counts and reach the catalog.
   */
-class Round11hSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.icu.caseMappings.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round11hSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Wave-66 bounds: the Borůvka forest equals an independent in-memory
@@ -10,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * similarity vs the plain top-10 cut. The sequential-greedy recursion
   * itself is independently replayed by the DuckDB recursive-CTE oracle.
   */
-class Round11jSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.icu.caseMappings.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round11jSpec extends AnyFunSuite with SharedSpark {
 
   /** Kruskal with union-find under lexicographic (w, a, b). */
   private def kruskal(edges: Seq[(Long, Long, Long)]): Set[(Long, Long, Long)] = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Wave-67 bounds: the FB-coloring SCC partition equals an independent
@@ -9,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * oracle is a second independent check), and Burrows' Delta is
   * symmetric-positive with self-consistent top-word grounding.
   */
-class Round11kSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.icu.caseMappings.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round11kSpec extends AnyFunSuite with SharedSpark {
 
   /** Iterative Tarjan (explicit stack — no recursion depth limit). */
   private def tarjan(n: Int, edges: Seq[(Int, Int)]): Map[Int, Int] = {

@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.{JaroWinklerSim, NfcClean}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Wave-75 bounds: the Jaro-Winkler expression reproduces the
@@ -10,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * a brute-force rescore; NFC cleanup strips every zero-width code
   * point, composes decomposed accents, and is idempotent.
   */
-class Round11sSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.icu.caseMappings.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round11sSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.01"
 

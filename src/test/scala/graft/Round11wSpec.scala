@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * method-of-moments with the mean/variance consistency identity
   * r(1−p)/p = mean.
   */
-class Round11wSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.icu.caseMappings.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round11wSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.01"
 

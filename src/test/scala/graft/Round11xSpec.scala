@@ -1,7 +1,6 @@
 package graft
 
 import java.time.{DayOfWeek, LocalDate}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Wave-80 bounds: the closed-form business-day arithmetic equals an
@@ -10,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the preceding Friday), and ORDER BY ALL produces exactly the
   * explicitly-sorted rows.
   */
-class Round11xSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.icu.caseMappings.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round11xSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.01"
 

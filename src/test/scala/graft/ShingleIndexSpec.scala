@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ShingleIndex invariants (round-12): ONE build of the df-capped shingle
@@ -9,15 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * stored pair universe equals the lazy builder's output exactly (the
   * builder plan itself stays under ScaleSpec's gates).
   */
-class ShingleIndexSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.icu.caseMappings.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ShingleIndexSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
   private def builds = Artifacts.builds.count(_._1 == ("dir", "shingleidx", sf).toString)

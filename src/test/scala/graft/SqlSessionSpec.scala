@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The long-lived SQL session surface: multi-statement scripts, and a
@@ -9,26 +10,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * CREATE TABLE / CREATE TYPE persist; this proves ours do too, with a
   * real stop-and-recreate of the SparkSession.
   */
-class SqlSessionSpec extends AnyFunSuite {
+class SqlSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def freshSession(warehouse: String): SparkSession = {
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach(_.stop())
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.ui.enabled", "false")
-      // mirror graft.Sql's session config: CBO on, so ANALYZE statistics
-      // are visible through optimizedPlan.stats (rowCount is only
-      // propagated when CBO is enabled)
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-  }
+  // graft.Sql's session: CBO on, so ANALYZE statistics are visible through
+  // optimizedPlan.stats (rowCount is only propagated when CBO is enabled)
+  private def freshSession(warehouse: String): SparkSession =
+    SharedSpark.fresh(LocalSpark.sqlSurface(warehouse, 4))
+
+  override def afterAll(): Unit = SharedSpark.release()
 
   test("splitStatements respects quotes and comments") {
     assert(Sql.splitStatements("SELECT 1; SELECT 2") == Seq("SELECT 1", "SELECT 2"))

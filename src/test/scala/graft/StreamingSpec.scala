@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.StreamOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -19,14 +18,7 @@ case class Tick(ts: Timestamp, event_id: Long, value: Double)
   * custom per-key state), plus stream==batch equivalence for the windowed
   * aggregates shared with the declared batch twins.
   */
-class StreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with SharedSpark {
 
   private val T0 = 1700000000000L
   private def ts(min: Int): Timestamp = new Timestamp(T0 + min * 60000L)
@@ -368,8 +360,8 @@ class StreamingSpec extends AnyFunSuite {
     def addFile(name: String, keys: Seq[Long]): Unit = {
       val stage = tmp.resolve(s"stage_$name")
       keys.toDF("k").coalesce(1).write.parquet(stage.toString)
-      val part = java.nio.file.Files.list(stage).filter(
-        p => p.getFileName.toString.startsWith("part-")).findFirst.get
+      val part = ScratchDirs.listDir(stage)
+        .find(_.getFileName.toString.startsWith("part-")).get
       java.nio.file.Files.move(part, src.resolve(s"$name.parquet"))
     }
     def runOnce(): Unit = {

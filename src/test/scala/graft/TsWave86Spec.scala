@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,15 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * force over all window pairs; Pettitt's CUSUM extremum equals the
   * direct double-sum definition.
   */
-class TsWave86Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.icu.caseMappings.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TsWave86Spec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.01"
 

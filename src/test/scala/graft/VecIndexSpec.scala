@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** VecIndex invariants (round-13, verdict item 5): the ANN ladder's
@@ -14,15 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rounded, so the parquet round-trip preserves every value), plus the
   * Round9Spec / Round10hhSpec recall bounds.
   */
-class VecIndexSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.icu.caseMappings.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VecIndexSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
   private val families =
