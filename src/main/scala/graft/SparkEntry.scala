@@ -2,35 +2,39 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §2 (the binding operator
-  * inventory) and §7 (build plan). Each §2 key is declared in exactly one
-  * operator module as a `Decl(query, oracleSql)`; this object only merges
-  * the registries.
+/** Driver contract — see SURVEY.md §2 (the binding operator inventory)
+  * and §7 (build plan). Each §2 key is declared once, as a
+  * `Decl(query, oracleSql)` in the `decls` of one module: ten core modules
+  * (relational, aggregates, windows, scalars, ADT, salted joins, the
+  * pipeline pair, interop, streams), `TpchRest`, and nine domain modules
+  * in `graft.operators` (Graph, Lakehouse, Mix, RelOps, Similarity,
+  * SqlSurface, Stats, Text, TimeSeries). This object only merges them.
   */
 object SparkEntry {
 
-  private def registry: Map[String, Decl] = {
-    // Core domain modules + the build-wave aggregator (Waves checks for
-    // duplicate keys; Map ++ would otherwise shadow silently). The
-    // navigable key -> domain -> file:line index is REGISTRY.md
-    // (regenerate with tools/registry.py).
-    val core: Seq[Map[String, Decl]] = Seq(
-      operators.Relational.decls,
-      operators.Aggregates.decls,
-      operators.Windows.decls,
-      functions.Scalars.decls,
-      operators.AdtQueries.decls,
-      operators.Salted.decls,
-      operators.Pipeline.decls,
-      operators.PipelineExt.decls,
-      operators.Interop.decls,
-      operators.Streams.decls)
-    val merged = core.reduce(_ ++ _) ++ operators.Waves.all
-    val n = core.map(_.size).sum + operators.Waves.all.size
-    require(merged.size == n,
-      s"duplicate query keys between core modules and waves: expected $n, got ${merged.size}")
-    merged
-  }
+  /** `declMap` fails on a key declared in two modules. REGISTRY.md
+    * (tools/registry.py) maps each key to its file:line. */
+  private lazy val registry: Map[String, Decl] = declMap(Seq(
+    operators.Relational.decls,
+    operators.Aggregates.decls,
+    operators.Windows.decls,
+    functions.Scalars.decls,
+    operators.AdtQueries.decls,
+    operators.Salted.decls,
+    operators.Pipeline.decls,
+    operators.PipelineExt.decls,
+    operators.Interop.decls,
+    operators.Streams.decls,
+    operators.TpchRest.decls,
+    operators.Graph.decls,
+    operators.Lakehouse.decls,
+    operators.Mix.decls,
+    operators.RelOps.decls,
+    operators.Similarity.decls,
+    operators.SqlSurface.decls,
+    operators.Stats.decls,
+    operators.Text.decls,
+    operators.TimeSeries.decls).flatten: _*)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The 5-way star join + aggregate — scan, broadcast dims, shuffle agg.

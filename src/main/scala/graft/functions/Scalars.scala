@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.{Decl, Tables}
+import graft.{Decl, Tables, declMap}
 import org.apache.spark.sql.functions._
 
 /** SURVEY §2.8 scalar function families — one declared query per family,
@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object Scalars {
 
-  val decls: Map[String, Decl] = Map(
+  val decls: Map[String, Decl] = declMap(
     "scalar_string" -> Decl(
       (s, d) => Tables.canon(
         Tables(s, d, "customer").select(

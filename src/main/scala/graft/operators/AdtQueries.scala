@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Decl, Tables}
+import graft.{Decl, Tables, declMap}
 import graft.adt.Adt
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -25,7 +25,7 @@ object AdtQueries {
   }
   private def state: Column = col("state")
 
-  val decls: Map[String, Decl] = Map(
+  val decls: Map[String, Decl] = declMap(
     // Construct, then deconstruct to primitives: tag + per-variant payloads.
     "adt_construct" -> Decl(
       (s, d) => Tables.canon(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Decl, Tables}
+import graft.{Decl, Tables, declMap}
 import graft.functions.WeightedAvg
 import org.apache.spark.sql.functions._
 
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 object Aggregates {
 
   // ---------------------------------------------------------------- §2.4
-  private val aggs: Map[String, Decl] = Map(
+  private val aggs: Seq[(String, Decl)] = Seq(
     // TPC-H-Q1-style pricing summary: the flagship multi-aggregate.
     "agg_groupby_pricing" -> Decl(
       (s, d) => Tables(s, d, "lineitem")
@@ -374,7 +374,7 @@ object Aggregates {
       |ORDER BY ALL NULLS FIRST""".stripMargin
 
   // ---------------------------------------------------------------- §2.6
-  private val sorts: Map[String, Decl] = Map(
+  private val sorts: Seq[(String, Decl)] = Seq(
     // Multi-column sort with an explicit nulls-first spec on a manufactured
     // nullable column. SortExec is spillable; a global sort at 100 TB is a
     // range-partitioned shuffle — fine when the output demands total order.
@@ -455,7 +455,7 @@ object Aggregates {
       |ORDER BY o_orderkey LIMIT 100 OFFSET 50""".stripMargin
 
   // ---------------------------------------------------------------- §2.7
-  private val sets: Map[String, Decl] = Map(
+  private val sets: Seq[(String, Decl)] = Seq(
     "set_union_all" -> Decl(
       (s, d) => {
         val a = Tables(s, d, "customer").select(
@@ -520,5 +520,5 @@ object Aggregates {
              |   SELECT o_custkey FROM orders WHERE o_orderstatus = 'F')
              |) ORDER BY ALL NULLS FIRST""".stripMargin)))
 
-  val decls: Map[String, Decl] = aggs ++ sorts ++ sets
+  val decls: Map[String, Decl] = declMap(aggs ++ sorts ++ sets: _*)
 }

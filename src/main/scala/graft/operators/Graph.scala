@@ -1,25 +1,49 @@
 package graft.operators
 
-/** graph operators (pagerank, components, SCC, MST, centrality...) — consolidated from the append-only wave files
-  * (round-11 verdict item 8); object names and query keys unchanged,
-  * REGISTRY.md remains the per-key index.
+/** Graph operators: PageRank, components, SCC, spanning forests,
+  * centrality and link analysis over the fixture's minted graphs.
+  * REGISTRY.md maps each key to its file:line.
   */
-
-// ——— formerly Round10g.scala ———
-/** Round-10 seventh wave: per-node graph topology, weekly growth, robust
-  * outlier fences, and template-shape detection. All-integer statistics
-  * with terminal rounded ratios; bounded spines for every window; every
-  * ORDER BY ends in a unique key.
-  */
-object Round10g {
-  import graft.{Decl, Tables}
+object Graph {
+  import graft.{Decl, Tables, declMap}
   import org.apache.spark.sql.expressions.Window
   import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import graft.functions.VectorOps
 
+  private val MaxPartDf = PairIndex.MaxPartDf
 
-  val decls: Map[String, Decl] = Map(
+  private val BlockSize = 8L
+
+  /** Directed block-minted edges: within each 8-vertex block,
+    * v → base + ((off·3 + k) mod size) for k = 1..(1 + v mod 2),
+    * skipping v ≡ 0 (mod 4) (dangling singleton SCCs by construction).
+    */
+  private[operators] def blockEdges(s: SparkSession, d: String): DataFrame = {
+    val docs = Tables(s, d, "documents").select(col("doc_id"))
+    val nRows = Tables.rowCount(s, d, "documents")
+    val base = (col("doc_id") / BlockSize).cast("long") * BlockSize
+    val size = least(lit(BlockSize), lit(nRows) - base)
+    docs.filter(pmod(col("doc_id"), lit(4L)) =!= 0)
+      .select(col("doc_id").as("src"),
+              explode(sequence(lit(1), (lit(1L) + pmod(col("doc_id"), lit(2L)))
+                .cast("int"))).as("k"),
+              base.as("base"), size.as("bsz"))
+      .select(col("src"),
+              (col("base") + pmod((col("src") - col("base")) * 3 + col("k"),
+                                  col("bsz"))).as("dst"))
+      .filter(col("src") =!= col("dst"))
+      .distinct()
+  }
+
+  val decls: Map[String, Decl] = declMap(
+    // Per-node graph topology, weekly growth, robust
+    // outlier fences, and template-shape detection. All-integer statistics
+    // with terminal rounded ratios; bounded spines for every window; every
+    // ORDER BY ends in a unique key.
+
     // Per-node clustering coefficient on the minted doc graph (same edge
-    // recipe as graph_triangle_count, reference Round8.scala:110): count
+    // recipe as graph_triangle_count in Stats): count
     // each oriented triangle once, credit its three corners via an
     // explode, and divide by the wedge capacity deg·(deg−1)/2 — exact
     // integers into one terminal ratio. The low→high orientation bounds
@@ -197,24 +221,12 @@ object Round10g {
              |       CAST(min(doc_id) AS BIGINT) AS first_doc,
              |       CAST(max(doc_id) AS BIGINT) AS last_doc
              |FROM s GROUP BY shape HAVING count(*) >= 2
-             |ORDER BY shape""".stripMargin))
-  )
-}
+             |ORDER BY shape""".stripMargin)),
 
-// ——— formerly Round10m.scala ———
-/** Round-10 thirteenth wave: link prediction with ordered-fold float
-  * determinism, ADT Result-chaining (the reference's sum-type discipline
-  * applied to fallible pipelines), and session path analysis.
-  */
-object Round10m {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Link prediction with ordered-fold float
+    // determinism, ADT Result-chaining (the reference's sum-type discipline
+    // applied to fallible pipelines), and session path analysis.
 
-
-  private val MaxPartDf = PairIndex.MaxPartDf
-
-  val decls: Map[String, Decl] = Map(
     // Adamic–Adar link prediction on the co-purchase graph: for the
     // top-20 common-neighbor pairs (the graph_jaccard_neighbors pair
     // machinery, df-capped), score = Σ 1/ln(deg(z)) over shared parts z.
@@ -360,22 +372,12 @@ object Round10m {
              |SELECT path, CAST(count(*) AS BIGINT) AS n_sessions,
              |       CAST(max(depth) AS BIGINT) AS max_depth
              |FROM paths GROUP BY path HAVING count(*) >= 2
-             |ORDER BY path""".stripMargin))
-  )
-}
+             |ORDER BY path""".stripMargin)),
 
-// ——— formerly Round10o.scala ———
-/** Round-10 fifteenth wave: sampled harmonic centrality (multi-source BFS
-  * with exact-rational accumulation) and rolling skewness from exact
-  * integer moment sums.
-  */
-object Round10o {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Sampled harmonic centrality (multi-source BFS
+    // with exact-rational accumulation) and rolling skewness from exact
+    // integer moment sums.
 
-
-  val decls: Map[String, Decl] = Map(
     // Harmonic centrality from the %97 seed set (the bfs_layers sources),
     // depth ≤ 4, on the minted doc graph: per node Σ 1/d(s, v) over the
     // sampled sources. EXACT-RATIONAL TRICK: with d ∈ {1,2,3,4} the
@@ -493,38 +495,28 @@ object Round10o {
              |            + 2.0 * pow(CAST(s1 AS DOUBLE) / n, 3))
              |         / nullif(pow(CAST(s2 AS DOUBLE) / n
              |             - pow(CAST(s1 AS DOUBLE) / n, 2), 1.5), 0.0), 6) AS skew20
-             |FROM s WHERE n = 20 ORDER BY user_id, event_id""".stripMargin))
-  )
-}
+             |FROM s WHERE n = 20 ORDER BY user_id, event_id""".stripMargin)),
 
-// ——— formerly Round10yy.scala ———
-/** Round-10 wave 55: sampled betweenness centrality — Brandes'
-  * dependency accumulation from the %97 source sample over the shared
-  * minted doc graph, truncated at depth 4 (the bfs_layers/harmonic
-  * horizon). The last flagship centrality the graph family lacked: which
-  * nodes sit ON the shortest paths, not merely near things.
-  *
-  * Scale shape: the forward pass is the harmonic key's multi-source BFS
-  * keyed (src, v) — per hop one adjacency join + one anti-join, σ path
-  * counts aggregated as exact BIGINTs with map-side combine; the
-  * backward pass walks the ≤4 retained levels, each step one
-  * level-to-level join. Nothing all-pairs; per-hop work is O(frontier
-  * edges · sample size).
-  *
-  * Float determinism: path-count ratios are the one unavoidable float —
-  * every δ fold and the final per-node accumulation run over
-  * array_sort'ed collect_lists (the sorted-fold discipline), so the
-  * association order is a pure function of the data. Oracle-N (sampled
-  * + truncated, the harmonic/fixpoint class); Round10yySpec re-derives
-  * the exact ladder with a driver-side Brandes.
-  */
-object Round10yy {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.DataFrame
-  import org.apache.spark.sql.functions._
+    // Sampled betweenness centrality — Brandes'
+    // dependency accumulation from the %97 source sample over the shared
+    // minted doc graph, truncated at depth 4 (the bfs_layers/harmonic
+    // horizon). The last flagship centrality the graph family lacked: which
+    // nodes sit ON the shortest paths, not merely near things.
+    //
+    // Scale shape: the forward pass is the harmonic key's multi-source BFS
+    // keyed (src, v) — per hop one adjacency join + one anti-join, σ path
+    // counts aggregated as exact BIGINTs with map-side combine; the
+    // backward pass walks the ≤4 retained levels, each step one
+    // level-to-level join. Nothing all-pairs; per-hop work is O(frontier
+    // edges · sample size).
+    //
+    // Float determinism: path-count ratios are the one unavoidable float —
+    // every δ fold and the final per-node accumulation run over
+    // array_sort'ed collect_lists (the sorted-fold discipline), so the
+    // association order is a pure function of the data. Oracle-N (sampled
+    // + truncated, the harmonic/fixpoint class); Round10yySpec re-derives
+    // the exact ladder with a driver-side Brandes.
 
-
-  val decls: Map[String, Decl] = Map(
     "graph_betweenness_sampled" -> Decl(
       (s, d) => {
         val n = s.sparkContext.defaultParallelism
@@ -566,7 +558,7 @@ object Round10yy {
         }
 
         // backward: delta(depth 4) = 0; walk levels down, one join each
-        var withDelta: DataFrame =
+        val withDelta: DataFrame =
           levels(4).withColumn("delta", lit(0.0d)) // deepest layer
         val deltas = scala.collection.mutable.ArrayBuffer(withDelta)
         (3 to 1 by -1).foreach { i =>
@@ -607,38 +599,27 @@ object Round10yy {
         adj.unpersist() // levels/deltas are eagerly checkpointed above
         out
       },
-      None)
-  )
-}
+      None),
 
-// ——— formerly Round11j.scala ———
-/** Round-10 wave 66: distributed minimum spanning forest (Borůvka — the
-  * one MST algorithm that is data-parallel by construction: every
-  * component picks its lightest outgoing edge simultaneously, components
-  * contract, and the component count at least halves per round, so a
-  * 100 TB edge list finishes in O(log V) rounds of groupBy-min +
-  * label-propagation — no priority queue, no sequential edge scan) and
-  * MMR-diversified retrieval (maximal marginal relevance — the standard
-  * redundancy-penalized re-ranking every RAG/retrieval stack runs after
-  * the ANN cut).
-  *
-  * Determinism: MST edges order by the lexicographic (w, a, b) struct —
-  * a total order, so the spanning forest is unique even with duplicate
-  * weights (Kruskal under the same order yields the identical edge set;
-  * Round11jSpec asserts exact equality). MMR scores fold rounded-6dp
-  * cosines through the same 0.7·rel − 0.3·max-sim expression in both
-  * engines; ties break by vec_id.
-  */
-object Round11j {
-  import graft.{Decl, Tables}
-  import graft.functions.VectorOps
-  import org.apache.spark.sql.{DataFrame, SparkSession}
-  import org.apache.spark.sql.functions._
+    // Distributed minimum spanning forest (Borůvka — the
+    // one MST algorithm that is data-parallel by construction: every
+    // component picks its lightest outgoing edge simultaneously, components
+    // contract, and the component count at least halves per round, so a
+    // 100 TB edge list finishes in O(log V) rounds of groupBy-min +
+    // label-propagation — no priority queue, no sequential edge scan) and
+    // MMR-diversified retrieval (maximal marginal relevance — the standard
+    // redundancy-penalized re-ranking every RAG/retrieval stack runs after
+    // the ANN cut).
+    //
+    // Determinism: MST edges order by the lexicographic (w, a, b) struct —
+    // a total order, so the spanning forest is unique even with duplicate
+    // weights (Kruskal under the same order yields the identical edge set;
+    // Round11jSpec asserts exact equality). MMR scores fold rounded-6dp
+    // cosines through the same 0.7·rel − 0.3·max-sim expression in both
+    // engines; ties break by vec_id.
 
-
-  val decls: Map[String, Decl] = Map(
     // Minimum spanning FOREST of the minted undirected doc graph (same
-    // edge recipe as graph_triangle_count, Round8.scala:110) under
+    // edge recipe as graph_triangle_count in Stats) under
     // deterministic integer weights w = (a·31 + b·17) mod 997. Per
     // Borůvka round: one aggregate finds each component's lexicographic-
     // min (w, a, b) outgoing edge, the chosen pseudo-forest contracts by
@@ -866,61 +847,28 @@ object Round11j {
              |FROM (SELECT unnest(ids) AS v, generate_subscripts(ids, 1) AS pos
              |      FROM sel WHERE step = 10) u
              |JOIN cand c ON c.vec_id = u.v
-             |ORDER BY rank""".stripMargin))
-  )
-}
+             |ORDER BY rank""".stripMargin)),
 
-// ——— formerly Round11k.scala ———
-/** Round-10 wave 67: strongly connected components by distributed
-  * forward-backward coloring (the data-parallel SCC algorithm: color
-  * every vertex with its minimum ancestor, peel each color's root SCC
-  * by a color-restricted backward sweep, repeat on the remainder —
-  * every phase is a joins-and-aggregates superstep, no Tarjan stack)
-  * and Burrows' Delta (the classical stylometric distance: z-scored
-  * top-word relative frequencies per source, mean |Δz| between source
-  * pairs — the authorship/provenance signal next to the Monroe
-  * log-odds).
-  *
-  * SCC supersteps are DIAMETER-bounded, and the minted directed graph
-  * is built to keep that diameter scale-independent: disjoint 8-vertex
-  * blocks (cycles + stragglers + %4-dangling singletons), so coloring
-  * fixpoints converge in ≤4 passes and the peel loop in 2 rounds at
-  * EVERY scale factor (measured 50 / 500 / 5000 vertices — identical
-  * superstep counts). That is the honest 100 TB shape: FB-coloring
-  * costs O(SCC-DAG depth × diameter) supersteps and web-scale graphs
-  * have small diameters; a single 100 M-vertex cycle is pathological
-  * for every distributed SCC algorithm.
-  */
-object Round11k {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.{DataFrame, SparkSession}
-  import org.apache.spark.sql.functions._
+    // Strongly connected components by distributed
+    // forward-backward coloring (the data-parallel SCC algorithm: color
+    // every vertex with its minimum ancestor, peel each color's root SCC
+    // by a color-restricted backward sweep, repeat on the remainder —
+    // every phase is a joins-and-aggregates superstep, no Tarjan stack)
+    // and Burrows' Delta (the classical stylometric distance: z-scored
+    // top-word relative frequencies per source, mean |Δz| between source
+    // pairs — the authorship/provenance signal next to the Monroe
+    // log-odds).
+    //
+    // SCC supersteps are DIAMETER-bounded, and the minted directed graph
+    // is built to keep that diameter scale-independent: disjoint 8-vertex
+    // blocks (cycles + stragglers + %4-dangling singletons), so coloring
+    // fixpoints converge in ≤4 passes and the peel loop in 2 rounds at
+    // EVERY scale factor (measured 50 / 500 / 5000 vertices — identical
+    // superstep counts). That is the honest 100 TB shape: FB-coloring
+    // costs O(SCC-DAG depth × diameter) supersteps and web-scale graphs
+    // have small diameters; a single 100 M-vertex cycle is pathological
+    // for every distributed SCC algorithm.
 
-
-  private val BlockSize = 8L
-
-  /** Directed block-minted edges: within each 8-vertex block,
-    * v → base + ((off·3 + k) mod size) for k = 1..(1 + v mod 2),
-    * skipping v ≡ 0 (mod 4) (dangling singleton SCCs by construction).
-    */
-  private[operators] def blockEdges(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables(s, d, "documents").select(col("doc_id"))
-    val nRows = Tables.rowCount(s, d, "documents")
-    val base = (col("doc_id") / BlockSize).cast("long") * BlockSize
-    val size = least(lit(BlockSize), lit(nRows) - base)
-    docs.filter(pmod(col("doc_id"), lit(4L)) =!= 0)
-      .select(col("doc_id").as("src"),
-              explode(sequence(lit(1), (lit(1L) + pmod(col("doc_id"), lit(2L)))
-                .cast("int"))).as("k"),
-              base.as("base"), size.as("bsz"))
-      .select(col("src"),
-              (col("base") + pmod((col("src") - col("base")) * 3 + col("k"),
-                                  col("bsz"))).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-  }
-
-  val decls: Map[String, Decl] = Map(
     // SCC ids (= min member) for every document. The oracle computes the
     // same partition from the full recursive-CTE transitive closure —
     // mutual reachability ground truth — so the hash-match proves the
@@ -1139,38 +1087,29 @@ object Round11k {
              |SELECT a.source AS src_a, b.source AS src_b,
              |       round(avg(abs(a.z - b.z)), 6) AS delta
              |FROM z a JOIN z b ON a.word = b.word AND a.source < b.source
-             |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
-  )
-}
+             |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
-// ——— formerly Round11t.scala ———
-/** Round-10 wave 76: partition modularity of the minted doc graph
-  * (Newman's Q for the grouping documents already carry — their
-  * `source` — answering "how assortative is the link structure by
-  * source?" with NO iteration: unlike community DETECTION, community
-  * SCORING is a single closed-form pass, so it gets a full DuckDB
-  * oracle where label-propagation could not) and systematic interval
-  * sampling (the survey-sampling design: every 101st row of a total
-  * order, selected by a GLOBAL row index computed with the two-pass
-  * distributed PrefixSum — never a single-task `row_number()` window).
-  *
-  * Determinism: modularity terms are exact integers (intra-edge and
-  * endpoint-degree counts) over the canonical minted edge set; the
-  * only float is the terminal 6-dp contribution. The systematic sample
-  * is fully determined by the (l_orderkey, l_linenumber) total order.
-  *
-  * Scale shape: modularity = one edge-mint + two hash joins against
-  * the label table + one groupBy — all linear in |E|. The sample's
-  * global index costs one range exchange + one local scan + a
-  * #partitions-row offset broadcast (PrefixSum.scala); the filter
-  * keeps ~1/101 of rows with zero skew.
-  */
-object Round11t {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Partition modularity of the minted doc graph
+    // (Newman's Q for the grouping documents already carry — their
+    // `source` — answering "how assortative is the link structure by
+    // source?" with NO iteration: unlike community DETECTION, community
+    // SCORING is a single closed-form pass, so it gets a full DuckDB
+    // oracle where label-propagation could not) and systematic interval
+    // sampling (the survey-sampling design: every 101st row of a total
+    // order, selected by a GLOBAL row index computed with the two-pass
+    // distributed PrefixSum — never a single-task `row_number()` window).
+    //
+    // Determinism: modularity terms are exact integers (intra-edge and
+    // endpoint-degree counts) over the canonical minted edge set; the
+    // only float is the terminal 6-dp contribution. The systematic sample
+    // is fully determined by the (l_orderkey, l_linenumber) total order.
+    //
+    // Scale shape: modularity = one edge-mint + two hash joins against
+    // the label table + one groupBy — all linear in |E|. The sample's
+    // global index costs one range exchange + one local scan + a
+    // #partitions-row offset broadcast (PrefixSum.scala); the filter
+    // keeps ~1/101 of rows with zero skew.
 
-
-  val decls: Map[String, Decl] = Map(
     // Newman modularity Q = Σ_c [ e_c/m − (deg_c/2m)² ] of the
     // `source` partition over the minted undirected doc graph (same
     // edge recipe as graph_triangle_count / graph_mst_boruvka).
@@ -1262,36 +1201,27 @@ object Round11t {
              |  FROM lineitem)
              |SELECT idx, l_orderkey, l_linenumber, cents
              |FROM r WHERE idx % 101 = 7
-             |ORDER BY idx""".stripMargin))
-  )
-}
+             |ORDER BY idx""".stripMargin)),
 
-// ——— round-11 wave 87 ———
-/** Round-11 wave 87: exact closeness centrality on the block-minted
-  * directed graph — per vertex, the count of reachable vertices and
-  * the sum of shortest-path distances, with the Wasserman-Faust
-  * closeness ((r/(n−1)) · (r/dsum), the disconnected-graph-safe form)
-  * — the exact companion to the SAMPLED betweenness/harmonic keys.
-  *
-  * Determinism: distances and reach counts are integers from a BFS
-  * fixpoint; closeness is one rounded double through the identical
-  * expression tree in both engines (the oracle walks the same BFS as
-  * a recursive CTE and aggregates min distances).
-  *
-  * Scale shape: the same fused-superstep discipline as
-  * graph_scc_coloring — the distance frontier advances `Hops` hops per
-  * materialization job, convergence read from the same checkpoint
-  * ("nothing newly reached at the final hop"). Pair state is bounded
-  * by reachability (disjoint ≤8-vertex blocks ⇒ ≤8n rows at every SF);
-  * for giant-component graphs the sampled harmonic key is the scale
-  * path, exactly as its Scaladoc says.
-  */
-object GraphWave87 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.DataFrame
-  import org.apache.spark.sql.functions._
+    // Exact closeness centrality on the block-minted
+    // directed graph — per vertex, the count of reachable vertices and
+    // the sum of shortest-path distances, with the Wasserman-Faust
+    // closeness ((r/(n−1)) · (r/dsum), the disconnected-graph-safe form)
+    // — the exact companion to the SAMPLED betweenness/harmonic keys.
+    //
+    // Determinism: distances and reach counts are integers from a BFS
+    // fixpoint; closeness is one rounded double through the identical
+    // expression tree in both engines (the oracle walks the same BFS as
+    // a recursive CTE and aggregates min distances).
+    //
+    // Scale shape: the same fused-superstep discipline as
+    // graph_scc_coloring — the distance frontier advances `Hops` hops per
+    // materialization job, convergence read from the same checkpoint
+    // ("nothing newly reached at the final hop"). Pair state is bounded
+    // by reachability (disjoint ≤8-vertex blocks ⇒ ≤8n rows at every SF);
+    // for giant-component graphs the sampled harmonic key is the scale
+    // path, exactly as its Scaladoc says.
 
-  val decls: Map[String, Decl] = Map(
     "graph_closeness_exact" -> Decl(
       (s, d) => {
         val n = s.sparkContext.defaultParallelism
@@ -1307,7 +1237,7 @@ object GraphWave87 {
         // the frontier-death rule is unchanged with Reach = 2·Steps.
         val Steps = 4   // fused supersteps per materialization
         val Reach = 8L  // distance covered per pass (2 hops per step)
-        val edges = Round11k.blockEdges(s, d)
+        val edges = blockEdges(s, d)
           .repartition(n, col("src"))
           .localCheckpoint(true)
         val e2 = edges.select(col("src"), col("dst"), lit(1L).as("w"))
@@ -1331,7 +1261,7 @@ object GraphWave87 {
         var base = 0L
         while (grew && passes < 12) {
           var cur = dist
-          for (hh <- 1 to Steps) {
+          for (_ <- 1 to Steps) {
             val nxt = cur.join(e2, col("u") === col("src"))
               .select(col("v"), col("dst").as("u"), (col("dd") + col("w")).as("dd"))
             cur = cur.unionAll(nxt)
@@ -1401,37 +1331,29 @@ object GraphWave87 {
              |FROM documents d
              |LEFT JOIN per USING (doc_id)
              |CROSS JOIN nn
-             |ORDER BY d.doc_id""".stripMargin))
-  )
-}
+             |ORDER BY d.doc_id""".stripMargin)),
 
-// ——— round-11 wave 92 ———
-/** Round-11 wave 92: HITS hub/authority scores — the link-analysis
-  * companion to PageRank (Kleinberg's mutual reinforcement: good hubs
-  * point at good authorities and vice versa) on the minted directed
-  * block graph, with TWO unrolled update rounds.
-  *
-  * Determinism: normalization is deferred to the very end, so every
-  * intermediate score is an EXACT BIGINT (h⁰ = 1 ⇒ a¹ = in-degree,
-  * h¹ = Σ a¹ over out-edges, a² = Σ h¹, h² = Σ a²) — no float ever
-  * rides the graph; the final hub/auth columns are single divisions by
-  * the corpus max through identical IEEE trees. (Classical HITS
-  * normalizes per round; with ≤2 rounds the unnormalized recursion is
-  * the same ranking, and exactness is worth more here than the
-  * convention.)
-  *
-  * Scale shape: four hash join+aggregate passes over the edge list —
-  * straight-line dataflow, no driver loop, no window; Catalyst reuses
-  * the scanned edge exchange across rounds.
-  */
-object GraphWave92 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // HITS hub/authority scores — the link-analysis
+    // companion to PageRank (Kleinberg's mutual reinforcement: good hubs
+    // point at good authorities and vice versa) on the minted directed
+    // block graph, with TWO unrolled update rounds.
+    //
+    // Determinism: normalization is deferred to the very end, so every
+    // intermediate score is an EXACT BIGINT (h⁰ = 1 ⇒ a¹ = in-degree,
+    // h¹ = Σ a¹ over out-edges, a² = Σ h¹, h² = Σ a²) — no float ever
+    // rides the graph; the final hub/auth columns are single divisions by
+    // the corpus max through identical IEEE trees. (Classical HITS
+    // normalizes per round; with ≤2 rounds the unnormalized recursion is
+    // the same ranking, and exactness is worth more here than the
+    // convention.)
+    //
+    // Scale shape: four hash join+aggregate passes over the edge list —
+    // straight-line dataflow, no driver loop, no window; Catalyst reuses
+    // the scanned edge exchange across rounds.
 
-  val decls: Map[String, Decl] = Map(
     "graph_hits_hub_authority" -> Decl(
       (s, d) => {
-        val edges = Round11k.blockEdges(s, d)
+        val edges = blockEdges(s, d)
         val a1 = edges.groupBy(col("dst").as("v"))
           .agg(count(lit(1)).as("a1"))
         val h1 = edges.join(a1.withColumnRenamed("v", "dst"), "dst")
@@ -1489,4 +1411,3 @@ object GraphWave92 {
              |ORDER BY doc_id""".stripMargin))
   )
 }
-

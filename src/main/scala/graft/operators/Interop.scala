@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Decl, Tables}
+import graft.{Decl, Tables, declMap}
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector.{BigIntVector, Float8Vector}
 import org.apache.spark.sql.{Encoders, Row}
@@ -29,7 +29,41 @@ import org.apache.spark.sql.types._
   */
 object Interop {
 
-  val decls: Map[String, Decl] = Map(
+  /** Luhn mod-10 checksum validity. Classical: from the RIGHT, double
+    * every second digit, subtract 9 when the double exceeds 9, valid
+    * iff the total ≡ 0 (mod 10). Pure integer/string arithmetic — the
+    * oracle replays it with list_transform over the same digits.
+    */
+  private[graft] def luhnValid(s: String): Boolean = {
+    var total = 0
+    var i = s.length - 1
+    var second = false
+    while (i >= 0) {
+      var d = s.charAt(i) - '0'
+      if (second) { d *= 2; if (d > 9) d -= 9 }
+      total += d
+      second = !second
+      i -= 1
+    }
+    total % 10 == 0
+  }
+
+  /** Exact Σ value² over BIGINTs — a typed Aggregator whose
+    * reduce/merge are both plain adds, registered through
+    * `functions.udaf` so SQL text can call it like a built-in.
+    */
+  private class SumSq extends org.apache.spark.sql.expressions.Aggregator[Long, Long, Long] {
+    def zero: Long = 0L
+    def reduce(acc: Long, x: Long): Long = acc + x * x
+    def merge(a: Long, b: Long): Long = a + b
+    def finish(acc: Long): Long = acc
+    def bufferEncoder: org.apache.spark.sql.Encoder[Long] =
+      org.apache.spark.sql.Encoders.scalaLong
+    def outputEncoder: org.apache.spark.sql.Encoder[Long] =
+      org.apache.spark.sql.Encoders.scalaLong
+  }
+
+  val decls: Map[String, Decl] = declMap(
     // Price-tier classification computed inside Arrow batches: cents =
     // round(price·100) and tier = cents div 10000, vectorized over the
     // columnar buffers. The DuckDB oracle recomputes both relationally —
@@ -80,70 +114,28 @@ object Interop {
       Some("""SELECT p_partkey,
              |       CAST(round(p_retailprice * 100) AS BIGINT) AS cents,
              |       CAST(round(p_retailprice * 100) AS BIGINT) // 10000 AS tier
-             |FROM part ORDER BY p_partkey""".stripMargin))
-  )
-}
+             |FROM part ORDER BY p_partkey""".stripMargin)),
 
-// ——— round-11 wave 91 ———
-/** Round-11 wave 91: the remaining two UDF registration surfaces —
-  * a REGISTERED scalar Scala UDF invoked from SQL text (the
-  * `spark.udf.register` path users extend the engine through; Luhn
-  * checksum validation of minted 16-digit account numbers — string and
-  * integer arithmetic only, so the DuckDB oracle replays the identical
-  * algorithm relationally), and a typed `Aggregator` registered via
-  * `functions.udaf` and invoked from SQL (exact Σc² per event type —
-  * the merge-associative shape that proves the partial/merge contract,
-  * since any partial-aggregation error changes the exact BIGINT).
-  *
-  * Scale shape: the scalar UDF is row-local (no shuffle beyond the
-  * final ORDER BY); the Aggregator is one hash aggregate with
-  * map-side partials, exactly like a built-in sum.
-  */
-object InteropWave91 {
-  import graft.Decl
+    // The remaining two UDF registration surfaces —
+    // a REGISTERED scalar Scala UDF invoked from SQL text (the
+    // `spark.udf.register` path users extend the engine through; Luhn
+    // checksum validation of minted 16-digit account numbers — string and
+    // integer arithmetic only, so the DuckDB oracle replays the identical
+    // algorithm relationally), and a typed `Aggregator` registered via
+    // `functions.udaf` and invoked from SQL (exact Σc² per event type —
+    // the merge-associative shape that proves the partial/merge contract,
+    // since any partial-aggregation error changes the exact BIGINT).
+    //
+    // Scale shape: the scalar UDF is row-local (no shuffle beyond the
+    // final ORDER BY); the Aggregator is one hash aggregate with
+    // map-side partials, exactly like a built-in sum.
 
-  /** Luhn mod-10 checksum validity. Classical: from the RIGHT, double
-    * every second digit, subtract 9 when the double exceeds 9, valid
-    * iff the total ≡ 0 (mod 10). Pure integer/string arithmetic — the
-    * oracle replays it with list_transform over the same digits.
-    */
-  private[graft] def luhnValid(s: String): Boolean = {
-    var total = 0
-    var i = s.length - 1
-    var second = false
-    while (i >= 0) {
-      var d = s.charAt(i) - '0'
-      if (second) { d *= 2; if (d > 9) d -= 9 }
-      total += d
-      second = !second
-      i -= 1
-    }
-    total % 10 == 0
-  }
-
-  /** Exact Σ value² over BIGINTs — a typed Aggregator whose
-    * reduce/merge are both plain adds, registered through
-    * `functions.udaf` so SQL text can call it like a built-in.
-    */
-  private class SumSq extends org.apache.spark.sql.expressions.Aggregator[Long, Long, Long] {
-    def zero: Long = 0L
-    def reduce(acc: Long, x: Long): Long = acc + x * x
-    def merge(a: Long, b: Long): Long = a + b
-    def finish(acc: Long): Long = acc
-    def bufferEncoder: org.apache.spark.sql.Encoder[Long] =
-      org.apache.spark.sql.Encoders.scalaLong
-    def outputEncoder: org.apache.spark.sql.Encoder[Long] =
-      org.apache.spark.sql.Encoders.scalaLong
-  }
-
-  val decls: Map[String, Decl] = Map(
     // 16-digit account numbers minted from event ids (zero-padded
     // digits of event_id·37 + user_id%10 — arbitrary but deterministic
     // content); the registered UDF classifies Luhn validity and the
     // key aggregates the verdicts so the oracle match covers every row.
     "udf_scalar_registered" -> Decl(
       (s, d) => {
-        import org.apache.spark.sql.functions._
         s.udf.register("luhn_valid",
           (acct: String) => luhnValid(acct))
         graft.Tables.events(s, d).createOrReplaceTempView("ev_udf91")

@@ -1,37 +1,76 @@
 package graft.operators
 
-/** lakehouse sink/source/layout waves — consolidated from the append-only wave files
-  * (round-11 verdict item 8); object names and query keys unchanged,
-  * REGISTRY.md remains the per-key index.
+/** Lakehouse sinks, sources and layouts: write-audit-publish, partition
+  * overwrite, VACUUM, and materialized views with their rewrite.
+  * REGISTRY.md maps each key to its file:line.
   */
-
-// ——— formerly Round10oo.scala ———
-/** Round-10 wave 45: the Write–Audit–Publish (WAP) pattern — the
-  * lakehouse ingestion discipline where a batch lands in a STAGING
-  * location, constraint audits run against the staged files (not the
-  * in-memory frame — the audit must see exactly what a reader would),
-  * violating rows are quarantined, and only the clean subset is
-  * atomically published by manifest (the sink_snapshot_time_travel
-  * mechanism: publishing is a metadata write, data files never
-  * rewrite).
-  *
-  * The minted batch plants two violation classes on deterministic key
-  * rules (negated totalprice on orderkey ≡ 0 mod 97, null priority on
-  * orderkey ≡ 1 mod 101), so the audit's work is verifiable: the
-  * oracle recomputes the quarantine/publish split from the base table
-  * with the same rules — equality proves the staged-file audit saw
-  * every row and classified each exactly once.
-  *
-  * Scale shape: audit predicates are one pass over the staged scan
-  * (each constraint a conditional aggregate — no per-constraint
-  * re-scan); publish moves KB of manifest, not data.
-  */
-object Round10oo {
-  import graft.{Decl, Tables}
+object Lakehouse {
+  import graft.{Decl, GraftCatalog, Tables, declMap}
   import org.apache.spark.sql.functions._
 
+  /** The registered base projection + its summary, shared with the spec
+    * so both sides register the identical plans.
+    */
+  private[graft] def setupMv(s: org.apache.spark.sql.SparkSession,
+                             d: String): org.apache.spark.sql.DataFrame = {
+    val base = Tables.events(s, d)
+      .select(col("event_type"),
+              datediff(col("ts").cast("date"), to_date(lit("2023-12-31")))
+                .cast("bigint").as("day"),
+              round(col("value") * 100).cast("bigint").as("cents"))
+    val dir = Tables.scratchDir("graft_mv").resolve("mv_events").toString
+    val defn = base.groupBy("event_type", "day")
+      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sc"),
+           min(col("cents")).as("mn"), max(col("cents")).as("mx"))
+    defn.write.mode("overwrite").parquet(dir)
+    // the user-facing path: dims/count/sum/min/max derived FROM the
+    // defining aggregate, no hand-written metric mapping
+    graft.plans.Mv.register(base, defn, s.read.parquet(dir))
+    graft.plans.Mv.enable(s)
+    base
+  }
 
-  val decls: Map[String, Decl] = Map(
+  /** The registered star base (orders ⋈ customer) + its summary — shared
+    * with the spec so both register identical plans. */
+  private[graft] def setupJoinMv(s: org.apache.spark.sql.SparkSession,
+                                 d: String): org.apache.spark.sql.DataFrame = {
+    val fact = Tables(s, d, "orders")
+      .select(col("o_custkey"),
+              round(col("o_totalprice") * 100).cast("bigint").as("cents"))
+    val dim = Tables(s, d, "customer")
+      .select(col("c_custkey"), col("c_mktsegment"))
+    val base = fact.join(dim, col("o_custkey") === col("c_custkey"))
+    val dir = Tables.scratchDir("graft_mvjoin").resolve("mv_star").toString
+    val defn = base.groupBy("c_mktsegment")
+      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sc"),
+           min(col("cents")).as("mn"), max(col("cents")).as("mx"))
+    defn.write.mode("overwrite").parquet(dir)
+    graft.plans.Mv.register(base, defn, s.read.parquet(dir))
+    graft.plans.Mv.enable(s)
+    base
+  }
+
+  val decls: Map[String, Decl] = declMap(
+    // The Write–Audit–Publish (WAP) pattern — the
+    // lakehouse ingestion discipline where a batch lands in a STAGING
+    // location, constraint audits run against the staged files (not the
+    // in-memory frame — the audit must see exactly what a reader would),
+    // violating rows are quarantined, and only the clean subset is
+    // atomically published by manifest (the sink_snapshot_time_travel
+    // mechanism: publishing is a metadata write, data files never
+    // rewrite).
+    //
+    // The minted batch plants two violation classes on deterministic key
+    // rules (negated totalprice on orderkey ≡ 0 mod 97, null priority on
+    // orderkey ≡ 1 mod 101), so the audit's work is verifiable: the
+    // oracle recomputes the quarantine/publish split from the base table
+    // with the same rules — equality proves the staged-file audit saw
+    // every row and classified each exactly once.
+    //
+    // Scale shape: audit predicates are one pass over the staged scan
+    // (each constraint a conditional aggregate — no per-constraint
+    // re-scan); publish moves KB of manifest, not data.
+
     "sink_write_audit_publish" -> Decl(
       (s, d) => {
         import java.nio.file.Files
@@ -94,21 +133,12 @@ object Round10oo {
              |SELECT violation AS stage, count(*) AS n,
              |       CAST(sum(CAST(round(price * 100) AS BIGINT)) AS BIGINT) AS cents
              |FROM tagged WHERE violation IS NOT NULL GROUP BY violation
-             |ORDER BY stage""".stripMargin))
-  )
-}
+             |ORDER BY stage""".stripMargin)),
 
-// ——— formerly Round10q.scala ———
-/** Round-10 seventeenth wave: dynamic partition overwrite (the lakehouse
-  * partial-refresh primitive), growth accounting, and binary-column
-  * scalar work.
-  */
-object Round10q {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Dynamic partition overwrite (the lakehouse
+    // partial-refresh primitive), growth accounting, and binary-column
+    // scalar work.
 
-
-  val decls: Map[String, Decl] = Map(
     // Dynamic partition overwrite: refresh ONE partition of a
     // status-partitioned table in place (the nightly partial reload) —
     // partitions not present in the incoming batch survive untouched.
@@ -190,21 +220,12 @@ object Round10q {
              |       CAST(octet_length(unhex(h)) AS BIGINT) AS n_bytes,
              |       CAST(CAST(('0x' || substr(h, 1, 8))::BIGINT AS BIGINT) % 64
              |            AS BIGINT) AS shard
-             |FROM h ORDER BY doc_id""".stripMargin))
-  )
-}
+             |FROM h ORDER BY doc_id""".stripMargin)),
 
-// ——— formerly Round9n.scala ———
-/** Round-9 fourteenth wave: lakehouse VACUUM (retention-driven physical
-  * file removal under snapshot isolation) and PCA whitening as a
-  * fit→apply pipeline (the learned transform broadcast over the scan).
-  */
-object Round9n {
-  import graft.{Decl, GraftCatalog, Tables}
-  import org.apache.spark.sql.functions._
+    // Lakehouse VACUUM (retention-driven physical
+    // file removal under snapshot isolation) and PCA whitening as a
+    // fit→apply pipeline (the learned transform broadcast over the scan).
 
-
-  val decls: Map[String, Decl] = Map(
     // VACUUM — the retention pass every snapshot-isolated table needs:
     // v1 commits two immutable files, v2 COMPACTS them into one rewritten
     // file (dropping the 'P' rows — a delete folded into compaction),
@@ -299,52 +320,22 @@ object Round9n {
                   proj(v1, c1, l1, "z1"), proj(v2, c2, l2, "z2"))
           .orderBy("vec_id")
       },
-      None)
-  )
-}
+      None),
 
-// ——— round-11 wave 95 ———
-/** Round-11 wave 95: materialized-view acceleration — build a
-  * (event_type, day) rollup of the events projection, register it with
-  * `graft.plans.MvCatalog`, attach `MvRewrite` to the session's
-  * extraOptimizations, and run a plain groupBy(event_type) aggregate
-  * over the BASE. The optimizer rewrites it to roll up the summary
-  * (the spec proves the physical scan reads the MV parquet, plus a
-  * negative control on a non-dimension grouping), while the DuckDB
-  * oracle computes the same answer from the RAW table — the hash match
-  * proves the rewrite value-exact end to end.
-  *
-  * 100 TB shape: the rewritten plan reads |event_type × day| rows
-  * instead of the corpus — THE lever for repeated dashboard
-  * aggregates; counts/sums roll up integer-exactly.
-  */
-object LakehouseWave95 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Materialized-view acceleration — build a
+    // (event_type, day) rollup of the events projection, register it with
+    // `graft.plans.MvCatalog`, attach `MvRewrite` to the session's
+    // extraOptimizations, and run a plain groupBy(event_type) aggregate
+    // over the BASE. The optimizer rewrites it to roll up the summary
+    // (the spec proves the physical scan reads the MV parquet, plus a
+    // negative control on a non-dimension grouping), while the DuckDB
+    // oracle computes the same answer from the RAW table — the hash match
+    // proves the rewrite value-exact end to end.
+    //
+    // 100 TB shape: the rewritten plan reads |event_type × day| rows
+    // instead of the corpus — THE lever for repeated dashboard
+    // aggregates; counts/sums roll up integer-exactly.
 
-  /** The registered base projection + its summary, shared with the spec
-    * so both sides register the identical plans.
-    */
-  private[graft] def setupMv(s: org.apache.spark.sql.SparkSession,
-                             d: String): org.apache.spark.sql.DataFrame = {
-    val base = Tables.events(s, d)
-      .select(col("event_type"),
-              datediff(col("ts").cast("date"), to_date(lit("2023-12-31")))
-                .cast("bigint").as("day"),
-              round(col("value") * 100).cast("bigint").as("cents"))
-    val dir = Tables.scratchDir("graft_mv").resolve("mv_events").toString
-    val defn = base.groupBy("event_type", "day")
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sc"),
-           min(col("cents")).as("mn"), max(col("cents")).as("mx"))
-    defn.write.mode("overwrite").parquet(dir)
-    // the user-facing path: dims/count/sum/min/max derived FROM the
-    // defining aggregate, no hand-written metric mapping
-    graft.plans.Mv.register(base, defn, s.read.parquet(dir))
-    graft.plans.Mv.enable(s)
-    base
-  }
-
-  val decls: Map[String, Decl] = Map(
     "sql_mv_rewrite" -> Decl(
       (s, d) => {
         val base = setupMv(s, d)
@@ -363,24 +354,16 @@ object LakehouseWave95 {
              |FROM (SELECT event_type,
              |             CAST(round(value * 100) AS BIGINT) AS c
              |      FROM events)
-             |GROUP BY event_type ORDER BY event_type""".stripMargin))
-  )
-}
+             |GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
-// ——— round-11 wave 96 ———
-/** Round-11 wave 96: the MV feature as SQL surface — `CREATE
-  * MATERIALIZED VIEW name AS <aggregate query>` through `graft.Sql
-  * .execute` persists the summary under the warehouse, derives
-  * dims/metrics from the defining aggregate, registers it with the
-  * rewrite rule, and from then on matching SQL-text aggregates over
-  * the same view are silently served from the summary (spec proves
-  * the scan switch; the oracle computes from the RAW table).
-  */
-object LakehouseWave96 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // The MV feature as SQL surface — `CREATE
+    // MATERIALIZED VIEW name AS <aggregate query>` through `graft.Sql
+    // .execute` persists the summary under the warehouse, derives
+    // dims/metrics from the defining aggregate, registers it with the
+    // rewrite rule, and from then on matching SQL-text aggregates over
+    // the same view are silently served from the summary (spec proves
+    // the scan switch; the oracle computes from the RAW table).
 
-  val decls: Map[String, Decl] = Map(
     "sql_mv_ddl" -> Decl(
       (s, d) => {
         Tables.events(s, d)
@@ -410,28 +393,20 @@ object LakehouseWave96 {
              |FROM (SELECT event_type,
              |             CAST(round(value * 100) AS BIGINT) AS c
              |      FROM events)
-             |GROUP BY event_type ORDER BY event_type""".stripMargin))
-  )
-}
+             |GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
-// ——— round-12 wave 97 ———
-/** Round-12 wave 97: INCREMENTAL materialized-view maintenance — the
-  * lakehouse ingest loop. History lands in a warehouse parquet table, a
-  * (event_type, day) MV is created over it, a few days of new events are
-  * APPENDED, and `REFRESH MATERIALIZED VIEW` merges ONLY the delta's
-  * partial states into the summary (manifest-diffed file listing; see
-  * graft.plans.MvMaintain) — O(delta + summary), never O(history). The
-  * returned aggregate is then silently served from the refreshed summary
-  * while the DuckDB oracle recomputes from the RAW events table: the
-  * hash match proves create → append → incremental merge → rewrite is
-  * value-exact end to end. MvRound12Spec adds the listener-counted
-  * records-read gate proving the refresh never re-scans history.
-  */
-object LakehouseWave97 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // INCREMENTAL materialized-view maintenance — the
+    // lakehouse ingest loop. History lands in a warehouse parquet table, a
+    // (event_type, day) MV is created over it, a few days of new events are
+    // APPENDED, and `REFRESH MATERIALIZED VIEW` merges ONLY the delta's
+    // partial states into the summary (manifest-diffed file listing; see
+    // graft.plans.MvMaintain) — O(delta + summary), never O(history). The
+    // returned aggregate is then silently served from the refreshed summary
+    // while the DuckDB oracle recomputes from the RAW events table: the
+    // hash match proves create → append → incremental merge → rewrite is
+    // value-exact end to end. MvRound12Spec adds the listener-counted
+    // records-read gate proving the refresh never re-scans history.
 
-  val decls: Map[String, Decl] = Map(
     "sql_mv_refresh_incremental" -> Decl(
       (s, d) => {
         val ev = Tables.events(s, d)
@@ -464,49 +439,21 @@ object LakehouseWave97 {
              |FROM (SELECT event_type,
              |             CAST(round(value * 100) AS BIGINT) AS c
              |      FROM events)
-             |GROUP BY event_type ORDER BY event_type""".stripMargin))
-  )
-}
+             |GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
-// ——— round-12 wave 98 ———
-/** Round-12 wave 98: MV rewrite over a STAR JOIN — the canonical
-  * warehouse MV is an aggregate over fact ⋈ dim, and the matcher now
-  * recurses through inner Join nodes (either orientation), matching the
-  * join conditions semantically and rolling dim-only filters (pushed
-  * BELOW the join by the optimizer) up onto the summary. The fixture
-  * registers a (c_mktsegment) rollup of orders ⋈ customer and queries a
-  * dim-filtered aggregate over the same join; the oracle recomputes the
-  * join from the raw tables in DuckDB.
-  *
-  * 100 TB shape: the dashboard query reads a 5-row summary instead of
-  * re-shuffling a fact ⋈ dim join over the corpus — the MV lever
-  * extended to the plan shape real warehouses query every day.
-  */
-object LakehouseWave98 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // MV rewrite over a STAR JOIN — the canonical
+    // warehouse MV is an aggregate over fact ⋈ dim, and the matcher now
+    // recurses through inner Join nodes (either orientation), matching the
+    // join conditions semantically and rolling dim-only filters (pushed
+    // BELOW the join by the optimizer) up onto the summary. The fixture
+    // registers a (c_mktsegment) rollup of orders ⋈ customer and queries a
+    // dim-filtered aggregate over the same join; the oracle recomputes the
+    // join from the raw tables in DuckDB.
+    //
+    // 100 TB shape: the dashboard query reads a 5-row summary instead of
+    // re-shuffling a fact ⋈ dim join over the corpus — the MV lever
+    // extended to the plan shape real warehouses query every day.
 
-  /** The registered star base (orders ⋈ customer) + its summary — shared
-    * with the spec so both register identical plans. */
-  private[graft] def setupJoinMv(s: org.apache.spark.sql.SparkSession,
-                                 d: String): org.apache.spark.sql.DataFrame = {
-    val fact = Tables(s, d, "orders")
-      .select(col("o_custkey"),
-              round(col("o_totalprice") * 100).cast("bigint").as("cents"))
-    val dim = Tables(s, d, "customer")
-      .select(col("c_custkey"), col("c_mktsegment"))
-    val base = fact.join(dim, col("o_custkey") === col("c_custkey"))
-    val dir = Tables.scratchDir("graft_mvjoin").resolve("mv_star").toString
-    val defn = base.groupBy("c_mktsegment")
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sc"),
-           min(col("cents")).as("mn"), max(col("cents")).as("mx"))
-    defn.write.mode("overwrite").parquet(dir)
-    graft.plans.Mv.register(base, defn, s.read.parquet(dir))
-    graft.plans.Mv.enable(s)
-    base
-  }
-
-  val decls: Map[String, Decl] = Map(
     "sql_mv_join_rewrite" -> Decl(
       (s, d) => {
         val base = setupJoinMv(s, d)
@@ -529,28 +476,20 @@ object LakehouseWave98 {
              |             CAST(round(o_totalprice * 100) AS BIGINT) AS cents
              |      FROM orders JOIN customer ON o_custkey = c_custkey)
              |WHERE c_mktsegment <> 'BUILDING'
-             |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin))
-  )
-}
+             |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
 
-// ——— round-12 wave 110 ———
-/** Round-12 wave 110: COUNT(DISTINCT dim) through the MV rewrite — the
-  * classic Calcite distinct-rollup: when the query's distinct column is
-  * itself an MV dimension and the MV's dims are exactly the groupings
-  * plus that column, the summary holds one row per (group, x) pair and
-  * a plain null-skipping Count over the summary IS the distinct count.
-  * The same (event_type, day) MV that serves counts/sums/avgs now also
-  * serves per-type active-day counts — no second summary needed.
-  * MvDistinctSpec pins the scan switch AND the extra-dim negative.
-  */
-object LakehouseWave110 {
-  import graft.Decl
-  import org.apache.spark.sql.functions._
+    // COUNT(DISTINCT dim) through the MV rewrite — the
+    // classic Calcite distinct-rollup: when the query's distinct column is
+    // itself an MV dimension and the MV's dims are exactly the groupings
+    // plus that column, the summary holds one row per (group, x) pair and
+    // a plain null-skipping Count over the summary IS the distinct count.
+    // The same (event_type, day) MV that serves counts/sums/avgs now also
+    // serves per-type active-day counts — no second summary needed.
+    // MvDistinctSpec pins the scan switch AND the extra-dim negative.
 
-  val decls: Map[String, Decl] = Map(
     "sql_mv_distinct_rewrite" -> Decl(
       (s, d) => {
-        val base = LakehouseWave95.setupMv(s, d)
+        val base = setupMv(s, d)
         base.groupBy("event_type")
           .agg(countDistinct(col("day")).as("n_days"),
                count(lit(1)).as("n_events"))
@@ -564,23 +503,15 @@ object LakehouseWave110 {
              |                  CAST(CAST(ts AS TIMESTAMP) AS DATE))
              |                  AS BIGINT) AS day
              |      FROM events)
-             |GROUP BY event_type ORDER BY event_type""".stripMargin))
-  )
-}
+             |GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
-// ——— round-12 wave 111 ———
-/** Round-12 wave 111: two lakehouse scan surfaces the inventory still
-  * lacked — parquet SCHEMA EVOLUTION (mergeSchema over files written
-  * before and after a column was added; the missing column reads as
-  * NULL) and RECURSIVE file lookup (one logical table scattered over
-  * nested ingest directories). Both oracled against the RAW table with
-  * the same deterministic split.
-  */
-object LakehouseWave111 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Two lakehouse scan surfaces the inventory still
+    // lacked — parquet SCHEMA EVOLUTION (mergeSchema over files written
+    // before and after a column was added; the missing column reads as
+    // NULL) and RECURSIVE file lookup (one logical table scattered over
+    // nested ingest directories). Both oracled against the RAW table with
+    // the same deterministic split.
 
-  val decls: Map[String, Decl] = Map(
     // v1 files carry (doc_id, lang); v2 files add n_chars. mergeSchema
     // unions the footers, v1 rows surface NULL n_chars, and the
     // aggregate proves NULL-vs-present accounting per lang. At cluster

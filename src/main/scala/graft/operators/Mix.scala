@@ -1,26 +1,44 @@
 package graft.operators
 
-/** data-mix, packing, sampling and quality waves — consolidated from the append-only wave files
-  * (round-11 verdict item 8); object names and query keys unchanged,
-  * REGISTRY.md remains the per-key index.
+/** Data-mix, packing, sampling and quality keys.
+  * REGISTRY.md maps each key to its file:line.
   */
-
-// ——— formerly Round10c.scala ———
-/** Round-10 third wave: training-data governance and evaluation operators —
-  * k-anonymity audit, snapshot drift profiling, exact ECDF grid, n-gram
-  * novelty scoring, deterministic negative-pair sampling, and rolling
-  * correlation. Determinism discipline as everywhere in the repo: counts
-  * and cents stay BIGINT end-to-end, floats appear only in terminal
-  * `round(x, 6)` ratios / one sqrt tree over exact integer sufficient
-  * statistics, and every ORDER BY ends in a unique key (SURVEY §7.3).
-  */
-object Round10c {
-  import graft.{Decl, Tables}
+object Mix {
+  import graft.{Decl, Tables, declMap}
   import org.apache.spark.sql.expressions.Window
   import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.{Column, DataFrame}
 
+  private val Budget = 10000L
 
-  val decls: Map[String, Decl] = Map(
+  private val KCenters = 12
+  private val Q = 25.0   // process noise variance
+  private val R = 400.0  // observation noise variance
+
+  /** ‖a − b‖₂ with b a Scala constant vector, folded in index order.
+    * Round-13: the codegen `EuclideanToConst` expression — same IEEE
+    * sequence as the zip_with+aggregate HOF it replaces (per-element
+    * float→double, (x−y)² accumulated in index order, one sqrt;
+    * SketchParitySpec asserts bit-parity), without the interpreted
+    * per-element closures and intermediate array the greedy pass paid
+    * against every chosen center per round. */
+  private def distToConst(e: Column, b: Seq[Double]): Column =
+    graft.functions.VectorOps.euclideanToConst(e, b)
+
+  /** Per-column profile entries stacked long — built from ONE aggregate
+    * row so the table is scanned once (plus the unavoidable count-distinct
+    * Expand), then exploded driver-free into (column, stat) rows.
+    */
+
+  val decls: Map[String, Decl] = declMap(
+    // Training-data governance and evaluation operators —
+    // k-anonymity audit, snapshot drift profiling, exact ECDF grid, n-gram
+    // novelty scoring, deterministic negative-pair sampling, and rolling
+    // correlation. Determinism discipline as everywhere in the repo: counts
+    // and cents stay BIGINT end-to-end, floats appear only in terminal
+    // `round(x, 6)` ratios / one sqrt tree over exact integer sufficient
+    // statistics, and every ORDER BY ends in a unique key (SURVEY §7.3).
+
     // k-anonymity audit over quasi-identifiers (nation × segment ×
     // $1000-balance band): the privacy gate a training corpus derived
     // from user data must pass. Cells histogram by anonymity class
@@ -254,37 +272,26 @@ object Round10c {
              |             / sqrt(CAST(nullif((n * sxx - sx * sx)
              |                                * (n * syy - sy * sy), 0)
              |                         AS DOUBLE)), 6) AS corr20
-             |FROM s WHERE n = 20 ORDER BY user_id, event_id""".stripMargin))
-  )
-}
+             |FROM s WHERE n = 20 ORDER BY user_id, event_id""".stripMargin)),
 
-// ——— formerly Round10mm.scala ———
-/** Round-10 wave 43: token-budget corpus selection — the "fill each
-  * language's training-mix slot with the best documents until the token
-  * budget runs out" step every pretraining data pipeline ends with.
-  *
-  * Ranking is per-language by integer lexical density (1000·|distinct
-  * tokens| div |tokens| — an exact integer, no float ever sorts), doc_id
-  * tiebreak; the keep decision is `cumulative tokens ≤ budget` under
-  * that order.
-  *
-  * Scale shape: the cumulative sum is the distributed two-pass
-  * [[PrefixSum]] over the ONE global total order (lang, density desc,
-  * doc_id) — languages are a handful of values, so a
-  * `Window.partitionBy(lang)` would funnel each language's whole corpus
-  * through one task (the exact shape the round-9 verdict flagged and
-  * the ScaleSpec gate now rejects). Per-language cumulative = global
-  * cumulative − the language's base offset, recovered from a bounded
-  * (#langs-row) broadcast aggregate.
-  */
-object Round10mm {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Token-budget corpus selection — the "fill each
+    // language's training-mix slot with the best documents until the token
+    // budget runs out" step every pretraining data pipeline ends with.
+    //
+    // Ranking is per-language by integer lexical density (1000·|distinct
+    // tokens| div |tokens| — an exact integer, no float ever sorts), doc_id
+    // tiebreak; the keep decision is `cumulative tokens ≤ budget` under
+    // that order.
+    //
+    // Scale shape: the cumulative sum is the distributed two-pass
+    // [[PrefixSum]] over the ONE global total order (lang, density desc,
+    // doc_id) — languages are a handful of values, so a
+    // `Window.partitionBy(lang)` would funnel each language's whole corpus
+    // through one task (the exact shape the round-9 verdict flagged and
+    // the ScaleSpec gate now rejects). Per-language cumulative = global
+    // cumulative − the language's base offset, recovered from a bounded
+    // (#langs-row) broadcast aggregate.
 
-
-  private val Budget = 10000L
-
-  val decls: Map[String, Decl] = Map(
     "mix_token_budget" -> Decl(
       (s, d) => {
         val docs = Tables(s, d, "documents")
@@ -318,21 +325,12 @@ object Round10mm {
              |                // len(string_split(text, ' ')) AS BIGINT) AS density
              |    FROM documents))
              |WHERE cum_toks <= $Budget
-             |ORDER BY lang, cum_toks""".stripMargin))
-  )
-}
+             |ORDER BY lang, cum_toks""".stripMargin)),
 
-// ——— formerly Round10t.scala ———
-/** Round-10 twentieth wave: class-balanced sampling on the native
-  * bounded-heap operator, empirical-Bayes rate smoothing, and the
-  * primary-key uniqueness audit.
-  */
-object Round10t {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Class-balanced sampling on the native
+    // bounded-heap operator, empirical-Bayes rate smoothing, and the
+    // primary-key uniqueness audit.
 
-
-  val decls: Map[String, Decl] = Map(
     // Class-balanced downsample: every event type keeps exactly
     // min-class-size rows, chosen by deterministic hash rank — the
     // imbalanced-training-set fix. The per-class pick runs on the NATIVE
@@ -443,52 +441,28 @@ object Round10t {
              |            FROM documents
              |  UNION ALL SELECT 'embeddings', count(*), count(DISTINCT vec_id)
              |            FROM embeddings)
-             |ORDER BY table_name""".stripMargin))
-  )
-}
+             |ORDER BY table_name""".stripMargin)),
 
-// ——— formerly Round11m.scala ———
-/** Round-10 wave 69: farthest-point sampling (the k-center greedy
-  * coreset — the standard diversity/active-learning selection: each
-  * round keeps the point farthest from everything already kept, a
-  * 2-approximation of the k-center objective) and the 1-D Kalman
-  * filter (local-level state-space smoothing of a daily series — the
-  * principled EWMA whose gain adapts from the modeled noise ratio).
-  *
-  * Determinism: k-center distances are index-ordered zip_with folds
-  * (float→double promotion, no shuffle-order summation); argmax breaks
-  * ties by vec_id. The Kalman recursion runs the identical IEEE
-  * expression sequence in both engines (driver fold here, recursive
-  * CTE in the oracle — the ts_holt_winters discipline,
-  * Round11e.scala), rounded at 4 dp on output.
-  *
-  * Scale shape: each k-center round is ONE scan computing min-distance
-  * against ≤k broadcast-literal centers followed by a
-  * TakeOrderedAndProject(1) — O(k·n) dots total, never a pair shuffle.
-  * The Kalman series is the bounded 30-day grid: one corpus-sized
-  * aggregate, then driver-side state recursion over 30 rows.
-  */
-object Round11m {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions._
+    // Farthest-point sampling (the k-center greedy
+    // coreset — the standard diversity/active-learning selection: each
+    // round keeps the point farthest from everything already kept, a
+    // 2-approximation of the k-center objective) and the 1-D Kalman
+    // filter (local-level state-space smoothing of a daily series — the
+    // principled EWMA whose gain adapts from the modeled noise ratio).
+    //
+    // Determinism: k-center distances are index-ordered zip_with folds
+    // (float→double promotion, no shuffle-order summation); argmax breaks
+    // ties by vec_id. The Kalman recursion runs the identical IEEE
+    // expression sequence in both engines (driver fold here, recursive
+    // CTE in the oracle — the ts_holt_winters discipline
+    // in TimeSeries), rounded at 4 dp on output.
+    //
+    // Scale shape: each k-center round is ONE scan computing min-distance
+    // against ≤k broadcast-literal centers followed by a
+    // TakeOrderedAndProject(1) — O(k·n) dots total, never a pair shuffle.
+    // The Kalman series is the bounded 30-day grid: one corpus-sized
+    // aggregate, then driver-side state recursion over 30 rows.
 
-
-  private val KCenters = 12
-  private val Q = 25.0   // process noise variance
-  private val R = 400.0  // observation noise variance
-
-  /** ‖a − b‖₂ with b a Scala constant vector, folded in index order.
-    * Round-13: the codegen `EuclideanToConst` expression — same IEEE
-    * sequence as the zip_with+aggregate HOF it replaces (per-element
-    * float→double, (x−y)² accumulated in index order, one sqrt;
-    * SketchParitySpec asserts bit-parity), without the interpreted
-    * per-element closures and intermediate array the greedy pass paid
-    * against every chosen center per round. */
-  private def distToConst(e: Column, b: Seq[Double]): Column =
-    graft.functions.VectorOps.euclideanToConst(e, b)
-
-  val decls: Map[String, Decl] = Map(
     // Greedy k-center from seed vec_id 0: rank, picked vector, and its
     // distance-to-selected-set at pick time. The oracle replays the
     // same greedy recursion as a recursive CTE and recomputes each
@@ -604,40 +578,31 @@ object Round11m {
               |  WHERE kf.t < 30)
               |SELECT t AS day, round(yt, 4) AS actual, round(lvl, 4) AS level,
               |       round(k, 4) AS gain
-              |FROM kf ORDER BY day""".stripMargin))
-  )
-}
+              |FROM kf ORDER BY day""".stripMargin)),
 
-// ——— formerly Round11u.scala ———
-/** Round-10 wave 77: cross-engine table checksums (the reconciliation
-  * primitive behind every 100 TB migration/copy audit: order-independent
-  * per-bucket digests that two engines can compute independently and
-  * diff — a mismatch localizes to one month instead of "somewhere in
-  * the table") and the Hampel filter (rolling-median ± scaled-rolling-
-  * MAD outlier replacement — the robust despiking step production
-  * telemetry pipelines run before any model sees the series).
-  *
-  * Determinism: the checksum hashes a canonical '|'-joined row string
-  * (integer cents, yyyy-MM-dd dates — no float formatting anywhere)
-  * through md5, takes the top 60 bits as an integer, and folds with
-  * the two classic order-independent combiners (exact DECIMAL(38,0)
-  * sum — overflow-free at any corpus size — and bit XOR). Hampel runs
-  * on the bounded 30-day × event-type grid with exact integer counts;
-  * medians of 7-element frames interpolate identically (both engines
-  * average the middle pair), landing on .5 steps that doubles carry
-  * exactly.
-  *
-  * Scale shape: the checksum is one scan + one hash-partitioned
-  * groupBy on the month — pure map-side-combinable aggregation. The
-  * Hampel frame join is spine×7 over the calendar grid (never corpus
-  * rows).
-  */
-object Round11u {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Cross-engine table checksums (the reconciliation
+    // primitive behind every 100 TB migration/copy audit: order-independent
+    // per-bucket digests that two engines can compute independently and
+    // diff — a mismatch localizes to one month instead of "somewhere in
+    // the table") and the Hampel filter (rolling-median ± scaled-rolling-
+    // MAD outlier replacement — the robust despiking step production
+    // telemetry pipelines run before any model sees the series).
+    //
+    // Determinism: the checksum hashes a canonical '|'-joined row string
+    // (integer cents, yyyy-MM-dd dates — no float formatting anywhere)
+    // through md5, takes the top 60 bits as an integer, and folds with
+    // the two classic order-independent combiners (exact DECIMAL(38,0)
+    // sum — overflow-free at any corpus size — and bit XOR). Hampel runs
+    // on the bounded 30-day × event-type grid with exact integer counts;
+    // medians of 7-element frames interpolate identically (both engines
+    // average the middle pair), landing on .5 steps that doubles carry
+    // exactly.
+    //
+    // Scale shape: the checksum is one scan + one hash-partitioned
+    // groupBy on the month — pure map-side-combinable aggregation. The
+    // Hampel frame join is spine×7 over the calendar grid (never corpus
+    // rows).
 
-
-  val decls: Map[String, Decl] = Map(
     // Per-month reconciliation digests over orders: row count, exact
     // decimal sum of 60-bit md5 prefixes, and their XOR. Two engines
     // computing this independently agree iff the table contents agree
@@ -758,34 +723,20 @@ object Round11u {
              |                  ELSE CAST(med.x AS DOUBLE) END, 6) AS filtered
              |FROM med JOIN mad ON mad.event_type = med.event_type
              |                 AND mad.t = med.t
-             |ORDER BY med.event_type, med.t""".stripMargin))
-  )
-}
+             |ORDER BY med.event_type, med.t""".stripMargin)),
 
-// ——— formerly Round9c.scala ———
-/** Round-9 third wave — the data-quality / pipeline-operations family a
-  * production 100 TB corpus store runs nightly (column profiling,
-  * referential-integrity audit, constraint checking), plus deterministic
-  * per-key reservoir sampling through the native TopKPerKey plan and two
-  * exact-integer time-series diagnostics (seasonal profile,
-  * cross-correlation).
-  *
-  * Scale doctrine shared by the family: every report's OUTPUT is bounded
-  * by schema size (columns × constraints × FK edges), never by data size,
-  * and every input pass is a single scan feeding partial aggregates — the
-  * shapes that survive 1000 executors unchanged.
-  */
-object Round9c {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.{DataFrame, SparkSession}
-  import org.apache.spark.sql.functions._
+    // The data-quality / pipeline-operations family a
+    // production 100 TB corpus store runs nightly (column profiling,
+    // referential-integrity audit, constraint checking), plus deterministic
+    // per-key reservoir sampling through the native TopKPerKey plan and two
+    // exact-integer time-series diagnostics (seasonal profile,
+    // cross-correlation).
+    //
+    // Scale doctrine shared by the family: every report's OUTPUT is bounded
+    // by schema size (columns × constraints × FK edges), never by data size,
+    // and every input pass is a single scan feeding partial aggregates — the
+    // shapes that survive 1000 executors unchanged.
 
-
-  /** Per-column profile entries stacked long — built from ONE aggregate
-    * row so the table is scanned once (plus the unavoidable count-distinct
-    * Expand), then exploded driver-free into (column, stat) rows.
-    */
-  val decls: Map[String, Decl] = Map(
     // Column profiler (Deequ/Great-Expectations "analyze" pass): one scan
     // of lineitem computes n / nulls / exact NDV / min / max for six
     // representative columns (two int keys, two doubles-as-cents, one
@@ -1128,36 +1079,27 @@ object Round9c {
              |       round(CAST(n * sxy - sx * sy AS DOUBLE) /
              |         (sqrt(CAST(n * sxx - sx * sx AS DOUBLE)) *
              |          sqrt(CAST(n * syy - sy * sy AS DOUBLE))), 6) AS r
-             |FROM s ORDER BY lag""".stripMargin))
-  )
-}
+             |FROM s ORDER BY lag""".stripMargin)),
 
-// ——— round-11 wave 88 ———
-/** Round-11 wave 88: Neyman-optimal stratified allocation — the
-  * sampling design every measurement pipeline should use instead of
-  * proportional allocation when strata variances differ: budget B
-  * split as n_h ∝ N_h·σ_h (minimum-variance unbiased estimation of
-  * the population mean under a fixed budget), integerized by the
-  * largest-remainder method so the allocations sum to B exactly.
-  *
-  * Determinism: N_h are integers; σ_h comes from exact DECIMAL(38,0)
-  * Σc/Σc² pushed through the identical sample-variance tree in both
-  * engines; shares, floors and remainders are the same IEEE doubles,
-  * and the remainder ranking tie-breaks on the stratum name. The
-  * whole allocation is a ≤5-row broadcast computation.
-  *
-  * Scale shape: ONE distributed aggregate per stratum (count + two
-  * power sums riding the same scan); everything after is a bounded
-  * 5-row window. The actual row draw composes with sample_hash_exactk
-  * (stored-rank hash sampling) per stratum — this key certifies the
-  * allocation itself, the part proportional sampling gets wrong.
-  */
-object MixWave88 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Neyman-optimal stratified allocation — the
+    // sampling design every measurement pipeline should use instead of
+    // proportional allocation when strata variances differ: budget B
+    // split as n_h ∝ N_h·σ_h (minimum-variance unbiased estimation of
+    // the population mean under a fixed budget), integerized by the
+    // largest-remainder method so the allocations sum to B exactly.
+    //
+    // Determinism: N_h are integers; σ_h comes from exact DECIMAL(38,0)
+    // Σc/Σc² pushed through the identical sample-variance tree in both
+    // engines; shares, floors and remainders are the same IEEE doubles,
+    // and the remainder ranking tie-breaks on the stratum name. The
+    // whole allocation is a ≤5-row broadcast computation.
+    //
+    // Scale shape: ONE distributed aggregate per stratum (count + two
+    // power sums riding the same scan); everything after is a bounded
+    // 5-row window. The actual row draw composes with sample_hash_exactk
+    // (stored-rank hash sampling) per stratum — this key certifies the
+    // allocation itself, the part proportional sampling gets wrong.
 
-  val decls: Map[String, Decl] = Map(
     "sample_stratified_neyman" -> Decl(
       (s, d) => {
         val B = 1000L

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Decl, Tables}
+import graft.{Decl, Tables, declMap}
 import graft.functions.{TextOps, VectorOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -39,7 +39,7 @@ object Pipeline {
     docs.unionAll(pert)
   }
 
-  val decls: Map[String, Decl] = Map(
+  val decls: Map[String, Decl] = declMap(
     // ------------------------------------------------------------- dedup
     // Exact dedup on normalized text: md5(lower(trim(text))) groups. One
     // shuffle on the 128-bit hash — at 100 TB this is the cheapest possible

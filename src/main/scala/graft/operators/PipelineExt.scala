@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Artifacts, Decl, Tables}
+import graft.{Artifacts, Decl, Tables, declMap}
 import graft.functions.{TextOps, VectorOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -30,7 +30,6 @@ object PipelineExt {
   // exactly like MinHash bands.
   private[graft] val SrpTables = 8
   private[graft] val SrpBitsPerTable = 4
-  private val SrpBits = SrpTables * SrpBitsPerTable
   // Near-dup prefilter (cos ≥ 0.95) needs BOTH recall ≈ 1 (the exact-verify
   // output must reproduce the all-pairs oracle) and real pruning. Wider
   // bands than ANN's 4 bits are required for the latter: with 8-bit bands a
@@ -68,7 +67,7 @@ object PipelineExt {
   private val StopFr = Seq("le", "les", "des", "est", "une", "dans")
   private val StopZh = Seq("的", "是", "了", "在", "我", "有")
 
-  val decls: Map[String, Decl] = Map(
+  val decls: Map[String, Decl] = declMap(
     // ------------------------------------------------------------ dedup
     // SimHash near-dup: 64-bit signature from per-token hash bit votes,
     // computed as 64 conditional-sum aggregates in one groupBy (partial agg

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Decl, Sql, Tables}
+import graft.{Decl, Sql, Tables, declMap}
 import org.apache.spark.sql.functions._
 
 /** SURVEY §2.1 scans/sources/sinks, §2.2 projection/filter/predicates,
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 object Relational {
 
   // ---------------------------------------------------------------- §2.1
-  private val scans: Map[String, Decl] = Map(
+  private val scans: Seq[(String, Decl)] = Seq(
     // Full scan, all columns. At 100 TB this is the pathological query by
     // construction; nothing to optimize beyond the vectorized reader.
     "scan_full" -> Decl(
@@ -280,7 +280,7 @@ object Relational {
              |FROM events ORDER BY ALL NULLS FIRST""".stripMargin)))
 
   // ---------------------------------------------------------------- §2.2
-  private val filters: Map[String, Decl] = Map(
+  private val filters: Seq[(String, Decl)] = Seq(
     "project_compute" -> Decl(
       (s, d) => Tables.canon(
         Tables(s, d, "lineitem").select(
@@ -364,7 +364,7 @@ object Relational {
              |ORDER BY o_orderkey""".stripMargin)))
 
   // ---------------------------------------------------------------- §2.3
-  private val joins: Map[String, Decl] = Map(
+  private val joins: Seq[(String, Decl)] = Seq(
     // Plain equi join; Catalyst picks the strategy (broadcast at this dim
     // size; SMJ/SHJ once customer outgrows the threshold at cluster scale).
     "join_inner_hash" -> Decl(
@@ -580,5 +580,5 @@ object Relational {
              |JOIN region   ON n_regionkey = r_regionkey
              |GROUP BY r_name, n_name ORDER BY ALL NULLS FIRST""".stripMargin)))
 
-  val decls: Map[String, Decl] = scans ++ filters ++ joins
+  val decls: Map[String, Decl] = declMap(scans ++ filters ++ joins: _*)
 }

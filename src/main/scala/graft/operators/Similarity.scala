@@ -1,124 +1,18 @@
 package graft.operators
 
-/** similarity / ANN / vector waves — consolidated from the append-only wave files
-  * (round-11 verdict item 8); object names and query keys unchanged,
-  * REGISTRY.md remains the per-key index.
+/** Similarity, ANN and vector keys.
+  * REGISTRY.md maps each key to its file:line.
   */
-
-// ——— formerly Round10ll.scala ———
-/** Round-10 wave 42: binary-quantized vector search — the 1-bit/dim
-  * sign quantization + hamming prefilter + exact rerank pipeline that
-  * production vector stores run when the full-precision corpus is too
-  * big to scan (32× less bandwidth than float32; hamming is one XOR +
-  * popcount per 64 dims).
-  *
-  * Scale shape: the sign signature packs into two BIGINTs computed in
-  * one linear scan (no shuffle); the hamming scan touches ONLY those
-  * 16 bytes per vector; per-query candidates go through the native
-  * bounded-heap TopKPerKey (shard pre-pass then final — the
-  * sim_knn_join pattern, never a full per-query sort), and the exact
-  * cosine rerank touches ≤32 full vectors per query. Query side is
-  * broadcast; the corpus never moves.
-  *
-  * Determinism: hamming is an exact small integer; the prefilter
-  * cutoff orders by (hamming, vec_id) and the rerank by
-  * (round(cos, 6) DESC, vec_id) — both total orders, so the engines
-  * cannot disagree on either cut.
-  */
-object Round10ll {
-  import graft.{Decl, Tables}
+object Similarity {
+  import graft.{Decl, Tables, declMap}
   import graft.functions.VectorOps
   import org.apache.spark.sql.functions._
-
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.expressions.Window
 
   private def signPack(c: String, lo: Int): org.apache.spark.sql.Column =
     expr(s"aggregate(sequence(0, 31), 0L, (acc, j) -> " +
       s"acc + IF($c[j + $lo] > 0, shiftleft(1L, j), 0L))")
-
-  val decls: Map[String, Decl] = Map(
-    "sim_binary_rerank" -> Decl(
-      (s, d) => {
-        val emb = Tables(s, d, "embeddings")
-          .select(col("vec_id"), col("embedding"),
-                  signPack("embedding", 0).as("slo"),
-                  signPack("embedding", 32).as("shi"))
-          .localCheckpoint(true)
-        val q = emb.filter(pmod(col("vec_id"), lit(50L)) === 0)
-          .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-                  col("slo").as("qlo"), col("shi").as("qhi"))
-        val ham = emb.select(col("vec_id"), col("slo"), col("shi"))
-          .crossJoin(broadcast(q.select(col("q_id"), col("qlo"), col("qhi"))))
-          .filter(col("vec_id") =!= col("q_id"))
-          .select(col("q_id"), col("vec_id"),
-            (expr("bit_count(slo ^ qlo)") + expr("bit_count(shi ^ qhi)"))
-              .cast("int").as("hamming"),
-            pmod(col("vec_id"), lit(64L)).as("shard"))
-        val partial = graft.plans.TopK.perKey(
-          ham, Seq("q_id", "shard"), Seq("hamming" -> false, "vec_id" -> false), 32)
-        val cand = graft.plans.TopK.perKey(
-            partial, Seq("q_id"), Seq("hamming" -> false, "vec_id" -> false), 32)
-          .select("q_id", "vec_id", "hamming")
-        val rer = cand
-          .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
-          .join(broadcast(q.select(col("q_id"), col("qe"))), "q_id")
-          .select(col("q_id"), col("vec_id"), col("hamming"),
-                  round(VectorOps.cosine(col("embedding"), col("qe")), 6).as("cos"))
-        graft.plans.TopK.perKey(
-            rer, Seq("q_id"), Seq("cos" -> true, "vec_id" -> false), 5)
-          .orderBy(col("q_id"), col("cos").desc, col("vec_id"))
-      },
-      Some("""WITH sig AS (
-             |  SELECT vec_id, list_transform(embedding, x -> x > 0) AS bits,
-             |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-             |  FROM embeddings),
-             |q AS (SELECT vec_id AS q_id, bits AS qbits, e AS qe
-             |      FROM sig WHERE vec_id % 50 = 0),
-             |ham AS (
-             |  SELECT q_id, sig.vec_id,
-             |         CAST(len(list_filter(range(1, 65),
-             |           i -> bits[i] != qbits[i])) AS INT) AS hamming
-             |  FROM sig CROSS JOIN q WHERE sig.vec_id <> q.q_id),
-             |cand AS (
-             |  SELECT q_id, vec_id, hamming FROM (
-             |    SELECT q_id, vec_id, hamming,
-             |           row_number() OVER (PARTITION BY q_id
-             |                              ORDER BY hamming, vec_id) AS rn
-             |    FROM ham) WHERE rn <= 32),
-             |rer AS (
-             |  SELECT cand.q_id, cand.vec_id, cand.hamming,
-             |         round(list_cosine_similarity(sig.e, qe), 6) AS cos
-             |  FROM cand JOIN sig ON cand.vec_id = sig.vec_id
-             |            JOIN q ON cand.q_id = q.q_id)
-             |SELECT q_id, vec_id, hamming, cos FROM (
-             |  SELECT q_id, vec_id, hamming, cos,
-             |         row_number() OVER (PARTITION BY q_id
-             |                            ORDER BY cos DESC, vec_id) AS rn
-             |  FROM rer) WHERE rn <= 5
-             |ORDER BY q_id, cos DESC, vec_id""".stripMargin))
-  )
-}
-
-// ——— formerly Round11i.scala ———
-/** Round-10 wave 65: multiprobe LSH (the recall/fan-out dial every
-  * production ANN service exposes: probe the home bucket PLUS every
-  * 1-bit-flip neighbor, trading bounded extra candidates for strictly
-  * higher recall) and exact heavy hitters by the Misra-Gries two-pass
-  * (a mergeable candidate sketch whose no-false-negative guarantee
-  * turns one verification scan into an EXACT answer — the scalable
-  * alternative to sketch-only CMS answers).
-  *
-  * Scale shape: multiprobe multiplies the probe side's bucket keys by
-  * (1 + bits) — a constant fan-out on one side of the same
-  * co-partitioned shuffle_hash self-join (nothing broadcasts, pairs
-  * dedup before scoring, the sim_ann_lsh discipline). Misra-Gries
-  * state is k counters per partition merged associatively; the verify
-  * pass is one semi-joined aggregate over the candidate set.
-  */
-object Round11i {
-  import graft.{Decl, Tables}
-  import graft.functions.VectorOps
-  import org.apache.spark.sql.functions._
-
 
   /** The retrieval fixture's embeddings are near-random (measured max
     * pairwise cosine 0.51 at sf0.001 AND sf0.01) — a τ=0.90 retrieval key
@@ -215,7 +109,172 @@ object Round11i {
         (r.getLong(0) >= 0L && r.getLong(1) + 1000000L < (1L << 31))
     }
 
-  val decls: Map[String, Decl] = Map(
+  /** 16×64 ±1 sign matrix from the shared LCG recipe (compile-time
+    * deterministic, same constant inlined into the oracle SQL). */
+  private[operators] val JlSigns: Seq[Seq[Double]] = {
+    var state = 0x2545F4914F6CDD1DL
+    Seq.fill(16)(Seq.fill(64) {
+      state = state * 6364136223846793005L + 1442695040888963407L
+      if ((state >>> 63) == 0L) 1.0 else -1.0
+    })
+  }
+
+  private def jlSqlLiteral: String =
+    JlSigns.map(_.map(v => if (v > 0) "1.0" else "-1.0")
+      .mkString("[", ",", "]")).mkString("[", ",", "]")
+
+  /** k and iteration count for vec_kmeans_lloyd — fixed so the oracle SQL
+    * can unroll the same number of CTE stages.
+    */
+  private val K = 5
+  private val Iters = 3
+
+  /** Quantized dimension table: one row per (vec_id, dim index, integer
+    * coordinate), the exact-arithmetic substrate for Lloyd iterations.
+    * round(x·1000) on the float-widened double is identical in both
+    * engines; |x| ≤ 303 on this data, so every later product stays far
+    * inside int64 AND double-exact range (see vec_kmeans_lloyd).
+    */
+  private[operators] def quantized(s: SparkSession, d: String): DataFrame =
+    Tables(s, d, "embeddings")
+      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "e")))
+      .select(col("vec_id"), col("i"),
+              round(col("e").cast("double") * 1000).cast("bigint").as("x"))
+
+  /** Initial centroid state: the K lexicographically-first vectors, each a
+    * singleton cluster keyed by its own vec_id.
+    */
+  private def seedState(s: SparkSession, d: String, q: DataFrame): DataFrame = {
+    val seeds = Tables(s, d, "embeddings")
+      .select(col("vec_id")).orderBy("vec_id").limit(K)
+    q.join(broadcast(seeds), "vec_id")
+      .select(col("vec_id").as("cluster"), col("i"),
+              col("x").as("cs"), lit(1L).as("cn"))
+  }
+
+  /** One Lloyd iteration: assign every vector to its nearest centroid (the
+    * k×dim state is BROADCAST, so the corpus never shuffles for the
+    * distance join), then re-derive the (Σx, n) state. Package-visible so
+    * ScaleSpec can gate the plan shape of the stage the operator's
+    * checkpoints would otherwise hide.
+    */
+  private[graft] def lloydStep(q: DataFrame, state: DataFrame): DataFrame = {
+    val assign = q.join(broadcast(state), "i")
+      .groupBy(col("vec_id"), col("cluster"))
+      .agg(sum((col("cn") * col("x") - col("cs")) *
+               (col("cn") * col("x") - col("cs"))).as("num"),
+           max(col("cn")).as("cn"))
+      .groupBy("vec_id")
+      .agg(min(struct((col("num").cast("double") /
+                       (col("cn") * col("cn")).cast("double")).as("d"),
+                      col("cluster").as("c"))).as("m"))
+      .select(col("vec_id"), col("m.c").as("cluster"))
+    assign.join(q, "vec_id")
+      .groupBy("cluster", "i")
+      .agg(sum(col("x")).as("cs"), count(lit(1)).as("cn"))
+  }
+
+  /** Test probe: one un-checkpointed Lloyd stage over the real tables. */
+  private[graft] def kmeansStageForPlan(s: SparkSession, d: String): DataFrame = {
+    val q = quantized(s, d)
+    lloydStep(q, seedState(s, d, q))
+  }
+
+  val decls: Map[String, Decl] = declMap(
+    // Binary-quantized vector search — the 1-bit/dim
+    // sign quantization + hamming prefilter + exact rerank pipeline that
+    // production vector stores run when the full-precision corpus is too
+    // big to scan (32× less bandwidth than float32; hamming is one XOR +
+    // popcount per 64 dims).
+    //
+    // Scale shape: the sign signature packs into two BIGINTs computed in
+    // one linear scan (no shuffle); the hamming scan touches ONLY those
+    // 16 bytes per vector; per-query candidates go through the native
+    // bounded-heap TopKPerKey (shard pre-pass then final — the
+    // sim_knn_join pattern, never a full per-query sort), and the exact
+    // cosine rerank touches ≤32 full vectors per query. Query side is
+    // broadcast; the corpus never moves.
+    //
+    // Determinism: hamming is an exact small integer; the prefilter
+    // cutoff orders by (hamming, vec_id) and the rerank by
+    // (round(cos, 6) DESC, vec_id) — both total orders, so the engines
+    // cannot disagree on either cut.
+
+    "sim_binary_rerank" -> Decl(
+      (s, d) => {
+        val emb = Tables(s, d, "embeddings")
+          .select(col("vec_id"), col("embedding"),
+                  signPack("embedding", 0).as("slo"),
+                  signPack("embedding", 32).as("shi"))
+          .localCheckpoint(true)
+        val q = emb.filter(pmod(col("vec_id"), lit(50L)) === 0)
+          .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
+                  col("slo").as("qlo"), col("shi").as("qhi"))
+        val ham = emb.select(col("vec_id"), col("slo"), col("shi"))
+          .crossJoin(broadcast(q.select(col("q_id"), col("qlo"), col("qhi"))))
+          .filter(col("vec_id") =!= col("q_id"))
+          .select(col("q_id"), col("vec_id"),
+            (expr("bit_count(slo ^ qlo)") + expr("bit_count(shi ^ qhi)"))
+              .cast("int").as("hamming"),
+            pmod(col("vec_id"), lit(64L)).as("shard"))
+        val partial = graft.plans.TopK.perKey(
+          ham, Seq("q_id", "shard"), Seq("hamming" -> false, "vec_id" -> false), 32)
+        val cand = graft.plans.TopK.perKey(
+            partial, Seq("q_id"), Seq("hamming" -> false, "vec_id" -> false), 32)
+          .select("q_id", "vec_id", "hamming")
+        val rer = cand
+          .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
+          .join(broadcast(q.select(col("q_id"), col("qe"))), "q_id")
+          .select(col("q_id"), col("vec_id"), col("hamming"),
+                  round(VectorOps.cosine(col("embedding"), col("qe")), 6).as("cos"))
+        graft.plans.TopK.perKey(
+            rer, Seq("q_id"), Seq("cos" -> true, "vec_id" -> false), 5)
+          .orderBy(col("q_id"), col("cos").desc, col("vec_id"))
+      },
+      Some("""WITH sig AS (
+             |  SELECT vec_id, list_transform(embedding, x -> x > 0) AS bits,
+             |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+             |  FROM embeddings),
+             |q AS (SELECT vec_id AS q_id, bits AS qbits, e AS qe
+             |      FROM sig WHERE vec_id % 50 = 0),
+             |ham AS (
+             |  SELECT q_id, sig.vec_id,
+             |         CAST(len(list_filter(range(1, 65),
+             |           i -> bits[i] != qbits[i])) AS INT) AS hamming
+             |  FROM sig CROSS JOIN q WHERE sig.vec_id <> q.q_id),
+             |cand AS (
+             |  SELECT q_id, vec_id, hamming FROM (
+             |    SELECT q_id, vec_id, hamming,
+             |           row_number() OVER (PARTITION BY q_id
+             |                              ORDER BY hamming, vec_id) AS rn
+             |    FROM ham) WHERE rn <= 32),
+             |rer AS (
+             |  SELECT cand.q_id, cand.vec_id, cand.hamming,
+             |         round(list_cosine_similarity(sig.e, qe), 6) AS cos
+             |  FROM cand JOIN sig ON cand.vec_id = sig.vec_id
+             |            JOIN q ON cand.q_id = q.q_id)
+             |SELECT q_id, vec_id, hamming, cos FROM (
+             |  SELECT q_id, vec_id, hamming, cos,
+             |         row_number() OVER (PARTITION BY q_id
+             |                            ORDER BY cos DESC, vec_id) AS rn
+             |  FROM rer) WHERE rn <= 5
+             |ORDER BY q_id, cos DESC, vec_id""".stripMargin)),
+
+    // Multiprobe LSH (the recall/fan-out dial every
+    // production ANN service exposes: probe the home bucket PLUS every
+    // 1-bit-flip neighbor, trading bounded extra candidates for strictly
+    // higher recall) and exact heavy hitters by the Misra-Gries two-pass
+    // (a mergeable candidate sketch whose no-false-negative guarantee
+    // turns one verification scan into an EXACT answer — the scalable
+    // alternative to sketch-only CMS answers).
+    //
+    // Scale shape: multiprobe multiplies the probe side's bucket keys by
+    // (1 + bits) — a constant fan-out on one side of the same
+    // co-partitioned shuffle_hash self-join (nothing broadcasts, pairs
+    // dedup before scoring, the sim_ann_lsh discipline). Misra-Gries
+    // state is k counters per partition merged associatively; the verify
+    // pass is one semi-joined aggregate over the candidate set.
+
     // Multiprobe SRP-LSH pair retrieval at cosine >= 0.90 over the PLANTED
     // corpus (see plantedEmbeddings — the raw fixture attests no pairs at
     // this τ): candidates collide in SOME table within hamming 1 of the
@@ -296,57 +355,34 @@ object Round11i {
              |GROUP BY word
              |HAVING count(*) * 64 > (SELECT count(*) FROM (
              |  SELECT unnest(string_split(text, ' ')) AS w FROM documents) u)
-             |ORDER BY word""".stripMargin))
-  )
-}
+             |ORDER BY word""".stripMargin)),
 
-// ——— formerly Round11l.scala ———
-/** Round-10 wave 68: Johnson-Lindenstrauss random projection (the
-  * dimensionality-reduction workhorse: a fixed ±1 sign matrix maps
-  * 64-dim embeddings to 16 dims with distance distortion bounded by the
-  * JL lemma — the cheap precursor to ANN indexing and the theory behind
-  * SimHash-style sketches) and epsilon-greedy bandit replay (offline
-  * policy evaluation by the replay method of Li et al. (WSDM'11): walk
-  * the logged event stream day by day, let the policy pick an arm from
-  * the PRIOR days' cumulative reward means, and score it on the
-  * held-out logged pulls of that arm that day).
-  *
-  * Determinism: the sign matrix is a compile-time LCG constant inlined
-  * BOTH as a Spark literal and as a list literal in the oracle SQL, and
-  * every norm folds in index order inside one codegen'd higher-order
-  * expression (no shuffle-order float summation). The bandit walk is
-  * pure window algebra over the bounded day × arm grid — cumulative
-  * integer cent sums, identical division inputs in both engines, and a
-  * lexicographic struct-min argmax with (−mean, arm) tiebreak; the
-  * deterministic exploration schedule (every 5th day, arm index
-  * (day·7) mod |arms|) replaces the coin flip so replay is exactly
-  * reproducible.
-  *
-  * Scale shape: projection is one scan (16×64 multiply-adds per row, no
-  * shuffle); the pair sample joins on a computed partner id (plain hash
-  * join). Replay's only corpus-sized work is the daily (day, arm)
-  * aggregate; everything after runs on the |days|×|arms| grid.
-  */
-object Round11l {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Johnson-Lindenstrauss random projection (the
+    // dimensionality-reduction workhorse: a fixed ±1 sign matrix maps
+    // 64-dim embeddings to 16 dims with distance distortion bounded by the
+    // JL lemma — the cheap precursor to ANN indexing and the theory behind
+    // SimHash-style sketches) and epsilon-greedy bandit replay (offline
+    // policy evaluation by the replay method of Li et al. (WSDM'11): walk
+    // the logged event stream day by day, let the policy pick an arm from
+    // the PRIOR days' cumulative reward means, and score it on the
+    // held-out logged pulls of that arm that day).
+    //
+    // Determinism: the sign matrix is a compile-time LCG constant inlined
+    // BOTH as a Spark literal and as a list literal in the oracle SQL, and
+    // every norm folds in index order inside one codegen'd higher-order
+    // expression (no shuffle-order float summation). The bandit walk is
+    // pure window algebra over the bounded day × arm grid — cumulative
+    // integer cent sums, identical division inputs in both engines, and a
+    // lexicographic struct-min argmax with (−mean, arm) tiebreak; the
+    // deterministic exploration schedule (every 5th day, arm index
+    // (day·7) mod |arms|) replaces the coin flip so replay is exactly
+    // reproducible.
+    //
+    // Scale shape: projection is one scan (16×64 multiply-adds per row, no
+    // shuffle); the pair sample joins on a computed partner id (plain hash
+    // join). Replay's only corpus-sized work is the daily (day, arm)
+    // aggregate; everything after runs on the |days|×|arms| grid.
 
-
-  /** 16×64 ±1 sign matrix from the shared LCG recipe (compile-time
-    * deterministic, same constant inlined into the oracle SQL). */
-  private[operators] val JlSigns: Seq[Seq[Double]] = {
-    var state = 0x2545F4914F6CDD1DL
-    Seq.fill(16)(Seq.fill(64) {
-      state = state * 6364136223846793005L + 1442695040888963407L
-      if ((state >>> 63) == 0L) 1.0 else -1.0
-    })
-  }
-
-  private def jlSqlLiteral: String =
-    JlSigns.map(_.map(v => if (v > 0) "1.0" else "-1.0")
-      .mkString("[", ",", "]")).mkString("[", ",", "]")
-
-  val decls: Map[String, Decl] = Map(
     // Per-pair distance distortion of the JL map p(v) = R·v / √16 on the
     // deterministic stride-97 pair sample. Round11lSpec asserts the JL
     // concentration (mean ratio ≈ 1, tails bounded); the oracle replays
@@ -489,44 +525,34 @@ object Round11l {
              |           THEN arm_idx = (day_num * 7) %
              |                (SELECT count(DISTINCT arm) FROM daily)
              |           ELSE arm = best_arm END
-             |ORDER BY day""".stripMargin))
-  )
-}
+             |ORDER BY day""".stripMargin)),
 
-// ——— formerly Round11w.scala ———
-/** Round-10 wave 79: hybrid-retrieval fusion and count-model
-  * diagnostics — reciprocal rank fusion of the BM25 (sparse) and
-  * embedding-cosine (dense) rankings for the same query document (the
-  * standard hybrid-search combiner every RAG stack runs: rank-based,
-  * so the two retrievers' incomparable score scales never touch), and
-  * a negative-binomial method-of-moments fit of per-user event counts
-  * (the overdispersion check that decides whether a Poisson rate model
-  * is even admissible — var/mean ≫ 1 means it is not).
-  *
-  * Determinism: RRF consumes only INTEGER ranks from totally-ordered
-  * cuts (score desc, id) — 1/(60+rank) is the same double in both
-  * engines, missing ranks contribute exactly 0 via the outer join.
-  * The NB moments come from exact DECIMAL(38,0) Σk/Σk² (associativity-
-  * free), with identical expression trees downstream.
-  *
-  * Scale shape: both retrieval cuts are bounded top-k
-  * (TakeOrderedAndProject); the fusion joins two ≤50-row lists. The NB
-  * fit is one per-user shuffle + one scalar aggregate.
-  */
-object Round11w {
-  import graft.{Decl, Tables}
-  import graft.functions.VectorOps
-  import org.apache.spark.sql.functions._
+    // Hybrid-retrieval fusion and count-model
+    // diagnostics — reciprocal rank fusion of the BM25 (sparse) and
+    // embedding-cosine (dense) rankings for the same query document (the
+    // standard hybrid-search combiner every RAG stack runs: rank-based,
+    // so the two retrievers' incomparable score scales never touch), and
+    // a negative-binomial method-of-moments fit of per-user event counts
+    // (the overdispersion check that decides whether a Poisson rate model
+    // is even admissible — var/mean ≫ 1 means it is not).
+    //
+    // Determinism: RRF consumes only INTEGER ranks from totally-ordered
+    // cuts (score desc, id) — 1/(60+rank) is the same double in both
+    // engines, missing ranks contribute exactly 0 via the outer join.
+    // The NB moments come from exact DECIMAL(38,0) Σk/Σk² (associativity-
+    // free), with identical expression trees downstream.
+    //
+    // Scale shape: both retrieval cuts are bounded top-k
+    // (TakeOrderedAndProject); the fusion joins two ≤50-row lists. The NB
+    // fit is one per-user shuffle + one scalar aggregate.
 
-
-  val decls: Map[String, Decl] = Map(
     // RRF (k = 60) of BM25-top-15 (reusing the text_bm25_rank scorer
     // verbatim) and cosine-top-50 against document 0's embedding;
     // the query doc itself is excluded from both lists.
     "sim_reciprocal_rank_fusion" -> Decl(
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val sparse = Round10nn.decls("text_bm25_rank").query(s, d)
+        val sparse = Text.decls("text_bm25_rank").query(s, d)
           .filter(col("doc_id") =!= 0)
           .withColumn("ra",
             row_number().over(Window.orderBy(col("bm25").desc, col("doc_id"))))
@@ -556,7 +582,7 @@ object Round11w {
                   round(col("rrf"), 6).as("rrf"))
       },
       Some {
-        val bm25 = Round10nn.decls("text_bm25_rank").oracle.get
+        val bm25 = Text.decls("text_bm25_rank").oracle.get
         s"""WITH bm AS ($bm25),
            |sparse AS (
            |  SELECT doc_id,
@@ -632,79 +658,12 @@ object Round11w {
              |       round(mean * mean / (variance - mean), 6) AS nb_r,
              |       round(mean / variance, 6) AS nb_p,
              |       variance > mean AS overdispersed
-             |FROM m""".stripMargin))
-  )
-}
+             |FROM m""".stripMargin)),
 
-// ——— formerly Round9.scala ———
-/** Round-9 additions: exact integer-grid k-means (Lloyd), Bloom-filter
-  * semi-join reduction, hourly-series autocorrelation, and feature hashing
-  * (the "hashing trick") over document tokens.
-  */
-object Round9 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.{DataFrame, SparkSession}
-  import org.apache.spark.sql.functions._
+    // Exact integer-grid k-means (Lloyd), Bloom-filter
+    // semi-join reduction, hourly-series autocorrelation, and feature hashing
+    // (the "hashing trick") over document tokens.
 
-
-  /** k and iteration count for vec_kmeans_lloyd — fixed so the oracle SQL
-    * can unroll the same number of CTE stages.
-    */
-  private val K = 5
-  private val Iters = 3
-
-  /** Quantized dimension table: one row per (vec_id, dim index, integer
-    * coordinate), the exact-arithmetic substrate for Lloyd iterations.
-    * round(x·1000) on the float-widened double is identical in both
-    * engines; |x| ≤ 303 on this data, so every later product stays far
-    * inside int64 AND double-exact range (see vec_kmeans_lloyd).
-    */
-  private[operators] def quantized(s: SparkSession, d: String): DataFrame =
-    Tables(s, d, "embeddings")
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "e")))
-      .select(col("vec_id"), col("i"),
-              round(col("e").cast("double") * 1000).cast("bigint").as("x"))
-
-  /** Initial centroid state: the K lexicographically-first vectors, each a
-    * singleton cluster keyed by its own vec_id.
-    */
-  private def seedState(s: SparkSession, d: String, q: DataFrame): DataFrame = {
-    val seeds = Tables(s, d, "embeddings")
-      .select(col("vec_id")).orderBy("vec_id").limit(K)
-    q.join(broadcast(seeds), "vec_id")
-      .select(col("vec_id").as("cluster"), col("i"),
-              col("x").as("cs"), lit(1L).as("cn"))
-  }
-
-  /** One Lloyd iteration: assign every vector to its nearest centroid (the
-    * k×dim state is BROADCAST, so the corpus never shuffles for the
-    * distance join), then re-derive the (Σx, n) state. Package-visible so
-    * ScaleSpec can gate the plan shape of the stage the operator's
-    * checkpoints would otherwise hide.
-    */
-  private[graft] def lloydStep(q: DataFrame, state: DataFrame): DataFrame = {
-    val assign = q.join(broadcast(state), "i")
-      .groupBy(col("vec_id"), col("cluster"))
-      .agg(sum((col("cn") * col("x") - col("cs")) *
-               (col("cn") * col("x") - col("cs"))).as("num"),
-           max(col("cn")).as("cn"))
-      .groupBy("vec_id")
-      .agg(min(struct((col("num").cast("double") /
-                       (col("cn") * col("cn")).cast("double")).as("d"),
-                      col("cluster").as("c"))).as("m"))
-      .select(col("vec_id"), col("m.c").as("cluster"))
-    assign.join(q, "vec_id")
-      .groupBy("cluster", "i")
-      .agg(sum(col("x")).as("cs"), count(lit(1)).as("cn"))
-  }
-
-  /** Test probe: one un-checkpointed Lloyd stage over the real tables. */
-  private[graft] def kmeansStageForPlan(s: SparkSession, d: String): DataFrame = {
-    val q = quantized(s, d)
-    lloydStep(q, seedState(s, d, q))
-  }
-
-  val decls: Map[String, Decl] = Map(
     // k-means (Lloyd) over the embedding table — the clustering primitive
     // under semantic dedup sharding, IVF coarse quantizers, and corpus
     // topic bucketing. Every arithmetic step is EXACT so the DuckDB twin
@@ -1008,22 +967,12 @@ object Round9 {
              |  AND CAST(f.ts AS TIMESTAMP) >= dim.valid_from
              |  AND (dim.valid_to IS NULL OR CAST(f.ts AS TIMESTAMP) < dim.valid_to)
              |WHERE f.event_type = 'purchase'
-             |ORDER BY f.user_id, f.event_id""".stripMargin)))
-}
+             |ORDER BY f.user_id, f.event_id""".stripMargin)),
 
-// ——— formerly Round9u.scala ———
-/** Round-9 twenty-first wave: radius (range) similarity search — the
-  * retrieval API member top-k doesn't cover — and per-query recall@k of
-  * the Matryoshka prefix ladder as a retrieval-evaluation operator.
-  */
-object Round9u {
-  import graft.{Decl, Tables}
-  import graft.functions.VectorOps
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Radius (range) similarity search — the
+    // retrieval API member top-k doesn't cover — and per-query recall@k of
+    // the Matryoshka prefix ladder as a retrieval-evaluation operator.
 
-
-  val decls: Map[String, Decl] = Map(
     // Radius search — every vector within cosine ≥ τ of each query (the
     // range-query retrieval API; top-k fixes the COUNT, radius fixes the
     // QUALITY bar). Four fixed query vectors broadcast against one

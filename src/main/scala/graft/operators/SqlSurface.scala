@@ -1,21 +1,15 @@
 package graft.operators
 
-/** SQL-surface, scalar-family and set-operation waves — consolidated from the append-only wave files
-  * (round-11 verdict item 8); object names and query keys unchanged,
-  * REGISTRY.md remains the per-key index.
+/** SQL-surface, scalar-family and set-operation keys.
+  * REGISTRY.md maps each key to its file:line.
   */
-
-// ——— formerly Round10hh.scala ———
-/** Round-10 wave 36: QUALIFY SQL surface, Kneser–Ney language modeling,
-  * and the Poisson bootstrap — the distributed-deterministic uncertainty
-  * estimate.
-  */
-object Round10hh {
-  import graft.{Artifacts, Decl, Tables}
+object SqlSurface {
+  import graft.{Artifacts, Decl, Tables, declMap}
   import org.apache.spark.sql.functions._
-
-
   import org.apache.spark.sql.expressions.Window
+  import graft.functions.StringSimilarity
+  import graft.adt.Adt
+  import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
   /** Rounded-integer mean: CAST(round(sum/count)) — one exact-int double
     * division then one round, deterministic for any partitioning. */
@@ -31,7 +25,117 @@ object Round10hh {
   private val PoissonThresholds =
     Seq("5e2d58", "bc5ab1", "eb715e", "fb2397", "ff1025", "ffd90f", "fffa8b")
 
-  val decls: Map[String, Decl] = Map(
+  private def q(spark: org.apache.spark.sql.SparkSession, d: String, sql: String) = {
+    Tables.views(spark, d)
+    graft.Sql.runSql(spark, sql)
+  }
+
+  /** Latest order per customer — the canonical DISTINCT ON use. The
+    * trailing o_orderkey sort key breaks date ties so both engines keep
+    * the same row. */
+  private val DistinctOn =
+    """SELECT DISTINCT ON (o_custkey) o_custkey, o_orderkey, o_orderdate
+      |FROM orders
+      |ORDER BY o_custkey, o_orderdate DESC, o_orderkey""".stripMargin
+
+  /** Customers' order-priority multiset common to 1996 and 1997:
+    * INTERSECT ALL keeps min(m, n) copies of each (custkey, priority)
+    * row — the bag semantics DISTINCT set ops can't express. */
+  private val IntersectAll =
+    """SELECT * FROM (
+      |  SELECT o_custkey, o_orderpriority FROM orders
+      |  WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+      |    AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+      |  INTERSECT ALL
+      |  SELECT o_custkey, o_orderpriority FROM orders
+      |  WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
+      |    AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00')
+      |ORDER BY o_custkey, o_orderpriority""".stripMargin
+
+  /** 1996 minus 1997 with multiplicity: EXCEPT ALL keeps max(m−n, 0)
+    * copies. */
+  private val ExceptAll =
+    """SELECT * FROM (
+      |  SELECT o_custkey, o_orderpriority FROM orders
+      |  WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+      |    AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
+      |  EXCEPT ALL
+      |  SELECT o_custkey, o_orderpriority FROM orders
+      |  WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
+      |    AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00')
+      |ORDER BY o_custkey, o_orderpriority""".stripMargin
+
+  /** percent_rank / cume_dist of customer balance within nation. The
+    * hashed columns are EXACT half-up ppm rationals rebuilt from
+    * rank()/count() in integer arithmetic — round(pr, 6) itself is
+    * engine-divergent when (k−1)/(n−1) lands on a decimal midpoint
+    * (sf0.1 hit 333/640 = 0.5203125: Spark's BigDecimal.valueOf rounds
+    * the shortest string up, DuckDB rounds the binary double down).
+    * The real window functions stay in the query and `fn_consistent`
+    * pins them to within half an ulp-of-ppm of the exact rationals in
+    * BOTH engines. */
+  private val PercentRankCume =
+    """WITH r AS (
+      |  SELECT c_custkey, c_nationkey,
+      |         percent_rank() OVER w AS pr,
+      |         cume_dist() OVER w AS cd,
+      |         CAST(rank() OVER w AS BIGINT) AS rk,
+      |         CAST(count(*) OVER (PARTITION BY c_nationkey) AS BIGINT) AS n
+      |  FROM customer
+      |  WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal, c_custkey)),
+      |p AS (
+      |  SELECT c_custkey, c_nationkey, pr, cd,
+      |         CASE WHEN n = 1 THEN 0
+      |              ELSE ((rk - 1) * 2000000 + (n - 1) -
+      |                    (((rk - 1) * 2000000 + (n - 1)) % (2 * (n - 1)))) /
+      |                   (2 * (n - 1)) END AS prq,
+      |         (rk * 2000000 + n - ((rk * 2000000 + n) % (2 * n))) /
+      |           (2 * n) AS cdq
+      |  FROM r)
+      |SELECT c_custkey, c_nationkey,
+      |       CAST(prq AS BIGINT) AS pr_ppm,
+      |       CAST(cdq AS BIGINT) AS cd_ppm,
+      |       abs(pr * 1000000 - prq) < 1 AND abs(cd * 1000000 - cdq) < 1
+      |         AS fn_consistent
+      |FROM p ORDER BY c_custkey""".stripMargin
+
+  /** Business days in [anchor, d): 5 per full week + the weekday
+    * remainder capped at 5 (Sat/Sun contribute nothing). Differences
+    * g(b) − g(a) are SIGNED — the synthetic fixture ships some lines
+    * before their order date and the latency reports that honestly. */
+  private def gExpr(dcol: org.apache.spark.sql.Column) = {
+    val k = datediff(dcol, to_date(lit("1990-01-01")))
+    lit(5) * (k / 7).cast("bigint") + least(pmod(k, lit(7)), lit(5)).cast("bigint")
+  }
+
+  /** orders + a two-level ADT: Payment = Paid(method: Method, cents) |
+    * Unpaid, where Method = Card(last4) | Cash is itself an ADT nested
+    * INSIDE the Paid payload. The encoding composes: a variant field is
+    * just a Column, so an inner `Adt.construct` struct nests under the
+    * outer payload with no special machinery — the property that makes
+    * the StructType encoding closed under composition.
+    */
+  private def withPayment(s: SparkSession, d: String): DataFrame = {
+    val o = Tables(s, d, "orders")
+    val method = Adt.construct(
+      (col("o_orderkey") % 3 === 0) ->
+        Adt.variant("Card")("last4" ->
+          lpad((col("o_orderkey") % 10000).cast("string"), 4, "0")),
+      (col("o_orderkey") % 3 =!= 0) -> Adt.variant("Cash")())
+    o.withColumn("payment", Adt.construct(
+      (col("o_orderstatus") =!= "O") ->
+        Adt.variant("Paid")(
+          "method" -> method,
+          "cents" -> round(col("o_totalprice") * 100).cast("bigint")),
+      (col("o_orderstatus") === "O") -> Adt.variant("Unpaid")()))
+  }
+  private def payment: Column = col("payment")
+
+  val decls: Map[String, Decl] = declMap(
+    // QUALIFY SQL surface, Kneser–Ney language modeling,
+    // and the Poisson bootstrap — the distributed-deterministic uncertainty
+    // estimate.
+
     // QUALIFY clause (the window-filter SQL surface DuckDB/Snowflake/BQ
     // users expect; Spark's parser lacks it) — lowered by
     // Sql.rewriteQualify at the same injection altitude as the ADT
@@ -274,127 +378,35 @@ object Round10hh {
              |       (SELECT mean_c FROM means ORDER BY mean_c LIMIT 1 OFFSET 1)
              |         AS ci_lo,
              |       (SELECT mean_c FROM means ORDER BY mean_c DESC LIMIT 1 OFFSET 1)
-             |         AS ci_hi""".stripMargin))
-  )
-}
+             |         AS ci_hi""".stripMargin)),
 
-// ——— formerly Round10ii.scala ———
-/** Round-10 wave 39: SQL-surface closers — DISTINCT ON (lowered by
-  * `Sql.rewriteDistinctOn`, hash-matched against DuckDB's NATIVE
-  * DISTINCT ON so the rewrite provably implements the standard
-  * semantics), the bag-semantics set operations INTERSECT ALL / EXCEPT
-  * ALL (both parsers know these natively; the multiset row-count
-  * arithmetic min(m,n) / max(m−n,0) is what the hash-match pins), and
-  * the two distribution window functions percent_rank / cume_dist.
-  *
-  * Scale shapes: DISTINCT ON is one window shuffle partitioned by the
-  * ON keys — Catalyst's InferWindowGroupLimit turns the rn=1 filter
-  * into a per-partition top-1 group limit, so no group ever
-  * materializes fully. INTERSECT/EXCEPT ALL plan as a single
-  * count-tagged aggregate + generate (Spark's ReplaceIntersectAll /
-  * ReplaceExceptAll rules) — one shuffle on the row value, no join of
-  * two sorted sides. The distribution windows partition by nation (a
-  * bounded dimension), so every partition is small at any SF.
-  */
-object Round10ii {
-  import graft.{Decl, Tables}
+    // SQL-surface closers — DISTINCT ON (lowered by
+    // `Sql.rewriteDistinctOn`, hash-matched against DuckDB's NATIVE
+    // DISTINCT ON so the rewrite provably implements the standard
+    // semantics), the bag-semantics set operations INTERSECT ALL / EXCEPT
+    // ALL (both parsers know these natively; the multiset row-count
+    // arithmetic min(m,n) / max(m−n,0) is what the hash-match pins), and
+    // the two distribution window functions percent_rank / cume_dist.
+    //
+    // Scale shapes: DISTINCT ON is one window shuffle partitioned by the
+    // ON keys — Catalyst's InferWindowGroupLimit turns the rn=1 filter
+    // into a per-partition top-1 group limit, so no group ever
+    // materializes fully. INTERSECT/EXCEPT ALL plan as a single
+    // count-tagged aggregate + generate (Spark's ReplaceIntersectAll /
+    // ReplaceExceptAll rules) — one shuffle on the row value, no join of
+    // two sorted sides. The distribution windows partition by nation (a
+    // bounded dimension), so every partition is small at any SF.
 
-
-  private def q(spark: org.apache.spark.sql.SparkSession, d: String, sql: String) = {
-    Tables.views(spark, d)
-    graft.Sql.runSql(spark, sql)
-  }
-
-  /** Latest order per customer — the canonical DISTINCT ON use. The
-    * trailing o_orderkey sort key breaks date ties so both engines keep
-    * the same row. */
-  private val DistinctOn =
-    """SELECT DISTINCT ON (o_custkey) o_custkey, o_orderkey, o_orderdate
-      |FROM orders
-      |ORDER BY o_custkey, o_orderdate DESC, o_orderkey""".stripMargin
-
-  /** Customers' order-priority multiset common to 1996 and 1997:
-    * INTERSECT ALL keeps min(m, n) copies of each (custkey, priority)
-    * row — the bag semantics DISTINCT set ops can't express. */
-  private val IntersectAll =
-    """SELECT * FROM (
-      |  SELECT o_custkey, o_orderpriority FROM orders
-      |  WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      |    AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-      |  INTERSECT ALL
-      |  SELECT o_custkey, o_orderpriority FROM orders
-      |  WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-      |    AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00')
-      |ORDER BY o_custkey, o_orderpriority""".stripMargin
-
-  /** 1996 minus 1997 with multiplicity: EXCEPT ALL keeps max(m−n, 0)
-    * copies. */
-  private val ExceptAll =
-    """SELECT * FROM (
-      |  SELECT o_custkey, o_orderpriority FROM orders
-      |  WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      |    AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-      |  EXCEPT ALL
-      |  SELECT o_custkey, o_orderpriority FROM orders
-      |  WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-      |    AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00')
-      |ORDER BY o_custkey, o_orderpriority""".stripMargin
-
-  /** percent_rank / cume_dist of customer balance within nation. The
-    * hashed columns are EXACT half-up ppm rationals rebuilt from
-    * rank()/count() in integer arithmetic — round(pr, 6) itself is
-    * engine-divergent when (k−1)/(n−1) lands on a decimal midpoint
-    * (sf0.1 hit 333/640 = 0.5203125: Spark's BigDecimal.valueOf rounds
-    * the shortest string up, DuckDB rounds the binary double down).
-    * The real window functions stay in the query and `fn_consistent`
-    * pins them to within half an ulp-of-ppm of the exact rationals in
-    * BOTH engines. */
-  private val PercentRankCume =
-    """WITH r AS (
-      |  SELECT c_custkey, c_nationkey,
-      |         percent_rank() OVER w AS pr,
-      |         cume_dist() OVER w AS cd,
-      |         CAST(rank() OVER w AS BIGINT) AS rk,
-      |         CAST(count(*) OVER (PARTITION BY c_nationkey) AS BIGINT) AS n
-      |  FROM customer
-      |  WINDOW w AS (PARTITION BY c_nationkey ORDER BY c_acctbal, c_custkey)),
-      |p AS (
-      |  SELECT c_custkey, c_nationkey, pr, cd,
-      |         CASE WHEN n = 1 THEN 0
-      |              ELSE ((rk - 1) * 2000000 + (n - 1) -
-      |                    (((rk - 1) * 2000000 + (n - 1)) % (2 * (n - 1)))) /
-      |                   (2 * (n - 1)) END AS prq,
-      |         (rk * 2000000 + n - ((rk * 2000000 + n) % (2 * n))) /
-      |           (2 * n) AS cdq
-      |  FROM r)
-      |SELECT c_custkey, c_nationkey,
-      |       CAST(prq AS BIGINT) AS pr_ppm,
-      |       CAST(cdq AS BIGINT) AS cd_ppm,
-      |       abs(pr * 1000000 - prq) < 1 AND abs(cd * 1000000 - cdq) < 1
-      |         AS fn_consistent
-      |FROM p ORDER BY c_custkey""".stripMargin
-
-  val decls: Map[String, Decl] = Map(
     "sql_distinct_on" -> Decl((s, d) => q(s, d, DistinctOn), Some(DistinctOn)),
     "set_intersect_all" -> Decl((s, d) => q(s, d, IntersectAll), Some(IntersectAll)),
     "set_except_all" -> Decl((s, d) => q(s, d, ExceptAll), Some(ExceptAll)),
     "window_percent_rank_cume" -> Decl(
-      (s, d) => q(s, d, PercentRankCume), Some(PercentRankCume))
-  )
-}
+      (s, d) => q(s, d, PercentRankCume), Some(PercentRankCume)),
 
-// ——— formerly Round10l.scala ———
-/** Round-10 twelfth wave: IGNORE NULLS window semantics, inline VALUES
-  * lookup joins, semver ordering, and tail risk (CVaR). Usual discipline:
-  * exact integers, terminal rounded floats, unique-key total orders.
-  */
-object Round10l {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // IGNORE NULLS window semantics, inline VALUES
+    // lookup joins, semver ordering, and tail risk (CVaR). Usual discipline:
+    // exact integers, terminal rounded floats, unique-key total orders.
 
-
-  val decls: Map[String, Decl] = Map(
     // IGNORE NULLS window navigation: error rows null out their value;
     // each row recovers the most recent and the second-distinct-recent
     // non-null readings in its trailing 10-row frame — the sparse-sensor
@@ -549,34 +561,26 @@ object Round10l {
              |       CAST(sum(in_tail * c) AS BIGINT) AS tail_cents,
              |       CAST(sum(in_tail * c) // sum(in_tail) AS BIGINT) AS cvar_cents
              |FROM tail WHERE in_tail > 0
-             |GROUP BY pr ORDER BY o_orderpriority""".stripMargin))
-  )
-}
+             |GROUP BY pr ORDER BY o_orderpriority""".stripMargin)),
 
-// ——— formerly Round10rr.scala ———
-/** Round-10 wave 48: the Spark-4 SQL-surface modernisms a user migrating
-  * a semi-structured/parameterized workload expects — the VARIANT type
-  * (parse_json + typed variant_get shredding), SQL-defined scalar and
-  * table functions (CREATE FUNCTION … RETURN, no JVM closure — fully
-  * Catalyst-inlined so codegen sees the expanded expression, nothing
-  * opaque in the hot path), EXECUTE IMMEDIATE with positional binds,
-  * named parameter markers through the `spark.sql(text, args)` API, and
-  * the IDENTIFIER() clause for late-bound table names.
-  *
-  * Scale notes: every key is a single scan + one map-side-combined
-  * aggregate (or a pushed filter); the SQL-UDF bodies inline into the
-  * same plan the hand-written expression would produce (verified by
-  * Round10rsSpec's plan assertions — no ScalaUDF node anywhere), so the
-  * 100 TB behavior is exactly the base aggregate's. VARIANT shredding is
-  * per-row work inside whole-stage codegen; at cluster scale the shredded
-  * struct would be written once (sink_parquet) rather than re-parsed per
-  * query, but the parse itself is linear and partition-local.
-  */
-object Round10rr {
-  import graft.{Decl, Tables}
+    // The Spark-4 SQL-surface modernisms a user migrating
+    // a semi-structured/parameterized workload expects — the VARIANT type
+    // (parse_json + typed variant_get shredding), SQL-defined scalar and
+    // table functions (CREATE FUNCTION … RETURN, no JVM closure — fully
+    // Catalyst-inlined so codegen sees the expanded expression, nothing
+    // opaque in the hot path), EXECUTE IMMEDIATE with positional binds,
+    // named parameter markers through the `spark.sql(text, args)` API, and
+    // the IDENTIFIER() clause for late-bound table names.
+    //
+    // Scale notes: every key is a single scan + one map-side-combined
+    // aggregate (or a pushed filter); the SQL-UDF bodies inline into the
+    // same plan the hand-written expression would produce (verified by
+    // Round10rsSpec's plan assertions — no ScalaUDF node anywhere), so the
+    // 100 TB behavior is exactly the base aggregate's. VARIANT shredding is
+    // per-row work inside whole-stage codegen; at cluster scale the shredded
+    // struct would be written once (sink_parquet) rather than re-parsed per
+    // query, but the parse itself is linear and partition-local.
 
-
-  val decls: Map[String, Decl] = Map(
     // VARIANT ingestion: parse the JSON props column once into Spark 4's
     // VARIANT type, then shred typed values back out with variant_get
     // (strict, throws on type mismatch) and try_variant_get (NULL on
@@ -716,21 +720,13 @@ object Round10rr {
           Map("tbl" -> "documents"))
       },
       Some("""SELECT lang, CAST(count(*) AS BIGINT) AS n
-             |FROM documents GROUP BY lang ORDER BY lang""".stripMargin))
-  )
-}
+             |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
 
-// ——— formerly Round10s.scala ———
-/** Round-10 nineteenth wave: SQL-surface completions — the PIVOT clause,
-  * HiveQL LATERAL VIEW generators, and Spark's DISTRIBUTE/SORT (CLUSTER
-  * BY) partitioning syntax. Each oracle reproduces the semantics in
-  * portable SQL (CASE sums / unnest / plain order).
-  */
-object Round10s {
-  import graft.{Decl, Tables}
+    // SQL-surface completions — the PIVOT clause,
+    // HiveQL LATERAL VIEW generators, and Spark's DISTRIBUTE/SORT (CLUSTER
+    // BY) partitioning syntax. Each oracle reproduces the semantics in
+    // portable SQL (CASE sums / unnest / plain order).
 
-
-  val decls: Map[String, Decl] = Map(
     // SQL PIVOT clause (not the DataFrame API — the parser surface):
     // event counts per user rotated into one column per type. The oracle
     // is the portable CASE-sum rotation.
@@ -787,31 +783,22 @@ object Round10s {
       },
       Some("""SELECT o_custkey, o_orderkey,
              |       CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-             |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin))
-  )
-}
+             |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin)),
 
-// ——— formerly Round10uu.scala ———
-/** Round-10 wave 51: schema-evolution union (unionByName with missing
-  * columns — the heterogeneous-batch append every long-lived pipeline
-  * hits), expanding-window time-series cross-validation folds (the
-  * temporal CV split that respects causality, vs the random split that
-  * leaks the future), and the paired t-test (pre/post within-subject —
-  * the within-user experiment readout CUPED/Welch don't cover).
-  *
-  * Determinism discipline: cents are exact BIGINTs end-to-end; the
-  * paired statistics derive mean/sd/t from exact (n, Σd, Σd²) integers
-  * in one terminal double expression (Σd² peaks ~1e16 at sf1000 —
-  * BIGINT-safe; the wider-scale path swaps to DECIMAL(38,0), the only
-  * change); fold boundaries are fixed dates, so every engine sees the
-  * identical partition of the fixture's 30-day window.
-  */
-object Round10uu {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Schema-evolution union (unionByName with missing
+    // columns — the heterogeneous-batch append every long-lived pipeline
+    // hits), expanding-window time-series cross-validation folds (the
+    // temporal CV split that respects causality, vs the random split that
+    // leaks the future), and the paired t-test (pre/post within-subject —
+    // the within-user experiment readout CUPED/Welch don't cover).
+    //
+    // Determinism discipline: cents are exact BIGINTs end-to-end; the
+    // paired statistics derive mean/sd/t from exact (n, Σd, Σd²) integers
+    // in one terminal double expression (Σd² peaks ~1e16 at sf1000 —
+    // BIGINT-safe; the wider-scale path swaps to DECIMAL(38,0), the only
+    // change); fold boundaries are fixed dates, so every engine sees the
+    // identical partition of the fixture's 30-day window.
 
-
-  val decls: Map[String, Decl] = Map(
     // unionByName(allowMissingColumns = true): v1 batches lack the
     // `value` column (pre-instrumentation schema), v2 batches carry it —
     // the union aligns BY NAME (not position) and null-fills the missing
@@ -951,38 +938,29 @@ object Round10uu {
              |       round((CAST(sd_ AS DOUBLE) / n) /
              |             sqrt((CAST(qd AS DOUBLE) - CAST(sd_ AS DOUBLE)*sd_/n)
              |                  / (n - 1) / n), 6) AS t
-             |FROM g""".stripMargin))
-  )
-}
+             |FROM g""".stripMargin)),
 
-// ——— formerly Round11r.scala ———
-/** Round-10 wave 74: SQL-surface UNPIVOT clause (the parser-level
-  * inverse of wave-19's PIVOT — metric columns rotated into rows, the
-  * wide-to-long reshape every metrics warehouse runs before plotting)
-  * and a lag-1 Granger causality test between the daily click and
-  * purchase series (does yesterday's click count improve today's
-  * purchase prediction beyond yesterday's purchases? — the standard
-  * lead-indicator screen, here in one aggregate pass via closed-form
-  * OLS on both nested models and the F-ratio of their residual sums).
-  *
-  * Determinism: UNPIVOT emits pure BIGINT metrics under a total order.
-  * Granger folds the 29 lagged observations into ten integer-exact
-  * sums (counts ≤ ~1e5, triple products ≤ ~5e11 — every intermediate
-  * is exactly representable in a double), then both engines evaluate
-  * the SAME Cramer-rule expressions over the same exact inputs, so the
-  * divisions land on identical IEEE doubles; outputs round 6 dp.
-  *
-  * Scale shape: UNPIVOT is a generator over an already-aggregated
-  * |segments|-row frame. Granger reduces the corpus to the 30-day
-  * calendar spine in ONE shuffle (the ts_* discipline); the lag join
-  * and the model algebra run on ≤30 rows.
-  */
-object Round11r {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // SQL-surface UNPIVOT clause (the parser-level
+    // inverse of wave-19's PIVOT — metric columns rotated into rows, the
+    // wide-to-long reshape every metrics warehouse runs before plotting)
+    // and a lag-1 Granger causality test between the daily click and
+    // purchase series (does yesterday's click count improve today's
+    // purchase prediction beyond yesterday's purchases? — the standard
+    // lead-indicator screen, here in one aggregate pass via closed-form
+    // OLS on both nested models and the F-ratio of their residual sums).
+    //
+    // Determinism: UNPIVOT emits pure BIGINT metrics under a total order.
+    // Granger folds the 29 lagged observations into ten integer-exact
+    // sums (counts ≤ ~1e5, triple products ≤ ~5e11 — every intermediate
+    // is exactly representable in a double), then both engines evaluate
+    // the SAME Cramer-rule expressions over the same exact inputs, so the
+    // divisions land on identical IEEE doubles; outputs round 6 dp.
+    //
+    // Scale shape: UNPIVOT is a generator over an already-aggregated
+    // |segments|-row frame. Granger reduces the corpus to the 30-day
+    // calendar spine in ONE shuffle (the ts_* discipline); the lag join
+    // and the model algebra run on ≤30 rows.
 
-
-  val decls: Map[String, Decl] = Map(
     // SQL UNPIVOT clause (the parser surface, not the DataFrame
     // `.unpivot` API — that is agg_unpivot, Aggregates.scala): rotate
     // three per-segment metric COLUMNS into (metric, val) rows. The
@@ -1132,40 +1110,30 @@ object Round11r {
              |       round(rss_u, 6) AS rss_u,
              |       round(f_stat, 6) AS f_stat,
              |       round(f_stat, 6) > 4.225 AS granger_improves
-             |FROM m5""".stripMargin))
-  )
-}
+             |FROM m5""".stripMargin)),
 
-// ——— formerly Round11s.scala ———
-/** Round-10 wave 75: native codegen string expressions — Jaro-Winkler
-  * fuzzy scoring against a bounded probe set (the entity-resolution
-  * scorer; the existing join_fuzzy_name key blocks + Levenshteins,
-  * this one exercises the prefix-boosted Jaro family DuckDB also
-  * ships) and Unicode NFC cleanup of text polluted with zero-width
-  * code points and decomposed accents (the canonical pre-tokenization
-  * scrub for scraped training corpora — BOM/ZWSP/ZWNJ/ZWJ stripping +
-  * canonical composition).
-  *
-  * Determinism: Jaro-Winkler is rounded to 6 dp in BOTH engines before
-  * the per-probe top-k cut, so rank ties resolve on (score, partkey)
-  * identically even if the two implementations differ in the last ulp
-  * (they shouldn't — both use the integer-halved transposition count
-  * and the 0.7 boost threshold). NFC output is byte-identical: Java's
-  * Normalizer and DuckDB's utf8proc implement the same canonical
-  * composition.
-  *
-  * Scale shape: both keys are pure per-row map work riding whole-stage
-  * codegen (no UDF boundary, no shuffle beyond the final bounded
-  * top-k, which runs on the native TopKPerKey bounded-heap operator —
-  * NOT a 5-partition window funnel).
-  */
-object Round11s {
-  import graft.{Decl, Tables}
-  import graft.functions.StringSimilarity
-  import org.apache.spark.sql.functions._
+    // Native codegen string expressions — Jaro-Winkler
+    // fuzzy scoring against a bounded probe set (the entity-resolution
+    // scorer; the existing join_fuzzy_name key blocks + Levenshteins,
+    // this one exercises the prefix-boosted Jaro family DuckDB also
+    // ships) and Unicode NFC cleanup of text polluted with zero-width
+    // code points and decomposed accents (the canonical pre-tokenization
+    // scrub for scraped training corpora — BOM/ZWSP/ZWNJ/ZWJ stripping +
+    // canonical composition).
+    //
+    // Determinism: Jaro-Winkler is rounded to 6 dp in BOTH engines before
+    // the per-probe top-k cut, so rank ties resolve on (score, partkey)
+    // identically even if the two implementations differ in the last ulp
+    // (they shouldn't — both use the integer-halved transposition count
+    // and the 0.7 boost threshold). NFC output is byte-identical: Java's
+    // Normalizer and DuckDB's utf8proc implement the same canonical
+    // composition.
+    //
+    // Scale shape: both keys are pure per-row map work riding whole-stage
+    // codegen (no UDF boundary, no shuffle beyond the final bounded
+    // top-k, which runs on the native TopKPerKey bounded-heap operator —
+    // NOT a 5-partition window funnel).
 
-
-  val decls: Map[String, Decl] = Map(
     // Top-20 fuzzy matches per probe name: 5 probe part names
     // broadcast against every other part, scored by the native
     // jaro_winkler expression, cut by bounded per-probe heaps.
@@ -1243,43 +1211,25 @@ object Round11s {
              |SELECT doc_id, norm, len_dirty,
              |       CAST(length(norm) AS BIGINT) AS len_norm,
              |       len_dirty <> CAST(length(norm) AS BIGINT) AS changed
-             |FROM n ORDER BY doc_id""".stripMargin))
-  )
-}
+             |FROM n ORDER BY doc_id""".stripMargin)),
 
-// ——— formerly Round11x.scala ———
-/** Round-10 wave 80: business-day calendar arithmetic (the SLA math
-  * every order-fulfillment warehouse runs: business days elapsed
-  * between order and ship, and the "due 5 business days out" deadline —
-  * in closed form from a Monday anchor, no calendar table, no
-  * iteration) and the ORDER BY ALL SQL-surface shorthand (sorts by
-  * every select-list column left to right — the DuckDB-pioneered
-  * notation Spark 4 also accepts; the oracle runs its native form).
-  *
-  * Determinism: everything is integer date arithmetic off the Monday
-  * 1990-01-01 anchor (all fixture dates are later, so div/mod never
-  * see negatives); weekend starts count from the preceding Friday —
-  * the convention is pinned in the Scaladoc and the spec cross-checks
-  * an independent day-walking implementation.
-  *
-  * Scale shape: both keys are pure per-row projection / one ordered
-  * scan — no shuffle beyond the declared output order.
-  */
-object Round11x {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Business-day calendar arithmetic (the SLA math
+    // every order-fulfillment warehouse runs: business days elapsed
+    // between order and ship, and the "due 5 business days out" deadline —
+    // in closed form from a Monday anchor, no calendar table, no
+    // iteration) and the ORDER BY ALL SQL-surface shorthand (sorts by
+    // every select-list column left to right — the DuckDB-pioneered
+    // notation Spark 4 also accepts; the oracle runs its native form).
+    //
+    // Determinism: everything is integer date arithmetic off the Monday
+    // 1990-01-01 anchor (all fixture dates are later, so div/mod never
+    // see negatives); weekend starts count from the preceding Friday —
+    // the convention is pinned in the Scaladoc and the spec cross-checks
+    // an independent day-walking implementation.
+    //
+    // Scale shape: both keys are pure per-row projection / one ordered
+    // scan — no shuffle beyond the declared output order.
 
-
-  /** Business days in [anchor, d): 5 per full week + the weekday
-    * remainder capped at 5 (Sat/Sun contribute nothing). Differences
-    * g(b) − g(a) are SIGNED — the synthetic fixture ships some lines
-    * before their order date and the latency reports that honestly. */
-  private def gExpr(dcol: org.apache.spark.sql.Column) = {
-    val k = datediff(dcol, to_date(lit("1990-01-01")))
-    lit(5) * (k / 7).cast("bigint") + least(pmod(k, lit(7)), lit(5)).cast("bigint")
-  }
-
-  val decls: Map[String, Decl] = Map(
     // Order→ship business-day latency + the 5-business-day deadline
     // and whether the line met it. bi(d) indexes d among business days
     // (weekends map to the preceding Friday), so deadline = index + 5
@@ -1355,47 +1305,12 @@ object Round11x {
              |            AS BIGINT) AS cents
              |FROM lineitem
              |GROUP BY l_returnflag, l_linestatus
-             |ORDER BY ALL""".stripMargin))
-  )
-}
+             |ORDER BY ALL""".stripMargin)),
 
-// ——— formerly Round9h.scala ———
-/** Round-9 eighth wave: nested (two-level) ADT pattern matching — the
-  * depth dimension of the reference's defining feature — plus a
-  * try_cast data-quality audit and discrete percentiles by integer rank.
-  */
-object Round9h {
-  import graft.{Decl, Tables}
-  import graft.adt.Adt
-  import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Nested (two-level) ADT pattern matching — the
+    // depth dimension of the reference's defining feature — plus a
+    // try_cast data-quality audit and discrete percentiles by integer rank.
 
-
-  /** orders + a two-level ADT: Payment = Paid(method: Method, cents) |
-    * Unpaid, where Method = Card(last4) | Cash is itself an ADT nested
-    * INSIDE the Paid payload. The encoding composes: a variant field is
-    * just a Column, so an inner `Adt.construct` struct nests under the
-    * outer payload with no special machinery — the property that makes
-    * the StructType encoding closed under composition.
-    */
-  private def withPayment(s: SparkSession, d: String): DataFrame = {
-    val o = Tables(s, d, "orders")
-    val method = Adt.construct(
-      (col("o_orderkey") % 3 === 0) ->
-        Adt.variant("Card")("last4" ->
-          lpad((col("o_orderkey") % 10000).cast("string"), 4, "0")),
-      (col("o_orderkey") % 3 =!= 0) -> Adt.variant("Cash")())
-    o.withColumn("payment", Adt.construct(
-      (col("o_orderstatus") =!= "O") ->
-        Adt.variant("Paid")(
-          "method" -> method,
-          "cents" -> round(col("o_totalprice") * 100).cast("bigint")),
-      (col("o_orderstatus") === "O") -> Adt.variant("Unpaid")()))
-  }
-  private def payment: Column = col("payment")
-
-  val decls: Map[String, Decl] = Map(
     // Two-level pattern match: `payment matches Paid(Card(l4), c)` etc.
     // Each arm deconstructs through BOTH levels; output is primitives
     // only (R5). The oracle is the equivalent nested CASE over the same
@@ -1509,21 +1424,12 @@ object Round9h {
              |       CAST(min(CASE WHEN cum * 2 >= n THEN c END) AS BIGINT) AS p50,
              |       CAST(min(CASE WHEN cum * 4 >= n * 3 THEN c END) AS BIGINT) AS p75,
              |       CAST(min(CASE WHEN cum * 20 >= n * 19 THEN c END) AS BIGINT) AS p95
-             |FROM cum GROUP BY event_type ORDER BY event_type""".stripMargin))
-  )
-}
+             |FROM cum GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
-// ——— formerly Round9j.scala ———
-/** Round-9 tenth wave: recursive-CTE transitive closure, the interval
-  * date-arithmetic family, and strided audio-style windowing over opaque
-  * binary payloads (completing the multimodal plumbing quartet).
-  */
-object Round9j {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Recursive-CTE transitive closure, the interval
+    // date-arithmetic family, and strided audio-style windowing over opaque
+    // binary payloads (completing the multimodal plumbing quartet).
 
-
-  val decls: Map[String, Decl] = Map(
     // Recursive transitive closure — hierarchy walking (category trees,
     // org charts, BOM rollups) through Spark 4's WITH RECURSIVE. The
     // hierarchy is the deterministic binary-lift chain anc ← anc div 2
@@ -1617,21 +1523,12 @@ object Round9j {
              |     unnest(generate_series(0,
              |       CAST(ceil(n_chars / 64.0) AS INT) - 1)) t(w)
              |WHERE w * 64 < n_chars
-             |ORDER BY doc_id, win_id""".stripMargin))
-  )
-}
+             |ORDER BY doc_id, win_id""".stripMargin)),
 
-// ——— formerly Round9v.scala ———
-/** Round-9 twenty-second wave: symmetric difference — the set-operation
-  * family's missing member (union / intersect / except ship since round
-  * 1; A Δ B completes the algebra).
-  */
-object Round9v {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Symmetric difference — the set-operation
+    // family's missing member (union / intersect / except ship since round
+    // 1; A Δ B completes the algebra).
 
-
-  val decls: Map[String, Decl] = Map(
     // Symmetric difference of two derived key sets — orders that are
     // finished XOR urgent, tagged with which side they came from (the
     // reconciliation view: "in A or B but not both"). Expressed as the

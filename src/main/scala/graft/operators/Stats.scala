@@ -1,20 +1,225 @@
 package graft.operators
 
-/** statistics / hypothesis-test / sketch aggregation waves — consolidated from the append-only wave files
-  * (round-11 verdict item 8); object names and query keys unchanged,
-  * REGISTRY.md remains the per-key index.
+/** Statistics, hypothesis-test and sketch-aggregation keys.
+  * REGISTRY.md maps each key to its file:line.
   */
-
-// ——— formerly Round10bb.scala ———
-/** Round-10 twenty-eighth wave: the Markov stationary distribution
-  * (completing the chain family) and rectangle-containment geofencing.
-  */
-object Round10bb {
-  import graft.{Decl, Tables}
+object Stats {
+  import graft.{Decl, Sql, Tables, declMap}
   import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.expressions.Window
+  import graft.functions.{TextOps, VectorOps}
+  import org.apache.spark.sql.{DataFrame, SparkSession}
 
+  private val Alpha =
+    "0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
 
-  val decls: Map[String, Decl] = Map(
+  private val centsRev =
+    expr("CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)")
+
+  private val cents = expr("CAST(round(value * 100) AS BIGINT)")
+  private val post = col("ts") >= lit("2024-01-16 00:00:00").cast("timestamp")
+  private val treat = pmod(col("user_id"), lit(2L)) === 1
+
+  /** Deterministic absorption probability into `conv` from every state:
+    * fixed 400 synchronous iterations of a(s) = Σ_t P(s,t)·a(t) with
+    * a(conv)=1, a(null)=0 — geometric convergence to well under 1e-12 for
+    * any substochastic journey chain, identical float path every run.
+    */
+  private[operators] def absorb(
+      states: Seq[String],
+      p: Map[(String, String), Double]): Map[String, Double] = {
+    val transient = states.filterNot(s => s == "conv" || s == "null")
+    var a = transient.map(_ -> 0.0).toMap
+    var it = 0
+    while (it < 400) {
+      a = transient.map { s =>
+        val hit = p.getOrElse((s, "conv"), 0.0)
+        val flow = transient.iterator
+          .map(t => p.getOrElse((s, t), 0.0) * a(t)).sum
+        s -> (hit + flow)
+      }.toMap
+      it += 1
+    }
+    a ++ Map("conv" -> 1.0, "null" -> 0.0)
+  }
+
+  /** Φ(x) for x ≥ 0, Abramowitz-Stegun 26.2.17 — written once and
+    * rendered into BOTH engines' SQL so the double arithmetic is
+    * operation-identical. `z` must be a non-negative expression.
+    */
+  private def phiSql(z: String): String = {
+    val t = s"(1.0 / (1.0 + 0.2316419 * $z))"
+    s"""(1.0 - 0.3989422804014327 * exp(-($z) * ($z) / 2.0) *
+       | (0.319381530 * $t - 0.356563782 * $t * $t
+       |  + 1.781477937 * $t * $t * $t - 1.821255978 * $t * $t * $t * $t
+       |  + 1.330274429 * $t * $t * $t * $t * $t))""".stripMargin
+  }
+
+  /** One Bradley-Terry MM sweep (Hunter 2004): p_i ← W_i / Σ_j n_ij/(p_i+p_j),
+    * then renormalize to Σp = 1. */
+  private[graft] def mmSweep(
+      teams: Seq[Long],
+      wins: Map[Long, Long],
+      nPairs: Map[(Long, Long), Long],
+      p: Map[Long, Double]): Map[Long, Double] = {
+    val next = teams.map { i =>
+      val denom = teams.iterator.filter(_ != i).map { j =>
+        nPairs.getOrElse(if (i < j) (i, j) else (j, i), 0L).toDouble /
+          (p(i) + p(j))
+      }.sum
+      i -> (if (denom > 0) wins.getOrElse(i, 0L).toDouble / denom else p(i))
+    }.toMap
+    val z = next.values.sum
+    next.map { case (k, v) => k -> v / z }
+  }
+
+  private val rootSixOverPi: Double = math.sqrt(6.0) / math.Pi
+  private val gamma = 0.5772156649015329 // Euler–Mascheroni
+  private def kT(t: Int): Double = math.log(-math.log(1.0 - 1.0 / t))
+
+  // Java∩RE2-safe patterns (SURVEY §7.3 R7): no backrefs, no lookaround.
+  private val EmailRe = "[a-z0-9]+@[a-z0-9.]+\\.[a-z]+"
+  private val PhoneRe = "\\+1-555-[0-9]{4}"
+
+  /** The DuckDB oracle for graph_pagerank: the same 10 PageRank iterations
+    * UNROLLED as chained CTEs (one per iteration), which keeps the full
+    * fixpoint trajectory SQL-expressible and hash-checkable. Graph: node =
+    * doc, out-degree 1 + doc_id%3; the k=1 edge is the cyclic shift
+    * (doc_id + 1) mod n — a bijection for EVERY n, not just n coprime to
+    * the stride (dst = (doc_id·7+k) mod n alone only covers residues
+    * 1..3 mod 7 when 7 | n) — and the k∈{2,3} edges are (doc_id·7+k)
+    * mod n. Every node therefore has ≥1 in-link, so no dangling-mass
+    * term is needed and total rank mass stays exactly 1 (the
+    * mean-normalized ranks sum to n).
+    */
+  private def pagerankOracleSql: String = {
+    val b = new StringBuilder(
+      """WITH nn AS (SELECT CAST(count(*) AS DOUBLE) AS n, count(*) AS ni FROM documents),
+        |e AS (SELECT doc_id AS src, 1 + doc_id % 3 AS outdeg,
+        |             CASE WHEN t.k = 1 THEN (doc_id + 1) % nn.ni
+        |                  ELSE (doc_id * 7 + t.k) % nn.ni END AS dst
+        |      FROM documents CROSS JOIN nn, (VALUES (1), (2), (3)) t(k)
+        |      WHERE t.k <= 1 + doc_id % 3),
+        |pr0 AS (SELECT doc_id, 1.0/nn.n AS r FROM documents CROSS JOIN nn)""".stripMargin)
+    (1 to 10).foreach { i =>
+      b.append(s""",
+        |pr$i AS (SELECT e.dst AS doc_id,
+        |             0.15/(SELECT n FROM nn) + 0.85 * sum(p.r / e.outdeg) AS r
+        |         FROM pr${i - 1} p JOIN e ON p.doc_id = e.src GROUP BY e.dst)""".stripMargin)
+    }
+    b.append("""
+      |SELECT pr10.doc_id AS doc_id, round(pr10.r * nn.n, 6) AS rank_norm
+      |FROM pr10 CROSS JOIN nn ORDER BY doc_id""".stripMargin)
+    b.toString
+  }
+
+  /** Unrolled 4-iteration synchronous label propagation over the same
+    * deterministic undirected graph as graph_triangle_count. Each step is
+    * one neighbor-label count plus a max-count/min-label argmax, expressed
+    * as min over a ('nc' = -count, 'l' = label) struct — the lexicographic
+    * struct-min trick both engines agree on bit-for-bit (no float anywhere).
+    */
+  /** Shared oracle CTE prefix building the deterministic undirected graph
+    * used by graph_triangle_count / graph_label_propagation /
+    * graph_bfs_layers (Round8b) — ends at the symmetrized `adj` table.
+    */
+  private[operators] def graphOracleCtes: String =
+    """WITH nn AS (SELECT count(*) AS ni FROM documents),
+      |raw AS (SELECT doc_id AS src, (doc_id * 3 + t.k) % nn.ni AS dst
+      |        FROM documents CROSS JOIN nn, (VALUES (1), (2)) t(k)
+      |        WHERE doc_id % 4 <> 0 AND t.k <= 1 + doc_id % 2),
+      |c AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+      |      FROM raw WHERE src <> dst),
+      |adj AS (SELECT a AS src, b AS dst FROM c UNION ALL SELECT b, a FROM c)"""
+      .stripMargin
+
+  private def lpaOracleSql: String = {
+    val b = new StringBuilder(graphOracleCtes +
+      """,
+        |l0 AS (SELECT doc_id AS v, doc_id AS l FROM documents)""".stripMargin)
+    (1 to 4).foreach { i =>
+      b.append(s""",
+        |l$i AS (SELECT p.v, coalesce(m.pick, p.l) AS l FROM l${i - 1} p LEFT JOIN (
+        |    SELECT dst, (min({'nc': -cnt, 'l': l})).l AS pick FROM (
+        |      SELECT adj.dst AS dst, q.l AS l, count(*) AS cnt
+        |      FROM l${i - 1} q JOIN adj ON q.v = adj.src GROUP BY adj.dst, q.l) x
+        |    GROUP BY dst) m ON m.dst = p.v)""".stripMargin)
+    }
+    b.append("""
+      |SELECT v AS doc_id, l AS community FROM l4 ORDER BY v""".stripMargin)
+    b.toString
+  }
+
+  private val Z = 1.959964
+
+  /** Shared CDF grid for the two distance keys: one PrefixSum pass over
+    * the distinct-cents grid carrying BOTH class counts plus a dense
+    * rank, then a rank+1 self-join for the gap to the next grid value —
+    * fully distributed (equi-join on rank), nothing funnels to one task.
+    * Returns (gapRows, nR, nA): rows (cum_r, cum_a, gap) for each grid
+    * value that HAS a successor.
+    */
+  private def cdfGrid(s: SparkSession, d: String): DataFrame = {
+    val li = Tables(s, d, "lineitem")
+      .filter(col("l_returnflag").isin("R", "A"))
+      .select(expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("cents"),
+              col("l_returnflag").as("f"))
+    // Round-13: eager checkpoint — PrefixSum's sample and map passes each
+    // re-run the lineitem scan + grid aggregate otherwise (two distance
+    // keys share this helper, so the saving doubles).
+    val grid = li.groupBy("cents")
+      .agg(sum(when(col("f") === "R", 1L).otherwise(0L)).as("cr"),
+           sum(when(col("f") === "A", 1L).otherwise(0L)).as("ca"))
+      .localCheckpoint(true)
+    val cum = PrefixSum.cumsumLongs(grid, Seq(col("cents")),
+      Seq(col("cr") -> "cum_r", col("ca") -> "cum_a", lit(1L) -> "rk"))
+    cum.as("g")
+      .join(cum.select(col("rk").as("rk2"), col("cents").as("nxt")).as("h"),
+            col("h.rk2") === col("g.rk") + 1)
+      .select(col("g.cum_r").as("cum_r"), col("g.cum_a").as("cum_a"),
+              (col("h.nxt") - col("g.cents")).as("gap"))
+  }
+
+  private def classTotals(s: SparkSession, d: String): DataFrame =
+    Tables(s, d, "lineitem")
+      .agg(sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("n_r"),
+           sum(when(col("l_returnflag") === "A", 1L).otherwise(0L)).as("n_a"))
+
+  private val oracleGrid =
+    """vals AS (
+      |  SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
+      |         l_returnflag AS f
+      |  FROM lineitem WHERE l_returnflag IN ('R', 'A')),
+      |tot AS (
+      |  SELECT CAST(sum(CASE WHEN f = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS n_r,
+      |         CAST(sum(CASE WHEN f = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n_a
+      |  FROM vals),
+      |grid AS (
+      |  SELECT cents,
+      |         CAST(sum(CASE WHEN f = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS cr,
+      |         CAST(sum(CASE WHEN f = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS ca
+      |  FROM vals GROUP BY cents),
+      |cum AS (
+      |  SELECT cents,
+      |         CAST(sum(cr) OVER (ORDER BY cents) AS BIGINT) AS cum_r,
+      |         CAST(sum(ca) OVER (ORDER BY cents) AS BIGINT) AS cum_a,
+      |         lead(cents) OVER (ORDER BY cents) - cents AS gap
+      |  FROM grid),
+      |gaps AS (SELECT cum_r, cum_a, gap FROM cum WHERE gap IS NOT NULL)""".stripMargin
+
+  /** md5-derived pseudo model score in [0, 1000) — the repo's
+    * deterministic hash-to-int idiom (quality_table_checksum twin). */
+  private def score1000 = pmod(
+    conv(substring(md5(col("event_id").cast("string")), 1, 8), 16, 10)
+      .cast("bigint"), lit(1000L))
+
+  private val oracleScore =
+    "('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 1000"
+
+  val decls: Map[String, Decl] = declMap(
+    // The Markov stationary distribution
+    // (completing the chain family) and rectangle-containment geofencing.
+
     // Stationary distribution of the event-type Markov chain: the
     // long-run behavioral mix the transition matrix converges to. The
     // 5×5 matrix collects to the driver (KB — the BPE/CMS documented
@@ -97,26 +302,13 @@ object Round10bb {
              |FROM pts JOIN rects
              |  ON slat >= lat_lo AND slat < lat_hi
              | AND slon >= lon_lo AND slon < lon_hi
-             |GROUP BY n_nationkey ORDER BY n_nationkey""".stripMargin))
-  )
-}
+             |GROUP BY n_nationkey ORDER BY n_nationkey""".stripMargin)),
 
-// ——— formerly Round10f.scala ———
-/** Round-10 sixth wave: marketing attribution, id codecs, market
-  * concentration, and co-occurrence statistics. Integer micros/cents/counts
-  * end-to-end; terminal rounded floats only (one ln / ratio per row over a
-  * bounded grid); total ORDER BY.
-  */
-object Round10f {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Marketing attribution, id codecs, market
+    // concentration, and co-occurrence statistics. Integer micros/cents/counts
+    // end-to-end; terminal rounded floats only (one ln / ratio per row over a
+    // bounded grid); total ORDER BY.
 
-
-  private val Alpha =
-    "0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
-
-  val decls: Map[String, Decl] = Map(
     // Last-touch attribution: each purchase credits the user's most recent
     // non-purchase event in the preceding 7 days; purchases with no
     // touchpoint stay '(none)'. The candidate join fans a purchase out to
@@ -285,23 +477,13 @@ object Round10f {
              |     JOIN cx ON cx.x = pair.x
              |     JOIN cx cy ON cy.x = pair.y
              |     CROSS JOIN nb
-             |ORDER BY pair.x, pair.y""".stripMargin))
-  )
-}
+             |ORDER BY pair.x, pair.y""".stripMargin)),
 
-// ——— formerly Round10i.scala ———
-/** Round-10 ninth wave: categorical association, reliability metrics, the
-  * eager-aggregation join rewrite, and the accumulating-snapshot fact.
-  * Exact integer contingency/gap/milestone statistics; one terminal
-  * rounded formula each.
-  */
-object Round10i {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Categorical association, reliability metrics, the
+    // eager-aggregation join rewrite, and the accumulating-snapshot fact.
+    // Exact integer contingency/gap/milestone statistics; one terminal
+    // rounded formula each.
 
-
-  val decls: Map[String, Decl] = Map(
     // Cramér's V for event_type × ISO weekday — association strength on
     // the bounded 5×7 contingency grid. χ² from exact integer cell and
     // marginal counts (expected counts as exact rational cross-products,
@@ -494,39 +676,27 @@ object Round10i {
              |       CAST(date_diff('day', first_ship, last_ship) AS BIGINT)
              |         AS ship_span_days
              |FROM orders LEFT JOIN lines ON o_orderkey = l_orderkey
-             |ORDER BY o_orderkey""".stripMargin))
-  )
-}
+             |ORDER BY o_orderkey""".stripMargin)),
 
-// ——— formerly Round10jj.scala ———
-/** Round-10 wave 40: robust trend statistics — the Theil–Sen slope
-  * estimator and the Mann–Kendall trend test, the standard
-  * nonparametric pair for "is this metric drifting?" monitoring.
-  *
-  * Both are pairwise statistics, which is exactly why they're usually
-  * avoided at scale — O(n²) in the series length. The scale-correct
-  * shape used here: aggregate the fact table to the BOUNDED month grid
-  * first (one fact shuffle, grid size fixed by the calendar, not the
-  * data volume), then form pairs on the tiny grid. The pair stage's
-  * cost is constant at any SF; only the linear rollup grows.
-  *
-  * Determinism: revenues are exact BIGINT cents; a slope is one IEEE
-  * division of a cents difference by a small integer month gap
-  * (identical in any engine, no reduction order); the median is the
-  * ceil(n/2)-th order statistic of the sorted slope list (the lower
-  * middle for even n — an ELEMENT, not an interpolated float);
-  * Mann–Kendall's S and its tie-corrected variance stay exact integers
-  * (var is emitted ×18 to avoid the /18 rational).
-  */
-object Round10jj {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Robust trend statistics — the Theil–Sen slope
+    // estimator and the Mann–Kendall trend test, the standard
+    // nonparametric pair for "is this metric drifting?" monitoring.
+    //
+    // Both are pairwise statistics, which is exactly why they're usually
+    // avoided at scale — O(n²) in the series length. The scale-correct
+    // shape used here: aggregate the fact table to the BOUNDED month grid
+    // first (one fact shuffle, grid size fixed by the calendar, not the
+    // data volume), then form pairs on the tiny grid. The pair stage's
+    // cost is constant at any SF; only the linear rollup grows.
+    //
+    // Determinism: revenues are exact BIGINT cents; a slope is one IEEE
+    // division of a cents difference by a small integer month gap
+    // (identical in any engine, no reduction order); the median is the
+    // ceil(n/2)-th order statistic of the sorted slope list (the lower
+    // middle for even n — an ELEMENT, not an interpolated float);
+    // Mann–Kendall's S and its tie-corrected variance stay exact integers
+    // (var is emitted ×18 to avoid the /18 rational).
 
-
-  private val centsRev =
-    expr("CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)")
-
-  val decls: Map[String, Decl] = Map(
     // Per-year Theil–Sen slope of monthly revenue (cents per month):
     // median of the 66 (or fewer in partial years) pairwise slopes.
     "agg_theil_sen_trend" -> Decl(
@@ -598,22 +768,13 @@ object Round10jj {
              |         FROM (SELECT count(*) AS tc FROM monthly GROUP BY rev))
              |SELECT s_stat, n_points,
              |       CAST(n_points * (n_points - 1) * (2 * n_points + 5) - tie18 AS BIGINT) AS var18
-             |FROM s CROSS JOIN n CROSS JOIN ties""".stripMargin))
-  )
-}
+             |FROM s CROSS JOIN n CROSS JOIN ties""".stripMargin)),
 
-// ——— formerly Round10k.scala ———
-/** Round-10 eleventh wave: RFM segmentation, nearest-neighbor retrieval,
-  * collocation statistics, and leave-one-out target encoding. Exact
-  * integer statistics; terminal rounded floats; deterministic tie-breaks
-  * everywhere an argmin/ordering appears.
-  */
-object Round10k {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // RFM segmentation, nearest-neighbor retrieval,
+    // collocation statistics, and leave-one-out target encoding. Exact
+    // integer statistics; terminal rounded floats; deterministic tie-breaks
+    // everywhere an argmin/ordering appears.
 
-
-  val decls: Map[String, Decl] = Map(
     // RFM segmentation: recency/frequency/monetary per customer, each
     // dimension scored 1–3 by exact tercile thresholds (the discrete
     // integer-grid percentile machinery, broadcast back), segment =
@@ -850,23 +1011,13 @@ object Round10k {
              |       round(CAST(sum_y - y AS DOUBLE)
              |             / CAST(n_cat - 1 AS DOUBLE), 6) AS te_loo
              |FROM ev JOIN cat USING (event_type)
-             |ORDER BY event_id""".stripMargin))
-  )
-}
+             |ORDER BY event_id""".stripMargin)),
 
-// ——— formerly Round10n.scala ———
-/** Round-10 fourteenth wave: finance bridges, decay scoring, Pareto
-  * classification, and dormancy analysis. Exact cross-multiplied integer
-  * numerators wherever a rational would appear; sorted folds where a
-  * float sum is unavoidable.
-  */
-object Round10n {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Finance bridges, decay scoring, Pareto
+    // classification, and dormancy analysis. Exact cross-multiplied integer
+    // numerators wherever a rational would appear; sorted folds where a
+    // float sum is unavoidable.
 
-
-  val decls: Map[String, Decl] = Map(
     // Price–volume bridge (Laspeyres decomposition) of the 1996→1997
     // revenue change per priority: ΔR·n0 = (n1−n0)·c0  [volume]  +
     // (c1·n0 − n1·c0)  [price] — BOTH effects exact BIGINT numerators
@@ -1003,41 +1154,28 @@ object Round10n {
              |       CAST(sum(CASE WHEN gap > 604800000000 THEN 1 ELSE 0 END)
              |            AS BIGINT) AS n_reactivations,
              |       CAST(max(gap) AS BIGINT) AS max_gap_us
-             |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin))
-  )
-}
+             |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin)),
 
-// ——— formerly Round10pp.scala ———
-/** Round-10 wave 46: experimentation-platform statistics — the three
-  * checks every A/B analysis pipeline runs beyond the z-test
-  * (`agg_ab_test_z`): difference-in-differences for pre/post designs,
-  * the sample-ratio-mismatch guardrail, and CUPED variance reduction.
-  *
-  * Determinism discipline: every estimator is a FIXED expression tree
-  * over exact BIGINT sufficient statistics (cent sums, counts) — cell
-  * means, theta, and adjusted means each perform their divisions in
-  * one deterministic order and round once at the terminal. Nothing
-  * order-dependent ever sums in float. (Per-user cent totals keep
-  * Σx·y inside BIGINT for the fixture magnitudes; the 1000× scale
-  * path swaps the two product sums to DECIMAL(38,0) accumulators —
-  * the only change.)
-  *
-  * Scale shape: one conditional-aggregate pass over events for DiD /
-  * SRM (4 and 2 groups); CUPED is the two-level shape — per-user
-  * partial aggregate (one shuffle on user_id), then a single global
-  * aggregate of 5 exact sums, then per-arm means — no row ever
-  * carries a float.
-  */
-object Round10pp {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Experimentation-platform statistics — the three
+    // checks every A/B analysis pipeline runs beyond the z-test
+    // (`agg_ab_test_z`): difference-in-differences for pre/post designs,
+    // the sample-ratio-mismatch guardrail, and CUPED variance reduction.
+    //
+    // Determinism discipline: every estimator is a FIXED expression tree
+    // over exact BIGINT sufficient statistics (cent sums, counts) — cell
+    // means, theta, and adjusted means each perform their divisions in
+    // one deterministic order and round once at the terminal. Nothing
+    // order-dependent ever sums in float. (Per-user cent totals keep
+    // Σx·y inside BIGINT for the fixture magnitudes; the 1000× scale
+    // path swaps the two product sums to DECIMAL(38,0) accumulators —
+    // the only change.)
+    //
+    // Scale shape: one conditional-aggregate pass over events for DiD /
+    // SRM (4 and 2 groups); CUPED is the two-level shape — per-user
+    // partial aggregate (one shuffle on user_id), then a single global
+    // aggregate of 5 exact sums, then per-arm means — no row ever
+    // carries a float.
 
-
-  private val cents = expr("CAST(round(value * 100) AS BIGINT)")
-  private val post = col("ts") >= lit("2024-01-16 00:00:00").cast("timestamp")
-  private val treat = pmod(col("user_id"), lit(2L)) === 1
-
-  val decls: Map[String, Decl] = Map(
     // 2×2 (treat × period) cell means + the DiD interaction estimate.
     "agg_diff_in_diff" -> Decl(
       (s, d) => {
@@ -1165,36 +1303,27 @@ object Round10pp {
              |                / CAST(n * sxx - sx * sx AS DOUBLE))
              |               * (CAST(sxa AS DOUBLE) / na - CAST(sx AS DOUBLE) / n), 6)
              |         AS cuped_mean_c
-             |FROM arms CROSS JOIN g ORDER BY treated""".stripMargin))
-  )
-}
+             |FROM arms CROSS JOIN g ORDER BY treated""".stripMargin)),
 
-// ——— formerly Round10qq.scala ———
-/** Round-10 wave 47: model-evaluation and survival statistics — the
-  * Kaplan-Meier estimator (censoring-aware retention curve), the
-  * cumulative-gains/lift table every propensity model report carries,
-  * and Cohen's kappa (chance-corrected inter-annotator agreement)
-  * composed on the declared language-ID classifier.
-  *
-  * Determinism discipline: every at-risk count, death count, decile
-  * boundary, and confusion cell is an exact BIGINT; the one float
-  * product (the KM survival curve) folds ln-factors in SORTED order
-  * via the decay_engagement idiom, so both engines sum the identical
-  * sequence; terminal 6-dp round only.
-  *
-  * Scale shape: the duration/score grids aggregate first (one shuffle
-  * with map-side combine), then every cumulative runs through
-  * PrefixSum's scan-parallel two-pass cumsum — no unpartitioned
-  * window touches an unbounded domain anywhere in this wave. The
-  * 12-row probe spine and the langs² confusion matrix are the only
-  * broadcast sides.
-  */
-object Round10qq {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Model-evaluation and survival statistics — the
+    // Kaplan-Meier estimator (censoring-aware retention curve), the
+    // cumulative-gains/lift table every propensity model report carries,
+    // and Cohen's kappa (chance-corrected inter-annotator agreement)
+    // composed on the declared language-ID classifier.
+    //
+    // Determinism discipline: every at-risk count, death count, decile
+    // boundary, and confusion cell is an exact BIGINT; the one float
+    // product (the KM survival curve) folds ln-factors in SORTED order
+    // via the decay_engagement idiom, so both engines sum the identical
+    // sequence; terminal 6-dp round only.
+    //
+    // Scale shape: the duration/score grids aggregate first (one shuffle
+    // with map-side combine), then every cumulative runs through
+    // PrefixSum's scan-parallel two-pass cumsum — no unpartitioned
+    // window touches an unbounded domain anywhere in this wave. The
+    // 12-row probe spine and the langs² confusion matrix are the only
+    // broadcast sides.
 
-
-  val decls: Map[String, Decl] = Map(
     // Kaplan-Meier retention: per customer, first order = birth, last
     // order = death IF it predates the churn cutoff (no order in the
     // final observed 7 months), else right-censored at the horizon.
@@ -1385,34 +1514,25 @@ object Round10qq {
            |       round(CAST(n * po_num - pe_num AS DOUBLE)
            |             / CAST(n * n - pe_num AS DOUBLE), 6) AS kappa
            |FROM p CROSS JOIN g""".stripMargin
-      })
-  )
-}
+      }),
 
-// ——— formerly Round10tt.scala ———
-/** Round-10 wave 50: exact Shapley-value channel attribution (the
-  * game-theoretic successor to first/last-touch) and the l-diversity
-  * governance audit (the k-anonymity refinement that checks sensitive-
-  * value variety inside each quasi-identifier group).
-  *
-  * Scale shape: Shapley collapses the corpus to a 16-row mask grid in
-  * ONE per-user aggregate + one grid aggregate (map-side combined), then
-  * evaluates the 4·8-term Shapley sum on the bounded grid — broadcast
-  * joins only, the coalition table never grows with data. l-diversity is
-  * a two-level aggregate over the (nation × segment) grid. Everything
-  * downstream of the first shuffle is domain-bounded.
-  *
-  * Determinism: coalition values are exact half-up ppm BIGINTs, the
-  * Shapley sum is an integer linear combination (×24 clears the 4-player
-  * factorial denominators), and the single float column is a terminal
-  * 6-dp division.
-  */
-object Round10tt {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Exact Shapley-value channel attribution (the
+    // game-theoretic successor to first/last-touch) and the l-diversity
+    // governance audit (the k-anonymity refinement that checks sensitive-
+    // value variety inside each quasi-identifier group).
+    //
+    // Scale shape: Shapley collapses the corpus to a 16-row mask grid in
+    // ONE per-user aggregate + one grid aggregate (map-side combined), then
+    // evaluates the 4·8-term Shapley sum on the bounded grid — broadcast
+    // joins only, the coalition table never grows with data. l-diversity is
+    // a two-level aggregate over the (nation × segment) grid. Everything
+    // downstream of the first shuffle is domain-bounded.
+    //
+    // Determinism: coalition values are exact half-up ppm BIGINTs, the
+    // Shapley sum is an integer linear combination (×24 clears the 4-player
+    // factorial denominators), and the single float column is a terminal
+    // 6-dp division.
 
-
-  val decls: Map[String, Decl] = Map(
     // Empirical Shapley attribution over the 4 non-purchase channels
     // (click/error/signup/view, bits 0-3 alphabetically): v(S) = observed
     // purchase rate (exact ppm) among users whose touched-channel set is
@@ -1530,34 +1650,25 @@ object Round10tt {
              |                 THEN 1 ELSE 0 END AS BIGINT) AS diverse
              |FROM customer
              |GROUP BY c_nationkey, c_mktsegment
-             |ORDER BY c_nationkey, c_mktsegment""".stripMargin))
-  )
-}
+             |ORDER BY c_nationkey, c_mktsegment""".stripMargin)),
 
-// ——— formerly Round10vv.scala ———
-/** Round-10 wave 52: model-evaluation statistics — McNemar's paired
-  * classifier test (composed on the declared language-ID classifier vs
-  * the majority-class baseline), the calibration/reliability table
-  * (predicted-probability bins vs observed rates — the ECE input), and
-  * PSI distribution-drift monitoring between the fixture's two halves.
-  *
-  * Determinism: every count is BIGINT, every rate/probability is an
-  * exact half-up ppm integer, bands are integer-arithmetic bucket ids
-  * (no float log in the bucketing path), and the only doubles are
-  * terminal 6-dp expressions computed per-row from exact integers — no
-  * float ever crosses an aggregation merge.
-  *
-  * Scale shape: each key is one scan + one map-side-combined aggregate
-  * onto a domain-bounded grid (2×2 discordance cells, 10 probability
-  * bins, 25 value bands); everything after the first shuffle is
-  * constant-size at any corpus scale.
-  */
-object Round10vv {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Model-evaluation statistics — McNemar's paired
+    // classifier test (composed on the declared language-ID classifier vs
+    // the majority-class baseline), the calibration/reliability table
+    // (predicted-probability bins vs observed rates — the ECE input), and
+    // PSI distribution-drift monitoring between the fixture's two halves.
+    //
+    // Determinism: every count is BIGINT, every rate/probability is an
+    // exact half-up ppm integer, bands are integer-arithmetic bucket ids
+    // (no float log in the bucketing path), and the only doubles are
+    // terminal 6-dp expressions computed per-row from exact integers — no
+    // float ever crosses an aggregation merge.
+    //
+    // Scale shape: each key is one scan + one map-side-combined aggregate
+    // onto a domain-bounded grid (2×2 discordance cells, 10 probability
+    // bins, 25 value bands); everything after the first shuffle is
+    // constant-size at any corpus scale.
 
-
-  val decls: Map[String, Decl] = Map(
     // McNemar's test: two responder-prediction rules on the SAME
     // customers — rule A (balance >= 4500) vs rule B (building/auto
     // segment), truth = placed a 1998 order. The PAIRED design counts
@@ -1711,56 +1822,23 @@ object Round10vv {
              |       round(CAST(p_ppm - q_ppm AS DOUBLE) / 1e6 *
              |             (ln(CAST(p_ppm AS DOUBLE)) - ln(CAST(q_ppm AS DOUBLE))), 6)
              |         AS psi_term
-             |FROM ppm ORDER BY band""".stripMargin))
-  )
-}
+             |FROM ppm ORDER BY band""".stripMargin)),
 
-// ——— formerly Round10ww.scala ———
-/** Round-10 wave 53: the skyline (Pareto-dominance) operator — the
-  * classic multi-objective DB operator — on the distributed exclusive
-  * prefix-min, and Markov removal-effect attribution (the data-driven
-  * successor to first/last-touch: a channel's credit is how much
-  * conversion probability the journey chain loses without it).
-  *
-  * Scale shape: the skyline collapses the corpus to the distinct-price
-  * grid (one map-side-combined aggregate), runs PrefixSum's scan-
-  * parallel exclusive cummin over the grid's total order — never an
-  * unpartitioned window — and joins the surviving price levels back
-  * broadcast. The Markov chain collapses journeys to a ≤6×6 transition
-  * matrix (alphabet-bounded forever); the absorbing-chain solve runs on
-  * the driver over that constant-size matrix, exactly like the declared
-  * PCA/stationary-distribution fixpoint keys.
-  */
-object Round10ww {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // The skyline (Pareto-dominance) operator — the
+    // classic multi-objective DB operator — on the distributed exclusive
+    // prefix-min, and Markov removal-effect attribution (the data-driven
+    // successor to first/last-touch: a channel's credit is how much
+    // conversion probability the journey chain loses without it).
+    //
+    // Scale shape: the skyline collapses the corpus to the distinct-price
+    // grid (one map-side-combined aggregate), runs PrefixSum's scan-
+    // parallel exclusive cummin over the grid's total order — never an
+    // unpartitioned window — and joins the surviving price levels back
+    // broadcast. The Markov chain collapses journeys to a ≤6×6 transition
+    // matrix (alphabet-bounded forever); the absorbing-chain solve runs on
+    // the driver over that constant-size matrix, exactly like the declared
+    // PCA/stationary-distribution fixpoint keys.
 
-
-  /** Deterministic absorption probability into `conv` from every state:
-    * fixed 400 synchronous iterations of a(s) = Σ_t P(s,t)·a(t) with
-    * a(conv)=1, a(null)=0 — geometric convergence to well under 1e-12 for
-    * any substochastic journey chain, identical float path every run.
-    */
-  private[operators] def absorb(
-      states: Seq[String],
-      p: Map[(String, String), Double]): Map[String, Double] = {
-    val transient = states.filterNot(s => s == "conv" || s == "null")
-    var a = transient.map(_ -> 0.0).toMap
-    var it = 0
-    while (it < 400) {
-      a = transient.map { s =>
-        val hit = p.getOrElse((s, "conv"), 0.0)
-        val flow = transient.iterator
-          .map(t => p.getOrElse((s, t), 0.0) * a(t)).sum
-        s -> (hit + flow)
-      }.toMap
-      it += 1
-    }
-    a ++ Map("conv" -> 1.0, "null" -> 0.0)
-  }
-
-  val decls: Map[String, Decl] = Map(
     // Skyline / Pareto frontier of parts minimizing (price, size): a part
     // survives iff no other part is <= on both dimensions and < on one.
     // Reduce to the distinct-price grid (min size per price), take the
@@ -1864,49 +1942,27 @@ object Round10ww {
           .toDF("channel", "removal_effect", "credit_share")
           .orderBy("channel")
       },
-      None)
-  )
-}
+      None),
 
-// ——— formerly Round10xx.scala ———
-/** Round-10 wave 54: retrieval and multiple-testing evaluation —
-  * NDCG@15 composed on the declared BM25 ranking (the ranking-quality
-  * number every search/RAG stack reports) and the Benjamini-Hochberg
-  * step-up procedure (the FDR correction an experimentation platform
-  * applies before acting on 25 per-segment tests).
-  *
-  * Determinism: graded relevance is the exact matched-term count; the
-  * DCG/IDCG folds run in POSITION order on both engines (sorted-fold
-  * discipline over ≤15 terms); the normal CDF is the same
-  * Abramowitz-Stegun 26.2.17 polynomial written identically in both
-  * engines (IEEE-identical doubles), and every p/threshold comparison
-  * happens before the terminal 6-dp round.
-  *
-  * Scale shape: NDCG's ranked list is rank-limited (GlobalLimit 15
-  * under the position window — ScaleSpec's bounded-window guard shape),
-  * the ideal-gain ladder is a 3-cell conditional aggregate broadcast
-  * onto a 15-row spine; BH runs entirely on the 25-nation grid
-  * (domain-bounded — allowlisted in ScaleSpec with that reason).
-  */
-object Round10xx {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Retrieval and multiple-testing evaluation —
+    // NDCG@15 composed on the declared BM25 ranking (the ranking-quality
+    // number every search/RAG stack reports) and the Benjamini-Hochberg
+    // step-up procedure (the FDR correction an experimentation platform
+    // applies before acting on 25 per-segment tests).
+    //
+    // Determinism: graded relevance is the exact matched-term count; the
+    // DCG/IDCG folds run in POSITION order on both engines (sorted-fold
+    // discipline over ≤15 terms); the normal CDF is the same
+    // Abramowitz-Stegun 26.2.17 polynomial written identically in both
+    // engines (IEEE-identical doubles), and every p/threshold comparison
+    // happens before the terminal 6-dp round.
+    //
+    // Scale shape: NDCG's ranked list is rank-limited (GlobalLimit 15
+    // under the position window — ScaleSpec's bounded-window guard shape),
+    // the ideal-gain ladder is a 3-cell conditional aggregate broadcast
+    // onto a 15-row spine; BH runs entirely on the 25-nation grid
+    // (domain-bounded — allowlisted in ScaleSpec with that reason).
 
-
-  /** Φ(x) for x ≥ 0, Abramowitz-Stegun 26.2.17 — written once and
-    * rendered into BOTH engines' SQL so the double arithmetic is
-    * operation-identical. `z` must be a non-negative expression.
-    */
-  private def phiSql(z: String): String = {
-    val t = s"(1.0 / (1.0 + 0.2316419 * $z))"
-    s"""(1.0 - 0.3989422804014327 * exp(-($z) * ($z) / 2.0) *
-       | (0.319381530 * $t - 0.356563782 * $t * $t
-       |  + 1.781477937 * $t * $t * $t - 1.821255978 * $t * $t * $t * $t
-       |  + 1.330274429 * $t * $t * $t * $t * $t))""".stripMargin
-  }
-
-  val decls: Map[String, Decl] = Map(
     // NDCG@15 for the declared BM25 ranking. Graded relevance = number
     // of distinct query terms the document matches (the bm25 key's own
     // n_terms column, 1..3); gain 2^rel − 1. IDCG places the corpus's
@@ -1914,7 +1970,7 @@ object Round10xx {
     // 3 conditional-aggregate cells, crossed onto a 15-position spine.
     "agg_ndcg_at_k" -> Decl(
       (s, d) => {
-        val ranked = Round10nn.decls("text_bm25_rank").query(s, d)
+        val ranked = Text.decls("text_bm25_rank").query(s, d)
           .withColumn("pos",
             row_number().over(Window.orderBy(col("bm25").desc, col("doc_id"))))
           .select(col("pos"), col("n_terms").cast("bigint").as("rel"))
@@ -1950,7 +2006,7 @@ object Round10xx {
                   round(col("dcg") / col("idcg"), 6).as("ndcg"))
       },
       Some {
-        val inner = Round10nn.decls("text_bm25_rank").oracle.get
+        val inner = Text.decls("text_bm25_rank").oracle.get
         s"""WITH ranked AS ($inner),
            |pos AS (SELECT n_terms AS rel,
            |               row_number() OVER (ORDER BY bm25 DESC, doc_id) AS pos
@@ -2054,21 +2110,11 @@ object Round10xx {
            |       CAST(CASE WHEN rnk <= k THEN 1 ELSE 0 END AS BIGINT)
            |         AS rejected
            |FROM thr CROSS JOIN k ORDER BY rnk""".stripMargin
-      })
-  )
-}
+      }),
 
-// ——— formerly Round10y.scala ———
-/** Round-10 twenty-fifth wave: retail affinity indexing, activation
-  * latency, and ISO calendar decomposition.
-  */
-object Round10y {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Retail affinity indexing, activation
+    // latency, and ISO calendar decomposition.
 
-
-  val decls: Map[String, Decl] = Map(
     // Affinity index ("index 120"): how over/under-represented each
     // order priority is within a market segment vs the population —
     // (cell/rowtot)/(coltot/grand), carried as one exact cross-multiplied
@@ -2158,22 +2204,12 @@ object Round10y {
              |       CAST(weekofyear(CAST(o_orderdate AS DATE)) AS BIGINT) AS iso_week,
              |       CAST(dayofyear(CAST(o_orderdate AS DATE)) AS BIGINT) AS doy,
              |       CAST(quarter(CAST(o_orderdate AS DATE)) AS BIGINT) AS qtr
-             |FROM orders ORDER BY o_orderkey""".stripMargin))
-  )
-}
+             |FROM orders ORDER BY o_orderkey""".stripMargin)),
 
-// ——— formerly Round10z.scala ———
-/** Round-10 twenty-sixth wave: Pythagorean means on the bounded value
-  * grid, first-touch attribution (completing the attribution pair), and
-  * the GROUP BY ALL SQL surface.
-  */
-object Round10z {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Pythagorean means on the bounded value
+    // grid, first-touch attribution (completing the attribution pair), and
+    // the GROUP BY ALL SQL surface.
 
-
-  val decls: Map[String, Decl] = Map(
     // Arithmetic / geometric / harmonic means per event type, at scale:
     // the float terms (ln c, 1/c) ride the bounded DISTINCT-cents grid,
     // never the corpus — per-cell integer weights aggregate first, and
@@ -2277,28 +2313,19 @@ object Round10z {
              |         AS cents
              |FROM orders
              |GROUP BY ALL
-             |ORDER BY o_orderstatus, o_orderpriority""".stripMargin))
-  )
-}
+             |ORDER BY o_orderstatus, o_orderpriority""".stripMargin)),
 
-// ——— formerly Round10zz.scala ———
-/** Round-10 wave 56: experiment power analysis (the minimum-detectable-
-  * effect table a platform shows before any test launches) and iterative
-  * proportional fitting (survey raking — reweight a crossed sample to
-  * match declared marginal totals, the standard bias-correction step
-  * before any weighted readout).
-  *
-  * Scale shape: power analysis is one map-side-combined moment aggregate
-  * per event type (5 rows forever); raking collapses the corpus to the
-  * 25×5 (nation × segment) grid — the IPF fixpoint then runs driver-side
-  * on that constant-size table, the markov/PCA pattern.
-  */
-object Round10zz {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Experiment power analysis (the minimum-detectable-
+    // effect table a platform shows before any test launches) and iterative
+    // proportional fitting (survey raking — reweight a crossed sample to
+    // match declared marginal totals, the standard bias-correction step
+    // before any weighted readout).
+    //
+    // Scale shape: power analysis is one map-side-combined moment aggregate
+    // per event type (5 rows forever); raking collapses the corpus to the
+    // 25×5 (nation × segment) grid — the IPF fixpoint then runs driver-side
+    // on that constant-size table, the markov/PCA pattern.
 
-
-  val decls: Map[String, Decl] = Map(
     // Per-metric MDE at 80% power / 5% two-sided α, equal-split design:
     // mde_abs = (z_{0.975} + z_{0.8}) · √(2σ²/n̄) with n̄ = per-arm size
     // (half the observed n). Everything from exact (n, Σc, Σc²) BIGINTs;
@@ -2393,34 +2420,25 @@ object Round10zz {
         s.createDataFrame(rows)
           .toDF("nation", "segment", "n", "weight", "raked")
       },
-      None)
-  )
-}
+      None),
 
-// ——— formerly Round11a.scala ———
-/** Round-10 wave 57: classifier-threshold analysis — the full ROC table
-  * (one row per distinct score with exact-ppm TPR/FPR/Youden-J), the
-  * exact trapezoid AUC from tie-corrected rank sums, and the
-  * event-study generalization of diff-in-diff (per-day treatment
-  * contrasts around the intervention date).
-  *
-  * Determinism: the ROC cumulatives run through PrefixSum's scan-
-  * parallel cumsum over the (score desc) total order; AUC is the exact
-  * Mann-Whitney identity 2ΣR_pos = Σ_g p_g(2·below + n_g + 1) — pure
-  * BIGINT to the terminal ppm division; the event-study means divide
-  * exact cents sums once, 6-dp.
-  *
-  * Scale shape: everything reduces to the distinct-score grid (one
-  * map-side-combined aggregate) or the 15-day offset spine; no
-  * unpartitioned window anywhere (the Youden argmax is a max-struct
-  * aggregate, not a sort).
-  */
-object Round11a {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Classifier-threshold analysis — the full ROC table
+    // (one row per distinct score with exact-ppm TPR/FPR/Youden-J), the
+    // exact trapezoid AUC from tie-corrected rank sums, and the
+    // event-study generalization of diff-in-diff (per-day treatment
+    // contrasts around the intervention date).
+    //
+    // Determinism: the ROC cumulatives run through PrefixSum's scan-
+    // parallel cumsum over the (score desc) total order; AUC is the exact
+    // Mann-Whitney identity 2ΣR_pos = Σ_g p_g(2·below + n_g + 1) — pure
+    // BIGINT to the terminal ppm division; the event-study means divide
+    // exact cents sums once, 6-dp.
+    //
+    // Scale shape: everything reduces to the distinct-score grid (one
+    // map-side-combined aggregate) or the 15-day offset spine; no
+    // unpartitioned window anywhere (the Youden argmax is a max-struct
+    // aggregate, not a sort).
 
-
-  val decls: Map[String, Decl] = Map(
     // ROC curve table: rank customers by account balance (score desc),
     // truth = 1998 responder. One row per distinct score: exact-ppm TPR
     // (recall), FPR, and Youden's J = TPR − FPR at the ">= score"
@@ -2622,33 +2640,24 @@ object Round11a {
              |             - CAST(sum(CASE WHEN tr = 0 THEN c ELSE 0 END) AS DOUBLE)
              |               / sum(CASE WHEN tr = 0 THEN 1 ELSE 0 END) / 100.0, 6)
              |       END AS contrast
-             |FROM base GROUP BY day_offset ORDER BY day_offset""".stripMargin))
-  )
-}
+             |FROM base GROUP BY day_offset ORDER BY day_offset""".stripMargin)),
 
-// ——— formerly Round11b.scala ———
-/** Round-10 wave 58: average precision (the PR-AUC that matters under
-  * class imbalance, where ROC-AUC flatters) and MATTR — the
-  * moving-average type-token ratio, the windowed lexical-diversity
-  * metric that fixes plain TTR's length bias.
-  *
-  * Determinism: AP folds integer-scaled per-threshold terms
-  * (picotask-quantized at 1e-12 — the quantization error is ≤ one part
-  * in 1e12 per distinct score, orders below the 6-dp round); MATTR is
-  * exact half-up ppm integer arithmetic per document. No float ever
-  * crosses an aggregation merge in either key.
-  *
-  * Scale shape: AP reduces to the same distinct-score grid + PrefixSum
-  * cumulatives as the ROC family; MATTR is pure per-row HOF work inside
-  * whole-stage codegen (O(tokens × window) per document, no shuffle at
-  * all before the final sort).
-  */
-object Round11b {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Average precision (the PR-AUC that matters under
+    // class imbalance, where ROC-AUC flatters) and MATTR — the
+    // moving-average type-token ratio, the windowed lexical-diversity
+    // metric that fixes plain TTR's length bias.
+    //
+    // Determinism: AP folds integer-scaled per-threshold terms
+    // (picotask-quantized at 1e-12 — the quantization error is ≤ one part
+    // in 1e12 per distinct score, orders below the 6-dp round); MATTR is
+    // exact half-up ppm integer arithmetic per document. No float ever
+    // crosses an aggregation merge in either key.
+    //
+    // Scale shape: AP reduces to the same distinct-score grid + PrefixSum
+    // cumulatives as the ROC family; MATTR is pure per-row HOF work inside
+    // whole-stage codegen (O(tokens × window) per document, no shuffle at
+    // all before the final sort).
 
-
-  val decls: Map[String, Decl] = Map(
     // Average precision = Σ_g (recall increment of group g) × (precision
     // at g's threshold), groups descending by score. With cumulatives
     // from the distributed prefix sum the term is p_g/P · cp_g/cn_g;
@@ -2746,56 +2755,28 @@ object Round11b {
              |       CAST(k AS BIGINT) AS n_windows,
              |       CAST((sdist * 2000000 + w * k) // (2 * w * k) AS BIGINT)
              |         AS mattr_ppm
-             |FROM s ORDER BY doc_id""".stripMargin))
-  )
-}
+             |FROM s ORDER BY doc_id""".stripMargin)),
 
-// ——— formerly Round11c.scala ———
-/** Round-10 wave 59: preference-strength fitting (Bradley-Terry — the
-  * pairwise-comparison model under every preference/reward pipeline)
-  * and hard-negative triplet mining over the embedding corpus (the
-  * metric-learning data-prep step: for each anchor, the closest
-  * same-label positive and the closest wrong-label negative, with the
-  * margin that decides whether the triplet is worth training on).
-  *
-  * Scale shape: BT collapses orders to the calendar-month × nation grid
-  * (one aggregate; grid bounded by time span × nation enum), minted
-  * matches and the MM fixpoint run on the driver over that constant
-  * table — the markov/IPF pattern. Triplet mining broadcasts a FIXED
-  * 16-anchor panel against one corpus scan (16n scored pairs, two
-  * conditional max-struct aggregates — no corpus×corpus join; the ANN
-  * bucketed variant is the declared sim_ann_* path).
-  *
-  * Determinism: match minting is exact-integer ranking with nationkey
-  * tie-breaks; cosines round to 6 dp BEFORE the argmax (both engines
-  * compare identical doubles, ties broken by vec_id); the MM iteration
-  * is a fixed 200-sweep driver loop.
-  */
-object Round11c {
-  import graft.{Decl, Tables}
-  import graft.functions.VectorOps
-  import org.apache.spark.sql.functions._
+    // Preference-strength fitting (Bradley-Terry — the
+    // pairwise-comparison model under every preference/reward pipeline)
+    // and hard-negative triplet mining over the embedding corpus (the
+    // metric-learning data-prep step: for each anchor, the closest
+    // same-label positive and the closest wrong-label negative, with the
+    // margin that decides whether the triplet is worth training on).
+    //
+    // Scale shape: BT collapses orders to the calendar-month × nation grid
+    // (one aggregate; grid bounded by time span × nation enum), minted
+    // matches and the MM fixpoint run on the driver over that constant
+    // table — the markov/IPF pattern. Triplet mining broadcasts a FIXED
+    // 16-anchor panel against one corpus scan (16n scored pairs, two
+    // conditional max-struct aggregates — no corpus×corpus join; the ANN
+    // bucketed variant is the declared sim_ann_* path).
+    //
+    // Determinism: match minting is exact-integer ranking with nationkey
+    // tie-breaks; cosines round to 6 dp BEFORE the argmax (both engines
+    // compare identical doubles, ties broken by vec_id); the MM iteration
+    // is a fixed 200-sweep driver loop.
 
-
-  /** One Bradley-Terry MM sweep (Hunter 2004): p_i ← W_i / Σ_j n_ij/(p_i+p_j),
-    * then renormalize to Σp = 1. */
-  private[graft] def mmSweep(
-      teams: Seq[Long],
-      wins: Map[Long, Long],
-      nPairs: Map[(Long, Long), Long],
-      p: Map[Long, Double]): Map[Long, Double] = {
-    val next = teams.map { i =>
-      val denom = teams.iterator.filter(_ != i).map { j =>
-        nPairs.getOrElse(if (i < j) (i, j) else (j, i), 0L).toDouble /
-          (p(i) + p(j))
-      }.sum
-      i -> (if (denom > 0) wins.getOrElse(i, 0L).toDouble / denom else p(i))
-    }.toMap
-    val z = next.values.sum
-    next.map { case (k, v) => k -> v / z }
-  }
-
-  val decls: Map[String, Decl] = Map(
     // Bradley-Terry strengths for the 25 nations from minted monthly
     // revenue contests: within each calendar month, rank nations by
     // exact revenue cents (nationkey tie-break) and let each nation
@@ -2889,36 +2870,27 @@ object Round11c {
              |       round(pos.cos - neg.cos, 6) AS margin
              |FROM pos JOIN neg ON pos.aid = neg.aid
              |WHERE pos.rn = 1 AND neg.rn = 1
-             |ORDER BY aid""".stripMargin))
-  )
-}
+             |ORDER BY aid""".stripMargin)),
 
-// ——— formerly Round11d.scala ———
-/** Round-10 wave 60: two-way ANOVA with interaction (the factorial
-  * experiment readout the one-way key can't give: does segment's effect
-  * on balance DIFFER by nation?) and the parquet bloom-filter sink (the
-  * point-lookup data-skipping layer beyond min/max statistics).
-  *
-  * Determinism: every sum-of-squares derives from exact BIGINT cell
-  * moments; the s²/n terms square through DECIMAL(38,0)/HUGEINT (the
-  * global cents sum squared clears BIGINT already at sf0.1) and
-  * floor-divide back to integers (≤1 cent² quantization per cell
-  * against SS ~1e13 — sub-ulp) so no float sum ever crosses a merge;
-  * F ratios are terminal 6-dp doubles from identical formulas. The one
-  * remaining BIGINT ceiling is Σc² (~sf100); wider is the documented
-  * DECIMAL(38,0) swap.
-  *
-  * Scale shape: ANOVA is one scan → 125-cell grid → three bounded
-  * aggregates; the bloom sink writes one pass and reads back with an
-  * equality predicate the bloom filter serves from footer metadata
-  * (Round11dSpec opens the footer and asserts the filter exists).
-  */
-object Round11d {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Two-way ANOVA with interaction (the factorial
+    // experiment readout the one-way key can't give: does segment's effect
+    // on balance DIFFER by nation?) and the parquet bloom-filter sink (the
+    // point-lookup data-skipping layer beyond min/max statistics).
+    //
+    // Determinism: every sum-of-squares derives from exact BIGINT cell
+    // moments; the s²/n terms square through DECIMAL(38,0)/HUGEINT (the
+    // global cents sum squared clears BIGINT already at sf0.1) and
+    // floor-divide back to integers (≤1 cent² quantization per cell
+    // against SS ~1e13 — sub-ulp) so no float sum ever crosses a merge;
+    // F ratios are terminal 6-dp doubles from identical formulas. The one
+    // remaining BIGINT ceiling is Σc² (~sf100); wider is the documented
+    // DECIMAL(38,0) swap.
+    //
+    // Scale shape: ANOVA is one scan → 125-cell grid → three bounded
+    // aggregates; the bloom sink writes one pass and reads back with an
+    // equality predicate the bloom filter serves from footer metadata
+    // (Round11dSpec opens the footer and asserts the filter exists).
 
-
-  val decls: Map[String, Decl] = Map(
     // Two-way ANOVA, factors nation (a=25) × segment (b=5), response =
     // account balance in cents. Sequential (Type-I) sums of squares on
     // the unbalanced design: SS_A, SS_B, SS_AB = SS_cells − SS_A − SS_B,
@@ -3047,35 +3019,25 @@ object Round11d {
              |       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
              |            AS BIGINT) AS cents
              |FROM lineitem WHERE l_partkey % 1000 = 7
-             |GROUP BY l_partkey ORDER BY l_partkey""".stripMargin))
-  )
-}
+             |GROUP BY l_partkey ORDER BY l_partkey""".stripMargin)),
 
-// ——— formerly Round11g.scala ———
-/** Round-10 wave 63: corpus-comparison and readability text analytics —
-  * the Monroe-Colaresi-Quinn "Fightin' Words" log-odds with a Dirichlet
-  * prior (WHICH terms distinguish the en corpus from the rest — the
-  * principled alternative to raw frequency ratios that overweight rare
-  * words) and the classical readability indices (LIX / ARI) every
-  * content-quality pipeline reports.
-  *
-  * Determinism: all counts are exact BIGINTs; δ and z are single
-  * double-expression trees over those integers, written identically in
-  * both engines, compared before the terminal 6-dp round; the top-30 cut
-  * orders by (|z| desc, term) — a total order.
-  *
-  * Scale shape: token counting is the text_wordcount shuffle (one
-  * map-side-combined aggregate), the vocabulary is support-filtered
-  * (≥ 20 occurrences) and the output is a TakeOrdered top-30 — no
-  * global sort; readability is pure per-row expression work.
-  */
-object Round11g {
-  import graft.{Decl, Tables}
-  import graft.functions.TextOps
-  import org.apache.spark.sql.functions._
+    // Corpus-comparison and readability text analytics —
+    // the Monroe-Colaresi-Quinn "Fightin' Words" log-odds with a Dirichlet
+    // prior (WHICH terms distinguish the en corpus from the rest — the
+    // principled alternative to raw frequency ratios that overweight rare
+    // words) and the classical readability indices (LIX / ARI) every
+    // content-quality pipeline reports.
+    //
+    // Determinism: all counts are exact BIGINTs; δ and z are single
+    // double-expression trees over those integers, written identically in
+    // both engines, compared before the terminal 6-dp round; the top-30 cut
+    // orders by (|z| desc, term) — a total order.
+    //
+    // Scale shape: token counting is the text_wordcount shuffle (one
+    // map-side-combined aggregate), the vocabulary is support-filtered
+    // (≥ 20 occurrences) and the output is a TakeOrdered top-30 — no
+    // global sort; readability is pure per-row expression work.
 
-
-  val decls: Map[String, Decl] = Map(
     // Fightin' Words: en vs non-en usage. Uniform Dirichlet prior α=1
     // per term with α0 = V (the filtered vocabulary size); z = δ /
     // sqrt(1/(y_en+1) + 1/(y_ot+1)).
@@ -3185,33 +3147,24 @@ object Round11g {
              |              * 2000000 + 100 * words * sentences)
              |            // (200 * words * sentences) - 100000000
              |            AS BIGINT) AS ari_ppm
-             |FROM base ORDER BY doc_id""".stripMargin))
-  )
-}
+             |FROM base ORDER BY doc_id""".stripMargin)),
 
-// ——— formerly Round11n.scala ———
-/** Round-10 wave 70: isotonic calibration (the monotone regression every
-  * score-calibration pipeline runs — here via the MINIMAX closed form
-  * fit_i = max_{j≤i} min_{k≥i} wavg(y, j..k), which turns the
-  * sequential pool-adjacent-violators loop into three bounded-grid
-  * joins: fully declarative, no recursion, exact integer interval sums)
-  * and manifest-driven min/max file skipping (the Iceberg/Delta
-  * data-skipping shape: a file-level statistics manifest built in one
-  * scan prunes which parquet files a range predicate reads at all).
-  *
-  * Scale shape: isotonic runs ONE corpus aggregate into a 10-bucket
-  * grid; the O(B³) minimax enumeration lives on that constant grid
-  * (220 interval rows). File skipping scans the manifest (one row per
-  * file — KB-scale for a million-file table), reads ONLY overlapping
-  * files, and re-filters; Round11nSpec asserts the skipped plan touches
-  * strictly fewer files while the oracle proves result equality.
-  */
-object Round11n {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Isotonic calibration (the monotone regression every
+    // score-calibration pipeline runs — here via the MINIMAX closed form
+    // fit_i = max_{j≤i} min_{k≥i} wavg(y, j..k), which turns the
+    // sequential pool-adjacent-violators loop into three bounded-grid
+    // joins: fully declarative, no recursion, exact integer interval sums)
+    // and manifest-driven min/max file skipping (the Iceberg/Delta
+    // data-skipping shape: a file-level statistics manifest built in one
+    // scan prunes which parquet files a range predicate reads at all).
+    //
+    // Scale shape: isotonic runs ONE corpus aggregate into a 10-bucket
+    // grid; the O(B³) minimax enumeration lives on that constant grid
+    // (220 interval rows). File skipping scans the manifest (one row per
+    // file — KB-scale for a million-file table), reads ONLY overlapping
+    // files, and re-filters; Round11nSpec asserts the skipped plan touches
+    // strictly fewer files while the oracle proves result equality.
 
-
-  val decls: Map[String, Decl] = Map(
     // Isotonic (non-decreasing) calibration of the F-status rate vs
     // o_totalprice decile. Interval averages are exact BIGINT ratios
     // (Σ hits / Σ n over bucket ranges); both engines evaluate the same
@@ -3311,39 +3264,30 @@ object Round11n {
              |WHERE CAST(l_shipdate AS DATE)
              |      BETWEEN DATE '1995-06-01' AND DATE '1995-08-31'
              |GROUP BY 1
-             |ORDER BY 1""".stripMargin))
-  )
-}
+             |ORDER BY 1""".stripMargin)),
 
-// ——— formerly Round11p.scala ———
-/** Round-10 wave 72: split conformal prediction (distribution-free
-  * prediction intervals — the modern ML-ops way to attach coverage
-  * guarantees to ANY point model: train on one split, take the
-  * ceil(0.9·(n+1))-th smallest absolute calibration residual as the
-  * interval half-width, verify coverage on a held-out split) and the
-  * sequential probability ratio test (Wald's SPRT — the
-  * always-valid-inference primitive behind modern sequential A/B
-  * platforms: walk the daily log-likelihood ratio and stop at the
-  * first boundary crossing).
-  *
-  * Determinism: the OLS fit folds EXACT BIGINT sums (quantity is
-  * integral, prices are cents), so slope/intercept are the same IEEE
-  * doubles in both engines; calibration residuals live on the integer
-  * cent grid, which makes the conformal quantile an exact integer
-  * order statistic. SPRT's LLR is integer counts × the same ln()
-  * constants, cumulated over the bounded 30-day spine.
-  *
-  * Scale shape: the conformal quantile is the distributed two-pass
-  * prefix sum (PrefixSum.cumsumLong — NO unpartitioned data-sized
-  * window anywhere); everything else is one aggregate per split. SPRT
-  * reduces the corpus to the day grid in one aggregate.
-  */
-object Round11p {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Split conformal prediction (distribution-free
+    // prediction intervals — the modern ML-ops way to attach coverage
+    // guarantees to ANY point model: train on one split, take the
+    // ceil(0.9·(n+1))-th smallest absolute calibration residual as the
+    // interval half-width, verify coverage on a held-out split) and the
+    // sequential probability ratio test (Wald's SPRT — the
+    // always-valid-inference primitive behind modern sequential A/B
+    // platforms: walk the daily log-likelihood ratio and stop at the
+    // first boundary crossing).
+    //
+    // Determinism: the OLS fit folds EXACT BIGINT sums (quantity is
+    // integral, prices are cents), so slope/intercept are the same IEEE
+    // doubles in both engines; calibration residuals live on the integer
+    // cent grid, which makes the conformal quantile an exact integer
+    // order statistic. SPRT's LLR is integer counts × the same ln()
+    // constants, cumulated over the bounded 30-day spine.
+    //
+    // Scale shape: the conformal quantile is the distributed two-pass
+    // prefix sum (PrefixSum.cumsumLong — NO unpartitioned data-sized
+    // window anywhere); everything else is one aggregate per split. SPRT
+    // reduces the corpus to the day grid in one aggregate.
 
-
-  val decls: Map[String, Decl] = Map(
     "agg_conformal_interval" -> Decl(
       (s, d) => {
         val li = Tables(s, d, "lineitem")
@@ -3504,43 +3448,30 @@ object Round11p {
               |                      ELSE 'accept_h0' END
               |            ELSE 'continue' END AS decision
               |FROM cum CROSS JOIN fc
-              |ORDER BY day""".stripMargin))
-  )
-}
+              |ORDER BY day""".stripMargin)),
 
-// ——— formerly Round11v.scala ———
-/** Round-10 wave 78: extreme-value analytics — a Gumbel fit on the
-  * daily-maximum order value with return levels (the "what's the
-  * 1-in-365-day order?" question capacity planning and risk teams ask
-  * of any revenue stream; method-of-moments is the closed-form fit, so
-  * it needs exactly one aggregate) and the Hodges-Lehmann pseudo-median
-  * of the day-over-day purchase change (the classical robust location
-  * estimator — median of all pairwise Walsh averages — 29 diffs →
-  * 435 bounded pairs).
-  *
-  * Determinism: both keys reduce to exact sums first. Gumbel moments
-  * come from DECIMAL(38,0) Σx and Σx² over integer cents (overflow-
-  * free, associativity-free); β = s·√6/π and the return-level factors
-  * ln(−ln(1−1/T)) are Scala-computed literals interpolated into BOTH
-  * engines' expressions (the lgs discipline, Round11q), so no engine
-  * libm ln is ever compared against another. sqrt is IEEE-exact in
-  * both. Hodges-Lehmann medians run over integer/half-integer Walsh
-  * grids that doubles carry exactly.
-  *
-  * Scale shape: one shuffle each to the calendar-day grid; the Walsh
-  * self-join is 29×29 on the bounded diff spine (broadcast, never
-  * corpus-sized).
-  */
-object Round11v {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Extreme-value analytics — a Gumbel fit on the
+    // daily-maximum order value with return levels (the "what's the
+    // 1-in-365-day order?" question capacity planning and risk teams ask
+    // of any revenue stream; method-of-moments is the closed-form fit, so
+    // it needs exactly one aggregate) and the Hodges-Lehmann pseudo-median
+    // of the day-over-day purchase change (the classical robust location
+    // estimator — median of all pairwise Walsh averages — 29 diffs →
+    // 435 bounded pairs).
+    //
+    // Determinism: both keys reduce to exact sums first. Gumbel moments
+    // come from DECIMAL(38,0) Σx and Σx² over integer cents (overflow-
+    // free, associativity-free); β = s·√6/π and the return-level factors
+    // ln(−ln(1−1/T)) are Scala-computed literals interpolated into BOTH
+    // engines' expressions (the lgs discipline, Round11q), so no engine
+    // libm ln is ever compared against another. sqrt is IEEE-exact in
+    // both. Hodges-Lehmann medians run over integer/half-integer Walsh
+    // grids that doubles carry exactly.
+    //
+    // Scale shape: one shuffle each to the calendar-day grid; the Walsh
+    // self-join is 29×29 on the bounded diff spine (broadcast, never
+    // corpus-sized).
 
-
-  private val rootSixOverPi: Double = math.sqrt(6.0) / math.Pi
-  private val gamma = 0.5772156649015329 // Euler–Mascheroni
-  private def kT(t: Int): Double = math.log(-math.log(1.0 - 1.0 / t))
-
-  val decls: Map[String, Decl] = Map(
     // Gumbel method-of-moments on daily max order cents: β = s·√6/π,
     // μ = x̄ − γβ, return level x_T = μ − β·ln(−ln(1−1/T)).
     "agg_gumbel_return_period" -> Decl(
@@ -3646,39 +3577,30 @@ object Round11v {
              |SELECT (SELECT count(*) FROM walsh) AS n_pairs,
              |       round((SELECT median(w) FROM walsh), 6) AS hl_shift,
              |       round((SELECT median(CAST(diff AS DOUBLE)) FROM diffs), 6)
-             |         AS plain_median""".stripMargin))
-  )
-}
+             |         AS plain_median""".stripMargin)),
 
-// ——— formerly Round11z.scala ———
-/** Round-10 wave 82: the remaining two classical k-group tests — the
-  * Brown-Forsythe/Levene variance-homogeneity check (one-way ANOVA on
-  * absolute deviations from group MEDIANS — the robust pre-ANOVA gate:
-  * heteroscedastic groups invalidate the pooled-variance F) and the
-  * Friedman repeated-measures rank test (do the five event types keep
-  * the same volume ORDER across the 30 days, or does at least one
-  * systematically run higher?).
-  *
-  * Determinism: Brown-Forsythe works in DOUBLED deviations |2x − 2·med|
-  * — group medians on the integer cent grid interpolate to halves, so
-  * 2·med is an integer and every deviation is BIGINT; Σz and Σz² ride
-  * DECIMAL(38,0), the five per-group F terms fold in group order, and
-  * the doubling cancels in the F ratio. Friedman works in DOUBLED
-  * average ranks (integers even at ties); with r = dr/2 the tie-robust
-  * statistic collapses to an ALL-INTEGER ratio
-  * (k−1)(ΣR2² − n²k(k+1)²)/(Σdr² − nk(k+1)²) — one double division at
-  * the end.
-  *
-  * Scale shape: Brown-Forsythe is two corpus aggregates (grid medians,
-  * then deviation sums) + a 5-row broadcast. Friedman runs entirely on
-  * the 30×5 calendar grid.
-  */
-object Round11z {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // The remaining two classical k-group tests — the
+    // Brown-Forsythe/Levene variance-homogeneity check (one-way ANOVA on
+    // absolute deviations from group MEDIANS — the robust pre-ANOVA gate:
+    // heteroscedastic groups invalidate the pooled-variance F) and the
+    // Friedman repeated-measures rank test (do the five event types keep
+    // the same volume ORDER across the 30 days, or does at least one
+    // systematically run higher?).
+    //
+    // Determinism: Brown-Forsythe works in DOUBLED deviations |2x − 2·med|
+    // — group medians on the integer cent grid interpolate to halves, so
+    // 2·med is an integer and every deviation is BIGINT; Σz and Σz² ride
+    // DECIMAL(38,0), the five per-group F terms fold in group order, and
+    // the doubling cancels in the F ratio. Friedman works in DOUBLED
+    // average ranks (integers even at ties); with r = dr/2 the tie-robust
+    // statistic collapses to an ALL-INTEGER ratio
+    // (k−1)(ΣR2² − n²k(k+1)²)/(Σdr² − nk(k+1)²) — one double division at
+    // the end.
+    //
+    // Scale shape: Brown-Forsythe is two corpus aggregates (grid medians,
+    // then deviation sums) + a 5-row broadcast. Friedman runs entirely on
+    // the 30×5 calendar grid.
 
-
-  val decls: Map[String, Decl] = Map(
     // Brown-Forsythe: F on z_ij = |x_ij − median_g| across the five
     // event types' value distributions.
     "agg_levene_test" -> Decl(
@@ -3821,31 +3743,17 @@ object Round11z {
              |       round(((k - 1) * CAST(sr2sq - n*n*k*(k+1)*(k+1) AS DOUBLE)) /
              |             CAST(sdr2 - n*k*(k+1)*(k+1) AS DOUBLE), 6) > 9.488
              |         AS reject_h0
-             |FROM agg""".stripMargin))
-  )
-}
+             |FROM agg""".stripMargin)),
 
-// ——— formerly Round4.scala ———
-/** Round-4 operator keys — training-data-pipeline surface that the first
-  * three rounds left uncovered, each with a DuckDB oracle.
-  *
-  * 100 TB notes per key are inline; the common theme is that every query is
-  * either a pure per-row projection/filter (redaction, weighted sampling —
-  * runs at scan speed, no shuffle) or a *blocked/bucketed* pair generator
-  * (edit-distance dedup, bucketized range join — the pair space is bounded
-  * by a key before any quadratic work happens).
-  */
-object Round4 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Training-data-pipeline surface that the first
+    // three rounds left uncovered, each with a DuckDB oracle.
+    //
+    // 100 TB notes per key are inline; the common theme is that every query is
+    // either a pure per-row projection/filter (redaction, weighted sampling —
+    // runs at scan speed, no shuffle) or a *blocked/bucketed* pair generator
+    // (edit-distance dedup, bucketized range join — the pair space is bounded
+    // by a key before any quadratic work happens).
 
-
-  // Java∩RE2-safe patterns (SURVEY §7.3 R7): no backrefs, no lookaround.
-  private val EmailRe = "[a-z0-9]+@[a-z0-9.]+\\.[a-z]+"
-  private val PhoneRe = "\\+1-555-[0-9]{4}"
-
-  val decls: Map[String, Decl] = Map(
     // ------------------------------------------------------------ text
     // PII redaction — the scrub pass every LLM training corpus runs before
     // anything else. The fixtures' word-soup text contains no natural PII,
@@ -4274,33 +4182,24 @@ object Round4 {
       Some("""SELECT doc_id, n_chars, (doc_id * 741103597) % 1000 AS ticket
              |FROM documents
              |WHERE (doc_id * 741103597) % 1000 < least(n_chars // 2, 900)
-             |ORDER BY doc_id""".stripMargin)))
-}
+             |ORDER BY doc_id""".stripMargin)),
 
-// ——— formerly Round5.scala ———
-/** Round-5 operator keys — the pretraining-corpus passes the first four
-  * rounds left uncovered (eval-set decontamination by n-gram and by
-  * Bloom-prefiltered content hash, repetition/NLL quality scoring,
-  * context-window sequence packing, overlapping chunking, int8 embedding
-  * quantization, domain-mixture rebalancing, funnel analysis) plus the
-  * source/sink variants (text lines, binaryFile, mergeSchema evolution,
-  * zstd) and the IN / null-free NOT IN subquery predicate paths. Each is
-  * DuckDB-oracled.
-  *
-  * 100 TB notes inline; the common theme is the same as Round4: every
-  * query is either a pure per-row projection/filter (repetition ratio,
-  * quantization, rebalance keep-filter — scan speed, shuffle-free) or a
-  * broadcast-dim / bounded-key shape (decontamination joins the corpus
-  * against the SMALL benchmark gram/hash set; packing windows within
-  * shards; the LM and per-domain stat tables broadcast like dimensions).
-  */
-object Round5 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // The pretraining-corpus passes the first four
+    // rounds left uncovered (eval-set decontamination by n-gram and by
+    // Bloom-prefiltered content hash, repetition/NLL quality scoring,
+    // context-window sequence packing, overlapping chunking, int8 embedding
+    // quantization, domain-mixture rebalancing, funnel analysis) plus the
+    // source/sink variants (text lines, binaryFile, mergeSchema evolution,
+    // zstd) and the IN / null-free NOT IN subquery predicate paths. Each is
+    // DuckDB-oracled.
+    //
+    // 100 TB notes inline; the common theme is the same as Round4: every
+    // query is either a pure per-row projection/filter (repetition ratio,
+    // quantization, rebalance keep-filter — scan speed, shuffle-free) or a
+    // broadcast-dim / bounded-key shape (decontamination joins the corpus
+    // against the SMALL benchmark gram/hash set; packing windows within
+    // shards; the LM and per-domain stat tables broadcast like dimensions).
 
-
-  val decls: Map[String, Decl] = Map(
     // ---------------------------------------------------- decontamination
     // Benchmark decontamination — THE pass every pretraining corpus runs
     // before training: drop/flag any training doc sharing a word n-gram
@@ -4972,64 +4871,23 @@ object Round5 {
              |SELECT doc_id, lang, (doc_id * 879190747) % 1000 AS ticket
              |FROM documents JOIN stats USING (lang) CROSS JOIN tot
              |WHERE ((doc_id * 879190747) % 1000) * n_docs * n_domains < 1000 * total
-             |ORDER BY doc_id""".stripMargin)))
-}
+             |ORDER BY doc_id""".stripMargin)),
 
-// ——— formerly Round6.scala ———
-/** Round-6 operator keys — the incremental/analytic passes on top of the
-  * round-1..5 surface: snapshot-incremental dedup (the "don't re-dedup
-  * 100 TB for a 1 TB delta" shape), information-theoretic mixture
-  * diagnostics, time-series gap-fill over a generated spine, a bigram-LM
-  * quality score (the two-gram step past text_unigram_nll), frameless
-  * window z-score outlier detection, the LEFT OUTER stream-stream join
-  * (the state-expiry semantics the inner interval join doesn't cover),
-  * and one-pass distributed PCA via a Gram-matrix Aggregator.
-  *
-  * 100 TB notes inline; the recurring theme: per-key bounded aggregates
-  * and broadcast-sized stats tables everywhere, and the two genuinely
-  * corpus-sized joins (incremental dedup's anti join, the bigram-LM join)
-  * pinned to shuffle joins on their key — never a broadcast of an
-  * unbounded side.
-  */
-object Round6 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // The incremental/analytic passes on top of the
+    // round-1..5 surface: snapshot-incremental dedup (the "don't re-dedup
+    // 100 TB for a 1 TB delta" shape), information-theoretic mixture
+    // diagnostics, time-series gap-fill over a generated spine, a bigram-LM
+    // quality score (the two-gram step past text_unigram_nll), frameless
+    // window z-score outlier detection, the LEFT OUTER stream-stream join
+    // (the state-expiry semantics the inner interval join doesn't cover),
+    // and one-pass distributed PCA via a Gram-matrix Aggregator.
+    //
+    // 100 TB notes inline; the recurring theme: per-key bounded aggregates
+    // and broadcast-sized stats tables everywhere, and the two genuinely
+    // corpus-sized joins (incremental dedup's anti join, the bigram-LM join)
+    // pinned to shuffle joins on their key — never a broadcast of an
+    // unbounded side.
 
-
-  /** The DuckDB oracle for graph_pagerank: the same 10 PageRank iterations
-    * UNROLLED as chained CTEs (one per iteration), which keeps the full
-    * fixpoint trajectory SQL-expressible and hash-checkable. Graph: node =
-    * doc, out-degree 1 + doc_id%3; the k=1 edge is the cyclic shift
-    * (doc_id + 1) mod n — a bijection for EVERY n, not just n coprime to
-    * the stride (dst = (doc_id·7+k) mod n alone only covers residues
-    * 1..3 mod 7 when 7 | n) — and the k∈{2,3} edges are (doc_id·7+k)
-    * mod n. Every node therefore has ≥1 in-link, so no dangling-mass
-    * term is needed and total rank mass stays exactly 1 (the
-    * mean-normalized ranks sum to n).
-    */
-  private def pagerankOracleSql: String = {
-    val b = new StringBuilder(
-      """WITH nn AS (SELECT CAST(count(*) AS DOUBLE) AS n, count(*) AS ni FROM documents),
-        |e AS (SELECT doc_id AS src, 1 + doc_id % 3 AS outdeg,
-        |             CASE WHEN t.k = 1 THEN (doc_id + 1) % nn.ni
-        |                  ELSE (doc_id * 7 + t.k) % nn.ni END AS dst
-        |      FROM documents CROSS JOIN nn, (VALUES (1), (2), (3)) t(k)
-        |      WHERE t.k <= 1 + doc_id % 3),
-        |pr0 AS (SELECT doc_id, 1.0/nn.n AS r FROM documents CROSS JOIN nn)""".stripMargin)
-    (1 to 10).foreach { i =>
-      b.append(s""",
-        |pr$i AS (SELECT e.dst AS doc_id,
-        |             0.15/(SELECT n FROM nn) + 0.85 * sum(p.r / e.outdeg) AS r
-        |         FROM pr${i - 1} p JOIN e ON p.doc_id = e.src GROUP BY e.dst)""".stripMargin)
-    }
-    b.append("""
-      |SELECT pr10.doc_id AS doc_id, round(pr10.r * nn.n, 6) AS rank_norm
-      |FROM pr10 CROSS JOIN nn ORDER BY doc_id""".stripMargin)
-    b.toString
-  }
-
-  val decls: Map[String, Decl] = Map(
     // ------------------------------------------------------------- graph
     // PageRank — web-graph quality scoring (the crawl-prioritization
     // signal next to the text quality filters). The Spark side is the
@@ -5638,61 +5496,14 @@ object Round6 {
           .toDF("dim", "weight", "var_share")
           .orderBy("dim")
       },
-      None))
-}
+      None),
 
-// ——— formerly Round8.scala ———
-/** Round-8 additions: batch k-NN join (through the native bounded-heap
-  * top-k plan), web-graph triangle counting, temperature-based epoch
-  * upsampling, model-based (fixed-weight logistic) quality scoring, SCD2
-  * interval construction, chi-square independence testing, and
-  * SemDeDup-style semantic-cluster dedup.
-  */
-object Round8 {
-  import graft.{Decl, Tables}
-  import graft.functions.VectorOps
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Batch k-NN join (through the native bounded-heap
+    // top-k plan), web-graph triangle counting, temperature-based epoch
+    // upsampling, model-based (fixed-weight logistic) quality scoring, SCD2
+    // interval construction, chi-square independence testing, and
+    // SemDeDup-style semantic-cluster dedup.
 
-
-  /** Unrolled 4-iteration synchronous label propagation over the same
-    * deterministic undirected graph as graph_triangle_count. Each step is
-    * one neighbor-label count plus a max-count/min-label argmax, expressed
-    * as min over a ('nc' = -count, 'l' = label) struct — the lexicographic
-    * struct-min trick both engines agree on bit-for-bit (no float anywhere).
-    */
-  /** Shared oracle CTE prefix building the deterministic undirected graph
-    * used by graph_triangle_count / graph_label_propagation /
-    * graph_bfs_layers (Round8b) — ends at the symmetrized `adj` table.
-    */
-  private[operators] def graphOracleCtes: String =
-    """WITH nn AS (SELECT count(*) AS ni FROM documents),
-      |raw AS (SELECT doc_id AS src, (doc_id * 3 + t.k) % nn.ni AS dst
-      |        FROM documents CROSS JOIN nn, (VALUES (1), (2)) t(k)
-      |        WHERE doc_id % 4 <> 0 AND t.k <= 1 + doc_id % 2),
-      |c AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      |      FROM raw WHERE src <> dst),
-      |adj AS (SELECT a AS src, b AS dst FROM c UNION ALL SELECT b, a FROM c)"""
-      .stripMargin
-
-  private def lpaOracleSql: String = {
-    val b = new StringBuilder(graphOracleCtes +
-      """,
-        |l0 AS (SELECT doc_id AS v, doc_id AS l FROM documents)""".stripMargin)
-    (1 to 4).foreach { i =>
-      b.append(s""",
-        |l$i AS (SELECT p.v, coalesce(m.pick, p.l) AS l FROM l${i - 1} p LEFT JOIN (
-        |    SELECT dst, (min({'nc': -cnt, 'l': l})).l AS pick FROM (
-        |      SELECT adj.dst AS dst, q.l AS l, count(*) AS cnt
-        |      FROM l${i - 1} q JOIN adj ON q.v = adj.src GROUP BY adj.dst, q.l) x
-        |    GROUP BY dst) m ON m.dst = p.v)""".stripMargin)
-    }
-    b.append("""
-      |SELECT v AS doc_id, l AS community FROM l4 ORDER BY v""".stripMargin)
-    b.toString
-  }
-
-  val decls: Map[String, Decl] = Map(
     // Batch k-NN JOIN — sim_cosine_topk answers ONE query; a real embedding
     // pipeline (retrieval eval, semantic dedup seeding, hard-negative
     // mining) asks thousands at once. The query set is bounded (every
@@ -6234,21 +6045,12 @@ object Round8 {
              |SELECT event_id, host FROM u
              |WHERE regexp_extract(host, '([^.]+\.[^.]+)$', 1)
              |      NOT IN ('example1.com', 'example3.com')
-             |ORDER BY event_id""".stripMargin)))
-}
+             |ORDER BY event_id""".stripMargin)),
 
-// ——— formerly Round9e.scala ———
-/** Round-9 fifth wave: Bollinger bands (rolling mean ± 2σ), winsorized
-  * robust mean on the integer-cents grid, hourly grouped top-k, and a
-  * deterministic hash-subsample jackknife for uncertainty estimation.
-  */
-object Round9e {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Bollinger bands (rolling mean ± 2σ), winsorized
+    // robust mean on the integer-cents grid, hourly grouped top-k, and a
+    // deterministic hash-subsample jackknife for uncertainty estimation.
 
-
-  val decls: Map[String, Decl] = Map(
     // Bollinger bands — the rolling mean ± 2·stddev envelope, per user
     // over a trailing 16-event frame. Sufficient statistics (n, Σy, Σy²)
     // are exact BIGINT window sums sharing ONE user-partitioned sort with
@@ -6427,21 +6229,12 @@ object Round9e {
              |       CAST(count(*) AS BIGINT) AS n,
              |       round(CAST(sum(c) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
              |         AS mean_c
-             |FROM m GROUP BY 1 ORDER BY resample""".stripMargin))
-  )
-}
+             |FROM m GROUP BY 1 ORDER BY resample""".stripMargin)),
 
-// ——— formerly Round9i.scala ———
-/** Round-9 ninth wave: the SQL-session ETL surface as a contract key,
-  * two-component PCA by deflation, an integer-exact log-scale histogram,
-  * and HLL set-intersection estimation by inclusion–exclusion.
-  */
-object Round9i {
-  import graft.{Decl, Sql, Tables}
-  import org.apache.spark.sql.functions._
+    // The SQL-session ETL surface as a contract key,
+    // two-component PCA by deflation, an integer-exact log-scale histogram,
+    // and HLL set-intersection estimation by inclusion–exclusion.
 
-
-  val decls: Map[String, Decl] = Map(
     // Multi-statement ETL through the SQL session (graft.Sql + the
     // restart-surviving GraftCatalog): seed a warehouse table from one
     // slice, append two more slices with INSERT INTO … SELECT, read the
@@ -6569,21 +6362,12 @@ object Round9i {
           .select(col("est_a"), col("est_b"), col("est_union"),
                   (col("est_a") + col("est_b") - col("est_union")).as("est_intersect"))
       },
-      None)
-  )
-}
+      None),
 
-// ——— formerly Round9m.scala ———
-/** Round-9 thirteenth wave: exact mergeable distinct counting via bitmap
-  * aggregates, and the language-ID confusion matrix (classifier
-  * evaluation as a first-class operator).
-  */
-object Round9m {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Exact mergeable distinct counting via bitmap
+    // aggregates, and the language-ID confusion matrix (classifier
+    // evaluation as a first-class operator).
 
-
-  val decls: Map[String, Decl] = Map(
     // Exact mergeable distinct — the roaring-bitmap pattern through
     // Spark's native bitmap aggregates: per (segment, bucket) a bitmap of
     // user-id bit positions, per-segment distinct = Σ bitmap_count, and
@@ -6647,22 +6431,12 @@ object Round9m {
            |         AS recall_ppm
            |FROM cells JOIN tot USING (lang)
            |ORDER BY cells.lang, predicted""".stripMargin
-      })
-  )
-}
+      }),
 
-// ——— formerly Round9p.scala ———
-/** Round-9 sixteenth wave: first-order Markov transition mining over
-  * per-user event sequences, and the multimodal plumbing pieces composed
-  * into one end-to-end per-document feature pipeline.
-  */
-object Round9p {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // First-order Markov transition mining over
+    // per-user event sequences, and the multimodal plumbing pieces composed
+    // into one end-to-end per-document feature pipeline.
 
-
-  val decls: Map[String, Decl] = Map(
     // Markov transition matrix — P(next type | current type) from every
     // user's event sequence: the sequence-mining staple behind
     // next-action prediction and anomaly scoring. Transitions come from
@@ -6750,20 +6524,11 @@ object Round9p {
              |       CAST((head_sum * 2000000 + n_frames) // (2 * n_frames)
              |            AS BIGINT) AS mean_head_ppm
              |FROM documents d JOIN g USING (doc_id)
-             |ORDER BY d.doc_id""".stripMargin))
-  )
-}
+             |ORDER BY d.doc_id""".stripMargin)),
 
-// ——— formerly Round9t.scala ———
-/** Round-9 twentieth wave: empirical-Bayes smoothed rates and permissive
-  * CSV ingestion with corrupt-record accounting.
-  */
-object Round9t {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Empirical-Bayes smoothed rates and permissive
+    // CSV ingestion with corrupt-record accounting.
 
-
-  val decls: Map[String, Decl] = Map(
     // Laplace-smoothed rate — ranking segments by a rate when some have
     // tiny samples: the raw short-doc rate per source plus the
     // add-one-smoothed posterior mean (x+1)/(n+2), both as integer ppm
@@ -6832,42 +6597,33 @@ object Round9t {
              |  CAST(sum(CASE WHEN o_orderkey % 11 <> 0
              |            THEN CAST(round(o_totalprice * 100) AS BIGINT) END)
              |       AS BIGINT) AS clean_cents
-             |FROM orders""".stripMargin))
-  )
-}
+             |FROM orders""".stripMargin)),
 
-// ——— round-11 wave 84 ———
-/** Round-11 wave 84: four classical estimators the inventory still
-  * lacked — the Wilcoxon signed-rank test (the nonparametric paired
-  * twin of the t-test: does one user cohort systematically out-purchase
-  * the other day by day?), the Jarque-Bera normality screen
-  * (moment-based skewness/kurtosis — the gate every parametric model
-  * on residuals should run first), Mood's median test (k-group
-  * location comparison that only trusts counts above/below the grand
-  * median — maximally robust to outliers and unequal variances), and
-  * the Chapman capture-recapture estimator (population-size estimation
-  * from two overlapping observation windows — the classical answer to
-  * "how many users are there REALLY, given we only ever see a sample?").
-  *
-  * Determinism: signed ranks use the DOUBLED-rank trick (2·avgrank is
-  * an integer even at ties) on the |diff| grid; JB moments come from
-  * exact BIGINT power sums of l_quantity (x ≤ 50, so Σx⁴ fits at every
-  * SF) pushed through identical IEEE trees; Mood's counts are integers
-  * against a doubled grand median; Chapman is a ratio of integer
-  * distinct-counts. Group/term folds ride the repo's sorted-fold
-  * discipline; doubles round to 6 dp.
-  *
-  * Scale shape: every key reduces the corpus in ONE distributed
-  * aggregate (day spine ≤ 30 rows, value grids bounded by the 2-dp
-  * domain, distinct-user semi-joins shuffle ids once); no data-sized
-  * window, no driver loop.
-  */
-object StatsWave84 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Four classical estimators the inventory still
+    // lacked — the Wilcoxon signed-rank test (the nonparametric paired
+    // twin of the t-test: does one user cohort systematically out-purchase
+    // the other day by day?), the Jarque-Bera normality screen
+    // (moment-based skewness/kurtosis — the gate every parametric model
+    // on residuals should run first), Mood's median test (k-group
+    // location comparison that only trusts counts above/below the grand
+    // median — maximally robust to outliers and unequal variances), and
+    // the Chapman capture-recapture estimator (population-size estimation
+    // from two overlapping observation windows — the classical answer to
+    // "how many users are there REALLY, given we only ever see a sample?").
+    //
+    // Determinism: signed ranks use the DOUBLED-rank trick (2·avgrank is
+    // an integer even at ties) on the |diff| grid; JB moments come from
+    // exact BIGINT power sums of l_quantity (x ≤ 50, so Σx⁴ fits at every
+    // SF) pushed through identical IEEE trees; Mood's counts are integers
+    // against a doubled grand median; Chapman is a ratio of integer
+    // distinct-counts. Group/term folds ride the repo's sorted-fold
+    // discipline; doubles round to 6 dp.
+    //
+    // Scale shape: every key reduces the corpus in ONE distributed
+    // aggregate (day spine ≤ 30 rows, value grids bounded by the 2-dp
+    // domain, distinct-user semi-joins shuffle ids once); no data-sized
+    // window, no driver loop.
 
-  val decls: Map[String, Decl] = Map(
     // Wilcoxon signed-rank: paired daily purchase counts of the even-id
     // vs odd-id user cohorts over the 30-day spine. Zero differences
     // drop (the standard Wilcoxon convention); |d| ties get doubled
@@ -7117,37 +6873,29 @@ object StatsWave84 {
              |SELECT n1, n2, m_both,
              |       round(CAST(n1 + 1 AS DOUBLE) * (n2 + 1) / (m_both + 1)
              |             - 1.0, 6) AS n_hat
-             |FROM c""".stripMargin))
-  )
-}
+             |FROM c""".stripMargin)),
 
-// ——— round-11 wave 85 ———
-/** Round-11 wave 85: penalized and robust regression — closed-form
-  * ridge regression along a λ path (the L2-shrunk OLS every feature
-  * pipeline reaches for when predictors collinear: slope shrinks
-  * smoothly toward 0 as λ grows) and quantile regression through the
-  * origin by grid search (the τ-pinball-loss line that answers "what
-  * slope bounds the τ-quantile of price per unit quantity" — median
-  * and tail fits in one operator, no IRLS, no iterations).
-  *
-  * Determinism: both consume only exact BIGINT sums. Ridge is ONE
-  * scan producing (n, Σx, Σy, Σx², Σxy), then a 3-point broadcast λ
-  * grid through the identical closed-form IEEE tree in both engines.
-  * The quantile fit keeps the ENTIRE objective integral: pinball loss
-  * scaled by 10 (τ ∈ {.1,.5,.9} → integer weights 1/5/9 on positive
-  * and 9/5/1 on negative residuals), so the argmin over the 41-slope
-  * grid compares BIGINTs — no float order anywhere.
-  *
-  * Scale shape: ridge is one aggregate. The quantile grid fans each
-  * row out 41× (a broadcast crossJoin — constant factor, no shuffle
-  * until the 41·3-group aggregate); argmin is a min(struct) over 123
-  * rows. No data-sized window, no driver iteration.
-  */
-object RegressionWave85 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Penalized and robust regression — closed-form
+    // ridge regression along a λ path (the L2-shrunk OLS every feature
+    // pipeline reaches for when predictors collinear: slope shrinks
+    // smoothly toward 0 as λ grows) and quantile regression through the
+    // origin by grid search (the τ-pinball-loss line that answers "what
+    // slope bounds the τ-quantile of price per unit quantity" — median
+    // and tail fits in one operator, no IRLS, no iterations).
+    //
+    // Determinism: both consume only exact BIGINT sums. Ridge is ONE
+    // scan producing (n, Σx, Σy, Σx², Σxy), then a 3-point broadcast λ
+    // grid through the identical closed-form IEEE tree in both engines.
+    // The quantile fit keeps the ENTIRE objective integral: pinball loss
+    // scaled by 10 (τ ∈ {.1,.5,.9} → integer weights 1/5/9 on positive
+    // and 9/5/1 on negative residuals), so the argmin over the 41-slope
+    // grid compares BIGINTs — no float order anywhere.
+    //
+    // Scale shape: ridge is one aggregate. The quantile grid fans each
+    // row out 41× (a broadcast crossJoin — constant factor, no shuffle
+    // until the 41·3-group aggregate); argmin is a min(struct) over 123
+    // rows. No data-sized window, no driver iteration.
 
-  val decls: Map[String, Decl] = Map(
     // Ridge path for extendedprice-cents ~ quantity at λ ∈ {0, 1e6,
     // 1e8} (λ in squared-cents, applied to the CENTERED normal
     // equation: slope_λ = Sxy_c / (Sxx_c + λ), with Sxy_c = n·Σxy −
@@ -7261,39 +7009,31 @@ object RegressionWave85 {
              |SELECT CAST(w10 AS DOUBLE) / 10 AS tau,
              |       CAST(slope AS BIGINT) AS slope_cents,
              |       loss AS pinball_x10
-             |FROM best WHERE rn = 1 ORDER BY tau""".stripMargin))
-  )
-}
+             |FROM best WHERE rn = 1 ORDER BY tau""".stripMargin)),
 
-// ——— round-11 wave 89 ———
-/** Round-11 wave 89: resampling and empirical-Bayes inference — a
-  * deterministic PERMUTATION test of the cohort spend difference (the
-  * assumption-free significance answer when nothing about the
-  * distribution is trusted: re-randomize labels B=200 times, count how
-  * often the permuted |difference| beats the observed one) and
-  * beta-binomial shrinkage of daily conversion rates (the
-  * empirical-Bayes fix for "day 7 had 3 events and looks like a 100%
-  * conversion day": method-of-moments prior from the 30-day rate
-  * spread, posterior-mean shrinkage toward it).
-  *
-  * Determinism: permutation labels are the PARITY OF THE LAST HEX
-  * CHAR of md5(event_id:b) — the same string in every engine, so the
-  * B=200 re-randomizations are identical everywhere; each permuted
-  * difference flows through the same exact-integer-sums → one-double
-  * tree as the observed one, so the ≥ comparisons agree bit-for-bit.
-  * The beta prior folds Σp and Σ(p−p̄)² in day order (sorted-fold
-  * rule); everything else is integer counts.
-  *
-  * Scale shape: the permutation fan-out is a broadcast crossJoin (one
-  * scan read B times map-side, combined to B×2 partial sums before the
-  * only shuffle — 400 rows cross the wire, not B×N). The shrinkage key
-  * reduces the corpus to the 30-day spine in one aggregate.
-  */
-object StatsWave89 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Resampling and empirical-Bayes inference — a
+    // deterministic PERMUTATION test of the cohort spend difference (the
+    // assumption-free significance answer when nothing about the
+    // distribution is trusted: re-randomize labels B=200 times, count how
+    // often the permuted |difference| beats the observed one) and
+    // beta-binomial shrinkage of daily conversion rates (the
+    // empirical-Bayes fix for "day 7 had 3 events and looks like a 100%
+    // conversion day": method-of-moments prior from the 30-day rate
+    // spread, posterior-mean shrinkage toward it).
+    //
+    // Determinism: permutation labels are the PARITY OF THE LAST HEX
+    // CHAR of md5(event_id:b) — the same string in every engine, so the
+    // B=200 re-randomizations are identical everywhere; each permuted
+    // difference flows through the same exact-integer-sums → one-double
+    // tree as the observed one, so the ≥ comparisons agree bit-for-bit.
+    // The beta prior folds Σp and Σ(p−p̄)² in day order (sorted-fold
+    // rule); everything else is integer counts.
+    //
+    // Scale shape: the permutation fan-out is a broadcast crossJoin (one
+    // scan read B times map-side, combined to B×2 partial sums before the
+    // only shuffle — 400 rows cross the wire, not B×N). The shrinkage key
+    // reduces the corpus to the 30-day spine in one aggregate.
 
-  val decls: Map[String, Decl] = Map(
     // Two-sided permutation test, B = 200: is the even-user cohort's
     // mean purchase (cents) different from the odd-user cohort's?
     // p = (1 + #{|T_b| ≥ |T_obs|}) / (B + 1), the add-one-in rule that
@@ -7449,30 +7189,20 @@ object StatsWave89 {
              |       round(alpha, 6) AS alpha,
              |       round(beta, 6) AS beta
              |FROM r CROSS JOIN ab
-             |ORDER BY t""".stripMargin))
-  )
-}
+             |ORDER BY t""".stripMargin)),
 
-// ——— round-11 wave 94 ———
-/** Round-11 wave 94: the Wilson score interval — the binomial CI
-  * that actually behaves at small n and extreme rates, unlike the
-  * Wald interval every naive dashboard ships. (CUPED and
-  * diff-in-diff were drafted here too; the Waves duplicate-key guard
-  * caught that both already shipped in an earlier wave — exactly the
-  * failure mode the loud check exists for.)
-  *
-  * Determinism: integer (k, n) per group through identical IEEE
-  * trees; the z constant is one literal in both engines.
-  *
-  * Scale shape: one per-group hash aggregate, then ≤5-row arithmetic.
-  */
-object StatsWave94 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // The Wilson score interval — the binomial CI
+    // that actually behaves at small n and extreme rates, unlike the
+    // Wald interval every naive dashboard ships. (CUPED and
+    // diff-in-diff were drafted here too; the duplicate-key check caught
+    // that both keys already existed — exactly the failure mode the loud
+    // check exists for.)
+    //
+    // Determinism: integer (k, n) per group through identical IEEE
+    // trees; the z constant is one literal in both engines.
+    //
+    // Scale shape: one per-group hash aggregate, then ≤5-row arithmetic.
 
-  private val Z = 1.959964
-
-  val decls: Map[String, Decl] = Map(
     // Wilson 95% score interval for the even-user share per event
     // type: integer (k, n) per group, one literal z in both engines.
     "agg_wilson_ci" -> Decl(
@@ -7512,78 +7242,14 @@ object StatsWave94 {
              |       round((p + z2n / 2) / (1.0 + z2n) +
              |             $Z * sqrt(p * (1.0 - p) / n + z2n / (4.0 * n)) /
              |               (1.0 + z2n), 6) AS ci_hi
-             |FROM t ORDER BY event_type""".stripMargin))
-  )
-}
+             |FROM t ORDER BY event_type""".stripMargin)),
 
-// ——— round-12 wave 99: distribution-distance & independence statistics ———
-/** Round-12 wave 99: χ² independence over a bounded contingency grid,
-  * the 1-D Wasserstein (earth-mover) and energy distances between two
-  * price distributions via the distributed PrefixSum CDF (no global
-  * window anywhere — the round-11 verdict's grid discipline), and a
-  * two-model uplift readout in exact ppm integers.
-  */
-object StatsWave99 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.{DataFrame, SparkSession}
-  import org.apache.spark.sql.functions._
+    // Χ² independence over a bounded contingency grid,
+    // the 1-D Wasserstein (earth-mover) and energy distances between two
+    // price distributions via the distributed PrefixSum CDF (no global
+    // window anywhere — the round-11 verdict's grid discipline), and a
+    // two-model uplift readout in exact ppm integers.
 
-  /** Shared CDF grid for the two distance keys: one PrefixSum pass over
-    * the distinct-cents grid carrying BOTH class counts plus a dense
-    * rank, then a rank+1 self-join for the gap to the next grid value —
-    * fully distributed (equi-join on rank), nothing funnels to one task.
-    * Returns (gapRows, nR, nA): rows (cum_r, cum_a, gap) for each grid
-    * value that HAS a successor.
-    */
-  private def cdfGrid(s: SparkSession, d: String): DataFrame = {
-    val li = Tables(s, d, "lineitem")
-      .filter(col("l_returnflag").isin("R", "A"))
-      .select(expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("cents"),
-              col("l_returnflag").as("f"))
-    // Round-13: eager checkpoint — PrefixSum's sample and map passes each
-    // re-run the lineitem scan + grid aggregate otherwise (two distance
-    // keys share this helper, so the saving doubles).
-    val grid = li.groupBy("cents")
-      .agg(sum(when(col("f") === "R", 1L).otherwise(0L)).as("cr"),
-           sum(when(col("f") === "A", 1L).otherwise(0L)).as("ca"))
-      .localCheckpoint(true)
-    val cum = PrefixSum.cumsumLongs(grid, Seq(col("cents")),
-      Seq(col("cr") -> "cum_r", col("ca") -> "cum_a", lit(1L) -> "rk"))
-    cum.as("g")
-      .join(cum.select(col("rk").as("rk2"), col("cents").as("nxt")).as("h"),
-            col("h.rk2") === col("g.rk") + 1)
-      .select(col("g.cum_r").as("cum_r"), col("g.cum_a").as("cum_a"),
-              (col("h.nxt") - col("g.cents")).as("gap"))
-  }
-
-  private def classTotals(s: SparkSession, d: String): DataFrame =
-    Tables(s, d, "lineitem")
-      .agg(sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("n_r"),
-           sum(when(col("l_returnflag") === "A", 1L).otherwise(0L)).as("n_a"))
-
-  private val oracleGrid =
-    """vals AS (
-      |  SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
-      |         l_returnflag AS f
-      |  FROM lineitem WHERE l_returnflag IN ('R', 'A')),
-      |tot AS (
-      |  SELECT CAST(sum(CASE WHEN f = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS n_r,
-      |         CAST(sum(CASE WHEN f = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n_a
-      |  FROM vals),
-      |grid AS (
-      |  SELECT cents,
-      |         CAST(sum(CASE WHEN f = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS cr,
-      |         CAST(sum(CASE WHEN f = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS ca
-      |  FROM vals GROUP BY cents),
-      |cum AS (
-      |  SELECT cents,
-      |         CAST(sum(cr) OVER (ORDER BY cents) AS BIGINT) AS cum_r,
-      |         CAST(sum(ca) OVER (ORDER BY cents) AS BIGINT) AS cum_a,
-      |         lead(cents) OVER (ORDER BY cents) - cents AS gap
-      |  FROM grid),
-      |gaps AS (SELECT cum_r, cum_a, gap FROM cum WHERE gap IS NOT NULL)""".stripMargin
-
-  val decls: Map[String, Decl] = Map(
     // χ² test of independence on the orders priority × status contingency
     // grid (bounded 5×3 — a driver-safe enum cross). Empty cells are
     // materialized via the row×col cross join (χ² charges (0−e)²/e for
@@ -7786,22 +7452,14 @@ object StatsWave99 {
              |            AS BIGINT) * 1000000 //
              |         CAST(sum(CASE WHEN treated = 0 THEN 1 ELSE 0 END)
              |              AS BIGINT) AS uplift_ppm
-             |FROM lab GROUP BY segment ORDER BY segment""".stripMargin))
-  )
-}
+             |FROM lab GROUP BY segment ORDER BY segment""".stripMargin)),
 
-// ——— round-12 wave 101: 2×2 epidemiology measures & Cochran's Q ———
-/** Round-12 wave 101: the 2×2 association-measure suite (odds ratio,
-  * relative risk, Yule's Q, phi coefficient) over an exposure×outcome
-  * table, and Cochran's Q for k = 3 paired binary treatments — both
-  * exact-integer cores (ppm floor divisions / one fixed double tree),
-  * no data-dependent libm anywhere.
-  */
-object StatsWave101 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // The 2×2 association-measure suite (odds ratio,
+    // relative risk, Yule's Q, phi coefficient) over an exposure×outcome
+    // table, and Cochran's Q for k = 3 paired binary treatments — both
+    // exact-integer cores (ppm floor divisions / one fixed double tree),
+    // no data-dependent libm anywhere.
 
-  val decls: Map[String, Decl] = Map(
     // 2×2 epidemiology measures: exposure = customer account balance
     // above 5000.00 (literal), outcome = the customer placed at least
     // one 1-URGENT order. The four cell counts a/b/c/d aggregate in one
@@ -7927,24 +7585,16 @@ object StatsWave101 {
              |                        AS DOUBLE) /
              |             nullif(CAST(3 * sr - sr2 AS DOUBLE), 0.0), 6)
              |         AS q_stat
-             |FROM m""".stripMargin))
-  )
-}
+             |FROM m""".stripMargin)),
 
-// ——— round-12 wave 103: ordinal association & multivariate outliers ———
-/** Round-12 wave 103: the Jonckheere-Terpstra ordered-alternative trend
-  * test (doubled-units exact integers via ONE PrefixSum pass carrying
-  * all five group CDFs), Cliff's delta effect size (same CDF-grid
-  * machinery, exact ppm), Goodman-Kruskal gamma + Somers' D over the
-  * bounded quantity×discount ordinal grid (domain-bounded self-join —
-  * 550 cells, never corpus rows), and bivariate Mahalanobis top
-  * outliers via the closed-form 2×2 covariance inverse.
-  */
-object StatsWave103 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // The Jonckheere-Terpstra ordered-alternative trend
+    // test (doubled-units exact integers via ONE PrefixSum pass carrying
+    // all five group CDFs), Cliff's delta effect size (same CDF-grid
+    // machinery, exact ppm), Goodman-Kruskal gamma + Somers' D over the
+    // bounded quantity×discount ordinal grid (domain-bounded self-join —
+    // 550 cells, never corpus rows), and bivariate Mahalanobis top
+    // outliers via the closed-form 2×2 covariance inverse.
 
-  val decls: Map[String, Decl] = Map(
     // Jonckheere-Terpstra trend across the 5 ORDERED priority groups
     // (dose = priority rank, response = order total in cents). For every
     // group pair i<j, U_ij = #{x∈G_i < y∈G_j} + ½·ties — kept exact in
@@ -8211,23 +7861,15 @@ object StatsWave103 {
              |             (vx * vy - cxy * cxy), 6) AS d2
              |FROM dd
              |ORDER BY d2 DESC, l_orderkey, l_linenumber
-             |LIMIT 10""".stripMargin))
-  )
-}
+             |LIMIT 10""".stripMargin)),
 
-// ——— round-12 wave 104: regression diagnostics & Page's trend test ———
-/** Round-12 wave 104: Cook's-distance top influencers and the
-  * Goldfeld-Quandt heteroscedasticity ratio for the quantity→price
-  * regression (every SSE comes from EXACT integer moment sums through
-  * one fixed double tree — no distributed sum of per-row double
-  * residuals anywhere), and Page's L trend test over day-blocks ×
-  * event-type treatments in exact doubled-rank integers.
-  */
-object StatsWave104 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Cook's-distance top influencers and the
+    // Goldfeld-Quandt heteroscedasticity ratio for the quantity→price
+    // regression (every SSE comes from EXACT integer moment sums through
+    // one fixed double tree — no distributed sum of per-row double
+    // residuals anywhere), and Page's L trend test over day-blocks ×
+    // event-type treatments in exact doubled-rank integers.
 
-  val decls: Map[String, Decl] = Map(
     // Cook's distance top-10 for OLS price~quantity: leverage h_i and
     // residual e_i are per-row fixed double trees over the broadcast
     // integer moments (n, Σx, Σy, Σxx, Σyy, Σxy); s² = (S_yy − b·S_xy)/
@@ -8455,22 +8097,14 @@ object StatsWave104 {
              |                  AS DOUBLE) / 2 /
              |             sqrt(CAST(b AS DOUBLE) * k * k * (k + 1) *
              |                  (k * k - 1) / 144), 6) AS z_no_ties
-             |FROM agg""".stripMargin))
-  )
-}
+             |FROM agg""".stripMargin)),
 
-// ——— round-12 wave 105: the Quade test ———
-/** Round-12 wave 105: Quade's weighted block-design test (the
-  * range-weighted Friedman companion) over day-blocks × event-type
-  * treatments — every score an exact QUARTER-UNIT integer (doubled
-  * within-block ranks × doubled across-block range ranks), so
-  * A, B and the F statistic reduce to one double division.
-  */
-object StatsWave105 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Quade's weighted block-design test (the
+    // range-weighted Friedman companion) over day-blocks × event-type
+    // treatments — every score an exact QUARTER-UNIT integer (doubled
+    // within-block ranks × doubled across-block range ranks), so
+    // A, B and the F statistic reduce to one double division.
 
-  val decls: Map[String, Decl] = Map(
     // Blocks = calendar days, treatments = the 5 event types. Within
     // each day the treatments get DOUBLED ranks by count (5×5 bounded
     // census); each day gets a DOUBLED rank of its count RANGE across
@@ -8549,30 +8183,13 @@ object StatsWave105 {
              |SELECT b, k, a16, b16,
              |       round(CAST(b - 1 AS DOUBLE) * b16 /
              |             CAST(b * a16 - b16 AS DOUBLE), 6) AS f_quade
-             |FROM a16 CROSS JOIN b16 CROSS JOIN bb""".stripMargin))
-  )
-}
+             |FROM a16 CROSS JOIN b16 CROSS JOIN bb""".stripMargin)),
 
-// ——— round-12 wave 108: concentration & calibration metrics ———
-/** Round-12 wave 108: Herfindahl-Hirschman concentration per nation,
-  * and score-calibration metrics (Brier score, expected calibration
-  * error, decile lift) over a deterministic md5-derived model score —
-  * every numerator an exact BIGINT, one division per output.
-  */
-object StatsWave108 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Herfindahl-Hirschman concentration per nation,
+    // and score-calibration metrics (Brier score, expected calibration
+    // error, decile lift) over a deterministic md5-derived model score —
+    // every numerator an exact BIGINT, one division per output.
 
-  /** md5-derived pseudo model score in [0, 1000) — the repo's
-    * deterministic hash-to-int idiom (quality_table_checksum twin). */
-  private def score1000 = pmod(
-    conv(substring(md5(col("event_id").cast("string")), 1, 8), 16, 10)
-      .cast("bigint"), lit(1000L))
-
-  private val oracleScore =
-    "('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % 1000"
-
-  val decls: Map[String, Decl] = Map(
     // HHI per nation over supplier revenue shares (KILOdollars keep
     // Σd²·10⁶ inside BIGINT at every probed SF — whole dollars overflow
     // already at sf0.001): hhi_ppm = Σd²·10⁶ div (Σd)²

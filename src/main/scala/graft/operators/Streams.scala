@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Decl, Tables}
+import graft.{Decl, Tables, declMap}
 import graft.streaming.StreamOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   */
 object Streams {
 
-  val decls: Map[String, Decl] = Map(
+  val decls: Map[String, Decl] = declMap(
     "stream_tumbling_agg" -> Decl(
       (s, d) => StreamOps.tumbling(Tables.events(s, d)).orderBy("wstart", "event_type"),
       Some("""SELECT CAST(date_trunc('hour', CAST(ts AS TIMESTAMP)) AS TIMESTAMP) AS wstart,

@@ -1,11 +1,9 @@
 package graft.operators
 
 /** Shared operator infrastructure: distributed prefix scans, skew
-  * salting, minhash signatures and the stored ANN index plumbing —
-  * consolidated, object names unchanged.
+  * salting, minhash signatures and the stored ANN index plumbing.
   */
 
-// ——— formerly PrefixSum.scala ———
 /** Distributed cumulative sum — the scan-parallel replacement for
   * `Window.orderBy(...)` with no partition spec, which funnels the entire
   * ordered input through ONE task (the round-9 verdict's last confirmed
@@ -149,7 +147,6 @@ object PrefixSum {
   }
 }
 
-// ——— formerly Salted.scala ———
 /** Skew-salted equi-join — the standard remedy when a shuffle join's key
   * distribution has hot keys (a handful of values carrying most rows), so
   * hash-partitioning on the key alone would pile those rows onto a few
@@ -168,7 +165,7 @@ object PrefixSum {
   *    cost is exactly `salts × |dim|` rows.
   */
 object Salted {
-  import graft.{Decl, Tables}
+  import graft.{Decl, Tables, declMap}
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
 
@@ -210,7 +207,7 @@ object Salted {
     saltedFact.join(saltedDim, keys :+ "__salt", joinType).drop("__salt")
   }
 
-  val decls: Map[String, Decl] = Map(
+  val decls: Map[String, Decl] = declMap(
     // Enrich each event with its type's aggregate stats. event_type has 5
     // values — a shuffle join on it alone lands everything on 5 of the
     // cluster's partitions no matter how many executors exist; salting by
@@ -241,7 +238,6 @@ object Salted {
              |ORDER BY ALL NULLS FIRST""".stripMargin)))
 }
 
-// ——— formerly Minhash.scala ———
 /** MinHash + banded LSH over word-shingle sets, fully deterministic
   * (SURVEY §7.3 R8: the "permutations" are `xxhash64(seed, shingle)` with
   * compile-time seeds — no runtime RNG, stable across runs/partitions).
@@ -290,7 +286,6 @@ object Minhash {
   }
 }
 
-// ——— formerly AnnIndex.scala ———
 /** Persisted ANN / LSH index tables — build ONCE, probe MANY.
   *
   * The declared keys (`dedup_near_incremental`, `sim_ann_ivf`) derive their
@@ -613,7 +608,7 @@ object VecIndex {
     * localCheckpoint-ed per key. */
   private[graft] def quantized(s: SparkSession, d: String): DataFrame = {
     val root = Artifacts.dir("vecidx_q", d) { r =>
-      Round9.quantized(s, d).withColumn("s_id", expr("i div 8"))
+      Similarity.quantized(s, d).withColumn("s_id", expr("i div 8"))
         .write.parquet(s"$r/q")
     }
     s.read.parquet(s"$root/q")
@@ -631,7 +626,7 @@ object VecIndex {
   * no window anywhere, so nothing funnels regardless of grid size.
   */
 object GridCum {
-  import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions._
 
   /** Append `out` = running sum of `w` within each `key`, ordered by `v`

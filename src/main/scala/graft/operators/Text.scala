@@ -1,21 +1,21 @@
 package graft.operators
 
-/** text-analysis waves (beyond Pipeline's core text keys) — consolidated from the append-only wave files
-  * (round-11 verdict item 8); object names and query keys unchanged,
-  * REGISTRY.md remains the per-key index.
+/** Text-analysis keys beyond Pipeline's core text keys.
+  * REGISTRY.md maps each key to its file:line.
   */
-
-// ——— formerly Round10aa.scala ———
-/** Round-10 twenty-seventh wave: vocabulary richness and year-over-year
-  * growth at the monthly grain.
-  */
-object Round10aa {
-  import graft.{Decl, Tables}
+object Text {
+  import graft.{Decl, Tables, declMap}
   import org.apache.spark.sql.expressions.Window
   import org.apache.spark.sql.functions._
+  import graft.functions.TextOps
 
+  private val Query = Seq("data", "spark", "query")
+  private def qlist = Query.map(t => s"'$t'").mkString(", ")
 
-  val decls: Map[String, Decl] = Map(
+  val decls: Map[String, Decl] = declMap(
+    // Vocabulary richness and year-over-year
+    // growth at the monthly grain.
+
     // Hapax legomena ratio per language: the share of the vocabulary
     // seen exactly once — the standard corpus-richness diagnostic (a
     // shrinking hapax share signals duplication or templating). Both
@@ -81,20 +81,11 @@ object Round10aa {
              |       round(CAST(cents - prev_yr_cents AS DOUBLE)
              |             / prev_yr_cents * 1e6, 6) AS yoy_ppm
              |FROM l WHERE prev_yr_cents IS NOT NULL
-             |ORDER BY seg, midx""".stripMargin))
-  )
-}
+             |ORDER BY seg, midx""".stripMargin)),
 
-// ——— formerly Round10ee.scala ———
-/** Round-10 thirty-first wave: lexical density against a data-derived
-  * function-word head, and week-over-week audience overlap.
-  */
-object Round10ee {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Lexical density against a data-derived
+    // function-word head, and week-over-week audience overlap.
 
-
-  val decls: Map[String, Decl] = Map(
     // Lexical density: the share of a document's tokens that are NOT in
     // the corpus's top-5 frequency head (the data-derived function-word
     // proxy — no hardcoded stopword list). The head is a broadcast
@@ -173,38 +164,25 @@ object Round10ee {
              |       CAST(inter AS BIGINT) AS inter,
              |       CAST(inter * 1000000 // (wau_a + wau_b - inter) AS BIGINT)
              |         AS jaccard_ppm
-             |FROM j ORDER BY wk""".stripMargin))
-  )
-}
+             |FROM j ORDER BY wk""".stripMargin)),
 
-// ——— formerly Round10nn.scala ———
-/** Round-10 wave 44: BM25 ranking — the retrieval scorer TF-IDF
-  * pipelines actually graduate to (and the lexical half of every
-  * RAG hybrid-search stack). Okapi BM25 with k1=1.2, b=0.75 and the
-  * Lucene-style idf ln((N−df+0.5)/(df+0.5)+1), scored for a fixed
-  * 3-term query against the whole corpus.
-  *
-  * Scale shape: the term filter lands BEFORE the tf explode aggregates
-  * anything wide — only postings of the 3 query terms survive (the
-  * inverted-index access pattern: work is O(Σ posting lengths), not
-  * O(corpus)); df and the (N, avgdl) scalars are one bounded broadcast
-  * each; the final cut is a TakeOrdered top-15, never a global sort.
-  *
-  * Determinism: dlen/avgdl/idf/contribution are each single IEEE
-  * expression trees over exact integer statistics (identical in any
-  * engine); the ≤3 per-doc contributions fold in TERM order
-  * (sorted-fold discipline), and only the final sum rounds.
-  */
-object Round10nn {
-  import graft.{Decl, Tables}
-  import graft.functions.TextOps
-  import org.apache.spark.sql.functions._
+    // BM25 ranking — the retrieval scorer TF-IDF
+    // pipelines actually graduate to (and the lexical half of every
+    // RAG hybrid-search stack). Okapi BM25 with k1=1.2, b=0.75 and the
+    // Lucene-style idf ln((N−df+0.5)/(df+0.5)+1), scored for a fixed
+    // 3-term query against the whole corpus.
+    //
+    // Scale shape: the term filter lands BEFORE the tf explode aggregates
+    // anything wide — only postings of the 3 query terms survive (the
+    // inverted-index access pattern: work is O(Σ posting lengths), not
+    // O(corpus)); df and the (N, avgdl) scalars are one bounded broadcast
+    // each; the final cut is a TakeOrdered top-15, never a global sort.
+    //
+    // Determinism: dlen/avgdl/idf/contribution are each single IEEE
+    // expression trees over exact integer statistics (identical in any
+    // engine); the ≤3 per-doc contributions fold in TERM order
+    // (sorted-fold discipline), and only the final sum rounds.
 
-
-  private val Query = Seq("data", "spark", "query")
-  private def qlist = Query.map(t => s"'$t'").mkString(", ")
-
-  val decls: Map[String, Decl] = Map(
     "text_bm25_rank" -> Decl(
       (s, d) => {
         val docs = Tables(s, d, "documents")
@@ -254,39 +232,30 @@ object Round10nn {
              |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms,
              |       round(list_sum(list(c ORDER BY term)), 6) AS bm25
              |FROM contrib GROUP BY doc_id
-             |ORDER BY bm25 DESC, doc_id LIMIT 15""".stripMargin))
-  )
-}
+             |ORDER BY bm25 DESC, doc_id LIMIT 15""".stripMargin)),
 
-// ——— formerly Round11o.scala ———
-/** Round-10 wave 71: RAKE keyphrase extraction (Rapid Automatic Keyword
-  * Extraction — candidate phrases are maximal stopword-free token runs,
-  * scored by the sum of member-word degree/frequency ratios; the
-  * no-model keyphrase baseline every corpus-exploration pipeline ships)
-  * and the spectral periodogram of the daily purchase series (power at
-  * the Fourier frequencies — the frequency-domain complement to the
-  * autocorrelation/Ljung-Box diagnostics already in the ts family).
-  *
-  * Determinism: stopwords are the corpus top-15 by (count desc, word);
-  * phrase runs come from the gap-islands trick (pos − row_number inside
-  * each doc); every float summation folds a POSITION-ORDERED list
-  * (sort_array + aggregate here, list(... ORDER BY) + list_sum in the
-  * oracle) so no shuffle-order double addition exists on either side.
-  * Periodogram trig runs on the same IEEE doubles in both engines and
-  * reports power SHARES rounded at 4 dp.
-  *
-  * Scale shape: RAKE is two token-granularity shuffles (word stats,
-  * phrase grouping) — both map-side combined; the stoplist and the
-  * word-score table are vocabulary-bounded broadcasts. The periodogram
-  * reduces the corpus to the 30-day grid in one aggregate; the 14×30
-  * trig table is constant-sized.
-  */
-object Round11o {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // RAKE keyphrase extraction (Rapid Automatic Keyword
+    // Extraction — candidate phrases are maximal stopword-free token runs,
+    // scored by the sum of member-word degree/frequency ratios; the
+    // no-model keyphrase baseline every corpus-exploration pipeline ships)
+    // and the spectral periodogram of the daily purchase series (power at
+    // the Fourier frequencies — the frequency-domain complement to the
+    // autocorrelation/Ljung-Box diagnostics already in the ts family).
+    //
+    // Determinism: stopwords are the corpus top-15 by (count desc, word);
+    // phrase runs come from the gap-islands trick (pos − row_number inside
+    // each doc); every float summation folds a POSITION-ORDERED list
+    // (sort_array + aggregate here, list(... ORDER BY) + list_sum in the
+    // oracle) so no shuffle-order double addition exists on either side.
+    // Periodogram trig runs on the same IEEE doubles in both engines and
+    // reports power SHARES rounded at 4 dp.
+    //
+    // Scale shape: RAKE is two token-granularity shuffles (word stats,
+    // phrase grouping) — both map-side combined; the stoplist and the
+    // word-score table are vocabulary-bounded broadcasts. The periodogram
+    // reduces the corpus to the 30-day grid in one aggregate; the 14×30
+    // trig table is constant-sized.
 
-
-  val decls: Map[String, Decl] = Map(
     "text_keyphrase_rake" -> Decl(
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
@@ -429,33 +398,25 @@ object Round11o {
              |tot AS (SELECT list_sum(list(p ORDER BY k)) AS tp FROM pk)
              |SELECT k AS freq, round(p / tot.tp, 4) AS power_share
              |FROM pk CROSS JOIN tot
-             |ORDER BY freq""".stripMargin))
-  )
-}
+             |ORDER BY freq""".stripMargin)),
 
-// ——— round-11 wave 90 ———
-/** Round-11 wave 90: corpus-order n-gram novelty — for every document,
-  * the fraction of its distinct 3-grams that NO lower-doc_id document
-  * contains. This is the curation signal behind "is this shard adding
-  * new text or re-treading the corpus?": dedup says same/different,
-  * novelty says HOW MUCH is new, per document, against everything
-  * before it.
-  *
-  * Determinism: pure integer counts (distinct grams, grams whose
-  * corpus-wide min(doc_id) is this document) and one 6-dp ratio.
-  *
-  * Scale shape: the naive formulation ("join every doc against all
-  * earlier docs") is quadratic; this one is two hash aggregates — the
-  * gram → min(doc_id) first-occurrence index (ONE shuffle on the gram
-  * key, the same shape as dedup_exact's hash-first rule), then a
-  * per-(doc, gram) distinct + per-doc count. Nothing is ever compared
-  * pairwise.
-  */
-object TextWave90 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Corpus-order n-gram novelty — for every document,
+    // the fraction of its distinct 3-grams that NO lower-doc_id document
+    // contains. This is the curation signal behind "is this shard adding
+    // new text or re-treading the corpus?": dedup says same/different,
+    // novelty says HOW MUCH is new, per document, against everything
+    // before it.
+    //
+    // Determinism: pure integer counts (distinct grams, grams whose
+    // corpus-wide min(doc_id) is this document) and one 6-dp ratio.
+    //
+    // Scale shape: the naive formulation ("join every doc against all
+    // earlier docs") is quadratic; this one is two hash aggregates — the
+    // gram → min(doc_id) first-occurrence index (ONE shuffle on the gram
+    // key, the same shape as dedup_exact's hash-first rule), then a
+    // per-(doc, gram) distinct + per-doc count. Nothing is ever compared
+    // pairwise.
 
-  val decls: Map[String, Decl] = Map(
     "text_ngram_novelty_rate" -> Decl(
       (s, d) => {
         val grams = Pipeline.docsWithTokens(s, d)
@@ -500,21 +461,13 @@ object TextWave90 {
              |                  AS DOUBLE) / count(*), 6) AS novelty
              |FROM grams g JOIN fs USING (gram)
              |GROUP BY g.doc_id
-             |ORDER BY g.doc_id""".stripMargin))
-  )
-}
+             |ORDER BY g.doc_id""".stripMargin)),
 
-// ——— round-12 wave 107: ROUGE-2 overlap scoring ———
-/** Round-12 wave 107: pairwise ROUGE-2 recall — the n-gram overlap
-  * primitive behind summarization eval and near-dup triage — scored for
-  * every adjacent doc-id pair with clipped bigram counts, entirely in
-  * exact integers (overlap·10⁶ div ref-total ppm).
-  */
-object TextWave107 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Pairwise ROUGE-2 recall — the n-gram overlap
+    // primitive behind summarization eval and near-dup triage — scored for
+    // every adjacent doc-id pair with clipped bigram counts, entirely in
+    // exact integers (overlap·10⁶ div ref-total ppm).
 
-  val decls: Map[String, Decl] = Map(
     // ROUGE-2 recall of candidate doc (id+1) against reference doc (id):
     // clipped overlap Σ_g min(cnt_ref(g), cnt_cand(g)) over Σ_g cnt_ref.
     // Bigrams ride zip_with over the single-space token split (the

@@ -1,33 +1,84 @@
 package graft.operators
 
-/** time-series diagnostics, forecasting and calendar waves — consolidated from the append-only wave files
-  * (round-11 verdict item 8); object names and query keys unchanged,
-  * REGISTRY.md remains the per-key index.
+/** Time-series diagnostics, forecasting and calendar keys.
+  * REGISTRY.md maps each key to its file:line.
   */
-
-// ——— formerly Round10b.scala ———
-/** Round-10 second wave: behavioral/time-series analytics that round out
-  * the events-table family — per-user event-mix entropy, order→ship
-  * latency distribution, day-of-week×hour traffic profile, hour-over-hour
-  * spike detection, and per-type burstiness (Fano factor). All follow the
-  * repo's determinism discipline: counts stay BIGINT end-to-end, the only
-  * floats are terminal `round(x, 6)` of logs/ratios over SMALL per-group
-  * term counts (≤5 summands — the agg_mutual_info precedent, where both
-  * engines' libm agree at 6 dp), and every ORDER BY ends in a unique key.
-  *
-  * 100 TB notes: every key here is one shuffle on its natural group key
-  * (user_id / event_type / bucket) with partial aggregation upstream; the
-  * spike window partitions by event_type but orders a BOUNDED per-type
-  * hour spine (the aggregate runs first — the window sees hours, not
-  * events), so no whole-history single-task funnel exists.
-  */
-object Round10b {
-  import graft.{Decl, Tables}
+object TimeSeries {
+  import graft.{Decl, Tables, declMap}
   import org.apache.spark.sql.expressions.Window
   import org.apache.spark.sql.functions._
 
+  private val Alpha = 0.3
+  private val Beta = 0.1
+  private val Gamma = 0.2
 
-  val decls: Map[String, Decl] = Map(
+  /** ln as a SQL-literal string (round-trips exactly as a double). */
+  private def lgs(x: Double): String = math.log(x).toString
+
+  /** Croston smoothing constant and its EXACT-double complement —
+    * 1 − 0.2 in IEEE is NOT the 0.8 literal, so both engines consume
+    * the same interpolated values. */
+  private val A = 0.2
+  private val B = 1 - A
+
+  /** ln(2/0.05) = ln(40), as one literal for BOTH engines. */
+  private val Ln40 = 3.6888794541139363
+
+  private def dailyCents(s: org.apache.spark.sql.SparkSession, d: String) =
+    Tables.events(s, d)
+      .filter(col("event_type") === "purchase")
+      .groupBy(datediff(col("ts").cast("date"), to_date(lit("2023-12-31")))
+                 .cast("bigint").as("t"))
+      .agg(sum(round(col("value") * 100).cast("bigint")).as("v"))
+
+  // smoothing constants — ONE Scala literal each, interpolated into
+  // BOTH engines (1−k precomputed too, so neither engine derives it)
+  private val W13 = 13.0 / 14.0   // Wilder keep-weight
+  private val W1  = 1.0 / 14.0    // Wilder new-weight
+  private val K12 = 2.0 / 13.0
+  private val J12 = 1 - K12
+  private val K26 = 2.0 / 27.0
+  private val J26 = 1 - K26
+  private val K9  = 2.0 / 10.0
+  private val J9  = 1 - K9
+
+  private def dailyClose(s: org.apache.spark.sql.SparkSession,
+                         d: String): Array[Long] = {
+    val m = Tables.events(s, d)
+      .filter(col("event_type") === "purchase")
+      .groupBy(datediff(col("ts").cast("date"), to_date(lit("2023-12-31")))
+                 .cast("bigint").as("t"))
+      .agg(sum(round(col("value") * 100).cast("bigint")).as("c"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    (1 to 30).map(t => m.getOrElse(t.toLong, 0L)).toArray
+  }
+
+  private def r6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  private def dailyRevenue(s: org.apache.spark.sql.SparkSession, d: String) =
+    Tables(s, d, "orders")
+      .groupBy(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) " +
+                    "div 86400000000").as("day"))
+      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
+             .as("cents"))
+
+  val decls: Map[String, Decl] = declMap(
+    // Behavioral/time-series analytics that round out
+    // the events-table family — per-user event-mix entropy, order→ship
+    // latency distribution, day-of-week×hour traffic profile, hour-over-hour
+    // spike detection, and per-type burstiness (Fano factor). All follow the
+    // repo's determinism discipline: counts stay BIGINT end-to-end, the only
+    // floats are terminal `round(x, 6)` of logs/ratios over SMALL per-group
+    // term counts (≤5 summands — the agg_mutual_info precedent, where both
+    // engines' libm agree at 6 dp), and every ORDER BY ends in a unique key.
+    //
+    // 100 TB notes: every key here is one shuffle on its natural group key
+    // (user_id / event_type / bucket) with partial aggregation upstream; the
+    // spike window partitions by event_type but orders a BOUNDED per-type
+    // hour spine (the aggregate runs first — the window sees hours, not
+    // events), so no whole-history single-task funnel exists.
+
     // Per-user Shannon entropy (bits) of the event-type mix — the
     // engagement-diversity score. Counts aggregate first (one shuffle,
     // map-side combine); the entropy sum has ≤5 terms per user, each
@@ -218,21 +269,11 @@ object Round10b {
              |       o1 * 16777216 + o2 * 65536 + o3 * 256 + o4 AS ip_num,
              |       CAST(o1 AS VARCHAR) || '.' || CAST(o2 AS VARCHAR) || '.' ||
              |       CAST(o3 AS VARCHAR) || '.0' AS net24
-             |FROM p ORDER BY o_orderkey""".stripMargin))
-  )
-}
+             |FROM p ORDER BY o_orderkey""".stripMargin)),
 
-// ——— formerly Round10cc.scala ———
-/** Round-10 twenty-ninth wave: trading-day adjustment and consecutive-day
-  * streaks (the date-minus-rank idiom).
-  */
-object Round10cc {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Trading-day adjustment and consecutive-day
+    // streaks (the date-minus-rank idiom).
 
-
-  val decls: Map[String, Decl] = Map(
     // Calendar (trading-day) adjustment of daily order revenue: each
     // day's cents divided by its weekday's seasonal factor
     // (dow mean / overall mean). Exact cross-multiply clears both means:
@@ -275,7 +316,6 @@ object Round10cc {
     // difference yields every streak. All date/integer arithmetic.
     "ts_daily_streak" -> Decl(
       (s, d) => {
-        val w = Window.partitionBy("user_id").orderBy("day")
         val days = Tables.events(s, d)
           .select(col("user_id"), col("ts").cast("date").as("day"))
           .distinct()
@@ -299,20 +339,11 @@ object Round10cc {
              |SELECT user_id, CAST(count(*) AS BIGINT) AS n_streaks,
              |       CAST(max(len) AS BIGINT) AS longest_streak,
              |       CAST(sum(len) AS BIGINT) AS active_days
-             |FROM runs GROUP BY user_id ORDER BY user_id""".stripMargin))
-  )
-}
+             |FROM runs GROUP BY user_id ORDER BY user_id""".stripMargin)),
 
-// ——— formerly Round10dd.scala ———
-/** Round-10 thirtieth wave: engagement stickiness (WAU over trailing
-  * 4-week MAU).
-  */
-object Round10dd {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Engagement stickiness (WAU over trailing
+    // 4-week MAU).
 
-
-  val decls: Map[String, Decl] = Map(
     // Stickiness: weekly actives over the trailing-4-week actives — the
     // WAU/MAU engagement ratio. The sliding distinct is computed by
     // fanning each (user, active-week) pair out to the ≤4 target weeks
@@ -351,18 +382,10 @@ object Round10dd {
              |       CAST(wau * 1000000 // mau AS BIGINT) AS stickiness_ppm
              |FROM wau JOIN mau USING (wk) CROSS JOIN b
              |WHERE wk >= wk0 + 3 AND wk <= wk1
-             |ORDER BY wk""".stripMargin))
-  )
-}
+             |ORDER BY wk""".stripMargin)),
 
-// ——— formerly Round10ff.scala ———
-/** Round-10 thirty-second wave: windowed-absence targeting. */
-object Round10ff {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Windowed-absence targeting.
 
-
-  val decls: Map[String, Decl] = Map(
     // Campaign targeting by windowed absence: users active in the final
     // two weeks of the fixture with NO purchase in that window — the
     // re-engagement segment. One activity aggregate, one anti join on
@@ -396,23 +419,13 @@ object Round10ff {
              |FROM a ANTI JOIN (SELECT DISTINCT user_id FROM w
              |                  WHERE event_type = 'purchase') p
              |     USING (user_id)
-             |ORDER BY a.user_id""".stripMargin))
-  )
-}
+             |ORDER BY a.user_id""".stripMargin)),
 
-// ——— formerly Round10h.scala ———
-/** Round-10 eighth wave: cohort economics, mark-join projection, interval
-  * algebra, and weighted running ratios. Exact integer micros/cents into
-  * terminal rounded ratios; windows ride user-bounded or spine-bounded
-  * partitions only.
-  */
-object Round10h {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Cohort economics, mark-join projection, interval
+    // algebra, and weighted running ratios. Exact integer micros/cents into
+    // terminal rounded ratios; windows ride user-bounded or spine-bounded
+    // partitions only.
 
-
-  val decls: Map[String, Decl] = Map(
     // Cohort LTV triangle: users cohort by first-event week; purchase
     // revenue accumulates by cohort × age-week. Two shuffles on natural
     // keys (user for the cohort, then the bounded cohort×age grid) and
@@ -554,24 +567,14 @@ object Round10h {
              |SELECT user_id, event_id, CAST(cum_pv AS BIGINT) AS cum_pv,
              |       CAST(cum_v AS BIGINT) AS cum_v,
              |       round(CAST(cum_pv AS DOUBLE) / cum_v, 6) AS vwap
-             |FROM c ORDER BY user_id, event_id""".stripMargin))
-  )
-}
+             |FROM c ORDER BY user_id, event_id""".stripMargin)),
 
-// ——— formerly Round10j.scala ———
-/** Round-10 tenth wave: seasonal decomposition, diversity indices, corpus
-  * vocabulary growth, and phone normalization. The decomposition keeps
-  * every intermediate in EXACT integer units of 1/25 (the trend window
-  * width) so no float survives past the single terminal rounding; all
-  * other statistics follow the usual integer-sufficient-statistics rule.
-  */
-object Round10j {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Seasonal decomposition, diversity indices, corpus
+    // vocabulary growth, and phone normalization. The decomposition keeps
+    // every intermediate in EXACT integer units of 1/25 (the trend window
+    // width) so no float survives past the single terminal rounding; all
+    // other statistics follow the usual integer-sufficient-statistics rule.
 
-
-  val decls: Map[String, Decl] = Map(
     // Additive seasonal decomposition of the hourly traffic series:
     // trend = centered 25-hour moving sum (kept as the SUM — integer,
     // i.e. 25× the mean), detrended = 25·c − trend25 (still integer),
@@ -712,22 +715,12 @@ object Round10j {
              |       '+1' || regexp_replace(raw, '[^0-9]', '', 'g') AS e164,
              |       CAST(length(regexp_replace(raw, '[^0-9]', '', 'g')) AS BIGINT)
              |         AS n_digits
-             |FROM r ORDER BY c_custkey""".stripMargin))
-  )
-}
+             |FROM r ORDER BY c_custkey""".stripMargin)),
 
-// ——— formerly Round10p.scala ———
-/** Round-10 sixteenth wave: SLA attainment, embedding-cluster cohesion,
-  * and temporal referential integrity. Integer ppm ratios by floor
-  * division; float cosines rounded per-term then folded in sorted order.
-  */
-object Round10p {
-  import graft.{Decl, Tables}
-  import graft.functions.VectorOps
-  import org.apache.spark.sql.functions._
+    // SLA attainment, embedding-cluster cohesion,
+    // and temporal referential integrity. Integer ppm ratios by floor
+    // division; float cosines rounded per-term then folded in sorted order.
 
-
-  val decls: Map[String, Decl] = Map(
     // SLA attainment: share of orders whose FIRST shipment lands within
     // the priority's SLA window — the operations KPI. Exact day
     // arithmetic, attainment as integer ppm floor division.
@@ -845,34 +838,25 @@ object Round10p {
              |SELECT yr, CAST(count(*) AS BIGINT) AS n_lines,
              |       CAST(sum(bad) AS BIGINT) AS n_violations,
              |       CAST(sum(bad) * 1000000 // count(*) AS BIGINT) AS violation_ppm
-             |FROM j GROUP BY yr ORDER BY yr""".stripMargin))
-  )
-}
+             |FROM j GROUP BY yr ORDER BY yr""".stripMargin)),
 
-// ——— formerly Round10ss.scala ———
-/** Round-10 wave 49: sequence-pattern analytics (the MATCH_RECOGNIZE-
-  * shaped regex funnel over per-user event strings) and nested-struct
-  * field surgery (withField/dropFields — the schema-evolution API for
-  * struct columns).
-  *
-  * Scale shape: the pattern keys build one ordered event string per
-  * user — per-key state is bounded by a user's own activity (the
-  * ts_session_path class), gathered by a single map-side-combined
-  * collect_list; no window ever spans users, and the regex match is
-  * per-row codegen'd work. The struct key is a pure projection.
-  *
-  * Determinism: event initials are unique per type (click/error/
-  * purchase/signup/view → c,e,p,s,v), order is (epoch micros, event_id)
-  * — a total key — and both engines run the same anchored-free regex
-  * find semantics (Java regex and RE2 agree on this alternation-free
-  * fragment).
-  */
-object Round10ss {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Sequence-pattern analytics (the MATCH_RECOGNIZE-
+    // shaped regex funnel over per-user event strings) and nested-struct
+    // field surgery (withField/dropFields — the schema-evolution API for
+    // struct columns).
+    //
+    // Scale shape: the pattern keys build one ordered event string per
+    // user — per-key state is bounded by a user's own activity (the
+    // ts_session_path class), gathered by a single map-side-combined
+    // collect_list; no window ever spans users, and the regex match is
+    // per-row codegen'd work. The struct key is a pure projection.
+    //
+    // Determinism: event initials are unique per type (click/error/
+    // purchase/signup/view → c,e,p,s,v), order is (epoch micros, event_id)
+    // — a total key — and both engines run the same anchored-free regex
+    // find semantics (Java regex and RE2 agree on this alternation-free
+    // fragment).
 
-
-  val decls: Map[String, Decl] = Map(
     // Regex funnel per user over the complete ordered event-type string:
     // strict = a contiguous view→clicks→purchase run ('vc+p'), subseq =
     // the lazy anywhere-order funnel ('v.*c.*p'). This is the
@@ -976,21 +960,12 @@ object Round10ss {
       },
       Some("""SELECT event_id, event_type AS et, user_id AS uid,
              |       CAST(round(value * 100) AS BIGINT) AS v_cents
-             |FROM events ORDER BY ALL NULLS FIRST""".stripMargin))
-  )
-}
+             |FROM events ORDER BY ALL NULLS FIRST""".stripMargin)),
 
-// ——— formerly Round10v.scala ———
-/** Round-10 twenty-second wave: the Ljung–Box portmanteau test (exact
-  * per-lag sufficient statistics, fixed-order 10-term assembly) and
-  * human-readable byte formatting.
-  */
-object Round10v {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // The Ljung–Box portmanteau test (exact
+    // per-lag sufficient statistics, fixed-order 10-term assembly) and
+    // human-readable byte formatting.
 
-
-  val decls: Map[String, Decl] = Map(
     // Ljung–Box Q over lags 1..10 of the hourly count series per event
     // type: each lag's autocorrelation comes from exact BIGINT pair sums
     // (n, Σx, Σy, Σxy, Σx², Σy²) on the bounded spine self-join; r_k²
@@ -1113,21 +1088,11 @@ object Round10v {
              |            THEN CAST(CAST(n_bytes * 100 // 1024 AS DOUBLE)
              |                      / 100.0 AS VARCHAR) || ' KiB'
              |            ELSE CAST(n_bytes AS VARCHAR) || ' B' END AS human
-             |FROM b ORDER BY o_orderkey""".stripMargin))
-  )
-}
+             |FROM b ORDER BY o_orderkey""".stripMargin)),
 
-// ——— formerly Round10w.scala ———
-/** Round-10 twenty-third wave: sweep-line concurrency on a bounded spine
-  * and exact-integer revenue recognition.
-  */
-object Round10w {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Sweep-line concurrency on a bounded spine
+    // and exact-integer revenue recognition.
 
-
-  val decls: Map[String, Decl] = Map(
     // Peak concurrency: each event holds a 5-minute activity interval;
     // concurrency sampled at minute starts is cumsum(starts/min) −
     // cumsum(ends/min) over the BOUNDED minute spine (the corpus
@@ -1217,21 +1182,11 @@ object Round10w {
              |SELECT CAST(month_idx AS BIGINT) AS month_idx,
              |       CAST(count(*) AS BIGINT) AS n_allocs,
              |       CAST(sum(rec_cents) AS BIGINT) AS rec_cents
-             |FROM alloc GROUP BY month_idx ORDER BY month_idx""".stripMargin))
-  )
-}
+             |FROM alloc GROUP BY month_idx ORDER BY month_idx""".stripMargin)),
 
-// ——— formerly Round10x.scala ———
-/** Round-10 twenty-fourth wave: sequence trigram mining, Zipf rank
-  * tables, and the freshness audit.
-  */
-object Round10x {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Sequence trigram mining, Zipf rank
+    // tables, and the freshness audit.
 
-
-  val decls: Map[String, Decl] = Map(
     // Event-type trigram census: the order-3 extension of the Markov
     // transition surface — which three-step behavioral motifs dominate.
     // Two leads on the shared per-user sort, then one bounded-key
@@ -1330,42 +1285,29 @@ object Round10x {
              |  UNION ALL SELECT 'lineitem', CAST(max(l_shipdate) AS DATE)
              |            FROM lineitem
              |  UNION ALL SELECT 'events', CAST(max(ts) AS DATE) FROM events)
-             |ORDER BY table_name""".stripMargin))
-  )
-}
+             |ORDER BY table_name""".stripMargin)),
 
-// ——— formerly Round11e.scala ———
-/** Round-10 wave 61: multiresolution signal analysis — the unnormalized
-  * Haar wavelet energy ladder over the daily revenue series (which
-  * timescale carries the variance: day-to-day jitter, weekly cycle, or
-  * the fortnight trend) and additive Holt-Winters (level + trend +
-  * weekly seasonality, the classical forecaster), whose sequential
-  * recurrence the oracle replays as a DuckDB RECURSIVE CTE carrying the
-  * seasonal ring as a list — a sequential-recurrence oracle, not a
-  * batch one.
-  *
-  * Determinism: Haar is pure BIGINT (unnormalized sums/differences of
-  * exact cents; energies are exact cents²). Holt-Winters recurses over
-  * the calendar-bounded 30-day grid with IDENTICAL arithmetic on both
-  * engines (same init means folded in day order, same update order);
-  * only the output rounds, at 4 dp to absorb the recursion's last-ulp
-  * drift.
-  *
-  * Scale shape: both keys collapse the corpus to the calendar-day grid
-  * in one map-side-combined aggregate; the Haar ladder is 5 bounded
-  * halving aggregates, and the HW recursion runs on the driver over the
-  * collected 30-row grid (calendar-bounded — the IPF/markov pattern).
-  */
-object Round11e {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Multiresolution signal analysis — the unnormalized
+    // Haar wavelet energy ladder over the daily revenue series (which
+    // timescale carries the variance: day-to-day jitter, weekly cycle, or
+    // the fortnight trend) and additive Holt-Winters (level + trend +
+    // weekly seasonality, the classical forecaster), whose sequential
+    // recurrence the oracle replays as a DuckDB RECURSIVE CTE carrying the
+    // seasonal ring as a list — a sequential-recurrence oracle, not a
+    // batch one.
+    //
+    // Determinism: Haar is pure BIGINT (unnormalized sums/differences of
+    // exact cents; energies are exact cents²). Holt-Winters recurses over
+    // the calendar-bounded 30-day grid with IDENTICAL arithmetic on both
+    // engines (same init means folded in day order, same update order);
+    // only the output rounds, at 4 dp to absorb the recursion's last-ulp
+    // drift.
+    //
+    // Scale shape: both keys collapse the corpus to the calendar-day grid
+    // in one map-side-combined aggregate; the Haar ladder is 5 bounded
+    // halving aggregates, and the HW recursion runs on the driver over the
+    // collected 30-row grid (calendar-bounded — the IPF/markov pattern).
 
-
-  private val Alpha = 0.3
-  private val Beta = 0.1
-  private val Gamma = 0.2
-
-  val decls: Map[String, Decl] = Map(
     // Haar energy ladder: daily revenue cents over Jan 1-30, zero-padded
     // to 32; level k halves the series (approx = pairwise sum, detail =
     // odd − even) and reports the exact detail energy Σd². Level 1 is
@@ -1522,38 +1464,28 @@ object Round11e {
              |       round(fit, 4) AS fitted,
              |       round(actual - fit, 4) AS residual
              |FROM (SELECT * FROM fits UNION ALL SELECT * FROM fc)
-             |ORDER BY day""".stripMargin))
-  )
-}
+             |ORDER BY day""".stripMargin)),
 
-// ——— formerly Round11f.scala ———
-/** Round-10 wave 62: chain-ladder cohort completion (the actuarial
-  * development-triangle forecast — also the standard way to "complete"
-  * immature revenue cohorts) and propensity-score nearest-neighbor
-  * matching (the observational-causal workhorse: pair each treated user
-  * with its closest control on the pre-period activity score and read
-  * the matched treatment effect).
-  *
-  * Determinism: the triangle is exact cents on the bounded
-  * cohort-week × age grid; development factors and the ultimate
-  * projection fold ≤4 factors in age order (sorted-fold discipline).
-  * Matching runs on the bounded activity-score grid with integer
-  * distances; every tie breaks by (distance, lower score, lower
-  * user_id); ATT is one exact-cents mean.
-  *
-  * Scale shape: both keys aggregate the corpus once onto domain-bounded
-  * grids (5×5 triangle; the per-user activity-count domain). The
-  * matching windows run over the SCORE GRID (saturates with the
-  * behavior domain, not corpus rows — the ks_test argument; ScaleSpec
-  * allowlisted), never over users.
-  */
-object Round11f {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Chain-ladder cohort completion (the actuarial
+    // development-triangle forecast — also the standard way to "complete"
+    // immature revenue cohorts) and propensity-score nearest-neighbor
+    // matching (the observational-causal workhorse: pair each treated user
+    // with its closest control on the pre-period activity score and read
+    // the matched treatment effect).
+    //
+    // Determinism: the triangle is exact cents on the bounded
+    // cohort-week × age grid; development factors and the ultimate
+    // projection fold ≤4 factors in age order (sorted-fold discipline).
+    // Matching runs on the bounded activity-score grid with integer
+    // distances; every tie breaks by (distance, lower score, lower
+    // user_id); ATT is one exact-cents mean.
+    //
+    // Scale shape: both keys aggregate the corpus once onto domain-bounded
+    // grids (5×5 triangle; the per-user activity-count domain). The
+    // matching windows run over the SCORE GRID (saturates with the
+    // behavior domain, not corpus rows — the ks_test argument; ScaleSpec
+    // allowlisted), never over users.
 
-
-  val decls: Map[String, Decl] = Map(
     // Chain-ladder: cohorts = first-event week (Jan 1/8/15/22/29), age =
     // event week − cohort week. Cumulative triangle C[w, k]; development
     // factor f_k = Σ_w C[w, k+1] / Σ_w C[w, k] over cohorts that HAVE
@@ -1761,37 +1693,28 @@ object Round11f {
              |             / count(*) / 100.0, 6) AS att,
              |       round(CAST(sum(score) - sum(m_score) AS DOUBLE)
              |             / count(*), 6) AS score_imbalance
-             |FROM matched WHERE m_outcome IS NOT NULL""".stripMargin))
-  )
-}
+             |FROM matched WHERE m_outcome IS NOT NULL""".stripMargin)),
 
-// ——— formerly Round11q.scala ———
-/** Round-10 wave 73: dynamic programming on bounded spines — dynamic
-  * time warping between the daily purchase and click series (the
-  * classical elastic-alignment distance; cost matrix is pure BIGINT so
-  * the DP is exact) and 2-state HMM Viterbi decoding of the daily
-  * high/low activity regime (the standard latent-regime smoother next
-  * to the Kalman/Holt-Winters state-space keys).
-  *
-  * Determinism: DTW costs are |Δcount| integers — no float anywhere.
-  * Viterbi runs in log space on integer observations × the same ln
-  * constants; ties prefer the high state via >= in BOTH engines. Both
-  * DPs recurse on the driver over the 30-day grid (the ts_holt_winters
-  * discipline) and both oracles replay the identical recursion as
-  * DuckDB recursive CTEs (DTW cell-by-cell with the rolling two-row
-  * state; Viterbi carrying both candidate paths).
-  *
-  * Scale shape: each key reduces the corpus to the calendar-bounded
-  * day grid in ONE aggregate; the DP itself is O(30²)/O(30) on
-  * constant-size state. DTW over data-sized series would need the
-  * banded/FastDTW variant — out of declared scope, documented here.
-  */
-object Round11q {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Dynamic programming on bounded spines — dynamic
+    // time warping between the daily purchase and click series (the
+    // classical elastic-alignment distance; cost matrix is pure BIGINT so
+    // the DP is exact) and 2-state HMM Viterbi decoding of the daily
+    // high/low activity regime (the standard latent-regime smoother next
+    // to the Kalman/Holt-Winters state-space keys).
+    //
+    // Determinism: DTW costs are |Δcount| integers — no float anywhere.
+    // Viterbi runs in log space on integer observations × the same ln
+    // constants; ties prefer the high state via >= in BOTH engines. Both
+    // DPs recurse on the driver over the 30-day grid (the ts_holt_winters
+    // discipline) and both oracles replay the identical recursion as
+    // DuckDB recursive CTEs (DTW cell-by-cell with the rolling two-row
+    // state; Viterbi carrying both candidate paths).
+    //
+    // Scale shape: each key reduces the corpus to the calendar-bounded
+    // day grid in ONE aggregate; the DP itself is O(30²)/O(30) on
+    // constant-size state. DTW over data-sized series would need the
+    // banded/FastDTW variant — out of declared scope, documented here.
 
-
-  val decls: Map[String, Decl] = Map(
     "ts_dtw_distance" -> Decl(
       (s, d) => {
         def series(et: String): Array[Long] = {
@@ -1952,42 +1875,29 @@ object Round11q {
               |SELECT u.pos AS day, ol.l[u.pos] AS obs, u.st AS state
               |FROM (SELECT unnest(p) AS st, generate_subscripts(p, 1) AS pos
               |      FROM fin) u CROSS JOIN ol
-              |ORDER BY day""".stripMargin))
-  )
+              |ORDER BY day""".stripMargin)),
 
-  /** ln as a SQL-literal string (round-trips exactly as a double). */
-  private def lgs(x: Double): String = math.log(x).toString
-}
+    // Structural-break and k-group nonparametric
+    // testing — the Chow test for a regression break between the first
+    // and second half of the daily purchase series (the standard "did
+    // the trend change at the known breakpoint?" screen: pooled-vs-split
+    // OLS residual F-ratio, all three fits closed-form from one pass of
+    // integer-exact sums) and the Kruskal-Wallis H test extending the
+    // mann_whitney two-sample rank machinery to all five event types
+    // (rank sums from the SAME bounded 2-dp value grid, ties handled by
+    // average ranks and the classical tie correction).
+    //
+    // Determinism: Chow consumes only integer-exact sums (t ≤ 30, counts)
+    // through identical IEEE expression trees. Kruskal-Wallis keeps ranks
+    // exact by working in DOUBLED rank units (2·avgrank is an integer even
+    // at .5 ties); the five per-group H terms fold in group order (sorted-
+    // fold discipline) so the float association is pinned; tie terms
+    // t³ − t stay BIGINT.
+    //
+    // Scale shape: Chow is one aggregate over the calendar spine. KW is
+    // one grid groupBy + the allowlisted bounded-grid cumulative window +
+    // a 5-row fold — the value DOMAIN saturates, not the corpus.
 
-// ——— formerly Round11y.scala ———
-/** Round-10 wave 81: structural-break and k-group nonparametric
-  * testing — the Chow test for a regression break between the first
-  * and second half of the daily purchase series (the standard "did
-  * the trend change at the known breakpoint?" screen: pooled-vs-split
-  * OLS residual F-ratio, all three fits closed-form from one pass of
-  * integer-exact sums) and the Kruskal-Wallis H test extending the
-  * mann_whitney two-sample rank machinery to all five event types
-  * (rank sums from the SAME bounded 2-dp value grid, ties handled by
-  * average ranks and the classical tie correction).
-  *
-  * Determinism: Chow consumes only integer-exact sums (t ≤ 30, counts)
-  * through identical IEEE expression trees. Kruskal-Wallis keeps ranks
-  * exact by working in DOUBLED rank units (2·avgrank is an integer even
-  * at .5 ties); the five per-group H terms fold in group order (sorted-
-  * fold discipline) so the float association is pinned; tie terms
-  * t³ − t stay BIGINT.
-  *
-  * Scale shape: Chow is one aggregate over the calendar spine. KW is
-  * one grid groupBy + the allowlisted bounded-grid cumulative window +
-  * a 5-row fold — the value DOMAIN saturates, not the corpus.
-  */
-object Round11y {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
-
-
-  val decls: Map[String, Decl] = Map(
     // Chow test at the known mid-series breakpoint: fit y = a + b·t on
     // days 1–15, days 16–30, and pooled; F = ((RSSp − RSS1 − RSS2)/2) /
     // ((RSS1 + RSS2)/(n − 4)).
@@ -2175,42 +2085,27 @@ object Round11y {
              |       round(c, 6) AS tie_correction,
              |       round(h / c, 6) AS h_adj,
              |       round(h / c, 6) > 9.488 AS reject_h0
-             |FROM h""".stripMargin))
-  )
-}
+             |FROM h""".stripMargin)),
 
-// ——— formerly Round12a.scala ———
-/** Round-10 wave 83: intermittent-demand forecasting and scale-free
-  * forecast evaluation — Croston's method (the classical
-  * sparse-demand smoother: separate exponential smoothing of demand
-  * SIZES and demand INTERVALS, forecast = size/interval; the standard
-  * tool when most periods sell zero) on the deterministically sparse
-  * high-value purchase series, and MASE + sMAPE for the 7-day seasonal-
-  * naive forecast (the two scale-free metrics that let forecast error
-  * compare across series of different volume).
-  *
-  * Determinism: Croston's α = 0.2 recursion runs on the driver over
-  * the 30-day grid (the ts_holt_winters discipline) and the oracle
-  * replays the identical recursion as a DuckDB recursive CTE carrying
-  * (z, x, last-seen) — same literals, same operation order, identical
-  * doubles. MASE is a ratio of integer |error| sums (exact); sMAPE
-  * folds its 23 bounded per-day terms in day order.
-  *
-  * Scale shape: both keys reduce the corpus to the calendar spine in
-  * one aggregate; the recursions/folds run on ≤30 rows.
-  */
-object Round12a {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Intermittent-demand forecasting and scale-free
+    // forecast evaluation — Croston's method (the classical
+    // sparse-demand smoother: separate exponential smoothing of demand
+    // SIZES and demand INTERVALS, forecast = size/interval; the standard
+    // tool when most periods sell zero) on the deterministically sparse
+    // high-value purchase series, and MASE + sMAPE for the 7-day seasonal-
+    // naive forecast (the two scale-free metrics that let forecast error
+    // compare across series of different volume).
+    //
+    // Determinism: Croston's α = 0.2 recursion runs on the driver over
+    // the 30-day grid (the ts_holt_winters discipline) and the oracle
+    // replays the identical recursion as a DuckDB recursive CTE carrying
+    // (z, x, last-seen) — same literals, same operation order, identical
+    // doubles. MASE is a ratio of integer |error| sums (exact); sMAPE
+    // folds its 23 bounded per-day terms in day order.
+    //
+    // Scale shape: both keys reduce the corpus to the calendar spine in
+    // one aggregate; the recursions/folds run on ≤30 rows.
 
-
-  /** Croston smoothing constant and its EXACT-double complement —
-    * 1 − 0.2 in IEEE is NOT the 0.8 literal, so both engines consume
-    * the same interpolated values. */
-  private val A = 0.2
-  private val B = 1 - A
-
-  val decls: Map[String, Decl] = Map(
     // Croston (α = 0.2): demand d_t = daily purchases of the sparse
     // user_id ≡ 3 (mod 997) cohort — a genuinely intermittent series
     // (roughly half the days sell zero at small SFs). On demand days: z ← αd + (1−α)z,
@@ -2341,22 +2236,12 @@ object Round12a {
              |       round((CAST(fc_ae AS DOUBLE) / n_fc) /
              |             (CAST(naive_ae AS DOUBLE) / n_naive), 6) AS mase,
              |       round(smape_sum / n_fc, 6) AS smape
-             |FROM fc CROSS JOIN naive""".stripMargin))
-  )
-}
+             |FROM fc CROSS JOIN naive""".stripMargin)),
 
-// ——— formerly Round9f.scala ———
-/** Round-9 sixth wave: rolling-window distinct users (the DAU/WAU
-  * problem), market-basket association rules, inter-purchase gap
-  * histogram, and URL-slug normalization.
-  */
-object Round9f {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Rolling-window distinct users (the DAU/WAU
+    // problem), market-basket association rules, inter-purchase gap
+    // histogram, and URL-slug normalization.
 
-
-  val decls: Map[String, Decl] = Map(
     // Rolling 24-hour distinct users per hour — the product-analytics DAU
     // curve, and the canonical "rolling distinct doesn't merge" problem.
     // The scale path: collapse the corpus ONCE to distinct (user, hour)
@@ -2495,22 +2380,12 @@ object Round9f {
              |  regexp_replace(regexp_replace(lower(p_name),
              |                                '[^a-z0-9]+', '-', 'g'),
              |                 '^-+|-+$', '', 'g') AS slug
-             |FROM part ORDER BY p_partkey""".stripMargin))
-  )
-}
+             |FROM part ORDER BY p_partkey""".stripMargin)),
 
-// ——— formerly Round9l.scala ———
-/** Round-9 twelfth wave: forecast-accuracy evaluation (WAPE against a
-  * seasonal-persistence baseline), binary codec round-trips, and the
-  * Wald–Wolfowitz runs test for series randomness.
-  */
-object Round9l {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Forecast-accuracy evaluation (WAPE against a
+    // seasonal-persistence baseline), binary codec round-trips, and the
+    // Wald–Wolfowitz runs test for series randomness.
 
-
-  val decls: Map[String, Decl] = Map(
     // Forecast evaluation — WAPE of the lag-24 seasonal-persistence
     // baseline (ŷ_t = y_{t−24}) over the hourly click series: the
     // backtest metric every forecasting pipeline reports. The alignment
@@ -2630,22 +2505,12 @@ object Round9l {
              |        sqrt((2.0 * n1 * n2 * (2.0 * n1 * n2 - n1 - n2)) /
              |             (CAST(n1 + n2 AS DOUBLE) * CAST(n1 + n2 AS DOUBLE) *
              |              CAST(n1 + n2 - 1 AS DOUBLE))), 6) AS z
-             |FROM agg""".stripMargin))
-  )
-}
+             |FROM agg""".stripMargin)),
 
-// ——— formerly Round9r.scala ———
-/** Round-9 eighteenth wave: discrete-time survival hazards, graph degree
-  * assortativity, and the Lorenz concentration curve — each exact on a
-  * bounded grid with at most one terminal float tree.
-  */
-object Round9r {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Discrete-time survival hazards, graph degree
+    // assortativity, and the Lorenz concentration curve — each exact on a
+    // bounded grid with at most one terminal float tree.
 
-
-  val decls: Map[String, Decl] = Map(
     // Discrete-time hazard — survival analysis without float products
     // (the Kaplan–Meier trap): per capped gap-week k, the hazard is
     // events(k) / at-risk(k) where at-risk is the reverse cumulative
@@ -2845,47 +2710,28 @@ object Round9r {
              |       CAST(cents AS BIGINT) AS cents,
              |       CAST((cum_cents * 2000000 + all_cents) // (2 * all_cents)
              |            AS BIGINT) AS cum_share_ppm
-             |FROM f ORDER BY decile""".stripMargin))
-  )
-}
+             |FROM f ORDER BY decile""".stripMargin)),
 
-// ——— round-11 wave 86 ———
-/** Round-11 wave 86: similarity structure and change-points in the
-  * daily series — a matrix profile over the 30-day purchase-cents
-  * series (for every length-5 window: the distance to and index of
-  * its nearest non-trivial neighbor; the global minimum pair is the
-  * top MOTIF — the modern first tool for "does this series repeat
-  * itself?"), and the Pettitt change-point test (rank-based CUSUM of
-  * pairwise sign comparisons — the standard nonparametric "did the
-  * level shift, and when?" answer, no distribution assumed).
-  *
-  * Determinism: the profile uses UN-normalized squared euclidean
-  * distance on integer cents — every SSD is a BIGINT, argmin compares
-  * integers with an explicit (ssd, j) tie-break. Pettitt's U_t is an
-  * integer CUSUM of sign sums; the α=0.05 decision compares 6K²
-  * against ln(2/α)·(n³+n²) with ln(40) interpolated as the SAME Scala
-  * literal into both engines — no engine libm anywhere.
-  *
-  * Scale shape: both keys collapse the corpus to the ≤30-row calendar
-  * spine in one aggregate; the window/pair fan-outs (26×26, 30×30)
-  * are spine-bounded broadcasts, never data-sized.
-  */
-object TsWave86 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.expressions.Window
-  import org.apache.spark.sql.functions._
+    // Similarity structure and change-points in the
+    // daily series — a matrix profile over the 30-day purchase-cents
+    // series (for every length-5 window: the distance to and index of
+    // its nearest non-trivial neighbor; the global minimum pair is the
+    // top MOTIF — the modern first tool for "does this series repeat
+    // itself?"), and the Pettitt change-point test (rank-based CUSUM of
+    // pairwise sign comparisons — the standard nonparametric "did the
+    // level shift, and when?" answer, no distribution assumed).
+    //
+    // Determinism: the profile uses UN-normalized squared euclidean
+    // distance on integer cents — every SSD is a BIGINT, argmin compares
+    // integers with an explicit (ssd, j) tie-break. Pettitt's U_t is an
+    // integer CUSUM of sign sums; the α=0.05 decision compares 6K²
+    // against ln(2/α)·(n³+n²) with ln(40) interpolated as the SAME Scala
+    // literal into both engines — no engine libm anywhere.
+    //
+    // Scale shape: both keys collapse the corpus to the ≤30-row calendar
+    // spine in one aggregate; the window/pair fan-outs (26×26, 30×30)
+    // are spine-bounded broadcasts, never data-sized.
 
-  /** ln(2/0.05) = ln(40), as one literal for BOTH engines. */
-  private val Ln40 = 3.6888794541139363
-
-  private def dailyCents(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables.events(s, d)
-      .filter(col("event_type") === "purchase")
-      .groupBy(datediff(col("ts").cast("date"), to_date(lit("2023-12-31")))
-                 .cast("bigint").as("t"))
-      .agg(sum(round(col("value") * 100).cast("bigint")).as("v"))
-
-  val decls: Map[String, Decl] = Map(
     // Matrix profile, window w=5, exclusion zone |i−j| ≥ 3 (half a
     // window, the standard trivial-match guard). Output: one row per
     // window start i with its nearest neighbor and the integer SSD,
@@ -2995,61 +2841,28 @@ object TsWave86 {
               |       6.0 * b.au * b.au >
               |         $Ln40 * (CAST(nn.n AS DOUBLE) * nn.n * nn.n +
               |                  nn.n * nn.n) AS reject_h0
-              |FROM best b CROSS JOIN nn WHERE b.rn = 1""".stripMargin))
-  )
-}
+              |FROM best b CROSS JOIN nn WHERE b.rn = 1""".stripMargin)),
 
-// ——— round-11 wave 93 ———
-/** Round-11 wave 93: the technical-analysis trio every market-data
-  * stack ships — Wilder's RSI(14) (the bounded momentum oscillator:
-  * smoothed average gain vs loss), MACD(12,26,9) (trend-following
-  * crossover: fast EMA − slow EMA with a signal EMA and histogram),
-  * and historical Value-at-Risk / Expected Shortfall (the loss
-  * quantile and tail mean of the day-over-day change distribution) —
-  * all on the daily purchase-cents close series.
-  *
-  * Determinism: the EMA/Wilder recursions run on the driver over the
-  * bounded 30-day spine (the croston/holt_winters documented
-  * driver-fixpoint class) and the oracles replay the IDENTICAL
-  * recursion as recursive CTEs with the smoothing constants
-  * interpolated as the same Scala literals into both engines. VaR/ES
-  * are order statistics of INTEGER cent diffs (limit-k, no window) and
-  * an exact tail mean.
-  *
-  * Scale shape: one corpus aggregate to the calendar spine per key;
-  * recursions/folds touch ≤30 rows. VaR's order statistic is a
-  * bounded limit-2 sort, not a data-sized window.
-  */
-object FinanceWave93 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // The technical-analysis trio every market-data
+    // stack ships — Wilder's RSI(14) (the bounded momentum oscillator:
+    // smoothed average gain vs loss), MACD(12,26,9) (trend-following
+    // crossover: fast EMA − slow EMA with a signal EMA and histogram),
+    // and historical Value-at-Risk / Expected Shortfall (the loss
+    // quantile and tail mean of the day-over-day change distribution) —
+    // all on the daily purchase-cents close series.
+    //
+    // Determinism: the EMA/Wilder recursions run on the driver over the
+    // bounded 30-day spine (the croston/holt_winters documented
+    // driver-fixpoint class) and the oracles replay the IDENTICAL
+    // recursion as recursive CTEs with the smoothing constants
+    // interpolated as the same Scala literals into both engines. VaR/ES
+    // are order statistics of INTEGER cent diffs (limit-k, no window) and
+    // an exact tail mean.
+    //
+    // Scale shape: one corpus aggregate to the calendar spine per key;
+    // recursions/folds touch ≤30 rows. VaR's order statistic is a
+    // bounded limit-2 sort, not a data-sized window.
 
-  // smoothing constants — ONE Scala literal each, interpolated into
-  // BOTH engines (1−k precomputed too, so neither engine derives it)
-  private val W13 = 13.0 / 14.0   // Wilder keep-weight
-  private val W1  = 1.0 / 14.0    // Wilder new-weight
-  private val K12 = 2.0 / 13.0
-  private val J12 = 1 - K12
-  private val K26 = 2.0 / 27.0
-  private val J26 = 1 - K26
-  private val K9  = 2.0 / 10.0
-  private val J9  = 1 - K9
-
-  private def dailyClose(s: org.apache.spark.sql.SparkSession,
-                         d: String): Array[Long] = {
-    val m = Tables.events(s, d)
-      .filter(col("event_type") === "purchase")
-      .groupBy(datediff(col("ts").cast("date"), to_date(lit("2023-12-31")))
-                 .cast("bigint").as("t"))
-      .agg(sum(round(col("value") * 100).cast("bigint")).as("c"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    (1 to 30).map(t => m.getOrElse(t.toLong, 0L)).toArray
-  }
-
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  val decls: Map[String, Decl] = Map(
     // Wilder RSI(14): seed = simple mean of gains/losses over days
     // 2..15, then ag ← (13·ag + gain)/14. Rows t = 15..30.
     "window_rsi_wilder" -> Decl(
@@ -3203,23 +3016,15 @@ object FinanceWave93 {
              |       -second_min AS var95_cents,
              |       -first_min AS var99_cents,
              |       round(-(CAST(tail_sum AS DOUBLE) / k), 6) AS es95_cents
-             |FROM n CROSS JOIN tail2""".stripMargin))
-  )
-}
+             |FROM n CROSS JOIN tail2""".stripMargin)),
 
-// ——— round-12 wave 100: PACF, Page-Hinkley drift, SAX symbolization ———
-/** Round-12 wave 100: partial autocorrelation through lag 3 via the
-  * Durbin-Levinson recursion over the hourly click series; Page-Hinkley
-  * drift detection per event type (cumulative deviation from the running
-  * mean over the bounded hourly spine); and SAX symbolization of each
-  * (event_type, day) — z-normalized piecewise-aggregate segments mapped
-  * to a 4-letter alphabet through the N(0,1) quartile breakpoints.
-  */
-object TsWave100 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Partial autocorrelation through lag 3 via the
+    // Durbin-Levinson recursion over the hourly click series; Page-Hinkley
+    // drift detection per event type (cumulative deviation from the running
+    // mean over the bounded hourly spine); and SAX symbolization of each
+    // (event_type, day) — z-normalized piecewise-aggregate segments mapped
+    // to a 4-letter alphabet through the N(0,1) quartile breakpoints.
 
-  val decls: Map[String, Decl] = Map(
     // PACF φ11, φ22, φ33 by Durbin-Levinson over the per-lag Pearson
     // autocorrelations r1..r3 of the hourly click-count series (the
     // ts_autocorr estimator; each r_k is computed on the lag-k paired
@@ -3457,23 +3262,15 @@ object TsWave100 {
              |       WHEN (CAST(q3 AS DOUBLE) / 6 - mu) / sigma
              |              < 0.6744897501960817 THEN 'c' ELSE 'd' END)
              |  AS sax
-             |FROM norm ORDER BY event_type, day""".stripMargin))
-  )
-}
+             |FROM norm ORDER BY event_type, day""".stripMargin)),
 
-// ——— round-12 wave 102: Hurst rescaled-range analysis ———
-/** Round-12 wave 102: R/S (rescaled range) analysis of the hourly event
-  * series at two block scales — the Hurst-exponent primitive, reported
-  * as the per-block R/S ratios themselves (the log-log regression that
-  * would estimate H needs data-dependent ln, which the determinism
-  * discipline bans; the ratios are the distribution-engine-checkable
-  * part and the exponent is one literal regression away for a user).
-  */
-object TsWave102 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // R/S (rescaled range) analysis of the hourly event
+    // series at two block scales — the Hurst-exponent primitive, reported
+    // as the per-block R/S ratios themselves (the log-log regression that
+    // would estimate H needs data-dependent ln, which the determinism
+    // discipline bans; the ratios are the distribution-engine-checkable
+    // part and the exponent is one literal regression away for a user).
 
-  val decls: Map[String, Decl] = Map(
     // Per (scale ∈ {24h, 72h}, block): R = max−min of the running
     // deviation from the block mean, S = population σ of the block, both
     // from exact integer sums (cum, t, s1, s2 are BIGINTs; the only
@@ -3544,29 +3341,14 @@ object TsWave102 {
              |SELECT CAST(scale AS BIGINT) AS scale,
              |       CAST(block AS BIGINT) AS block, n_hours,
              |       round(r / sd, 6) AS rs
-             |FROM agg WHERE sd > 0 ORDER BY scale, block""".stripMargin))
-  )
-}
+             |FROM agg WHERE sd > 0 ORDER BY scale, block""".stripMargin)),
 
-// ——— round-12 wave 109: drawdown & stochastic oscillator ———
-/** Round-12 wave 109: maximum drawdown of the cumulative daily revenue
-  * curve and the 14-day stochastic oscillator %K — both over the
-  * calendar DAY spine (≤ time-span rows regardless of corpus size; the
-  * windows are declared in the ScaleSpec empty-partition allowlist),
-  * both exact-integer until the final ppm/readout.
-  */
-object TsWave109 {
-  import graft.{Decl, Tables}
-  import org.apache.spark.sql.functions._
+    // Maximum drawdown of the cumulative daily revenue
+    // curve and the 14-day stochastic oscillator %K — both over the
+    // calendar DAY spine (≤ time-span rows regardless of corpus size; the
+    // windows are declared in the ScaleSpec empty-partition allowlist),
+    // both exact-integer until the final ppm/readout.
 
-  private def dailyRevenue(s: org.apache.spark.sql.SparkSession, d: String) =
-    Tables(s, d, "orders")
-      .groupBy(expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) " +
-                    "div 86400000000").as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
-             .as("cents"))
-
-  val decls: Map[String, Decl] = Map(
     // Max drawdown: peak-to-trough of the cumulative daily revenue in
     // exact cents; reports the drawdown, its trough day, and the peak
     // day it fell from (earliest peak on ties, pinned identically in

@@ -1,12 +1,12 @@
 package graft.operators
 
-import graft.{Decl, Tables}
+import graft.{Decl, Tables, declMap}
 
-/** Round-10 wave 37: the TEN remaining TPC-H shapes, completing the
+/** The TEN remaining TPC-H shapes, completing the
   * suite — every one of Q1–Q22 now has a declared key (Q1 is
   * `agg_groupby_pricing`, the original flagship). The fixture schema
   * has no partsupp and fewer columns than the spec, so each query is
-  * adapted the same way Round10's six were: the supply relation is
+  * adapted the same way as RelOps' six: the supply relation is
   * derived from lineitem (`GROUP BY l_partkey, l_suppkey` — the
   * observed supplier-part pairs), "late" means shipped >60 days after
   * the order date (no commit/receipt dates), and comment/phone filters
@@ -240,7 +240,7 @@ object TpchRest {
       |                    AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
       |GROUP BY s_name ORDER BY numwait DESC, s_name""".stripMargin
 
-  val decls: Map[String, Decl] = Map(
+  val decls: Map[String, Decl] = declMap(
     "tpch_q2"  -> Decl((s, d) => q(s, d, Q2),  Some(Q2)),
     "tpch_q8"  -> Decl((s, d) => q(s, d, Q8),  Some(Q8)),
     "tpch_q9"  -> Decl((s, d) => q(s, d, Q9),  Some(Q9)),

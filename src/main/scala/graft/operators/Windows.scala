@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Decl, Tables}
+import graft.{Decl, Tables, declMap}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object Windows {
 
-  val decls: Map[String, Decl] = Map(
+  val decls: Map[String, Decl] = declMap(
     // Per-group top-k: the window formulation (vs global sort+limit) is the
     // shape that scales — rank within each group, filter early.
     "window_row_number_topk" -> Decl(

@@ -12,9 +12,9 @@ class InteropWave91Spec extends AnyFunSuite with SharedSpark {
 
   test("luhn validity matches known vectors and partitions all rows") {
     // classical known-good/known-bad checksums
-    assert(graft.operators.InteropWave91.luhnValid("4539578763621486"))
-    assert(graft.operators.InteropWave91.luhnValid("79927398713"))
-    assert(!graft.operators.InteropWave91.luhnValid("79927398714"))
+    assert(graft.operators.Interop.luhnValid("4539578763621486"))
+    assert(graft.operators.Interop.luhnValid("79927398713"))
+    assert(!graft.operators.Interop.luhnValid("79927398714"))
     val rows = SparkEntry.queries("udf_scalar_registered")(spark, sf)
       .collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
     val total = Tables.events(spark, sf).count()

@@ -39,7 +39,7 @@ class LakehouseWave95Spec extends AnyFunSuite with SharedSpark {
   }
 
   test("negative controls: non-dimension grouping and filtered base do not rewrite") {
-    val base = graft.operators.LakehouseWave95.setupMv(spark, sf)
+    val base = graft.operators.Lakehouse.setupMv(spark, sf)
     // grouping by a non-dimension expression — must read the base
     val nonDim = base.groupBy((col("cents") % 7).as("bucket"))
       .agg(count(lit(1)).as("n"))
@@ -57,7 +57,7 @@ class LakehouseWave95Spec extends AnyFunSuite with SharedSpark {
   }
 
   test("a DIMENSION filter rolls up through the MV and matches raw") {
-    val base = graft.operators.LakehouseWave95.setupMv(spark, sf)
+    val base = graft.operators.Lakehouse.setupMv(spark, sf)
     val q = base.filter(col("day") <= 10 && col("event_type") =!= "error")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("s"))
@@ -79,7 +79,7 @@ class LakehouseWave95Spec extends AnyFunSuite with SharedSpark {
   }
 
   test("avg decomposes onto the MV as sum(sc)/sum(n) and matches raw") {
-    val base = graft.operators.LakehouseWave95.setupMv(spark, sf)
+    val base = graft.operators.Lakehouse.setupMv(spark, sf)
     val avgQ = base.groupBy("event_type").agg(avg(col("cents")).as("m"))
       .orderBy("event_type")
     assert(scans(avgQ).exists(_.contains("mv_events")),

@@ -17,7 +17,7 @@ class MvDistinctSpec extends AnyFunSuite with SharedSpark {
 
   test("count(distinct dim) serves from the summary and matches raw") {
     graft.plans.MvCatalog.clear(spark)
-    val base = operators.LakehouseWave95.setupMv(spark, sf)
+    val base = operators.Lakehouse.setupMv(spark, sf)
     val q = base.groupBy("event_type")
       .agg(countDistinct(col("day")).as("n_days"))
       .orderBy("event_type")
@@ -37,7 +37,7 @@ class MvDistinctSpec extends AnyFunSuite with SharedSpark {
 
   test("a dim filter composes with the distinct rewrite") {
     graft.plans.MvCatalog.clear(spark)
-    val base = operators.LakehouseWave95.setupMv(spark, sf)
+    val base = operators.Lakehouse.setupMv(spark, sf)
     val q = base.filter(col("day") <= 10)
       .groupBy("event_type")
       .agg(countDistinct(col("day")).as("n_days"))
@@ -55,7 +55,7 @@ class MvDistinctSpec extends AnyFunSuite with SharedSpark {
 
   test("negative controls: extra-dim and non-dim distinct do NOT rewrite") {
     graft.plans.MvCatalog.clear(spark)
-    val base = operators.LakehouseWave95.setupMv(spark, sf)
+    val base = operators.Lakehouse.setupMv(spark, sf)
     // UNGROUPED count(distinct day): the MV still has event_type as an
     // extra dim, so (day) values repeat across types — must NOT rewrite
     // (it would over-count if it naively counted summary rows).

@@ -51,7 +51,7 @@ class MvRound12Spec extends AnyFunSuite with SharedSpark
   }
 
   test("ungrouped count over a fully dim-filtered summary is 0, not NULL") {
-    val base = graft.operators.LakehouseWave95.setupMv(spark, sf)
+    val base = graft.operators.Lakehouse.setupMv(spark, sf)
     val q = base.filter(col("day") === lit(-999L)).agg(count(lit(1)).as("n"))
     assert(scans(q).exists(_.contains("mv_events")),
            s"the ungrouped count must still rewrite:\n${scans(q).mkString("\n")}")
@@ -89,7 +89,7 @@ class MvRound12Spec extends AnyFunSuite with SharedSpark
   }
 
   test("the MV catalog is per-session: a sibling session sees nothing") {
-    graft.operators.LakehouseWave95.setupMv(spark, sf)
+    graft.operators.Lakehouse.setupMv(spark, sf)
     val s2 = spark.newSession()
     graft.plans.Mv.enable(s2)
     // the sibling session's catalog is empty — same query, no rewrite
@@ -104,7 +104,7 @@ class MvRound12Spec extends AnyFunSuite with SharedSpark
   }
 
   test("cost-based pick: the smallest matching summary serves the query") {
-    val base = graft.operators.LakehouseWave95.setupMv(spark, sf) // fine (type, day)
+    val base = graft.operators.Lakehouse.setupMv(spark, sf) // fine (type, day)
     // a COARSER sibling rollup over the same base: (event_type) only
     val dirC = Tables.scratchDir("graft_mvcoarse").resolve("mv_coarse").toString
     val defC = base.groupBy("event_type")
@@ -303,7 +303,7 @@ class MvRound12Spec extends AnyFunSuite with SharedSpark
   }
 
   test("join-MV negative controls: fact filter and foreign join do not rewrite") {
-    val base = graft.operators.LakehouseWave98.setupJoinMv(spark, sf)
+    val base = graft.operators.Lakehouse.setupJoinMv(spark, sf)
     // a FACT-metric filter constrains a non-dim column — must not fire
     val metricFiltered = base.filter(col("cents") > 1000L)
       .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))

@@ -46,7 +46,7 @@ class Round11cSpec extends AnyFunSuite with SharedSpark {
     val nPairs = matches.map { case (a, b) => if (a < b) (a, b) else (b, a) }
       .groupBy(identity).view.mapValues(_.size.toLong).toMap
     val p = rows.map(r => r._1 -> r._4).toMap
-    val next = operators.Round11c.mmSweep(teams, wins, nPairs, p)
+    val next = operators.Stats.mmSweep(teams, wins, nPairs, p)
     teams.foreach { t =>
       assert(math.abs(next(t) - p(t)) < 1e-4, s"nation $t not stationary")
     }

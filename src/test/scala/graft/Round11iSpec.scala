@@ -21,7 +21,7 @@ class Round11iSpec extends AnyFunSuite with SharedSpark {
     // key retrieves from (every planted (v, v+1000000) pair has cosine
     // >= sqrt(1-0.09) = 0.9539 by construction, so truth >= 500 pairs —
     // assert non-emptiness UNCONDITIONALLY, never guard on it)
-    val emb = graft.operators.Round11i.plantedEmbeddings(spark, sf)
+    val emb = graft.operators.Similarity.plantedEmbeddings(spark, sf)
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     def cos(a: Array[Float], b: Array[Float]): Double = {
       var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
@@ -45,12 +45,12 @@ class Round11iSpec extends AnyFunSuite with SharedSpark {
 
     // superset: single-probe candidates on the SAME planted corpus are
     // contained in the multiprobe candidates (flip 0 is the home bucket)
-    val planted = graft.operators.Round11i.plantedEmbeddings(spark, sf)
-    val singleCand = graft.operators.Round11i
+    val planted = graft.operators.Similarity.plantedEmbeddings(spark, sf)
+    val singleCand = graft.operators.Similarity
       .srpCandidates(planted, 4, graft.operators.PipelineExt.SrpBitsPerTable,
                      multiprobe = false)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val multiCand = graft.operators.Round11i
+    val multiCand = graft.operators.Similarity
       .srpCandidates(planted, 4, graft.operators.PipelineExt.SrpBitsPerTable,
                      multiprobe = true)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -68,13 +68,13 @@ class Round11iSpec extends AnyFunSuite with SharedSpark {
     // pair encoding and produce the SAME candidate set (bucketing depends
     // only on the embedding, so shifting every id by 2^31 shifts each
     // emitted pair by exactly that amount).
-    val planted = graft.operators.Round11i.plantedEmbeddings(spark, sf)
+    val planted = graft.operators.Similarity.plantedEmbeddings(spark, sf)
     val shift = 1L << 31
-    val packed = graft.operators.Round11i
+    val packed = graft.operators.Similarity
       .srpCandidates(planted, 4, graft.operators.PipelineExt.SrpBitsPerTable,
                      multiprobe = true)
       .collect().map(r => (r.getLong(0) + shift, r.getLong(1) + shift)).toSet
-    val structP = graft.operators.Round11i
+    val structP = graft.operators.Similarity
       .srpCandidates(planted.withColumn("vec_id", col("vec_id") + shift),
                      4, graft.operators.PipelineExt.SrpBitsPerTable,
                      multiprobe = true, idsPacked = false)
@@ -83,7 +83,7 @@ class Round11iSpec extends AnyFunSuite with SharedSpark {
            s"struct fallback diverged: ${(structP -- packed).take(3)} extra, " +
            s"${(packed -- structP).take(3)} missing")
     // the guard itself must report the real fixture domain as packable
-    assert(graft.operators.Round11i.plantedIdsPacked(spark, sf),
+    assert(graft.operators.Similarity.plantedIdsPacked(spark, sf),
            "fixture vec_ids must take the packed fast path")
   }
 

@@ -20,7 +20,7 @@ class Round11wSpec extends AnyFunSuite with SharedSpark {
                  Option(r.get(2)).map(_.toString.toLong), r.getDouble(3)))
     assert(got.length == 20)
     // rebuild retriever A from the declared BM25 key
-    val ra = operators.Round10nn.decls("text_bm25_rank").query(spark, sf)
+    val ra = operators.Text.decls("text_bm25_rank").query(spark, sf)
       .collect().map(r => (r.getLong(0), r.getDouble(2)))
       .filter(_._1 != 0)
       .sortBy { case (id, s) => (-s, id) }

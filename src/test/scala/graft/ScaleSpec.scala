@@ -757,7 +757,7 @@ class ScaleSpec extends AnyFunSuite with SharedSpark {
   // corpus into 64 hot partitions).
   test("k-means joins corpus against broadcast centroid state") {
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
-    val plan = operators.Round9.kmeansStageForPlan(spark, sf)
+    val plan = operators.Similarity.kmeansStageForPlan(spark, sf)
       .queryExecution.sparkPlan
     assert(plan.collect { case j: BroadcastHashJoinExec => j }.size >= 2,
       s"expected broadcast joins for seed-state and distance stages:\n$plan")

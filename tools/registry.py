@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Generate REGISTRY.md — the navigable index of every declared query key:
-domain -> key -> declaring file:line. The wave files are append-only build
-history (round-9 verdict item 9: 60+ modules were navigable only by grep);
-this index is the navigation layer. Regenerate after adding keys:
+domain -> key -> declaring file:line. Keys live in one `decls` per module
+(ten core modules, TpchRest and nine domain modules); this index is the
+navigation layer across them. Regenerate after adding or moving keys:
 
     python3 tools/registry.py
 """
@@ -51,7 +51,7 @@ def main():
             m = decl_re.search(line)
             if m:
                 key = m.group(1)
-                # first declaration wins; duplicates are caught at runtime
+                # first declaration wins; declMap rejects duplicates at runtime
                 entries.setdefault(key, (rel, i))
     by_domain = collections.defaultdict(list)
     for key, (rel, line) in entries.items():
@@ -60,8 +60,9 @@ def main():
         "# REGISTRY — declared query keys",
         "",
         f"{len(entries)} keys. Generated by `tools/registry.py`; regenerate",
-        "after adding keys. Each key is declared exactly once (enforced by",
-        "`graft.operators.Waves` / `SparkEntry.registry` duplicate checks).",
+        "after adding or moving keys. Each key is declared exactly once:",
+        "every module's `decls` and `SparkEntry.registry` are built with",
+        "`graft.declMap`, which fails on a repeated key.",
         "",
     ]
     ordered = [name for name, _ in DOMAINS] + ["other"]
