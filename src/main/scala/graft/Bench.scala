@@ -43,18 +43,8 @@ object Bench {
           te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         if (te.taskMetrics != null) cpuNanos.addAndGet(te.taskMetrics.executorCpuTime)
     })
-    // the listener bus is async — drain it before reading the counter
-    // (private[spark], reached reflectively the way Spark's tests do)
-    def drainBus(): Unit =
-      try {
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethods.find(m =>
-          m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-          .foreach(_.invoke(bus))
-      } catch { case _: Exception => () }
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
-      drainBus()
+      LocalSpark.drainBus(spark)
       val c0 = cpuNanos.get()
       val t0 = System.nanoTime()
       // A failed query must be visible as -1, not as a fast time — masking
@@ -65,7 +55,7 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
         }
-      drainBus()
+      LocalSpark.drainBus(spark)
       val cpu = (cpuNanos.get() - c0) / 1e9
       spark.catalog.clearCache() // drop per-query persisted intermediates
       (elapsed, cpu)

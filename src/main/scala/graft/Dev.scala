@@ -4,7 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
@@ -15,9 +17,10 @@ import org.apache.spark.sql.execution.ExplainMode
   *     named), to stdout or to `<dir>/<key>_<suffix>.txt`. Exits 1 if any
   *     key fails to plan: a dump must not pass off a failure as evidence.
   *   prof <keys...>
-  *     times each key twice in one session — cold (planning, codegen
+  *     runs each key twice in one session — cold (planning, codegen
   *     compile, JIT, broadcast setup) against warm (steady-state
-  *     execution) — and lists the warm run's five costliest stages
+  *     execution) — printing each run's task CPU, wall time, jobs and
+  *     codegen compiles, and lists the warm run's five costliest stages
   *     (max ≫ total/tasks means one straggler task).
   *
   * `sbt "runMain graft.Dev prof tpch_q8"`; the sf dir comes from
@@ -75,34 +78,40 @@ object Dev {
   private def prof(spark: SparkSession, sfDir: String, keys: List[String]): Boolean = {
     spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count().count()
     Tables.names.foreach(n => Tables(spark, sfDir, n).count())
-    // (stage id, tasks, total task ms, max task ms) of the warm run
+    // per run: jobs started, task CPU, and (stage id, tasks, total task ms,
+    // max task ms) of each completed stage
+    var jobs = 0
+    var cpuNanos = 0L
+    val perStage = mutable.HashMap[Int, (Int, Long, Long)]()
     val stages = mutable.ArrayBuffer[(Int, Int, Long, Long)]()
-    val listener = new SparkListener {
-      private val perStage = mutable.HashMap[Int, (Int, Long, Long)]()
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        perStage.synchronized {
-          val (n, tot, mx) = perStage.getOrElse(te.stageId, (0, 0L, 0L))
-          val d = te.taskInfo.duration
-          perStage(te.stageId) = (n + 1, tot + d, math.max(mx, d))
-        }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        perStage.synchronized {
-          val (n, tot, mx) = perStage.getOrElse(sc.stageInfo.stageId, (0, 0L, 0L))
-          stages += ((sc.stageInfo.stageId, n, tot, mx))
-        }
-    }
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs += 1
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+        if (te.taskMetrics != null) cpuNanos += te.taskMetrics.executorCpuTime
+        val (n, tot, mx) = perStage.getOrElse(te.stageId, (0, 0L, 0L))
+        val d = te.taskInfo.duration
+        perStage(te.stageId) = (n + 1, tot + d, math.max(mx, d))
+      }
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        val (n, tot, mx) = perStage.getOrElse(sc.stageInfo.stageId, (0, 0L, 0L))
+        stages += ((sc.stageInfo.stageId, n, tot, mx))
+      }
+    })
     keys.foreach { name =>
       val fn = SparkEntry.queries(name)
-      val times = (1 to 2).map { i =>
-        if (i == 2) { stages.clear(); spark.sparkContext.addSparkListener(listener) }
+      Seq("cold", "warm").foreach { run =>
+        LocalSpark.drainBus(spark)
+        jobs = 0; cpuNanos = 0L; perStage.clear(); stages.clear()
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
-        val t = (System.nanoTime() - t0) / 1e9
+        val wall = (System.nanoTime() - t0) / 1e9
+        LocalSpark.drainBus(spark)
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
         spark.catalog.clearCache()
-        t
+        println(f"[prof] $name%-30s $run cpu=${cpuNanos / 1e9}%.2fs wall=$wall%.2fs " +
+                s"jobs=$jobs compiles=$compiles")
       }
-      spark.sparkContext.removeSparkListener(listener)
-      println(f"[prof] $name%-30s cold=${times.head}%.2f warm=${times(1)}%.2f")
       stages.sortBy(-_._3).take(5).foreach { case (id, n, tot, mx) =>
         println(f"[prof]   stage $id%4d tasks=$n%3d total=${tot / 1e3}%.2fs max=${mx / 1e3}%.2fs")
       }

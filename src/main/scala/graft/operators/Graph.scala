@@ -36,6 +36,41 @@ object Graph {
       .distinct()
   }
 
+  /** Hop bound of [[closenessDist]]: a BFS still finding vertices after
+    * this many hops throws instead of running on. */
+  private val MaxHops = 96
+
+  /** All-pairs BFS distances over `edges(src, dst)`: dist(v, u, dd) for
+    * every u reachable from v, seeded with (v, v, 0) for every endpoint.
+    * Semi-naive: each hop expands only the frontier (the pairs first
+    * reached at the previous hop) by one edge and keeps the pairs `dist`
+    * does not hold yet; it stops when the frontier is empty. Frontier and
+    * dist are both cut hash-partitioned by (v, u), the anti-join's key.
+    * Every hop plans the same shape (no per-hop literal), so later hops
+    * reuse the first hop's generated code.
+    */
+  private[graft] def closenessDist(edges: DataFrame): DataFrame = {
+    val n = edges.sparkSession.sparkContext.defaultParallelism
+    def cut(df: DataFrame) = df.repartition(n, col("v"), col("u")).localCheckpoint(true)
+    val e = edges.repartition(n, col("src")).localCheckpoint(true)
+    var frontier = cut(e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
+      .distinct()
+      .select(col("v"), col("v").as("u"), lit(0L).as("dd")))
+    var dist = frontier
+    var hops = 0
+    while (!frontier.isEmpty) {
+      if (hops == MaxHops) throw new IllegalStateException(
+        s"closeness BFS did not converge within $MaxHops hops")
+      frontier = cut(frontier.join(e, col("u") === col("src"))
+        .groupBy(col("v"), col("dst").as("u"))
+        .agg(min(col("dd") + 1).as("dd"))
+        .join(dist, Seq("v", "u"), "left_anti"))
+      dist = cut(dist.unionAll(frontier))
+      hops += 1
+    }
+    dist
+  }
+
   val decls: Map[String, Decl] = declMap(
     // Per-node graph topology, weekly growth, robust
     // outlier fences, and template-shape detection. All-integer statistics
@@ -230,16 +265,16 @@ object Graph {
     // Adamic–Adar link prediction on the co-purchase graph: for the
     // top-20 common-neighbor pairs (the graph_jaccard_neighbors pair
     // machinery, df-capped), score = Σ 1/ln(deg(z)) over shared parts z.
-    // FLOAT DETERMINISM: the per-pair contributions are sorted and folded
-    // in ORDER (array_sort + HOF fold here, list(... ORDER BY) +
+    // FLOAT DETERMINISM: the per-pair contributions are folded in df
+    // ORDER (PairIndex's df-histogram fold here, list(... ORDER BY) +
     // list_sum there) so the sum's association order is identical in
     // both engines — no parallel-merge reduction ever touches a double.
     "graph_adamic_adar" -> Decl(
       (s, d) => {
         // The per-pair (common, aa_raw) aggregates come pre-computed from
-        // the SHARED PairIndex (built once per session — the sorted
-        // (df, cnt) fold with its oracle-mirrored association order runs
-        // in the build, not per consumer). This probe is a pure scan plus
+        // the SHARED PairIndex (built once per session — the df-ordered
+        // fold with its oracle-mirrored association order runs in the
+        // build, not per consumer). This probe is a pure scan plus
         // a bounded top-k, with the DECIMAL round deferred past the cut:
         // round(double, 6) is a per-row BigDecimal (~40 µs/row — it alone
         // was ~200 s of task time over the 8M sf0.1 pairs), so the top-20
@@ -1214,73 +1249,17 @@ object Graph {
     // expression tree in both engines (the oracle walks the same BFS as
     // a recursive CTE and aggregates min distances).
     //
-    // Scale shape: the same fused-superstep discipline as
-    // graph_scc_coloring — the distance frontier advances `Hops` hops per
-    // materialization job, convergence read from the same checkpoint
-    // ("nothing newly reached at the final hop"). Pair state is bounded
-    // by reachability (disjoint ≤8-vertex blocks ⇒ ≤8n rows at every SF);
-    // for giant-component graphs the sampled harmonic key is the scale
-    // path, exactly as its Scaladoc says.
+    // Scale shape: `closenessDist`'s semi-naive frontier BFS — each hop
+    // joins only the newly reached pairs to the single-hop edges, so a hub
+    // of degree k costs k rows per frontier pair, never the k² of a
+    // squared edge relation. Pair state is bounded by reachability
+    // (disjoint ≤8-vertex blocks ⇒ ≤8n rows at every SF); for
+    // giant-component graphs the sampled harmonic key is the scale path,
+    // exactly as its Scaladoc says.
 
     "graph_closeness_exact" -> Decl(
       (s, d) => {
-        val n = s.sparkContext.defaultParallelism
-        // Round-13 (§2.4 — fewer shuffles): each BFS hop costs two
-        // exchanges (frontier join + min-stamp groupBy), and at test scale
-        // the chain is pure per-stage latency. Squaring the edge relation
-        // once (e2 = min path length ≤ 2 between distinct endpoints, one
-        // extra join at build) makes every superstep advance TWO hops for
-        // the same two exchanges, halving the fused chain: a shortest
-        // path splits into ≤2-hop segments, and the min-stamp fold over
-        // {1,2}-weight steps yields the identical min distance (oracle
-        // re-proven at sf0.01 and sf0.1). Distances stay contiguous, so
-        // the frontier-death rule is unchanged with Reach = 2·Steps.
-        val Steps = 4   // fused supersteps per materialization
-        val Reach = 8L  // distance covered per pass (2 hops per step)
-        val edges = blockEdges(s, d)
-          .repartition(n, col("src"))
-          .localCheckpoint(true)
-        val e2 = edges.select(col("src"), col("dst"), lit(1L).as("w"))
-          .unionAll(edges.select(col("src").as("a"), col("dst").as("m"))
-            .join(edges.select(col("src").as("m"), col("dst").as("b")), "m")
-            .filter(col("a") =!= col("b"))
-            .select(col("a").as("src"), col("b").as("dst"), lit(2L).as("w")))
-          .groupBy("src", "dst").agg(min(col("w")).as("w"))
-          .repartition(n, col("src"))
-          .localCheckpoint(true)
-        // dist(v, u, dd): shortest distance dd from v to u, grown by
-        // frontier expansion with first-found-wins (min over hop stamps)
-        var dist = edges.select(col("src").as("v"), col("src").as("u"),
-                                lit(0L).as("dd"))
-          .unionAll(edges.select(col("dst").as("v"), col("dst").as("u"),
-                                 lit(0L).as("dd")))
-          .distinct()
-          .localCheckpoint(true)
-        var grew = true
-        var passes = 0
-        var base = 0L
-        while (grew && passes < 12) {
-          var cur = dist
-          for (_ <- 1 to Steps) {
-            val nxt = cur.join(e2, col("u") === col("src"))
-              .select(col("v"), col("dst").as("u"), (col("dd") + col("w")).as("dd"))
-            cur = cur.unionAll(nxt)
-              .groupBy("v", "u").agg(min(col("dd")).as("dd"))
-          }
-          val step = cur.localCheckpoint(true)
-          val st = step.agg(
-              count(lit(1)),
-              coalesce(sum(when(col("dd") >= base + Reach, 1L).otherwise(0L)),
-                       lit(0L)))
-            .first()
-          // nothing first-found at the final fused reach ⇒ frontier dead
-          grew = st.getLong(1) > 0L
-          base += Reach
-          dist = step
-          passes += 1
-        }
-        if (grew) throw new IllegalStateException(
-          s"closeness BFS did not converge within $passes passes")
+        val dist = closenessDist(blockEdges(s, d))
         val nDocs = Tables.rowCount(s, d, "documents")
         val per = dist.filter(col("u") =!= col("v"))
           .groupBy("v")

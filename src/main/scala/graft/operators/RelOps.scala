@@ -127,7 +127,9 @@ object RelOps {
     * doc_id % 4 = 0 have NO out-edges by construction, so unlike
     * graph_pagerank's bijective graph the dangling term is load-bearing:
     * without it 0.85·dm of rank mass leaks per iteration and the
-    * mass-conservation assertion fails.
+    * mass-conservation assertion fails. Each step reads pr{i-1} twice, so
+    * every pr$i is MATERIALIZED: DuckDB would otherwise inline the chain
+    * 2¹⁰ times.
     */
   private def pagerankDanglingOracleSql: String = {
     val b = new StringBuilder(
@@ -140,7 +142,7 @@ object RelOps {
     (1 to 10).foreach { i =>
       b.append(s""",
         |d$i AS (SELECT sum(r) AS dm FROM pr${i - 1} WHERE doc_id % 4 = 0),
-        |pr$i AS (SELECT nd.doc_id,
+        |pr$i AS MATERIALIZED (SELECT nd.doc_id,
         |             0.15/(SELECT n FROM nn)
         |               + 0.85 * (coalesce(s.acc, 0) + d$i.dm/(SELECT n FROM nn)) AS r
         |         FROM documents nd

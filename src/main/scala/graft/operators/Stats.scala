@@ -113,12 +113,6 @@ object Stats {
     b.toString
   }
 
-  /** Unrolled 4-iteration synchronous label propagation over the same
-    * deterministic undirected graph as graph_triangle_count. Each step is
-    * one neighbor-label count plus a max-count/min-label argmax, expressed
-    * as min over a ('nc' = -count, 'l' = label) struct — the lexicographic
-    * struct-min trick both engines agree on bit-for-bit (no float anywhere).
-    */
   /** Shared oracle CTE prefix building the deterministic undirected graph
     * used by graph_triangle_count / graph_label_propagation /
     * graph_bfs_layers (Round8b) — ends at the symmetrized `adj` table.
@@ -133,13 +127,21 @@ object Stats {
       |adj AS (SELECT a AS src, b AS dst FROM c UNION ALL SELECT b, a FROM c)"""
       .stripMargin
 
+  /** Unrolled 4-iteration synchronous label propagation over the same
+    * deterministic undirected graph as graph_triangle_count. Each step is
+    * one neighbor-label count plus a max-count/min-label argmax, expressed
+    * as min over a ('nc' = -count, 'l' = label) struct — the lexicographic
+    * struct-min trick both engines agree on bit-for-bit (no float anywhere).
+    * Each step reads l{i-1} twice, so every l$i is MATERIALIZED rather than
+    * inlined by DuckDB.
+    */
   private def lpaOracleSql: String = {
     val b = new StringBuilder(graphOracleCtes +
       """,
         |l0 AS (SELECT doc_id AS v, doc_id AS l FROM documents)""".stripMargin)
     (1 to 4).foreach { i =>
       b.append(s""",
-        |l$i AS (SELECT p.v, coalesce(m.pick, p.l) AS l FROM l${i - 1} p LEFT JOIN (
+        |l$i AS MATERIALIZED (SELECT p.v, coalesce(m.pick, p.l) AS l FROM l${i - 1} p LEFT JOIN (
         |    SELECT dst, (min({'nc': -cnt, 'l': l})).l AS pick FROM (
         |      SELECT adj.dst AS dst, q.l AS l, count(*) AS cnt
         |      FROM l${i - 1} q JOIN adj ON q.v = adj.src GROUP BY adj.dst, q.l) x

@@ -448,25 +448,17 @@ object AnnIndex {
   *
   *  - `pairs(a, b, common, aa_raw)` — each unordered customer pair
   *    (a < b) with its per-pair aggregates: common = #shared parts and
-  *    aa_raw = the UNROUNDED Adamic–Adar fold Σ cnt/ln(df) in df order.
-  *    Pair generation is a per-part sorted collect + INTEGER-ENCODED
-  *    combination explode (a·2³² + b rides one BIGINT through the explode
-  *    and the groupBy — no struct allocation per candidate pair; decoded
-  *    once at write). Per-part state is ≤ MaxPartDf ids — bounded by the
-  *    cap, never the corpus; total volume Σ C(df,2) ≤ (cap/2)·|edges|.
+  *    aa_raw = the UNROUNDED Adamic–Adar fold Σ 1/ln(df) in df order.
+  *    One co-partitioned self-join of the capped edges on the part;
+  *    per-part fan-out is ≤ C(MaxPartDf, 2) pairs — bounded by the cap,
+  *    never the corpus; total volume Σ C(df,2) ≤ (cap/2)·|edges|.
   *  - `deg(c, deg)` — per-customer distinct-part degree over the SAME
   *    capped graph (df ≤ cap, including df = 1 parts).
-  *
-  * The 2³² encoding assumes ids in [0, 2³¹) (TPC-H custkeys are 32-bit
-  * ints at every tested SF); the build GUARDS that range against the deg
-  * table (one tiny aggregate over the already-written per-customer
-  * summary — zero extra passes over the edges) and falls back to the
-  * struct encode otherwise — same plan shape, higher constant
-  * (PairIndexSpec exercises the fallback with synthetic ≥ 2³¹ ids).
   */
 object PairIndex {
   import graft.{Artifacts, Tables}
   import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.expressions.Window
   import org.apache.spark.sql.functions._
 
   val MaxPartDf = 40
@@ -474,76 +466,43 @@ object PairIndex {
   private def ensure(s: SparkSession, d: String): String =
     Artifacts.dir("pairidx", d) { root =>
       val n = s.sparkContext.defaultParallelism
-      val edges = Tables(s, d, "orders")
+      // e(c, p, df): distinct edges hashed by part once — the distinct, the
+      // df window and the pair self-join all reuse that partitioning, and
+      // persist shares one materialization between deg and pairs
+      val e = Tables(s, d, "orders")
         .join(Tables(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
+        .repartition(n, col("p"))
         .distinct()
-      val cType = edges.schema("c").dataType
-      val pdeg = edges.groupBy("p").agg(count(lit(1)).as("df"))
+        .withColumn("df", count(lit(1)).over(Window.partitionBy("p")))
         .filter(col("df") <= MaxPartDf)
-      // e feeds deg AND the pair exchange: lazy persist shares one
-      // materialization and pins the p-hash partitioning (memory: persist,
-      // not localCheckpoint — checkpoint runs upstream stages at build time)
-      val e = edges.join(pdeg, "p").repartition(n, col("p"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       e.groupBy("c").agg(count(lit(1)).as("deg"))
         .write.parquet(s"$root/deg")
-      // Round-13 id-width guard (verdict item 7): the bigint packing is
-      // only injective for ids in [0, 2³¹). deg holds EVERY id that can
-      // enter a pair (df ≥ 2 edges are a subset of df ≥ 1), so one tiny
-      // aggregate over the just-written summary decides the encoding —
-      // no extra pass over the edges, zero cost on the happy path.
-      val idr = s.read.parquet(s"$root/deg")
-        .agg(min(col("c").cast("bigint")).as("mn"),
-             max(col("c").cast("bigint")).as("mx")).head
-      val packed =
-        idr.isNullAt(0) || (idr.getLong(0) >= 0 && idr.getLong(1) < (1L << 31))
-      buildPairs(e, cType, packed).write.parquet(s"$root/pairs")
+      buildPairs(e).write.parquet(s"$root/pairs")
       e.unpersist()
     }
 
-  /** The per-pair aggregation pipeline over the df-capped edge table
-    * `e(c, p, df)`. The stored table is pre-aggregated PER PAIR (round-12
-    * optimization): both consumers immediately re-grouped the 8.4M-row
-    * (a, b, df, cnt) cell table by (a, b) — ~280 s of duplicated task time
-    * per bench run at sf0.1 — so that groupBy (and the Adamic–Adar sorted
-    * (df, cnt) fold, whose association order the oracle mirrors) moves
-    * into the one-time build. Probes become pure scans + bounded top-k.
-    *   common  = Σ cnt over the pair's (df, cnt) cells (shared parts)
-    *   aa_raw  = Σ cnt/ln(df) folded in df order — UNROUNDED; consumers
-    *             round only after their top-k cut (round(double, 6) is a
-    *             per-row BigDecimal, ~40 µs/row — never over the corpus)
-    * `packed = true` rides each (a < b) pair on one BIGINT a·2³² + b
-    * through the explode/groupBy (injective for ids in [0, 2³¹));
-    * `packed = false` is the struct fallback for wider id domains — same
-    * plan shape, same rows (PairIndexSpec asserts the two agree).
+  /** The per-pair aggregates over the df-capped edge table `e(c, p, df)`,
+    * pre-aggregated PER PAIR so probes are pure scans + bounded top-k:
+    *   common  = #shared parts
+    *   aa_raw  = Σ 1/ln(df) over the shared parts, folded in df order
+    *             through a df histogram h(k) = #shared parts with df = k:
+    *             ((0.0 + h(2)/ln 2) + h(3)/ln 3) + … — an empty slot adds
+    *             +0.0, so the sum is the sparse df-ordered fold bit for
+    *             bit. UNROUNDED; consumers round only after their top-k
+    *             cut (round(double, 6) is a per-row BigDecimal).
+    * The histogram is MaxPartDf − 1 LONG slots per pair, bounded by the cap.
     */
-  private[graft] def buildPairs(e: DataFrame,
-                                cType: org.apache.spark.sql.types.DataType,
-                                packed: Boolean): DataFrame = {
-    val encodeExpr =
-      if (packed)
-        "flatten(transform(cs, (x, i) -> " +
-          "transform(slice(cs, i + 2, size(cs)), y -> x * 4294967296L + y)))"
-      else
-        "flatten(transform(cs, (x, i) -> " +
-          "transform(slice(cs, i + 2, size(cs)), y -> struct(x AS pa, y AS pb))))"
-    val agged = e.filter(col("df") >= 2)
-      .groupBy("p", "df")
-      .agg(sort_array(collect_list(col("c").cast("bigint"))).as("cs"))
-      .select(col("df"), explode(expr(encodeExpr)).as("pr"))
-      .groupBy("pr", "df").agg(count(lit(1)).as("cnt"))
-      .groupBy("pr")
-      .agg(sum(col("cnt")).as("common"),
-           array_sort(collect_list(struct(col("df"), col("cnt")))).as("cells"))
-    val (aCol, bCol) =
-      if (packed) (expr("pr div 4294967296"), pmod(col("pr"), lit(4294967296L)))
-      else (col("pr.pa"), col("pr.pb"))
-    agged.select(aCol.cast(cType).as("a"), bCol.cast(cType).as("b"),
-                 col("common"),
-                 expr("aggregate(cells, CAST(0.0 AS DOUBLE), " +
-                   "(acc, p) -> acc + p.cnt / ln(CAST(p.df AS DOUBLE)))")
-                   .as("aa_raw"))
+  private[graft] def buildPairs(e: DataFrame): DataFrame = {
+    val dfs = 2 to MaxPartDf
+    e.as("x").join(e.as("y"), col("x.p") === col("y.p") && col("x.c") < col("y.c"))
+      .groupBy(col("x.c").as("a"), col("y.c").as("b"))
+      .agg(count(lit(1)).as("common"),
+           dfs.map(k => count_if(col("x.df") === k).as(s"h$k")): _*)
+      .select(col("a"), col("b"), col("common"),
+              dfs.foldLeft(lit(0.0))((acc, k) =>
+                acc + col(s"h$k") / ln(lit(k.toDouble))).as("aa_raw"))
   }
 
   def pairs(s: SparkSession, d: String): DataFrame =

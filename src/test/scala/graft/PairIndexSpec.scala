@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** PairIndex invariants: ONE build serves every consumer (the round-11
   * verdict counted the same capped pair exchange built twice), the
   * stored pairs are exactly the e⋈e self-join's (reference semantics,
-  * computed independently here), and the integer pair encoding
-  * round-trips the original id type.
+  * computed independently here), ids keep their type, and ids past the
+  * 32-bit range give the same aggregates.
   */
 class PairIndexSpec extends AnyFunSuite with SharedSpark {
 
@@ -60,34 +60,27 @@ class PairIndexSpec extends AnyFunSuite with SharedSpark {
     assert(pairs.filter(col("a") >= col("b")).isEmpty)
   }
 
-  test("buildPairs struct fallback equals the packed encode for >= 2^31 ids") {
-    // Round-13 id-width guard: ids outside [0, 2^31) must take the struct
-    // pair encoding and emit the same aggregates (shifting every id by
-    // 2^31 shifts each pair's (a, b) by exactly that amount; common and
+  test("buildPairs shifts (a, b) and keeps (common, aa_raw) for ids shifted by 2^31") {
+    // Ids past the 32-bit range take the same build: shifting every id by
+    // 2^31 shifts each pair's (a, b) by exactly that amount, and common and
     // the df-ordered aa_raw fold are id-independent, so they match
-    // bit-identically).
-    import org.apache.spark.sql.types.LongType
+    // bit-identically.
     val shift = 1L << 31
     val e0 = spark.createDataFrame(Seq(
         (1L, 10L), (2L, 10L), (3L, 10L), (1L, 20L), (2L, 20L), (4L, 20L),
         (3L, 30L), (4L, 30L), (2L, 30L), (5L, 40L), (1L, 40L)))
       .toDF("c", "p")
-    def withDf(edges: org.apache.spark.sql.DataFrame) =
-      edges.join(edges.groupBy("p").agg(count(lit(1)).as("df")), "p")
-    val packed = graft.operators.PairIndex
-      .buildPairs(withDf(e0), LongType, packed = true)
-      .collect()
-      .map(r => (r.getLong(0) + shift, r.getLong(1) + shift,
-                 r.getLong(2), r.getDouble(3))).toSet
-    val structB = graft.operators.PairIndex
-      .buildPairs(withDf(e0.withColumn("c", col("c") + shift)), LongType,
-                  packed = false)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSet
-    assert(packed.nonEmpty, "synthetic edge fixture produced no pairs — vacuous")
-    assert(structB == packed,
-           s"struct fallback diverged: ${(structB -- packed).take(3)} extra, " +
-           s"${(packed -- structB).take(3)} missing")
+    def built(edges: org.apache.spark.sql.DataFrame) =
+      graft.operators.PairIndex
+        .buildPairs(edges.join(edges.groupBy("p").agg(count(lit(1)).as("df")), "p"))
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+        .toSet
+    val want = built(e0).map { case (a, b, common, aa) => (a + shift, b + shift, common, aa) }
+    val got = built(e0.withColumn("c", col("c") + shift))
+    assert(want.nonEmpty, "synthetic edge fixture produced no pairs — vacuous")
+    assert(got == want,
+           s"shifted ids diverged: ${(got -- want).take(3)} extra, " +
+           s"${(want -- got).take(3)} missing")
   }
 }

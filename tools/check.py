@@ -13,8 +13,11 @@ So beyond row-by-row value comparison this now:
      representation (1 vs 1.0, Decimal('2.50') vs Decimal('2.5')) fails
      here before it fails in the driver.
 
+Each ok line carries the key's DuckDB oracle seconds; the run ends with
+the five slowest oracles.
+
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>"""
-import sys, json, glob, math, hashlib, decimal, datetime
+import sys, json, glob, math, hashlib, decimal, datetime, time
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
@@ -90,8 +93,10 @@ def main(sf, out):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
     oracles = json.load(open(f"{out}/oracle_sql.json"))
     n_ok = n_bad = 0
+    secs = {}
     for name in sorted(oracles):
         sql = oracles[name]
+        t0 = time.perf_counter()
         try:
             # R12 lint, mechanized (rounds 8 + 10 both shipped HUGEINT
             # oracles): Python's fetchall renders HUGEINT as int so the
@@ -116,6 +121,8 @@ def main(sf, out):
             print(f"FAIL {name}: oracle error: {e}")
             n_bad += 1
             continue
+        finally:
+            secs[name] = time.perf_counter() - t0
         files = sorted(glob.glob(f"{out}/{name}/part-*.parquet"))
         if not files:
             print(f"FAIL {name}: no spark output")
@@ -165,9 +172,11 @@ def main(sf, out):
                   f"divergence) first @{diff[0]}:\n  duck : {diff[1]}\n  spark: {diff[2]}")
             n_bad += 1
         else:
-            print(f"ok   {name} ({len(dnorm)} rows)")
+            print(f"ok   {name} ({len(dnorm)} rows, oracle {secs[name]:.2f}s)")
             n_ok += 1
-    print(f"\n{n_ok} ok, {n_bad} failed")
+    print("\nslowest oracles: " + ", ".join(
+        f"{k} {v:.2f}s" for k, v in sorted(secs.items(), key=lambda kv: -kv[1])[:5]))
+    print(f"{n_ok} ok, {n_bad} failed")
     sys.exit(1 if n_bad else 0)
 
 if __name__ == "__main__":
