@@ -36,39 +36,54 @@ object Graph {
       .distinct()
   }
 
-  /** Hop bound of [[closenessDist]]: a BFS still finding vertices after
-    * this many hops throws instead of running on. */
-  private val MaxHops = 96
+  /** The minted undirected doc graph: distinct canonical pairs (a < b) of
+    * the directed edges v → (v·3 + k) mod N, k = 1..(1 + v mod 2), for
+    * every v ≢ 0 (mod 4).
+    */
+  private[operators] def mintedPairs(s: SparkSession, d: String): DataFrame = {
+    val nRows = Tables.rowCount(s, d, "documents")
+    Tables(s, d, "documents").select(col("doc_id"))
+      .filter(pmod(col("doc_id"), lit(4L)) =!= 0)
+      .select(col("doc_id").as("src"),
+              explode(sequence(lit(1), (lit(1L) + pmod(col("doc_id"), lit(2L)))
+                .cast("int"))).as("k"))
+      .select(col("src"), pmod(col("src") * 3 + col("k"), lit(nRows)).as("dst"))
+      .filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("a"),
+              greatest(col("src"), col("dst")).as("b"))
+      .distinct()
+  }
 
   /** All-pairs BFS distances over `edges(src, dst)`: dist(v, u, dd) for
     * every u reachable from v, seeded with (v, v, 0) for every endpoint.
-    * Semi-naive: each hop expands only the frontier (the pairs first
-    * reached at the previous hop) by one edge and keeps the pairs `dist`
-    * does not hold yet; it stops when the frontier is empty. Frontier and
-    * dist are both cut hash-partitioned by (v, u), the anti-join's key.
+    * Semi-naive: the state is one relation (v, u, dd, fr) whose flag `fr`
+    * marks the frontier (the pairs first reached at the previous hop).
+    * Each hop expands only the frontier by one edge, keeps the pairs the
+    * state does not hold yet as the new frontier, and is one
+    * [[Fixpoint]] generation hash-partitioned by (v, u), the anti-join's
+    * key; it stops when a hop finds nothing, and throws after 96 hops.
     * Every hop plans the same shape (no per-hop literal), so later hops
     * reuse the first hop's generated code.
     */
   private[graft] def closenessDist(edges: DataFrame): DataFrame = {
     val n = edges.sparkSession.sparkContext.defaultParallelism
-    def cut(df: DataFrame) = df.repartition(n, col("v"), col("u")).localCheckpoint(true)
     val e = edges.repartition(n, col("src")).localCheckpoint(true)
-    var frontier = cut(e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
+    val seed = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
       .distinct()
-      .select(col("v"), col("v").as("u"), lit(0L).as("dd")))
-    var dist = frontier
-    var hops = 0
-    while (!frontier.isEmpty) {
-      if (hops == MaxHops) throw new IllegalStateException(
-        s"closeness BFS did not converge within $MaxHops hops")
-      frontier = cut(frontier.join(e, col("u") === col("src"))
+      .select(col("v"), col("v").as("u"), lit(0L).as("dd"), lit(true).as("fr"))
+      .repartition(n, col("v"), col("u"))
+      .localCheckpoint(true)
+    val dist = Fixpoint(seed, Seq(count(when(col("fr"), 1))), 96,
+                        "closeness BFS") { st =>
+      val found = st.filter(col("fr")).join(e, col("u") === col("src"))
         .groupBy(col("v"), col("dst").as("u"))
         .agg(min(col("dd") + 1).as("dd"))
-        .join(dist, Seq("v", "u"), "left_anti"))
-      dist = cut(dist.unionAll(frontier))
-      hops += 1
-    }
-    dist
+        .join(st, Seq("v", "u"), "left_anti")
+      st.select(col("v"), col("u"), col("dd"), lit(false).as("fr"))
+        .unionAll(found.select(col("v"), col("u"), col("dd"), lit(true).as("fr")))
+        .repartition(n, col("v"), col("u"))
+    }(_.getLong(0) == 0L)
+    dist.select(col("v"), col("u"), col("dd"))
   }
 
   val decls: Map[String, Decl] = declMap(
@@ -86,17 +101,7 @@ object Graph {
     "graph_clustering_coeff" -> Decl(
       (s, d) => {
         val n = s.sparkContext.defaultParallelism
-        val docs = Tables(s, d, "documents").select(col("doc_id"))
-        val nRows = Tables.rowCount(s, d, "documents")
-        val raw = docs.filter(pmod(col("doc_id"), lit(4L)) =!= 0)
-          .select(col("doc_id").as("src"),
-                  explode(sequence(lit(1), (lit(1L) + pmod(col("doc_id"), lit(2L)))
-                    .cast("int"))).as("k"))
-          .select(col("src"), pmod(col("src") * 3 + col("k"), lit(nRows)).as("dst"))
-        val e = raw.filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"),
-                  greatest(col("src"), col("dst")).as("b"))
-          .distinct()
+        val e = mintedPairs(s, d)
           .repartition(n, col("a"))
           .localCheckpoint(true)
         val deg = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
@@ -424,16 +429,7 @@ object Graph {
       (s, d) => {
         val n = s.sparkContext.defaultParallelism
         val docs = Tables(s, d, "documents").select(col("doc_id"))
-        val nRows = Tables.rowCount(s, d, "documents")
-        val raw = docs.filter(pmod(col("doc_id"), lit(4L)) =!= 0)
-          .select(col("doc_id").as("src"),
-                  explode(sequence(lit(1), (lit(1L) + pmod(col("doc_id"), lit(2L)))
-                    .cast("int"))).as("k"))
-          .select(col("src"), pmod(col("src") * 3 + col("k"), lit(nRows)).as("dst"))
-        val canon = raw.filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"),
-                  greatest(col("src"), col("dst")).as("b"))
-          .distinct()
+        val canon = mintedPairs(s, d)
         val adj = canon.select(col("a").as("u"), col("b").as("w"))
           .unionAll(canon.select(col("b").as("u"), col("a").as("w")))
           .repartition(n, col("u"))
@@ -556,16 +552,7 @@ object Graph {
       (s, d) => {
         val n = s.sparkContext.defaultParallelism
         val docs = Tables(s, d, "documents").select(col("doc_id"))
-        val nRows = Tables.rowCount(s, d, "documents")
-        val raw = docs.filter(pmod(col("doc_id"), lit(4L)) =!= 0)
-          .select(col("doc_id").as("src"),
-                  explode(sequence(lit(1), (lit(1L) + pmod(col("doc_id"), lit(2L)))
-                    .cast("int"))).as("k"))
-          .select(col("src"), pmod(col("src") * 3 + col("k"), lit(nRows)).as("dst"))
-        val canon = raw.filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"),
-                  greatest(col("src"), col("dst")).as("b"))
-          .distinct()
+        val canon = mintedPairs(s, d)
         val adj = canon.select(col("a").as("u"), col("b").as("w"))
           .unionAll(canon.select(col("b").as("u"), col("a").as("w")))
           .repartition(n, col("u"))
@@ -668,17 +655,7 @@ object Graph {
     "graph_mst_boruvka" -> Decl(
       (s, d) => {
         val n = s.sparkContext.defaultParallelism
-        val docs = Tables(s, d, "documents").select(col("doc_id"))
-        val nRows = Tables.rowCount(s, d, "documents")
-        val raw = docs.filter(pmod(col("doc_id"), lit(4L)) =!= 0)
-          .select(col("doc_id").as("src"),
-                  explode(sequence(lit(1), (lit(1L) + pmod(col("doc_id"), lit(2L)))
-                    .cast("int"))).as("k"))
-          .select(col("src"), pmod(col("src") * 3 + col("k"), lit(nRows)).as("dst"))
-        val edges = raw.filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"),
-                  greatest(col("src"), col("dst")).as("b"))
-          .distinct()
+        val edges = mintedPairs(s, d)
           .withColumn("w", pmod(col("a") * 31 + col("b") * 17, lit(997L)))
           .repartition(n, col("a"))
           .localCheckpoint(true)
@@ -689,19 +666,20 @@ object Graph {
         // not O(|E|) (the earlier edges×vertex-label re-join paid the
         // full edge list every round). The vertex table is never needed:
         // the output is the edge set, and labels live on the edges.
-        var cur = edges
-          .select(col("a"), col("b"), col("w"),
-                  col("a").as("ca"), col("b").as("cb"))
-          .localCheckpoint(true)
+        val crossingOf = Seq(count(lit(1)))
+        val (cur0, c0) = Fixpoint.cut(
+          edges.select(col("a"), col("b"), col("w"),
+                       col("a").as("ca"), col("b").as("cb")), crossingOf)
+        var crossing = c0.getLong(0)
         var mst: DataFrame = edges.filter(lit(false))
           .select(col("a"), col("b"), col("w"))
         // chosen-edge frames stay persisted until the final mst
         // materialization (mst's lazy union reads them once more there)
         val pinned = scala.collection.mutable.ArrayBuffer[DataFrame]()
         val bcastRows = 2000000L
-        var rounds = 0
-        var crossing = cur.count()
-        while (crossing > 0 && rounds < 15) {
+        // one round per generation; `done` keeps each generation's
+        // crossing count for the next round's contraction path
+        Fixpoint(cur0, crossingOf, 15, "Borůvka") { cur =>
           // lightest outgoing edge per component, lexicographic (w,a,b);
           // carry the partner component so the chosen set doubles as the
           // contraction's parent function t(g) = partner
@@ -727,8 +705,8 @@ object Graph {
           //    (path-halving; 2-cycle roots at the min endpoint) and
           //    broadcast the root map back: one job, no log-depth chain.
           //  * large rounds (100 TB early rounds) pointer-double
-          //    distributed: two lazy squarings per materialized batch
-          //    with a carried change flag.
+          //    distributed: two lazy squarings per generation with a
+          //    carried change flag.
           val roots: DataFrame =
             if (crossing <= bcastRows) {
               val par = new scala.collection.mutable.HashMap[Long, Long]()
@@ -747,52 +725,37 @@ object Graph {
               broadcast(rows.toDF("g", "r"))
             } else {
               val t0 = chosen.select(col("g"), col("t"))
-              var par = t0.as("x")
+              val par0 = t0.as("x")
                 .join(t0.as("y"), col("x.t") === col("y.g"), "left")
                 .select(col("x.g").as("c"),
                         when(col("y.t") === col("x.g") && col("x.g") < col("x.t"),
                              col("x.g")).otherwise(col("x.t")).as("p"))
-                .persist()
-              var jumping = true
-              var batches = 0
-              while (jumping && batches < 10) {
-                def square(q: DataFrame): DataFrame = q.as("x")
-                  .join(q.as("y"), col("x.p") === col("y.c"), "left")
-                  .select(col("x.c").as("c"),
-                          coalesce(col("y.p"), col("x.p")).as("p"))
-                val q1 = square(par)
-                val p2 = q1.as("x")
+              def square(q: DataFrame): DataFrame = q.as("x")
+                .join(q.as("y"), col("x.p") === col("y.c"), "left")
+                .select(col("x.c").as("c"),
+                        coalesce(col("y.p"), col("x.p")).as("p"))
+              val par = Fixpoint(par0, Seq(count(when(col("ch"), 1))), 10,
+                                 "Borůvka pointer doubling") { q =>
+                val q1 = square(q.select(col("c"), col("p")))
+                q1.as("x")
                   .join(q1.as("y"), col("x.p") === col("y.c"), "left")
                   .select(col("x.c").as("c"),
                           coalesce(col("y.p"), col("x.p")).as("p"),
                           (coalesce(col("y.p"), col("x.p")) =!= col("x.p")).as("ch"))
-                  .persist()
-                jumping = p2.agg(max(col("ch"))).first().getBoolean(0)
-                par = p2.select(col("c"), col("p"))
-                batches += 1
-              }
-              if (jumping) throw new IllegalStateException(
-                s"Borůvka pointer doubling did not converge within $batches batches")
+              }(_.getLong(0) == 0L)
               par.select(col("c").as("g"), col("p").as("r"))
             }
           // relabel surviving edges through the root map and drop the
           // now-intra-component ones permanently; ReuseExchange ships the
           // broadcast once for both sides
-          val prev = cur
-          cur = cur
+          cur
             .join(roots.select(col("g").as("ca"), col("r").as("ra")), Seq("ca"), "left")
             .join(roots.select(col("g").as("cb"), col("r").as("rb")), Seq("cb"), "left")
             .select(col("a"), col("b"), col("w"),
                     coalesce(col("ra"), col("ca")).as("ca"),
                     coalesce(col("rb"), col("cb")).as("cb"))
             .filter(col("ca") =!= col("cb"))
-            .localCheckpoint(true)
-          prev.unpersist()
-          crossing = cur.count()
-          rounds += 1
-        }
-        if (crossing > 0) throw new IllegalStateException(
-          s"Borůvka did not converge within $rounds rounds")
+        } { r => crossing = r.getLong(0); crossing == 0L }
         val out = mst.localCheckpoint(true)
         pinned.foreach(_.unpersist())
         out.orderBy("a", "b")
@@ -914,9 +877,9 @@ object Graph {
         // Superstep latency, not data volume, bounds this operator at test
         // scale (round-10 profile: ~575 stages, 13 s warm from one job per
         // hop). So both fixpoint loops FUSE several hops into each
-        // materialization job (same shuffle count, ~Hops× fewer jobs), and
-        // convergence is read off the LAST hop of the SAME materialization
-        // — min-propagation is monotone, so "the final hop changed
+        // [[Fixpoint]] generation (same shuffle count, ~Hops× fewer jobs),
+        // and convergence is read off the LAST hop of that generation —
+        // min-propagation is monotone, so "the final hop changed
         // nothing" proves the fixpoint with no extra confirm pass. Hops
         // values are latency dials only; correctness is the fixpoint,
         // reached for any value ≥ 1.
@@ -941,105 +904,66 @@ object Graph {
           .distinct()
           .repartition(n, col("src"))
           .localCheckpoint(true)
-        var remaining = edges.select(col("src").as("v"))
+        val endpoints = edges.select(col("src").as("v"))
           .unionAll(edges.select(col("dst").as("v")))
           .distinct()
           .localCheckpoint(true)
-        var scc: DataFrame = remaining.filter(lit(false))
+        var scc: DataFrame = endpoints.filter(lit(false))
           .select(col("v"), col("v").as("scc"))
-        var rounds = 0
-        var left = remaining.count()
-        while (left > 0 && rounds < 12) {
-          // round 0's semi-joins are no-ops (remaining == all endpoints)
+        // one forward min-ancestor coloring hop over `er` (labels flow
+        // along edge direction); `chg` marks the labels the hop lowered
+        def colorStep(er: DataFrame)(cd: DataFrame): DataFrame = {
+          val nbrMin = cd.join(er, col("v") === col("src"))
+            .groupBy(col("dst")).agg(min(col("c")).as("m"))
+          cd.join(nbrMin, col("v") === col("dst"), "left")
+            .select(col("v"),
+                    least(col("c"), coalesce(col("m"), col("c"))).as("c"),
+                    (coalesce(col("m"), col("c")) < col("c")).as("chg"))
+        }
+        // each generation is the vertex set a peel round leaves
+        Fixpoint(endpoints, Seq(count(lit(1))), 12, "SCC peeling") { remaining =>
+          // round 0's semi-joins are no-ops (remaining is every endpoint)
           val er =
-            if (rounds == 0) edges
+            if (remaining eq endpoints) edges
             else edges
               .join(remaining.select(col("v").as("src")), Seq("src"), "left_semi")
               .join(remaining.select(col("v").as("dst")), Seq("dst"), "left_semi")
               .localCheckpoint(true)
-          // forward min-ancestor coloring to fixpoint (labels flow along
-          // edge direction); the fused pass's last hop carries a `chg`
-          // flag, so one tiny agg on the checkpointed step decides
-          // convergence
-          def colorStep(cd: DataFrame, withChg: Boolean): DataFrame = {
-            val nbrMin = cd.join(er, col("v") === col("src"))
-              .groupBy(col("dst")).agg(min(col("c")).as("m"))
-            val j = cd.join(nbrMin, col("v") === col("dst"), "left")
-            if (withChg)
-              j.select(col("v"),
-                       least(col("c"), coalesce(col("m"), col("c"))).as("c"),
-                       (coalesce(col("m"), col("c")) < col("c"))
-                         .cast("long").as("chg"))
-            else
-              j.select(col("v"),
-                       least(col("c"), coalesce(col("m"), col("c"))).as("c"))
-          }
-          var color = remaining.select(col("v"), col("v").as("c"))
-          var converged = false
-          var pass = 0
-          while (!converged && pass < 12) {
-            var cur = color
-            for (_ <- 1 until Hops) cur = colorStep(cur, withChg = false)
-            val step = colorStep(cur, withChg = true).localCheckpoint(true)
-            converged = step
-              .agg(coalesce(sum(col("chg")), lit(0L))).first().getLong(0) == 0L
-            color = step.select(col("v"), col("c"))
-            pass += 1
-          }
-          if (!converged) throw new IllegalStateException(
-            s"SCC coloring fixpoint did not converge within $pass passes")
+          // coloring fixpoint: done when the pass's last hop lowered nothing
+          val colored = Fixpoint(remaining.select(col("v"), col("v").as("c")),
+                                 Seq(count(when(col("chg"), 1))), 12,
+                                 "SCC coloring fixpoint") { color =>
+            (1 to Hops).foldLeft(color)((cd, _) => colorStep(er)(cd))
+          }(_.getLong(0) == 0L)
           // peel: backward sweep from each color's root, restricted to
           // the color (sound: every SCC member shares the root's color
-          // and every v→root path stays inside the SCC). `color` projects
-          // the last fixpoint step, already checkpointed above. Each
-          // fused pass stamps rows with the hop that first found them;
-          // "nothing new at the final hop" proves the frontier is dead
-          // (monotone growth), read in the same tiny agg as the size.
-          val colored = color
+          // and every v→root path stays inside the SCC). Each fused pass
+          // stamps rows with the hop that first found them; "nothing new
+          // at the final hop" proves the frontier is dead (monotone
+          // growth).
           val ce = er
             .join(colored.select(col("v").as("src"), col("c").as("cs")), "src")
             .join(colored.select(col("v").as("dst"), col("c").as("cd")), "dst")
             .filter(col("cs") === col("cd"))
             .select(col("src"), col("dst"), col("cs").as("c"))
             .localCheckpoint(true)
-          var reached = colored.filter(col("v") === col("c"))
-            .select(col("v"), col("c"), lit(0L).as("h"))
-          var grew = true
-          var bp = 0
-          var reachedCnt = 0L
-          while (grew && bp < 12) {
-            var cur = reached
-            for (hh <- 1 to BHops) {
-              val add = ce
-                .join(cur.select(col("v").as("dst"), col("c")),
-                      Seq("dst", "c"), "left_semi")
-                .select(col("src").as("v"), col("c"), lit(hh.toLong).as("h"))
-              cur = cur.unionAll(add)
-                .groupBy("v", "c").agg(min(col("h")).as("h"))
+          val reached = Fixpoint(colored.filter(col("v") === col("c"))
+                                   .select(col("v"), col("c")),
+                                 Seq(count(when(col("h") === BHops, 1))), 12,
+                                 "SCC backward sweep") { prev =>
+            (1 to BHops).foldLeft(prev.select(col("v"), col("c"), lit(0L).as("h"))) {
+              (cur, hh) =>
+                val add = ce
+                  .join(cur.select(col("v").as("dst"), col("c")),
+                        Seq("dst", "c"), "left_semi")
+                  .select(col("src").as("v"), col("c"), lit(hh.toLong).as("h"))
+                cur.unionAll(add)
+                  .groupBy("v", "c").agg(min(col("h")).as("h"))
             }
-            val nxt = cur.localCheckpoint(true)
-            val st = nxt
-              .agg(count(lit(1)),
-                   coalesce(sum((col("h") === BHops).cast("long")), lit(0L)))
-              .first()
-            reachedCnt = st.getLong(0)
-            grew = st.getLong(1) > 0L
-            // reset the stamps so next pass's hop numbers start fresh
-            reached = nxt.select(col("v"), col("c"), lit(0L).as("h"))
-            bp += 1
-          }
-          if (grew) throw new IllegalStateException(
-            s"SCC backward sweep did not converge within $bp passes")
+          }(_.getLong(0) == 0L)
           scc = scc.unionAll(reached.select(col("v"), col("c").as("scc")))
-          remaining = remaining
-            .join(reached.select(col("v")), Seq("v"), "left_anti")
-            .localCheckpoint(true)
-          left -= reachedCnt
-          rounds += 1
-          if (sys.env.contains("GRAFT_SCC_DEBUG")) System.err.println(s"[scc] round=$rounds coloringPasses=$pass backwardPasses=$bp reached=$reachedCnt left=$left")
-        }
-        if (left > 0) throw new IllegalStateException(
-          s"SCC peeling did not converge within $rounds rounds")
+          remaining.join(reached.select(col("v")), Seq("v"), "left_anti")
+        }(_.getLong(0) == 0L)
         // isolated docs (no edges) are their own SCC
         val out = Tables(s, d, "documents")
           .join(scc.select(col("v").as("doc_id"), col("scc")), Seq("doc_id"), "left")
@@ -1152,17 +1076,7 @@ object Graph {
       (s, d) => {
         val n = s.sparkContext.defaultParallelism
         val docs = Tables(s, d, "documents")
-        val nRows = Tables.rowCount(s, d, "documents")
-        val raw = docs.select(col("doc_id"))
-          .filter(pmod(col("doc_id"), lit(4L)) =!= 0)
-          .select(col("doc_id").as("src"),
-                  explode(sequence(lit(1), (lit(1L) + pmod(col("doc_id"), lit(2L)))
-                    .cast("int"))).as("k"))
-          .select(col("src"), pmod(col("src") * 3 + col("k"), lit(nRows)).as("dst"))
-        val e = raw.filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"),
-                  greatest(col("src"), col("dst")).as("b"))
-          .distinct()
+        val e = mintedPairs(s, d)
           .repartition(n, col("a"))
         val lab = docs.select(col("doc_id"), col("source"))
         val labeled = e

@@ -548,55 +548,29 @@ object PipelineExt {
         // labels per round and joining the handful of docs that actually
         // have duplicates). Isolated docs are stitched back at the end with
         // comp = doc_id.
-        var labels = edges.select(col("src").as("doc_id")).distinct()
-          .select(col("doc_id"), col("doc_id").as("comp"))
-        var prev: Option[org.apache.spark.sql.DataFrame] = None
-        var prevSum = java.math.BigDecimal.valueOf(-1L)
-        var changed = true
-        var iter = 0
-        while (changed && iter < 20) {
-          val nbrMin = labels.join(edges, col("doc_id") === col("src"))
+        // One round per Fixpoint generation (a cut, so the plan never
+        // deepens); `chg` marks the labels a round lowered, and the round
+        // that lowers none is the fixpoint. Returning partially-propagated
+        // labels would silently diverge from the recursive-CTE oracle, so
+        // a >20-diameter dedup component throws (the threshold, not the
+        // cap, is wrong then).
+        val labels = Fixpoint(
+            edges.select(col("src").as("doc_id")).distinct()
+              .select(col("doc_id"), col("doc_id").as("comp")),
+            Seq(count(when(col("chg"), 1))), 20, "connected components") { cur =>
+          val nbrMin = cur.join(edges, col("doc_id") === col("src"))
             .groupBy(col("dst")).agg(min(col("comp")).as("nbr_min"))
             .select(col("dst").as("nbr_id"), col("nbr_min"))
-          val step = labels.join(nbrMin, col("doc_id") === col("nbr_id"), "left")
+          cur.join(nbrMin, col("doc_id") === col("nbr_id"), "left")
             .select(col("doc_id"),
-                    least(col("comp"), coalesce(col("nbr_min"), col("comp"))).as("comp"))
-          // Iterative-plan hygiene: without truncation the plan is one join
-          // DEEPER per round (the classic iterative-algorithm killer at
-          // scale), and without unpersist every superseded generation's
-          // blocks pile up for the session lifetime. localCheckpoint every
-          // 5 rounds cuts the lineage; the convergence probe below
-          // materializes the persisted generation before its predecessor is
-          // dropped. (On a multi-executor cluster with dynamic allocation,
-          // swap localCheckpoint for a reliable checkpoint dir.)
-          val next =
-            if (iter % 5 == 4) step.localCheckpoint(true) else step.persist()
-          // Convergence probe: labels only ever DECREASE (min-propagation),
-          // so sum(comp) strictly decreases iff any label changed — one
-          // cheap aggregate per round instead of a join + count. DECIMAL
-          // sum so the probe can't overflow at any corpus size.
-          val sumNow = next
-            .agg(coalesce(sum(col("comp").cast("decimal(38,0)")),
-                          lit(java.math.BigDecimal.ZERO)))
-            .first().getDecimal(0)
-          changed = prevSum.compareTo(sumNow) != 0
-          prevSum = sumNow
-          prev.foreach(_.unpersist())
-          prev = Some(next)
-          labels = next
-          iter += 1
-        }
-        // Returning partially-propagated labels would silently diverge from
-        // the recursive-CTE oracle — fail loudly instead (a >20-diameter
-        // dedup component means the threshold, not the cap, is wrong).
-        if (changed) throw new IllegalStateException(
-          s"connected components did not converge within $iter rounds")
+                    least(col("comp"), coalesce(col("nbr_min"), col("comp"))).as("comp"),
+                    (coalesce(col("nbr_min"), col("comp")) < col("comp")).as("chg"))
+        }(_.getLong(0) == 0L)
         val full = Tables(s, d, "documents")
           .join(labels.select(col("doc_id").as("lid"), col("comp")),
                 col("doc_id") === col("lid"), "left")
           .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("comp"))
         val out = full.localCheckpoint(true)
-        prev.foreach(_.unpersist())
         edges.unpersist()
         out.orderBy("doc_id")
       },

@@ -2148,16 +2148,7 @@ object RelOps {
       (s, d) => {
         val n = s.sparkContext.defaultParallelism
         val docs = Tables(s, d, "documents").select(col("doc_id"))
-        val nRows = Tables.rowCount(s, d, "documents")
-        val raw = docs.filter(pmod(col("doc_id"), lit(4L)) =!= 0)
-          .select(col("doc_id").as("src"),
-                  explode(sequence(lit(1), (lit(1L) + pmod(col("doc_id"), lit(2L)))
-                    .cast("int"))).as("k"))
-          .select(col("src"), pmod(col("src") * 3 + col("k"), lit(nRows)).as("dst"))
-        val canon = raw.filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"),
-                  greatest(col("src"), col("dst")).as("b"))
-          .distinct()
+        val canon = Graph.mintedPairs(s, d)
         val adj = canon.select(col("a").as("src"), col("b").as("dst"))
           .unionAll(canon.select(col("b").as("src"), col("a").as("dst")))
           .repartition(n, col("src"))
@@ -3001,28 +2992,28 @@ object RelOps {
       },
       Some(s"""WITH n AS (SELECT max(c_custkey) AS N FROM customer),
              |raw AS (SELECT c_custkey AS u FROM customer),
-             |ed AS (SELECT DISTINCT least(u, x) AS lo, greatest(u, x) AS hi FROM (
+             |ed AS MATERIALIZED (SELECT DISTINCT least(u, x) AS lo, greatest(u, x) AS hi FROM (
              |  SELECT u, (u % N) + 1 AS x FROM raw, n
              |  UNION ALL SELECT u, ((u*13+5) % N) + 1 FROM raw, n WHERE u % 4 = 0
              |  UNION ALL SELECT u, u + 1 FROM raw WHERE u <= 20
              |  UNION ALL SELECT u, u + 2 FROM raw WHERE u <= 20
              |  UNION ALL SELECT u, u + 3 FROM raw WHERE u <= 20
              |) WHERE u <> x),
-             |d0 AS (SELECT v, count(*) AS c FROM
+             |d0 AS MATERIALIZED (SELECT v, count(*) AS c FROM
              |        (SELECT lo AS v FROM ed UNION ALL SELECT hi FROM ed) GROUP BY v),
-             |e1 AS (SELECT * FROM ed WHERE lo IN (SELECT v FROM d0 WHERE c >= $KCoreK)
+             |e1 AS MATERIALIZED (SELECT * FROM ed WHERE lo IN (SELECT v FROM d0 WHERE c >= $KCoreK)
              |                          AND hi IN (SELECT v FROM d0 WHERE c >= $KCoreK)),
-             |d1 AS (SELECT v, count(*) AS c FROM
+             |d1 AS MATERIALIZED (SELECT v, count(*) AS c FROM
              |        (SELECT lo AS v FROM e1 UNION ALL SELECT hi FROM e1) GROUP BY v),
-             |e2 AS (SELECT * FROM e1 WHERE lo IN (SELECT v FROM d1 WHERE c >= $KCoreK)
+             |e2 AS MATERIALIZED (SELECT * FROM e1 WHERE lo IN (SELECT v FROM d1 WHERE c >= $KCoreK)
              |                          AND hi IN (SELECT v FROM d1 WHERE c >= $KCoreK)),
-             |d2 AS (SELECT v, count(*) AS c FROM
+             |d2 AS MATERIALIZED (SELECT v, count(*) AS c FROM
              |        (SELECT lo AS v FROM e2 UNION ALL SELECT hi FROM e2) GROUP BY v),
-             |e3 AS (SELECT * FROM e2 WHERE lo IN (SELECT v FROM d2 WHERE c >= $KCoreK)
+             |e3 AS MATERIALIZED (SELECT * FROM e2 WHERE lo IN (SELECT v FROM d2 WHERE c >= $KCoreK)
              |                          AND hi IN (SELECT v FROM d2 WHERE c >= $KCoreK)),
-             |d3 AS (SELECT v, count(*) AS c FROM
+             |d3 AS MATERIALIZED (SELECT v, count(*) AS c FROM
              |        (SELECT lo AS v FROM e3 UNION ALL SELECT hi FROM e3) GROUP BY v),
-             |e4 AS (SELECT * FROM e3 WHERE lo IN (SELECT v FROM d3 WHERE c >= $KCoreK)
+             |e4 AS MATERIALIZED (SELECT * FROM e3 WHERE lo IN (SELECT v FROM d3 WHERE c >= $KCoreK)
              |                          AND hi IN (SELECT v FROM d3 WHERE c >= $KCoreK))
              |SELECT peel_round, CAST(n_edges AS BIGINT) AS n_edges,
              |       CAST(n_lo AS BIGINT) AS n_lo,

@@ -49,18 +49,12 @@ object Similarity {
     * planted corpus.
     */
   private[graft] def srpCandidates(emb: org.apache.spark.sql.DataFrame,
-                                   n: Int, bits: Int, multiprobe: Boolean,
-                                   idsPacked: Boolean = true): org.apache.spark.sql.DataFrame = {
+                                   n: Int, bits: Int,
+                                   multiprobe: Boolean): org.apache.spark.sql.DataFrame = {
     // Round-12 narrowing (guide §2.3 — shuffle fewer bytes): the (tbl,
     // bucket) join key packs into ONE bigint (bucket < 2^bits ≤ 2^12), so
-    // the bucket exchange, the hash probe, and the pair dedup all work on
-    // single 8-byte keys; the candidate pair likewise rides one bigint
-    // through the distinct and is decoded once after it. Same rows, same
-    // collision semantics — bk/pr encodings are injective. The pr packing
-    // requires vec_id in [0, 2³¹); callers pass idsPacked = false (checked
-    // against the real id range — see plantedIdsPacked) to ride the pair
-    // on a struct instead: same plan shape, higher constant
-    // (Round11iSpec exercises the fallback with synthetic ≥ 2³¹ ids).
+    // the bucket exchange and the hash probe work on single 8-byte keys.
+    // Same collision semantics — the bk encoding is injective.
     val home = emb.select(col("vec_id"),
       posexplode(PipelineExt.srpTableKeys(PipelineExt.SrpTables, bits))
         .as(Seq("tbl", "bucket")))
@@ -76,38 +70,13 @@ object Similarity {
       }
     val probeK = probeK0.repartition(n, col("bk"))
     val idx = homeK.repartition(n, col("bk"))
-    val joined = probeK.as("a")
+    probeK.as("a")
       .join(idx.as("b").hint("shuffle_hash"),
             col("a.bk") === col("b.bk") &&
             col("a.vec_id") < col("b.vec_id"))
-    if (idsPacked)
-      joined
-        .select((col("a.vec_id") * 4294967296L + col("b.vec_id")).as("pr"))
-        .distinct()
-        .select(expr("pr div 4294967296").as("id_a"),
-                pmod(col("pr"), lit(4294967296L)).as("id_b"))
-    else
-      joined
-        .select(struct(col("a.vec_id").cast("bigint").as("pa"),
-                       col("b.vec_id").cast("bigint").as("pb")).as("pr"))
-        .distinct()
-        .select(col("pr.pa").as("id_a"), col("pr.pb").as("id_b"))
+      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
+      .distinct()
   }
-
-  // Memoized per (session, sf dir): does the PLANTED corpus's id domain
-  // (base ids plus the +1000000 planted copies) fit the [0, 2³¹) bigint
-  // pair packing? One tiny min/max aggregate per session — the one-time
-  // guard that keeps a fixture regeneration from silently corrupting
-  // decoded pairs (round-13 verdict item 7).
-  private[graft] def plantedIdsPacked(s: org.apache.spark.sql.SparkSession,
-                                      d: String): Boolean =
-    graft.Artifacts.memo(("planted_ids_packed", s, d)) {
-      val r = Tables(s, d, "embeddings")
-        .agg(min(col("vec_id").cast("bigint")).as("mn"),
-             max(col("vec_id").cast("bigint")).as("mx")).head()
-      r.isNullAt(0) ||
-        (r.getLong(0) >= 0L && r.getLong(1) + 1000000L < (1L << 31))
-    }
 
   /** 16×64 ±1 sign matrix from the shared LCG recipe (compile-time
     * deterministic, same constant inlined into the oracle SQL). */
@@ -293,8 +262,7 @@ object Similarity {
           if (x <= 1L) 0 else 64 - java.lang.Long.numberOfLeadingZeros(x - 1)
         val bits = math.min(12, math.max(PipelineExt.SrpBitsPerTable,
                                          ceilLog2(nVec / 64)))
-        val pairs = srpCandidates(emb, n, bits, multiprobe = true,
-                                  idsPacked = plantedIdsPacked(s, d))
+        val pairs = srpCandidates(emb, n, bits, multiprobe = true)
         // Round-12: norms once per vector (1 codegen dot per pair instead
         // of 3 — same doubles: dot/(√(a·a)·√(b·b)) either way), and the
         // DECIMAL round runs only on survivors. round(double, 6) is a

@@ -5565,17 +5565,7 @@ object Stats {
     "graph_triangle_count" -> Decl(
       (s, d) => {
         val n = s.sparkContext.defaultParallelism
-        val docs = Tables(s, d, "documents").select(col("doc_id"))
-        val nRows = Tables.rowCount(s, d, "documents")
-        val raw = docs.filter(pmod(col("doc_id"), lit(4L)) =!= 0)
-          .select(col("doc_id").as("src"),
-                  explode(sequence(lit(1), (lit(1L) + pmod(col("doc_id"), lit(2L)))
-                    .cast("int"))).as("k"))
-          .select(col("src"), pmod(col("src") * 3 + col("k"), lit(nRows)).as("dst"))
-        val e = raw.filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"),
-                  greatest(col("src"), col("dst")).as("b"))
-          .distinct()
+        val e = Graph.mintedPairs(s, d)
           .repartition(n, col("a"))
           .localCheckpoint(true)
         val tri = e.as("e1")
@@ -5805,16 +5795,7 @@ object Stats {
       (s, d) => {
         val n = s.sparkContext.defaultParallelism
         val docs = Tables(s, d, "documents").select(col("doc_id"))
-        val nRows = Tables.rowCount(s, d, "documents")
-        val raw = docs.filter(pmod(col("doc_id"), lit(4L)) =!= 0)
-          .select(col("doc_id").as("src"),
-                  explode(sequence(lit(1), (lit(1L) + pmod(col("doc_id"), lit(2L)))
-                    .cast("int"))).as("k"))
-          .select(col("src"), pmod(col("src") * 3 + col("k"), lit(nRows)).as("dst"))
-        val canon = raw.filter(col("src") =!= col("dst"))
-          .select(least(col("src"), col("dst")).as("a"),
-                  greatest(col("src"), col("dst")).as("b"))
-          .distinct()
+        val canon = Graph.mintedPairs(s, d)
         val adj = canon.select(col("a").as("src"), col("b").as("dst"))
           .unionAll(canon.select(col("b").as("src"), col("a").as("dst")))
           .repartition(n, col("src"))

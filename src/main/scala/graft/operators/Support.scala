@@ -147,6 +147,62 @@ object PrefixSum {
   }
 }
 
+/** One runner for the data-dependent loops (BFS frontiers, SCC coloring and
+  * peeling, Borůvka rounds, pointer doubling, connected components).
+  *
+  * Each generation is `step(previous)` cut eagerly with `localCheckpoint`,
+  * so a loop's plan never grows deeper than one step. The convergence test
+  * rides in that cut's own job: `probe` (aggregate columns) is computed by
+  * `Dataset.observe`, and `done` reads the probe row, so testing for
+  * convergence starts no job of its own (no `isEmpty`, `count()` or
+  * `.first()` after the cut). Once a generation is cut, the one it
+  * supersedes is released (its checkpoint blocks unpersisted), so nothing
+  * may read a generation lazily after its step returns except that step's
+  * own output. `init` belongs to the caller and is never released; the
+  * returned generation stays alive.
+  */
+object Fixpoint {
+  import org.apache.spark.sql.{Column, DataFrame, Row}
+  import org.apache.spark.sql.execution.LogicalRDD
+  import org.apache.spark.sql.functions.{count, lit}
+  import org.apache.spark.sql.graft.Bridge
+
+  /** Iterate `step` from `init` until `done` accepts a generation's probe
+    * row; returns that generation. `step` runs at least once. A loop not
+    * done after `maxPasses` steps throws an `IllegalStateException` naming
+    * `what` and the pass count.
+    */
+  def apply(init: DataFrame, probe: Seq[Column], maxPasses: Int, what: String)
+           (step: DataFrame => DataFrame)(done: Row => Boolean): DataFrame = {
+    @annotation.tailrec
+    def run(prev: DataFrame, pass: Int): DataFrame = {
+      if (pass == maxPasses) throw new IllegalStateException(
+        s"$what did not converge within $maxPasses passes")
+      val (gen, row) = cut(step(prev), probe)
+      if (pass > 0) release(prev)
+      if (done(row)) gen else run(gen, pass + 1)
+    }
+    run(init, 0)
+  }
+
+  /** One generation: `df` cut eagerly, with `probe` computed in the cut's
+    * own job. `localCheckpoint` runs on the observed plan's own
+    * `QueryExecution`, so its observed metrics are final when the cut
+    * returns. The same job counts the generation's rows, and the cut
+    * carries that count as its statistics (see `Bridge.measured`). */
+  def cut(df: DataFrame, probe: Seq[Column]): (DataFrame, Row) = {
+    val observed = df.observe("fixpoint_probe", count(lit(1)), probe: _*)
+    val gen = observed.localCheckpoint(true)
+    val row = observed.queryExecution.observedMetrics("fixpoint_probe")
+    (Bridge.measured(gen, row.getLong(0)), Row.fromSeq(row.toSeq.tail))
+  }
+
+  private def release(gen: DataFrame): Unit = gen.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
+  }
+}
+
 /** Skew-salted equi-join — the standard remedy when a shuffle join's key
   * distribution has hot keys (a handful of values carrying most rows), so
   * hash-partitioning on the key alone would pile those rows onto a few

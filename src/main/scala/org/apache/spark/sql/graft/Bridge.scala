@@ -21,4 +21,20 @@ object Bridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `cut` (a `localCheckpoint` result) with the optimizer's statistics
+    * set to its measured row count. A checkpoint otherwise keeps the
+    * estimate of the plan it cut, so a loop whose step joins each
+    * generation with itself compounds that estimate every generation until
+    * planning stalls in the size arithmetic. */
+  def measured(cut: org.apache.spark.sql.DataFrame, rows: Long): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.Statistics
+    import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+    val r = cut.queryExecution.logical.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    val stats = Statistics(sizeInBytes = EstimationUtils.getSizePerRow(r.output) * rows,
+                           rowCount = Some(BigInt(rows)))
+    ofRows(cut.sparkSession, r.copy()(
+      cut.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      Some(stats), Some(r.constraints)))
+  }
 }

@@ -1,0 +1,83 @@
+package graft
+
+import graft.operators.Fixpoint
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** `Fixpoint`: a loop that never converges throws at its pass cap,
+  * naming the loop; the convergence probe rides in the cut's own job; and
+  * superseded generations are released, so persisted RDDs do not pile up
+  * across passes.
+  */
+class FixpointSpec extends AnyFunSuite with SharedSpark {
+
+  test("a loop that never converges throws at maxPasses, naming the loop") {
+    var steps = 0
+    val e = intercept[IllegalStateException] {
+      Fixpoint(spark.range(8).toDF("v"), Seq(count(lit(1))), 3, "spinning loop") { g =>
+        steps += 1
+        g.select((col("v") + 1).as("v"))
+      }(_ => false)
+    }
+    assert(e.getMessage.contains("spinning loop"), e.getMessage)
+    assert(e.getMessage.contains("3 passes"), e.getMessage)
+    assert(steps == 3)
+  }
+
+  test("a generation with a probe starts no more jobs than the bare cut") {
+    val input = spark.range(0, 2000, 1, 4).toDF("v").localCheckpoint(true)
+    def gen: DataFrame = input.groupBy((col("v") % 17).as("k"))
+      .agg(count(lit(1)).as("n"))
+    // jobs started while `body` runs, counted between two canary jobs: the
+    // listener bus is FIFO, so once the closing canary's jobs land, every
+    // job `body` started has been counted (canary pattern of Round11pSpec)
+    def jobsOf(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val canary = new java.util.concurrent.atomic.AtomicInteger(0)
+      val Canary = "graft-fixpoint-canary"
+      val tStart = System.currentTimeMillis()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (js.time >= tStart) {
+            val desc = Option(js.properties)
+              .map(_.getProperty("spark.job.description", "")).getOrElse("")
+            if (desc == Canary) canary.incrementAndGet() else jobs.incrementAndGet()
+          }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        body
+        spark.sparkContext.setJobDescription(Canary)
+        try spark.range(1).count()
+        finally spark.sparkContext.setJobDescription(null)
+        val deadline = System.currentTimeMillis() + 30000
+        while (canary.get() < 1 && System.currentTimeMillis() < deadline)
+          Thread.sleep(50)
+        assert(canary.get() >= 1, "canary never ran — listener broken")
+        jobs.get()
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val bare = jobsOf(gen.localCheckpoint(true))
+    var row: org.apache.spark.sql.Row = null
+    val probed = jobsOf { row = Fixpoint.cut(gen, Seq(count(lit(1)), sum(col("n"))))._2 }
+    assert(bare >= 1)
+    assert(probed <= bare, s"probed cut ran $probed jobs, bare cut $bare")
+    assert(row.getLong(0) == 17L && row.getLong(1) == 2000L, s"probe row $row")
+  }
+
+  test("persisted RDDs do not grow across passes") {
+    val sizes = scala.collection.mutable.ArrayBuffer[Int]()
+    val last = Fixpoint(spark.range(0, 8, 1, 4).toDF("v"),
+                        Seq(max(col("v"))), 20, "shrinking loop") { g =>
+      sizes += spark.sparkContext.getPersistentRDDs.size
+      g.filter(col("v") > 0).select((col("v") - 1).as("v"))
+    }(_.getLong(0) == 0L)
+    assert(last.collect().map(_.getLong(0)).toSeq == Seq(0L))
+    assert(sizes.size == 7, s"passes: ${sizes.size}")
+    // from the second step on, each step sees exactly one live generation
+    assert(sizes.drop(2).forall(_ <= sizes(1)),
+           s"persisted RDDs per pass: ${sizes.mkString(", ")}")
+  }
+}
