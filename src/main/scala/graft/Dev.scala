@@ -8,6 +8,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
   SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool (not library surface) over the bench session (`LocalSpark`):
@@ -19,9 +20,10 @@ import org.apache.spark.sql.execution.ExplainMode
   *   prof <keys...>
   *     runs each key twice in one session — cold (planning, codegen
   *     compile, JIT, broadcast setup) against warm (steady-state
-  *     execution) — printing each run's task CPU, wall time, jobs and
-  *     codegen compiles, and lists the warm run's five costliest stages
-  *     (max ≫ total/tasks means one straggler task).
+  *     execution) — printing each run's task CPU, wall time, jobs,
+  *     codegen compiles and their compile milliseconds, and lists the
+  *     warm run's five costliest stages (max ≫ total/tasks means one
+  *     straggler task).
   *
   * `sbt "runMain graft.Dev prof tpch_q8"`; the sf dir comes from
   * `SPARK_GRAFT_SF_DIR` and defaults to Bench's (sf0.1).
@@ -103,14 +105,19 @@ object Dev {
         LocalSpark.drainBus(spark)
         jobs = 0; cpuNanos = 0L; perStage.clear(); stages.clear()
         val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val compileNs0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
         LocalSpark.drainBus(spark)
         val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+        // the exact compile-time counter: the metric histogram keeps only a
+        // decaying sample of its values, so its sum drifts once a session
+        // has compiled more classes than the sample holds
+        val compileMs = (CodeGenerator.compileTime - compileNs0) / 1000000L
         spark.catalog.clearCache()
         println(f"[prof] $name%-30s $run cpu=${cpuNanos / 1e9}%.2fs wall=$wall%.2fs " +
-                s"jobs=$jobs compiles=$compiles")
+                s"jobs=$jobs compiles=$compiles compile_ms=$compileMs")
       }
       stages.sortBy(-_._3).take(5).foreach { case (id, n, tot, mx) =>
         println(f"[prof]   stage $id%4d tasks=$n%3d total=${tot / 1e3}%.2fs max=${mx / 1e3}%.2fs")

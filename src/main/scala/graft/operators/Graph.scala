@@ -54,36 +54,53 @@ object Graph {
       .distinct()
   }
 
-  /** All-pairs BFS distances over `edges(src, dst)`: dist(v, u, dd) for
-    * every u reachable from v, seeded with (v, v, 0) for every endpoint.
-    * Semi-naive: the state is one relation (v, u, dd, fr) whose flag `fr`
+  /** [[mintedPairs]] in both directions as `(src, dst)`, hash-partitioned
+    * by `src` and cut: the adjacency the traversals of the minted doc graph
+    * join their frontiers against.
+    */
+  private[operators] def undirected(s: SparkSession, d: String): DataFrame = {
+    val canon = mintedPairs(s, d)
+    canon.select(col("a").as("src"), col("b").as("dst"))
+      .unionAll(canon.select(col("b").as("src"), col("a").as("dst")))
+      .repartition(s.sparkContext.defaultParallelism, col("src"))
+      .localCheckpoint(true)
+  }
+
+  /** Multi-source BFS distances over `edges(src, dst)`: `(s, v, dd)` for
+    * every vertex v reachable from source s, where `seeds(s, v)` are the
+    * distinct pairs at distance 0 (a source may start from many vertices:
+    * one virtual source over a seed set is `(lit(0), v)`). Pass `edges`
+    * cut and hash-partitioned by `src`, as [[undirected]] returns them:
+    * every hop reads them once.
+    *
+    * Semi-naive: the state is one relation (s, v, dd, fr) whose flag `fr`
     * marks the frontier (the pairs first reached at the previous hop).
     * Each hop expands only the frontier by one edge, keeps the pairs the
-    * state does not hold yet as the new frontier, and is one
-    * [[Fixpoint]] generation hash-partitioned by (v, u), the anti-join's
-    * key; it stops when a hop finds nothing, and throws after 96 hops.
-    * Every hop plans the same shape (no per-hop literal), so later hops
-    * reuse the first hop's generated code.
+    * state does not hold yet as the new frontier, and is one [[Fixpoint]]
+    * generation hash-partitioned by (s, v), the anti-join's key. Every hop
+    * plans the same shape (no per-hop literal), so later hops reuse the
+    * first hop's generated code. With `hops = Some(h)` the search stops
+    * after hop h (the sampled keys' depth cap); with `None` it runs until a
+    * hop reaches nothing and throws after 96 hops.
     */
-  private[graft] def closenessDist(edges: DataFrame): DataFrame = {
+  private[graft] def bfs(edges: DataFrame, seeds: DataFrame,
+                         hops: Option[Int] = None): DataFrame = {
     val n = edges.sparkSession.sparkContext.defaultParallelism
-    val e = edges.repartition(n, col("src")).localCheckpoint(true)
-    val seed = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
-      .distinct()
-      .select(col("v"), col("v").as("u"), lit(0L).as("dd"), lit(true).as("fr"))
-      .repartition(n, col("v"), col("u"))
+    val seed = seeds
+      .select(col("s"), col("v"), lit(0L).as("dd"), lit(true).as("fr"))
+      .repartition(n, col("s"), col("v"))
       .localCheckpoint(true)
-    val dist = Fixpoint(seed, Seq(count(when(col("fr"), 1))), 96,
-                        "closeness BFS") { st =>
-      val found = st.filter(col("fr")).join(e, col("u") === col("src"))
-        .groupBy(col("v"), col("dst").as("u"))
+    val dist = Fixpoint(seed, Seq(count(when(col("fr"), 1))), hops.getOrElse(96),
+                        "BFS") { st =>
+      val found = st.filter(col("fr")).join(edges, col("v") === col("src"))
+        .groupBy(col("s"), col("dst").as("v"))
         .agg(min(col("dd") + 1).as("dd"))
-        .join(st, Seq("v", "u"), "left_anti")
-      st.select(col("v"), col("u"), col("dd"), lit(false).as("fr"))
-        .unionAll(found.select(col("v"), col("u"), col("dd"), lit(true).as("fr")))
-        .repartition(n, col("v"), col("u"))
-    }(_.getLong(0) == 0L)
-    dist.select(col("v"), col("u"), col("dd"))
+        .join(st, Seq("s", "v"), "left_anti")
+      st.select(col("s"), col("v"), col("dd"), lit(false).as("fr"))
+        .unionAll(found.select(col("s"), col("v"), col("dd"), lit(true).as("fr")))
+        .repartition(n, col("s"), col("v"))
+    }((r, pass) => r.getLong(0) == 0L || hops.contains(pass))
+    dist.select(col("s"), col("v"), col("dd"))
   }
 
   val decls: Map[String, Decl] = declMap(
@@ -422,40 +439,23 @@ object Graph {
     // depth ≤ 4, on the minted doc graph: per node Σ 1/d(s, v) over the
     // sampled sources. EXACT-RATIONAL TRICK: with d ∈ {1,2,3,4} the
     // contribution 12/d is an INTEGER — the whole accumulation stays
-    // BIGINT twelfths until one terminal division. Multi-source BFS keyed
-    // (src, v): per hop one adjacency join + one anti join against the
-    // seen set; the oracle is DuckDB's native recursive CTE.
+    // BIGINT twelfths until one terminal division. `bfs` from the sampled
+    // sources, capped at 4 hops: per hop one adjacency join + one anti
+    // join against the seen pairs; the oracle is DuckDB's native
+    // recursive CTE.
     "graph_harmonic_sampled" -> Decl(
       (s, d) => {
-        val n = s.sparkContext.defaultParallelism
-        val docs = Tables(s, d, "documents").select(col("doc_id"))
-        val canon = mintedPairs(s, d)
-        val adj = canon.select(col("a").as("u"), col("b").as("w"))
-          .unionAll(canon.select(col("b").as("u"), col("a").as("w")))
-          .repartition(n, col("u"))
-          .localCheckpoint(true)
-        var seen = docs.filter(pmod(col("doc_id"), lit(97L)) === 0)
-          .select(col("doc_id").as("s"), col("doc_id").as("v"), lit(0L).as("dist"))
-        var frontier = seen
-        (1 to 4).foreach { i =>
-          val next = adj.join(frontier, adj("u") === frontier("v"))
-            .select(col("s"), col("w").as("v")).distinct()
-            .join(seen.select(col("s").as("s2"), col("v").as("v2")),
-                  col("s") === col("s2") && col("v") === col("v2"), "left_anti")
-            .select(col("s"), col("v"), lit(i.toLong).as("dist"))
-            .localCheckpoint(true)
-          seen = seen.unionAll(next).localCheckpoint(true)
-          frontier = next
-        }
-        val out = seen.filter(col("dist") >= 1L)
+        val sources = Tables(s, d, "documents").select(col("doc_id"))
+          .filter(pmod(col("doc_id"), lit(97L)) === 0)
+        bfs(undirected(s, d), sources.select(col("doc_id").as("s"), col("doc_id").as("v")),
+            Some(4))
+          .filter(col("dd") >= 1L)
           .groupBy("v")
           .agg(count(lit(1)).as("n_sources"),
-               sum(expr("12L div dist")).as("harmonic12"))
+               sum(expr("12L div dd")).as("harmonic12"))
           .select(col("v").as("doc_id"), col("n_sources"), col("harmonic12"),
                   round(col("harmonic12").cast("double") / 12.0d, 6).as("harmonic"))
           .orderBy("doc_id")
-        adj.unpersist()
-        out
       },
       Some("""WITH RECURSIVE nn AS (SELECT count(*) AS ni FROM documents),
              |raw AS (SELECT doc_id AS src, (doc_id * 3 + t.k) % nn.ni AS dst
@@ -534,12 +534,14 @@ object Graph {
     // horizon). The last flagship centrality the graph family lacked: which
     // nodes sit ON the shortest paths, not merely near things.
     //
-    // Scale shape: the forward pass is the harmonic key's multi-source BFS
-    // keyed (src, v) — per hop one adjacency join + one anti-join, σ path
-    // counts aggregated as exact BIGINTs with map-side combine; the
-    // backward pass walks the ≤4 retained levels, each step one
-    // level-to-level join. Nothing all-pairs; per-hop work is O(frontier
-    // edges · sample size).
+    // Scale shape: the forward pass is `bfs`'s frontier search keyed
+    // (s, v) with σ path counts carried alongside — per hop one adjacency
+    // join + one anti-join, σ aggregated as exact BIGINTs with map-side
+    // combine. σ stays out of `bfs` itself: its uncapped runs (96 hops of
+    // closeness) could overflow a LONG sum under ANSI. The backward pass
+    // walks the ≤4 levels of the forward state (level i is dd = i), each
+    // step one level-to-level join. Nothing all-pairs; per-hop work is
+    // O(frontier edges · sample size).
     //
     // Float determinism: path-count ratios are the one unavoidable float —
     // every δ fold and the final per-node accumulation run over
@@ -551,66 +553,56 @@ object Graph {
     "graph_betweenness_sampled" -> Decl(
       (s, d) => {
         val n = s.sparkContext.defaultParallelism
-        val docs = Tables(s, d, "documents").select(col("doc_id"))
-        val canon = mintedPairs(s, d)
-        val adj = canon.select(col("a").as("u"), col("b").as("w"))
-          .unionAll(canon.select(col("b").as("u"), col("a").as("w")))
-          .repartition(n, col("u"))
+        val adj = undirected(s, d)
+        // forward: (s, v, dd, sigma) for dist(s, v) = dd ≤ 4, `fr` flagging
+        // the frontier
+        val level0 = Tables(s, d, "documents").select(col("doc_id"))
+          .filter(pmod(col("doc_id"), lit(97L)) === 0)
+          .select(col("doc_id").as("s"), col("doc_id").as("v"), lit(0L).as("dd"),
+                  lit(1L).as("sigma"), lit(true).as("fr"))
+          .repartition(n, col("s"), col("v"))
           .localCheckpoint(true)
+        val fwd = Fixpoint(level0, Seq(count(when(col("fr"), 1))), 4,
+                           "betweenness forward sweep") { st =>
+          val found = st.filter(col("fr")).join(adj, col("v") === col("src"))
+            .groupBy(col("s"), col("dst").as("v"))
+            .agg(min(col("dd") + 1).as("dd"), sum(col("sigma")).as("sigma"))
+            .join(st, Seq("s", "v"), "left_anti")
+          st.select(col("s"), col("v"), col("dd"), col("sigma"), lit(false).as("fr"))
+            .unionAll(found.select(col("s"), col("v"), col("dd"), col("sigma"),
+                                   lit(true).as("fr")))
+            .repartition(n, col("s"), col("v"))
+        }((r, pass) => r.getLong(0) == 0L || pass == 4)
+        def level(i: Int): DataFrame =
+          fwd.filter(col("dd") === i).select(col("s"), col("v"), col("sigma"))
 
-        // forward: levels(i) = (s, v, sigma) for dist(s, v) = i
-        val level0 = docs.filter(pmod(col("doc_id"), lit(97L)) === 0)
-          .select(col("doc_id").as("s"), col("doc_id").as("v"),
-                  lit(1L).as("sigma"))
-          .localCheckpoint(true)
-        val levels = scala.collection.mutable.ArrayBuffer(level0)
-        var seen = level0.select(col("s"), col("v"))
-        (1 to 4).foreach { _ =>
-          val fr = levels.last
-          val next = adj.join(fr, adj("u") === fr("v"))
-            .groupBy(col("s"), col("w").as("v2"))
-            .agg(sum(col("sigma")).as("sigma"))
-            .join(seen.select(col("s").as("s2"), col("v").as("vs")),
-                  col("s") === col("s2") && col("v2") === col("vs"), "left_anti")
-            .select(col("s"), col("v2").as("v"), col("sigma"))
-            .localCheckpoint(true)
-          levels += next
-          seen = seen.unionAll(next.select(col("s"), col("v")))
-            .localCheckpoint(true)
-        }
-
-        // backward: delta(depth 4) = 0; walk levels down, one join each
-        val withDelta: DataFrame =
-          levels(4).withColumn("delta", lit(0.0d)) // deepest layer
-        val deltas = scala.collection.mutable.ArrayBuffer(withDelta)
-        (3 to 1 by -1).foreach { i =>
-          val upper = deltas.last
-            .select(col("s").as("su"), col("v").as("wv"),
-                    col("sigma").as("sig_w"), col("delta").as("d_w"))
-          val contribs = adj.join(upper, adj("w") === upper("wv"))
-            .select(col("su").as("s"), col("u").as("v"), col("wv"),
-                    col("sig_w"), col("d_w"))
-          val lvl = levels(i)
-          val dd = lvl.join(contribs, Seq("s", "v"), "left")
-            .select(col("s"), col("v"), col("sigma"),
-                    when(col("wv").isNull, lit(null))
-                      .otherwise(struct(col("wv"),
-                        (col("sigma").cast("double") / col("sig_w")) *
-                          (lit(1.0d) + col("d_w"))))
-                      .as("cell"))
-            .groupBy("s", "v", "sigma")
-            .agg(expr("aggregate(array_sort(collect_list(cell)), " +
-                      "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.col2)")
-                   .as("delta"))
-            .localCheckpoint(true)
-          deltas += dd
+        // backward: delta = 0 at depth 4; each level below folds its
+        // successors' contributions, one cut per level
+        val deltas = (3 to 1 by -1).scanLeft(level(4).withColumn("delta", lit(0.0d))) {
+          (below, i) =>
+            val upper = below
+              .select(col("s").as("su"), col("v").as("wv"),
+                      col("sigma").as("sig_w"), col("delta").as("d_w"))
+            val contribs = adj.join(upper, col("dst") === col("wv"))
+              .select(col("su").as("s"), col("src").as("v"), col("wv"),
+                      col("sig_w"), col("d_w"))
+            Fixpoint.cut(level(i).join(contribs, Seq("s", "v"), "left")
+              .select(col("s"), col("v"), col("sigma"),
+                      when(col("wv").isNull, lit(null))
+                        .otherwise(struct(col("wv"),
+                          (col("sigma").cast("double") / col("sig_w")) *
+                            (lit(1.0d) + col("d_w"))))
+                        .as("cell"))
+              .groupBy("s", "v", "sigma")
+              .agg(expr("aggregate(array_sort(collect_list(cell)), " +
+                        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.col2)")
+                     .as("delta")), Nil)._1
         }
 
         // betweenness(v) = Σ over sources of δ(s, v), v ≠ s — sorted fold
-        val allDeltas = deltas.toSeq.map(_.select(col("s"), col("v"), col("delta")))
+        deltas.map(_.select(col("s"), col("v"), col("delta")))
           .reduce(_ unionAll _)
           .filter(col("s") =!= col("v") && col("delta") > 0.0d)
-        val out = allDeltas
           .groupBy("v")
           .agg(count(lit(1)).as("n_sources"),
                expr("round(aggregate(array_sort(collect_list(struct(s, delta))), " +
@@ -618,8 +610,6 @@ object Graph {
                  .as("betweenness"))
           .select(col("v").as("doc_id"), col("n_sources"), col("betweenness"))
           .orderBy("doc_id")
-        adj.unpersist() // levels/deltas are eagerly checkpointed above
-        out
       },
       None),
 
@@ -742,7 +732,7 @@ object Graph {
                   .select(col("x.c").as("c"),
                           coalesce(col("y.p"), col("x.p")).as("p"),
                           (coalesce(col("y.p"), col("x.p")) =!= col("x.p")).as("ch"))
-              }(_.getLong(0) == 0L)
+              }((r, _) => r.getLong(0) == 0L)
               par.select(col("c").as("g"), col("p").as("r"))
             }
           // relabel surviving edges through the root map and drop the
@@ -755,7 +745,7 @@ object Graph {
                     coalesce(col("ra"), col("ca")).as("ca"),
                     coalesce(col("rb"), col("cb")).as("cb"))
             .filter(col("ca") =!= col("cb"))
-        } { r => crossing = r.getLong(0); crossing == 0L }
+        } { (r, _) => crossing = r.getLong(0); crossing == 0L }
         val out = mst.localCheckpoint(true)
         pinned.foreach(_.unpersist())
         out.orderBy("a", "b")
@@ -934,7 +924,7 @@ object Graph {
                                  Seq(count(when(col("chg"), 1))), 12,
                                  "SCC coloring fixpoint") { color =>
             (1 to Hops).foldLeft(color)((cd, _) => colorStep(er)(cd))
-          }(_.getLong(0) == 0L)
+          }((r, _) => r.getLong(0) == 0L)
           // peel: backward sweep from each color's root, restricted to
           // the color (sound: every SCC member shares the root's color
           // and every v→root path stays inside the SCC). Each fused pass
@@ -960,10 +950,10 @@ object Graph {
                 cur.unionAll(add)
                   .groupBy("v", "c").agg(min(col("h")).as("h"))
             }
-          }(_.getLong(0) == 0L)
+          }((r, _) => r.getLong(0) == 0L)
           scc = scc.unionAll(reached.select(col("v"), col("c").as("scc")))
           remaining.join(reached.select(col("v")), Seq("v"), "left_anti")
-        }(_.getLong(0) == 0L)
+        }((r, _) => r.getLong(0) == 0L)
         // isolated docs (no edges) are their own SCC
         val out = Tables(s, d, "documents")
           .join(scc.select(col("v").as("doc_id"), col("scc")), Seq("doc_id"), "left")
@@ -1163,7 +1153,7 @@ object Graph {
     // expression tree in both engines (the oracle walks the same BFS as
     // a recursive CTE and aggregates min distances).
     //
-    // Scale shape: `closenessDist`'s semi-naive frontier BFS — each hop
+    // Scale shape: `bfs`'s semi-naive frontier search — each hop
     // joins only the newly reached pairs to the single-hop edges, so a hub
     // of degree k costs k rows per frontier pair, never the k² of a
     // squared edge relation. Pair state is bounded by reachability
@@ -1173,14 +1163,19 @@ object Graph {
 
     "graph_closeness_exact" -> Decl(
       (s, d) => {
-        val dist = closenessDist(blockEdges(s, d))
+        val e = blockEdges(s, d)
+          .repartition(s.sparkContext.defaultParallelism, col("src"))
+          .localCheckpoint(true)
+        val endpoints = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
+          .distinct()
+        val dist = bfs(e, endpoints.select(col("v").as("s"), col("v")))
         val nDocs = Tables.rowCount(s, d, "documents")
-        val per = dist.filter(col("u") =!= col("v"))
-          .groupBy("v")
+        val per = dist.filter(col("s") =!= col("v"))
+          .groupBy("s")
           .agg(count(lit(1)).as("reach"), sum(col("dd")).as("dsum"))
         Tables(s, d, "documents")
           .select(col("doc_id"))
-          .join(per.select(col("v").as("doc_id"), col("reach"), col("dsum")),
+          .join(per.select(col("s").as("doc_id"), col("reach"), col("dsum")),
                 Seq("doc_id"), "left")
           .select(col("doc_id"),
                   coalesce(col("reach"), lit(0L)).as("reach"),

@@ -565,7 +565,7 @@ object PipelineExt {
             .select(col("doc_id"),
                     least(col("comp"), coalesce(col("nbr_min"), col("comp"))).as("comp"),
                     (coalesce(col("nbr_min"), col("comp")) < col("comp")).as("chg"))
-        }(_.getLong(0) == 0L)
+        }((r, _) => r.getLong(0) == 0L)
         val full = Tables(s, d, "documents")
           .join(labels.select(col("doc_id").as("lid"), col("comp")),
                 col("doc_id") === col("lid"), "left")

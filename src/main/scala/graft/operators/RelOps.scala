@@ -1189,7 +1189,7 @@ object RelOps {
     // decontaminate/threshold pattern) and folds it into the teleport
     // floor. Same scale shape as graph_pagerank: edges derived once,
     // hash-partitioned on src, persisted; one dst-keyed shuffle per
-    // iteration; rank state checkpointed at the loop midpoint. The
+    // iteration; rank state cut every step (a `Fixpoint` pass). The
     // no-in-link case is covered too (nodes re-enter via LEFT join from
     // the node table, not from the edge aggregate).
     "graph_pagerank_dangling" -> Decl(
@@ -1209,29 +1209,23 @@ object RelOps {
                   pmod(col("src") * 3 + col("k"), lit(nRows)).as("dst"))
           .repartition(s.sparkContext.defaultParallelism, col("src"))
           .persist()
-        var pr = docs.select(col("doc_id"), lit(1.0 / n).as("r"))
-        (1 to 10).foreach { i =>
+        // each step reads the rank state TWICE (dangling aggregate +
+        // in-link propagation), so untruncated lineage doubles per step (a
+        // mid-loop cut alone left 16 MiB task binaries by step 10): every
+        // step is a cut (one row per node, KBs at bench scale)
+        val pr = Fixpoint(docs.select(col("doc_id"), lit(1.0 / n).as("r")), Nil, 10,
+                          "dangling PageRank") { pr =>
           val dm = pr.filter(pmod(col("doc_id"), lit(4L)) === 0)
             .agg(sum(col("r")).as("dm"))
           val inl = pr.join(e, pr("doc_id") === e("src"))
             .groupBy(col("dst"))
             .agg(sum(col("r") / col("outdeg")).as("acc"))
-          val prev = pr
-          // Unlike graph_pagerank, each step reads pr TWICE (dangling
-          // aggregate + in-link propagation), so untruncated lineage
-          // DOUBLES per iteration — a mid-loop checkpoint still left
-          // 16 MiB task binaries by iteration 10. Truncate every step
-          // (the rank state is one row per node, KBs at bench scale) and
-          // drop the superseded generation's storage once the new one is
-          // materialized.
-          pr = nodes.join(inl, col("nid") === col("dst"), "left")
+          nodes.join(inl, col("nid") === col("dst"), "left")
             .crossJoin(broadcast(dm))
             .select(col("nid").as("doc_id"),
                     (lit(0.15 / n) + lit(0.85) *
                       (coalesce(col("acc"), lit(0.0)) + col("dm") / n)).as("r"))
-            .localCheckpoint()
-          if (i > 1) prev.unpersist()
-        }
+        }((_, pass) => pass == 10)
         // every generation is materialized, so the edges are dead weight
         e.unpersist()
         pr.select(col("doc_id"), round(col("r") * n, 6).as("rank_norm"))
@@ -2138,37 +2132,19 @@ object RelOps {
 
     // Layered BFS from a seed set over the shared deterministic graph —
     // the reachability/impact query (``which docs sit within 4 hops of
-    // the flagged set?``). Frontier-at-a-time: each hop is ONE src-keyed
-    // join against the checkpointed adjacency plus an anti-join against
-    // the visited set, so per-hop work is O(frontier edges), never
-    // all-pairs; distances are small integers and the oracle unrolls the
-    // same four hops as CTEs. The adjacency is built once (the LPA/
-    // triangle pattern: explicit repartition + localCheckpoint).
+    // the flagged set?``). `Graph.bfs` with the flagged set as one virtual
+    // source, capped at 4 hops: each hop is ONE src-keyed join against the
+    // cut adjacency plus an anti-join against the visited set, so per-hop
+    // work is O(frontier edges), never all-pairs; distances are small
+    // integers and the oracle unrolls the same four hops as CTEs.
     "graph_bfs_layers" -> Decl(
       (s, d) => {
-        val n = s.sparkContext.defaultParallelism
-        val docs = Tables(s, d, "documents").select(col("doc_id"))
-        val canon = Graph.mintedPairs(s, d)
-        val adj = canon.select(col("a").as("src"), col("b").as("dst"))
-          .unionAll(canon.select(col("b").as("src"), col("a").as("dst")))
-          .repartition(n, col("src"))
-          .localCheckpoint(true)
-        var dist = docs.filter(pmod(col("doc_id"), lit(97L)) === 0)
-          .select(col("doc_id").as("v"), lit(0).as("dist"))
-        var frontier = dist
-        (1 to 4).foreach { i =>
-          val next = adj.join(frontier, adj("src") === frontier("v"))
-            .select(col("dst").as("v")).distinct()
-            .join(dist.select(col("v").as("seen")),
-                  col("v") === col("seen"), "left_anti")
-            .select(col("v"), lit(i).as("dist"))
-            .localCheckpoint(true)
-          dist = dist.unionAll(next).localCheckpoint(true)
-          frontier = next
-        }
-        val out = dist.select(col("v").as("doc_id"), col("dist")).orderBy("doc_id")
-        adj.unpersist()
-        out
+        val flagged = Tables(s, d, "documents").select(col("doc_id"))
+          .filter(pmod(col("doc_id"), lit(97L)) === 0)
+        Graph.bfs(Graph.undirected(s, d),
+                  flagged.select(lit(0L).as("s"), col("doc_id").as("v")), Some(4))
+          .select(col("v").as("doc_id"), col("dd").cast("int").as("dist"))
+          .orderBy("doc_id")
       },
       Some {
         val b = new StringBuilder(Stats.graphOracleCtes +

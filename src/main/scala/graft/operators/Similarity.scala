@@ -649,11 +649,9 @@ object Similarity {
     "vec_kmeans_lloyd" -> Decl(
       (s, d) => {
         val q = quantized(s, d).localCheckpoint(true)
-        var state = seedState(s, d, q)
-        for (_ <- 1 to Iters) {
-          state = lloydStep(q, state).localCheckpoint(true)
-        }
-        state.groupBy("cluster")
+        Fixpoint(seedState(s, d, q), Nil, Iters, "k-means")(lloydStep(q, _))(
+            (_, pass) => pass == Iters)
+          .groupBy("cluster")
           .agg(max(col("cn")).as("n"), sum(col("cs")).as("ssum"))
           .orderBy("cluster")
       },

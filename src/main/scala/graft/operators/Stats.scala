@@ -5793,13 +5793,8 @@ object Stats {
     // label frame is lineage-truncated mid-loop.
     "graph_label_propagation" -> Decl(
       (s, d) => {
-        val n = s.sparkContext.defaultParallelism
         val docs = Tables(s, d, "documents").select(col("doc_id"))
-        val canon = Graph.mintedPairs(s, d)
-        val adj = canon.select(col("a").as("src"), col("b").as("dst"))
-          .unionAll(canon.select(col("b").as("src"), col("a").as("dst")))
-          .repartition(n, col("src"))
-          .localCheckpoint(true)
+        val adj = Graph.undirected(s, d)
         var lbl = docs.select(col("doc_id").as("v"), col("doc_id").as("l"))
         (1 to 4).foreach { i =>
           val pick = adj.join(lbl, adj("src") === lbl("v"))
@@ -5811,10 +5806,8 @@ object Stats {
             .select(col("v"), coalesce(col("pick"), col("l")).as("l"))
           if (i == 2) lbl = lbl.localCheckpoint()
         }
-        val out = lbl.select(col("v").as("doc_id"), col("l").as("community"))
+        lbl.select(col("v").as("doc_id"), col("l").as("community"))
           .orderBy("doc_id")
-        adj.unpersist()
-        out
       },
       Some(lpaOracleSql)),
 

@@ -147,8 +147,10 @@ object PrefixSum {
   }
 }
 
-/** One runner for the data-dependent loops (BFS frontiers, SCC coloring and
-  * peeling, Borůvka rounds, pointer doubling, connected components).
+/** One runner for the iterative loops: data-dependent ones (BFS frontiers,
+  * SCC coloring and peeling, Borůvka rounds, pointer doubling, connected
+  * components) and fixed-pass ones (capped BFS, PageRank steps, Lloyd
+  * iterations), which stop on the pass index `done` receives.
   *
   * Each generation is `step(previous)` cut eagerly with `localCheckpoint`,
   * so a loop's plan never grows deeper than one step. The convergence test
@@ -167,20 +169,22 @@ object Fixpoint {
   import org.apache.spark.sql.functions.{count, lit}
   import org.apache.spark.sql.graft.Bridge
 
-  /** Iterate `step` from `init` until `done` accepts a generation's probe
-    * row; returns that generation. `step` runs at least once. A loop not
-    * done after `maxPasses` steps throws an `IllegalStateException` naming
-    * `what` and the pass count.
+  /** Iterate `step` from `init` until `done` accepts a generation; returns
+    * that generation. `done` reads the generation's probe row and its pass
+    * index: pass p is the generation `step` produced the p-th time (1 for
+    * the first), so a fixed-pass loop of k steps is `(_, p) => p == k`.
+    * `step` runs at least once. A loop not done after `maxPasses` steps
+    * throws an `IllegalStateException` naming `what` and the pass count.
     */
   def apply(init: DataFrame, probe: Seq[Column], maxPasses: Int, what: String)
-           (step: DataFrame => DataFrame)(done: Row => Boolean): DataFrame = {
+           (step: DataFrame => DataFrame)(done: (Row, Int) => Boolean): DataFrame = {
     @annotation.tailrec
     def run(prev: DataFrame, pass: Int): DataFrame = {
       if (pass == maxPasses) throw new IllegalStateException(
         s"$what did not converge within $maxPasses passes")
       val (gen, row) = cut(step(prev), probe)
       if (pass > 0) release(prev)
-      if (done(row)) gen else run(gen, pass + 1)
+      if (done(row, pass + 1)) gen else run(gen, pass + 1)
     }
     run(init, 0)
   }

@@ -1,14 +1,15 @@
 package graft
 
-import graft.operators.Fixpoint
+import graft.operators.{Fixpoint, Graph}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Fixpoint`: a loop that never converges throws at its pass cap,
-  * naming the loop; the convergence probe rides in the cut's own job; and
-  * superseded generations are released, so persisted RDDs do not pile up
-  * across passes.
+  * naming the loop; a fixed-pass loop stops at the pass `done` names; the
+  * convergence probe rides in the cut's own job; superseded generations
+  * are released, so persisted RDDs do not pile up across passes; and
+  * `Graph.bfs` from no seeds stops after one cut.
   */
 class FixpointSpec extends AnyFunSuite with SharedSpark {
 
@@ -18,47 +19,48 @@ class FixpointSpec extends AnyFunSuite with SharedSpark {
       Fixpoint(spark.range(8).toDF("v"), Seq(count(lit(1))), 3, "spinning loop") { g =>
         steps += 1
         g.select((col("v") + 1).as("v"))
-      }(_ => false)
+      }((_, _) => false)
     }
     assert(e.getMessage.contains("spinning loop"), e.getMessage)
     assert(e.getMessage.contains("3 passes"), e.getMessage)
     assert(steps == 3)
   }
 
+  // jobs started while `body` runs, counted between two canary jobs: the
+  // listener bus is FIFO, so once the closing canary's jobs land, every
+  // job `body` started has been counted (canary pattern of Round11pSpec)
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val canary = new java.util.concurrent.atomic.AtomicInteger(0)
+    val Canary = "graft-fixpoint-canary"
+    val tStart = System.currentTimeMillis()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.time >= tStart) {
+          val desc = Option(js.properties)
+            .map(_.getProperty("spark.job.description", "")).getOrElse("")
+          if (desc == Canary) canary.incrementAndGet() else jobs.incrementAndGet()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription(Canary)
+      try spark.range(1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (canary.get() < 1 && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(canary.get() >= 1, "canary never ran — listener broken")
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("a generation with a probe starts no more jobs than the bare cut") {
     val input = spark.range(0, 2000, 1, 4).toDF("v").localCheckpoint(true)
     def gen: DataFrame = input.groupBy((col("v") % 17).as("k"))
       .agg(count(lit(1)).as("n"))
-    // jobs started while `body` runs, counted between two canary jobs: the
-    // listener bus is FIFO, so once the closing canary's jobs land, every
-    // job `body` started has been counted (canary pattern of Round11pSpec)
-    def jobsOf(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val canary = new java.util.concurrent.atomic.AtomicInteger(0)
-      val Canary = "graft-fixpoint-canary"
-      val tStart = System.currentTimeMillis()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (js.time >= tStart) {
-            val desc = Option(js.properties)
-              .map(_.getProperty("spark.job.description", "")).getOrElse("")
-            if (desc == Canary) canary.incrementAndGet() else jobs.incrementAndGet()
-          }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        spark.sparkContext.setJobDescription(Canary)
-        try spark.range(1).count()
-        finally spark.sparkContext.setJobDescription(null)
-        val deadline = System.currentTimeMillis() + 30000
-        while (canary.get() < 1 && System.currentTimeMillis() < deadline)
-          Thread.sleep(50)
-        assert(canary.get() >= 1, "canary never ran — listener broken")
-        jobs.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
     val bare = jobsOf(gen.localCheckpoint(true))
     var row: org.apache.spark.sql.Row = null
     val probed = jobsOf { row = Fixpoint.cut(gen, Seq(count(lit(1)), sum(col("n"))))._2 }
@@ -73,11 +75,36 @@ class FixpointSpec extends AnyFunSuite with SharedSpark {
                         Seq(max(col("v"))), 20, "shrinking loop") { g =>
       sizes += spark.sparkContext.getPersistentRDDs.size
       g.filter(col("v") > 0).select((col("v") - 1).as("v"))
-    }(_.getLong(0) == 0L)
+    }((r, _) => r.getLong(0) == 0L)
     assert(last.collect().map(_.getLong(0)).toSeq == Seq(0L))
     assert(sizes.size == 7, s"passes: ${sizes.size}")
     // from the second step on, each step sees exactly one live generation
     assert(sizes.drop(2).forall(_ <= sizes(1)),
            s"persisted RDDs per pass: ${sizes.mkString(", ")}")
+  }
+
+  test("a fixed-pass loop returns the generation done names and throws nothing") {
+    var steps = 0
+    // the cap equals the pass `done` stops at: reaching it is not a failure
+    val last = Fixpoint(spark.range(8).toDF("v"), Nil, 3, "fixed loop") { g =>
+      steps += 1
+      g.select((col("v") + 1).as("v"))
+    }((_, pass) => pass == 3)
+    assert(steps == 3)
+    assert(last.collect().map(_.getLong(0)).sorted.toSeq == (3L until 11L))
+  }
+
+  test("bfs from an empty seed relation is empty, typed, and one cut") {
+    val edges = spark.range(6).select(col("id").as("src"), (col("id") + 1).as("dst"))
+    val none = spark.range(0).select(col("id").as("s"), col("id").as("v"))
+    var out: DataFrame = null
+    val converged = jobsOf { out = Graph.bfs(edges, none) }
+    assert(out.collect().isEmpty)
+    assert(out.schema.map(f => (f.name, f.dataType.simpleString)) ==
+             Seq(("s", "bigint"), ("v", "bigint"), ("dd", "bigint")))
+    // a search capped at one hop runs exactly one cut; the uncapped one
+    // stops at its first (empty) frontier, so it runs no more jobs
+    val oneHop = jobsOf(Graph.bfs(edges, none, Some(1)))
+    assert(converged <= oneHop, s"uncapped: $converged jobs, one hop: $oneHop")
   }
 }

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Wave-87 invariants: exact closeness equals an in-memory all-pairs
   * BFS over the same minted block graph, and the Wasserman-Faust form
-  * stays inside [0, 1]; the BFS itself matches on a hub-skewed graph.
+  * stays inside [0, 1]; `Graph.bfs` itself matches on a hub-skewed graph,
+  * uncapped and capped at 4 hops.
   */
 class GraphWave87Spec extends AnyFunSuite with SharedSpark {
 
@@ -59,19 +60,29 @@ class GraphWave87Spec extends AnyFunSuite with SharedSpark {
     assert(rows.count(_._2 == 0) > 0, "fixture must have isolated docs")
   }
 
-  test("closenessDist equals in-memory BFS on a hub graph") {
-    // hub 0 with edges to and from each of 1..200 (k² = 40,000 two-hop
-    // paths through one vertex), plus a 20-hop chain hanging off the hub
+  // hub 0 with edges to and from each of 1..200 (k² = 40,000 two-hop
+  // paths through one vertex), plus a 20-hop chain 1000 → … → 1019 hanging
+  // off the hub
+  private val hubEdges: Seq[(Long, Long)] = {
     val spokes = (1L to 200L).flatMap(i => Seq((0L, i), (i, 0L)))
     val chain = (0L +: (1000L until 1020L)).sliding(2).map(p => (p(0), p(1))).toSeq
-    val edges = spokes ++ chain
+    spokes ++ chain
+  }
+
+  // Graph.bfs over `edges` from `seeds` (source, start vertex)
+  private def bfs(edges: Seq[(Long, Long)], seeds: Seq[(Long, Long)],
+                  hops: Option[Int]) =
+    graft.operators.Graph.bfs(spark.createDataFrame(edges).toDF("src", "dst"),
+                              spark.createDataFrame(seeds).toDF("s", "v"), hops)
+
+  test("closenessDist equals in-memory BFS on a hub graph") {
+    val edges = hubEdges
     val adj = adjacency(edges)
-    val got = graft.operators.Graph
-      .closenessDist(spark.createDataFrame(edges).toDF("src", "dst"))
-      .filter(col("u") =!= col("v"))
-      .groupBy("v").agg(count(lit(1)), sum(col("dd")))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val vertices = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+    val got = bfs(edges, vertices.map(v => (v, v)), None)
+      .filter(col("s") =!= col("v"))
+      .groupBy("s").agg(count(lit(1)), sum(col("dd")))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     vertices.foreach { v =>
       val dist = bfsLevels(adj, v) - v
       val (reach, dsum) = got.getOrElse(v, (0L, 0L))
@@ -79,5 +90,23 @@ class GraphWave87Spec extends AnyFunSuite with SharedSpark {
       assert(dsum == dist.values.sum, s"dsum at $v")
     }
     assert(got(1L) == ((220L, 1L + 2 * 199 + (2L to 21L).sum)), "spoke 1 reaches all")
+  }
+
+  test("bfs capped at 4 hops equals in-memory BFS cut at 4 on a hub graph") {
+    val adj = adjacency(hubEdges)
+    val sources = Seq(0L, 1000L) // the hub and the chain head
+    def within4(v: Long): Map[Long, Long] = bfsLevels(adj, v).filter(_._2 <= 4)
+    // two sources: each keeps its own distances
+    val perSource = bfs(hubEdges, sources.map(v => (v, v)), Some(4)).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(perSource == sources.flatMap(s => within4(s).map { case (v, d) => (s, v) -> d }).toMap)
+    // one virtual source over the set: the nearer source's distance
+    val merged = bfs(hubEdges, sources.map(v => (0L, v)), Some(4)).collect()
+      .map(r => r.getLong(1) -> r.getLong(2)).toMap
+    assert(merged == sources.map(within4).reduce { (a, b) =>
+      (a.keySet ++ b.keySet).map(v =>
+        v -> math.min(a.getOrElse(v, Long.MaxValue), b.getOrElse(v, Long.MaxValue))).toMap
+    })
+    assert(merged(1004L) == 4L && !merged.contains(1005L), "the cap cuts the chain")
   }
 }
