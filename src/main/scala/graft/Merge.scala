@@ -41,81 +41,42 @@ private[graft] object Merge {
   private val Head =
     """(?is)^\s*MERGE\s+INTO\s+([A-Za-z_][A-Za-z_0-9]*)(?:\s+(?:AS\s+)?([A-Za-z_][A-Za-z_0-9]*))?\s+USING\s+(.*)$""".r
 
-  /** Index of the first occurrence of keyword `kw` at paren depth 0 that is
-    * also outside any CASE … END or MATCH … END expression — those carry
-    * their own WHEN/THEN arms at paren depth 0, so the plain top-level scan
-    * (Sql.topLevelKeywordIndex) would cut a MERGE clause at the first
-    * `CASE WHEN` inside an ON condition or SET expression. */
-  private def clauseKeywordIndex(text: String, kw: String): Int = {
-    var depth = 0; var caseDepth = 0; var i = 0
-    while (i < text.length) {
-      text(i) match {
-        case q @ ('\'' | '"' | '`') =>
-          i += 1
-          while (i < text.length && text(i) != q) {
-            if (text(i) == '\\' && q != '`' && i + 1 < text.length) i += 2 else i += 1
-          }
-          i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case c if c.isLetter || c == '_' =>
-          val start = i
-          while (i < text.length && (text(i).isLetterOrDigit || text(i) == '_')) i += 1
-          val word = text.substring(start, i)
-          if (depth == 0) {
-            if (word.equalsIgnoreCase("CASE") || word.equalsIgnoreCase("MATCH")) caseDepth += 1
-            else if (word.equalsIgnoreCase("END") && caseDepth > 0) caseDepth -= 1
-            else if (caseDepth == 0 && word.equalsIgnoreCase(kw)) return start
-          }
-        case _ => i += 1
-      }
-    }
-    -1
-  }
-
   /** Parse `stmt` as MERGE, or None if it is not one. Malformed MERGE
     * throws (a statement that names the verb must not fall through to the
     * stock parser, which would produce a misleading error). */
   def parse(stmt: String): Option[MergeSpec] = stmt match {
-    case Head(table, aliasOpt, rest0) =>
+    case Head(table, aliasOpt, rest) =>
       val tableAlias = Option(aliasOpt).getOrElse(table)
-      // source spec runs up to the top-level ON
-      val onIdx = clauseKeywordIndex(rest0, "ON")
-      require(onIdx > 0, s"MERGE: expected ON <condition> in: $stmt")
-      val (srcSpec, afterOn) = (rest0.substring(0, onIdx).trim, rest0.substring(onIdx + 2))
-      val (sourceSql, sourceAlias) =
-        if (srcSpec.startsWith("(")) {
-          val close = srcSpec.lastIndexOf(')')
-          require(close > 0, s"MERGE: unclosed source subquery: $srcSpec")
-          val alias = srcSpec.substring(close + 1).trim match {
-            case a if a.isEmpty => throw new IllegalArgumentException(
-              "MERGE: a source subquery needs an alias")
-            case a => a.replaceFirst("(?i)^AS\\s+", "").trim
-          }
-          (Right(srcSpec.substring(1, close)): Either[String, String], alias)
-        } else srcSpec.split("\\s+").toSeq match {
-          case Seq(t) => (Left(t): Either[String, String], t)
-          case Seq(t, a) => (Left(t): Either[String, String], a)
-          case Seq(t, as, a) if as.equalsIgnoreCase("AS") =>
-            (Left(t): Either[String, String], a)
-          case _ => throw new IllegalArgumentException(
-            s"MERGE: cannot parse source '$srcSpec'")
-        }
-      // condition runs up to the first top-level WHEN
-      val whenIdx = clauseKeywordIndex(afterOn, "WHEN")
-      require(whenIdx > 0, s"MERGE: expected at least one WHEN clause in: $stmt")
-      val cond = afterOn.substring(0, whenIdx).trim
-      // split the remaining text into WHEN clauses
-      var rest = afterOn.substring(whenIdx)
-      val clauses = Seq.newBuilder[String]
-      while (rest.nonEmpty) {
-        val next = clauseKeywordIndex(rest.substring(4), "WHEN") match {
-          case -1 => rest.length
-          case i => i + 4
-        }
-        clauses += rest.substring(0, next).trim.stripSuffix(";").trim
-        rest = rest.substring(next)
+      // clauses cut at the top-level ON and WHENs: the walk nests CASE … END
+      // and MATCH ( … END, whose own WHEN/THEN arms stay inside
+      val w = new SqlLex.Walk(rest)
+      val on = w.topLevel("ON").headOption.getOrElse(-1)
+      require(on > 0, s"MERGE: expected ON <condition> in: $stmt")
+      val whens = w.topLevel("WHEN").filter(_ > on)
+      require(whens.nonEmpty, s"MERGE: expected at least one WHEN clause in: $stmt")
+      // source: `(<query>) [AS] s` or `name [[AS] s]`, name maybe qualified
+      val subquery = w.isPunct(0, '(')
+      val nameEnd =
+        if (subquery) w.close(0) + 1
+        else Iterator.iterate(1)(_ + 2).find(i => !w.isPunct(i, '.') || i + 1 >= on).get
+      require(nameEnd > 0 && nameEnd <= on, s"MERGE: unclosed source subquery: ${w.span(0, on)}")
+      val source = w.span(0, nameEnd)
+      val aliasWords = (nameEnd until on).map(i => w.span(i, i + 1)) match {
+        case Seq(as, a) if as.equalsIgnoreCase("AS") => Seq(a)
+        case words => words
       }
+      val (sourceSql, sourceAlias) = (subquery, aliasWords) match {
+        case (true, Seq()) => throw new IllegalArgumentException(
+          "MERGE: a source subquery needs an alias")
+        case (true, Seq(a)) => (Right(w.span(1, nameEnd - 1)), a)
+        case (false, Seq()) => (Left(source), source)
+        case (false, Seq(a)) => (Left(source), a)
+        case _ => throw new IllegalArgumentException(
+          s"MERGE: cannot parse source '${w.span(0, on)}'")
+      }
+      val cond = w.span(on + 1, whens.head)
+      val clauses = whens.zip(whens.tail :+ w.toks.length)
+        .map { case (a, b) => w.span(a, b).stripSuffix(";").trim }
       var matched: Option[MatchedAction] = None
       var notMatched: Option[InsertAction] = None
       val UpdateClause =
@@ -123,13 +84,13 @@ private[graft] object Merge {
       val DeleteClause = """(?is)^WHEN\s+MATCHED\s+THEN\s+DELETE$""".r
       val InsertClause =
         """(?is)^WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+(.+)$""".r
-      clauses.result().foreach {
+      clauses.foreach {
         case UpdateClause(sets) =>
           require(matched.isEmpty, "MERGE: more than one WHEN MATCHED clause")
           val pairs = Sql.splitTopLevel(sets, ',').map { a =>
             a.split("=", 2) match {
               case Array(c, e) =>
-                c.trim.stripPrefix("`").stripSuffix("`") -> e.trim
+                SqlLex.trim(c).stripPrefix("`").stripSuffix("`") -> e.trim
               case _ => throw new IllegalArgumentException(
                 s"MERGE: bad SET assignment '$a'")
             }
@@ -143,10 +104,10 @@ private[graft] object Merge {
           val body = ins.trim
           if (body == "*") notMatched = Some(InsertAction(None))
           else {
-            val vIdx = clauseKeywordIndex(body, "VALUES")
+            val vIdx = Sql.topLevelKeywordIndex(body, "VALUES")
             require(vIdx > 0, s"MERGE: expected INSERT (cols) VALUES (exprs), got: $body")
             def parenList(s: String): Seq[String] = {
-              val t = s.trim
+              val t = SqlLex.trim(s)
               require(t.startsWith("(") && t.endsWith(")"),
                 s"MERGE: expected a parenthesized list, got: $s")
               Sql.splitTopLevel(t.substring(1, t.length - 1), ',')

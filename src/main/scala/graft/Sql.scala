@@ -17,36 +17,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Sql {
 
-  /** Split a script on top-level semicolons; quoted spans ('…', "…", `…`)
-    * and comments are opaque, so literals may contain ';'. */
+  /** Split a script on its ';' tokens, so literals and comments may
+    * contain ';'. A statement keeps its comments; one that is only
+    * comments is dropped. */
   def splitStatements(text: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var i = 0
-    var last = 0
-    val n = text.length
-    while (i < n) {
-      text(i) match {
-        case q @ ('\'' | '"' | '`') =>
-          i += 1
-          while (i < n && text(i) != q) {
-            // backslash escape inside string literals (Spark default mode);
-            // backticked identifiers only use doubling
-            if (text(i) == '\\' && q != '`' && i + 1 < n) i += 2 else i += 1
-          }
-          i += 1
-        case '-' if i + 1 < n && text(i + 1) == '-' =>
-          while (i < n && text(i) != '\n') i += 1
-        case '/' if i + 1 < n && text(i + 1) == '*' =>
-          i += 2
-          while (i + 1 < n && !(text(i) == '*' && text(i + 1) == '/')) i += 1
-          i += 2
-        case ';' =>
-          out += text.substring(last, i); last = i + 1; i += 1
-        case _ => i += 1
-      }
-    }
-    out += text.substring(math.min(last, n))
-    out.result().map(_.trim).filter(_.nonEmpty)
+    val semis = SqlLex.lex(text).collect { case SqlLex.Punct(p, _, ';') => p }
+    (-1 +: semis).zip(semis :+ text.length)
+      .map { case (a, b) => text.substring(a + 1, b).trim }
+      .filter(SqlLex.lex(_).nonEmpty)
   }
 
   private val DeleteStmt =
@@ -60,32 +38,12 @@ object Sql {
   private val DropMvStmt =
     """(?is)^\s*DROP\s+MATERIALIZED\s+VIEW\s+([A-Za-z_][A-Za-z_0-9]*)\s*;?\s*$""".r
 
-  /** Index of the first occurrence of keyword `kw` at paren depth 0 and
-    * outside quoted spans, or -1 — a regex would match a 'where' inside a
-    * string literal or subquery. */
+  /** Character index of the first top-level word `kw` (see
+    * [[SqlLex.Walk]]), or -1 — a regex would match a 'where' inside a
+    * string literal, a comment, a subquery or a CASE expression. */
   private[graft] def topLevelKeywordIndex(text: String, kw: String): Int = {
-    var depth = 0; var i = 0
-    while (i < text.length) {
-      text(i) match {
-        case q @ ('\'' | '"' | '`') =>
-          i += 1
-          while (i < text.length && text(i) != q) {
-            if (text(i) == '\\' && q != '`' && i + 1 < text.length) i += 2 else i += 1
-          }
-          i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case c if depth == 0 && Character.toUpperCase(c) == kw.head &&
-            i + kw.length <= text.length &&
-            text.substring(i, i + kw.length).equalsIgnoreCase(kw) &&
-            (i == 0 || !text(i - 1).isLetterOrDigit && text(i - 1) != '_') &&
-            (i + kw.length == text.length ||
-             !text(i + kw.length).isLetterOrDigit && text(i + kw.length) != '_') =>
-          return i
-        case _ => i += 1
-      }
-    }
-    -1
+    val w = new SqlLex.Walk(text)
+    w.topLevel(kw).headOption.fold(-1)(w.toks(_).start)
   }
 
   /** Copy-on-write mutation of a warehouse table: compute the surviving /
@@ -138,10 +96,6 @@ object Sql {
     spark.sql(s"SELECT CAST($n AS BIGINT) AS rows_after")
   }
 
-  /** Execute one statement; a CREATE TYPE that passes the typechecker is
-    * then recorded in the persistent catalog (recording first would
-    * persist ill-typed declarations). DELETE/UPDATE on warehouse tables
-    * run as copy-on-write rewrites. Returns the result for rendering. */
   /** QUALIFY clause support (source-to-source, the same injection
     * altitude as the ADT grammar): Spark's parser has no QUALIFY, so a
     * top-level `... QUALIFY <pred> [ORDER BY …] [LIMIT …]` lowers to
@@ -157,40 +111,20 @@ object Sql {
     * scan is depth-0 only.
     */
   private[graft] def rewriteQualify(text: String): String = {
-    val qIdx = topLevelKeywordIndex(text, "QUALIFY")
-    if (qIdx < 0) return text
-    val head = text.substring(0, qIdx)
-    val rest = text.substring(qIdx + "QUALIFY".length)
-    val stops = Seq("ORDER", "LIMIT")
-      .map(k => topLevelKeywordIndex(rest, k)).filter(_ >= 0)
-    val cut = if (stops.isEmpty) rest.length else stops.min
-    val pred = rest.substring(0, cut).trim
-    val tail = rest.substring(cut)
-    require(pred.nonEmpty, s"QUALIFY: empty predicate in: $text")
-    s"""SELECT * EXCEPT (__qual) FROM (
-       |SELECT __q.*, ($pred) AS __qual FROM ( $head ) AS __q
-       |) WHERE __qual $tail""".stripMargin
-  }
-
-  /** Index just past the ')' matching the '(' at `open` (quote-aware). */
-  private def matchParen(text: String, open: Int): Int = {
-    var depth = 0; var i = open
-    while (i < text.length) {
-      text(i) match {
-        case q @ ('\'' | '"' | '`') =>
-          i += 1
-          while (i < text.length && text(i) != q) {
-            if (text(i) == '\\' && q != '`' && i + 1 < text.length) i += 2 else i += 1
-          }
-          i += 1
-        case '(' => depth += 1; i += 1
-        case ')' =>
-          depth -= 1; i += 1
-          if (depth == 0) return i
-        case _ => i += 1
-      }
+    val w = new SqlLex.Walk(text)
+    w.topLevel("QUALIFY").headOption match {
+      case None => text
+      case Some(q) =>
+        val cut = (w.topLevel("ORDER") ++ w.topLevel("LIMIT")).filter(_ > q)
+          .minOption.getOrElse(w.toks.length)
+        val pred = w.span(q + 1, cut)
+        require(pred.nonEmpty, s"QUALIFY: empty predicate in: $text")
+        val head = text.substring(0, w.toks(q).start)
+        val tail = text.substring(w.toks.lift(cut).fold(text.length)(_.start))
+        s"""SELECT * EXCEPT (__qual) FROM (
+           |SELECT __q.*, ($pred) AS __qual FROM ( $head ) AS __q
+           |) WHERE __qual $tail""".stripMargin
     }
-    throw new IllegalArgumentException(s"unbalanced parens in: $text")
   }
 
   /** DISTINCT ON support (source-to-source, same altitude as QUALIFY):
@@ -210,68 +144,60 @@ object Sql {
     * scan is depth-0 only, like QUALIFY.
     */
   private[graft] def rewriteDistinctOn(text: String): String = {
-    val dIdx = topLevelKeywordIndex(text, "DISTINCT")
-    if (dIdx < 0) return text
-    val afterD = text.substring(dIdx + "DISTINCT".length)
-    val onOff = afterD.takeWhile(_.isWhitespace).length
-    val rest = afterD.substring(onOff)
-    // Token must be exactly ON (next char whitespace or '('), else a select
-    // item that merely starts with "on" (ontime, only_id) would misparse.
-    val isOnToken = rest.length > 2 &&
-      rest.substring(0, 2).equalsIgnoreCase("ON") &&
-      (rest(2).isWhitespace || rest(2) == '(')
-    if (!isOnToken) return text
-    val openRel = afterD.indexOf('(', onOff)
-    require(openRel >= 0 && afterD.substring(onOff + 2, openRel).isBlank,
-      s"DISTINCT ON needs a parenthesized key list in: $text")
-    val open = dIdx + "DISTINCT".length + openRel
-    val close = matchParen(text, open)
-    val keys = text.substring(open + 1, close - 1).trim
-    require(keys.nonEmpty, s"DISTINCT ON: empty key list in: $text")
-    val oIdx = topLevelKeywordIndex(text, "ORDER")
-    require(oIdx > close,
-      "DISTINCT ON without ORDER BY keeps an arbitrary row per group — " +
-      s"add a total ORDER BY: $text")
-    val limIdx = topLevelKeywordIndex(text, "LIMIT")
-    val sortsEnd = if (limIdx > oIdx) limIdx else text.length
-    val sorts = {
-      val afterO = text.substring(oIdx + "ORDER".length, sortsEnd).trim
-      require(afterO.toUpperCase.startsWith("BY"), s"expected BY after ORDER in: $text")
-      afterO.substring(2).trim
+    val w = new SqlLex.Walk(text)
+    // ON must be its own word: a select item that merely starts with "on"
+    // (ontime, only_id) is plain DISTINCT
+    w.topLevel("DISTINCT").headOption.filter(d => w.isWord(d + 1, "ON")) match {
+      case None => text
+      case Some(d) =>
+        require(w.isPunct(d + 2, '('), s"DISTINCT ON needs a parenthesized key list in: $text")
+        val close = w.close(d + 2)
+        require(close > 0, s"unbalanced parens in: $text")
+        val keys = w.span(d + 3, close)
+        require(keys.nonEmpty, s"DISTINCT ON: empty key list in: $text")
+        val o = w.topLevel("ORDER").find(_ > close).getOrElse(
+          throw new IllegalArgumentException(
+            "DISTINCT ON without ORDER BY keeps an arbitrary row per group — " +
+            s"add a total ORDER BY: $text"))
+        require(w.isWord(o + 1, "BY"), s"expected BY after ORDER in: $text")
+        val limit = w.topLevel("LIMIT").find(_ > o)
+        val sorts = w.span(o + 2, limit.getOrElse(w.toks.length))
+        val limitTail = limit.fold("")(l => " " + text.substring(w.toks(l).start))
+        val inner = text.substring(0, w.toks(d).start) +
+          text.substring(w.toks(close).end, w.toks(o).start)
+        s"""SELECT * EXCEPT (__rn) FROM (
+           |SELECT __q.*, row_number() OVER (PARTITION BY $keys ORDER BY $sorts) AS __rn
+           |FROM ( $inner ) AS __q
+           |) WHERE __rn = 1 ORDER BY $sorts$limitTail""".stripMargin
     }
-    val limitTail = if (limIdx > oIdx) " " + text.substring(limIdx) else ""
-    val inner = text.substring(0, dIdx) + text.substring(close, oIdx)
-    s"""SELECT * EXCEPT (__rn) FROM (
-       |SELECT __q.*, row_number() OVER (PARTITION BY $keys ORDER BY $sorts) AS __rn
-       |FROM ( $inner ) AS __q
-       |) WHERE __rn = 1 ORDER BY $sorts$limitTail""".stripMargin
   }
 
-  /** Run SQL text through the ADT-aware path: the injected parser if this
-    * session has it, the source-to-source rewriter otherwise. QUALIFY and
-    * DISTINCT ON lower first in both paths (neither parser knows them
-    * natively). */
-  private[graft] def runSql(spark: SparkSession, text: String): DataFrame = {
-    val t = rewriteDistinctOn(rewriteQualify(text))
-    if (spark.sessionState.sqlParser.isInstanceOf[graft.adt.AdtParser])
-      spark.sql(t)
-    else graft.adt.AdtSql.sql(spark, t)
-  }
+  /** Run SQL text through the ADT-aware path after lowering QUALIFY and
+    * DISTINCT ON (no parser knows them natively). `AdtSql.sql` serves
+    * sessions with and without the injected parser alike: its rewrite is
+    * the identity on text it has already lowered. */
+  private[graft] def runSql(spark: SparkSession, text: String): DataFrame =
+    graft.adt.AdtSql.sql(spark, rewriteDistinctOn(rewriteQualify(text)))
 
-  def execute(spark: SparkSession, warehouse: String, stmt: String): DataFrame = {
+  /** Execute one statement; a CREATE TYPE that passes the typechecker is
+    * then recorded in the persistent catalog (recording first would
+    * persist ill-typed declarations). DELETE/UPDATE on warehouse tables
+    * run as copy-on-write rewrites. The statement dispatches on its text
+    * from the first token, so comments may lead it. Returns the result
+    * for rendering. */
+  def execute(spark: SparkSession, warehouse: String, text: String): DataFrame = {
+    val stmt = SqlLex.trim(text)
     def rewriteExpr(text: String): String =
       graft.adt.AdtSql.rewrite(spark, text)
     def runSql(text: String): DataFrame = Sql.runSql(spark, text)
-    // A WHERE-less DELETE/UPDATE is legal SQL: it touches every row. The
-    // WHERE match needs a word boundary — "WHEREX > 1" must be a syntax
-    // error, not a predicate on X.
-    def predOf(rest: String): String = {
-      val r = rest.trim.stripSuffix(";").trim
-      if (r.isEmpty) "true"
-      else if (r.length > 5 && r.substring(0, 5).equalsIgnoreCase("WHERE") &&
-               !r(5).isLetterOrDigit && r(5) != '_')
-        rewriteExpr(r.substring(5))
-      else throw new IllegalArgumentException(s"expected WHERE, got: $r")
+    // A WHERE-less DELETE/UPDATE is legal SQL: it touches every row. WHERE
+    // must be its own word — "WHEREX > 1" is a syntax error, not a
+    // predicate on X.
+    def predOf(rest: String): String = SqlLex.lex(rest) match {
+      case Seq() => "true"
+      case (w: SqlLex.Word) +: _ if w.text.equalsIgnoreCase("WHERE") =>
+        rewriteExpr(SqlLex.trim(rest.substring(w.end)))
+      case _ => throw new IllegalArgumentException(s"expected WHERE, got: ${rest.trim}")
     }
     Merge.parse(stmt) match {
       case Some(spec) => return executeMerge(spark, warehouse, spec)
@@ -323,14 +249,13 @@ object Sql {
       case UpdateStmt(table, setsAndPred) =>
         val whereIdx = topLevelKeywordIndex(setsAndPred, "WHERE")
         val (setList, pred) =
-          if (whereIdx < 0) (setsAndPred.trim.stripSuffix(";"), "true")
-          else (setsAndPred.substring(0, whereIdx),
-                rewriteExpr(setsAndPred.substring(whereIdx + 5).trim.stripSuffix(";")))
+          if (whereIdx < 0) (setsAndPred, "true")
+          else (setsAndPred.substring(0, whereIdx), predOf(setsAndPred.substring(whereIdx)))
         val sets = splitTopLevel(setList, ',').map { a =>
           a.split("=", 2) match {
             // a backticked SET target is accepted and stored unquoted
             case Array(c, e) =>
-              c.trim.stripPrefix("`").stripSuffix("`") -> rewriteExpr(e).trim
+              SqlLex.trim(c).stripPrefix("`").stripSuffix("`") -> rewriteExpr(e).trim
             case _ => throw new IllegalArgumentException(s"bad SET assignment '$a'")
           }
         }
@@ -363,8 +288,6 @@ object Sql {
           try spark.catalog.tableExists(n) && spark.catalog.getTable(n).isTemporary
           catch { case _: Exception => false }
         }
-        // the injected AdtParser handles ADT syntax inside plain spark.sql;
-        // AdtSql.sql is the equivalent route for sessions without extensions
         val result = runSql(stmt)
         if (graft.adt.AdtSql.isCreateType(stmt))
           GraftCatalog.recordType(warehouse, stmt)
@@ -492,28 +415,9 @@ object Sql {
     }
   }
 
-  /** Split on a separator at paren/quote depth zero. */
-  private[graft] def splitTopLevel(text: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0; var last = 0; var i = 0
-    while (i < text.length) {
-      text(i) match {
-        case q @ ('\'' | '"' | '`') =>
-          i += 1
-          while (i < text.length && text(i) != q) {
-            if (text(i) == '\\' && q != '`' && i + 1 < text.length) i += 2 else i += 1
-          }
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case c if c == sep && depth == 0 =>
-          out += text.substring(last, i); last = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += text.substring(last)
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
+  /** Split on the top-level `sep` tokens; empty parts drop. */
+  private[graft] def splitTopLevel(text: String, sep: Char): Seq[String] =
+    new SqlLex.Walk(text).splitTop(sep).filter(_.nonEmpty)
 
   private def render(spark: SparkSession, df: DataFrame): Unit = {
     // Execute ONCE: limit+collect instead of count()-then-show(), which

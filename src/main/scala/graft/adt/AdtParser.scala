@@ -25,10 +25,7 @@ class AdtParser(session: SparkSession, delegate: ParserInterface)
     extends ParserInterface {
 
   override def parsePlan(sqlText: String): LogicalPlan =
-    if (AdtSql.isCreateType(sqlText)) {
-      val td = AdtSql.createType(session, sqlText)
-      delegate.parsePlan(s"SELECT '${td.name}' AS type_created")
-    } else delegate.parsePlan(AdtSql.rewrite(session, sqlText))
+    delegate.parsePlan(AdtSql.lower(session, sqlText))
 
   /** Spark 4.1 routes `spark.sql(text, args)` through this entry point so
     * parameter markers bind DURING parsing; the trait's default silently
@@ -40,13 +37,7 @@ class AdtParser(session: SparkSession, delegate: ParserInterface)
       sqlText: String,
       parameterContext: org.apache.spark.sql.catalyst.parser.ParameterContext)
       : LogicalPlan =
-    if (AdtSql.isCreateType(sqlText)) {
-      val td = AdtSql.createType(session, sqlText)
-      delegate.parsePlan(s"SELECT '${td.name}' AS type_created")
-    } else {
-      delegate.parsePlanWithParameters(AdtSql.rewrite(session, sqlText),
-                                       parameterContext)
-    }
+    delegate.parsePlanWithParameters(AdtSql.lower(session, sqlText), parameterContext)
 
   override def parseQuery(sqlText: String): LogicalPlan =
     delegate.parseQuery(AdtSql.rewrite(session, sqlText))

@@ -1,5 +1,6 @@
 package graft.adt
 
+import graft.SqlLex.{Punct, Tok, Walk, Word, lex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SQL surface for the ADT layer — the reference engine's user-facing
@@ -100,78 +101,22 @@ object AdtSql {
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(s"ADT type error: $msg")
 
-  // ---------------------------------------------------------------- lexer
-
-  /** Minimal SQL lexer: word tokens (identifiers/keywords/numbers) with
-    * positions; string literals, quoted identifiers and comments are opaque
-    * spans so rewrites never touch their contents.
-    */
-  private sealed trait Tok { def start: Int; def end: Int }
-  private final case class Word(start: Int, end: Int, text: String) extends Tok
-  private final case class Punct(start: Int, end: Int, ch: Char) extends Tok
-  private final case class Opaque(start: Int, end: Int) extends Tok
-
-  private def lex(s: String): Vector[Tok] = {
-    val out = Vector.newBuilder[Tok]
-    var i = 0
-    val n = s.length
-    while (i < n) {
-      val c = s(i)
-      if (c.isWhitespace) i += 1
-      else if (c == '\'' || c == '"' || c == '`') {
-        val start = i; i += 1
-        var done = false
-        while (i < n && !done) {
-          // backslash escape (Spark default string literals) — backticked
-          // identifiers only use doubling
-          if (s(i) == '\\' && c != '`' && i + 1 < n) i += 2
-          else if (s(i) == c) { if (i + 1 < n && s(i + 1) == c) i += 2 else { i += 1; done = true } }
-          else i += 1
-        }
-        out += Opaque(start, i)
-      } else if (c == '-' && i + 1 < n && s(i + 1) == '-') {
-        val start = i
-        while (i < n && s(i) != '\n') i += 1
-        out += Opaque(start, i)
-      } else if (c == '/' && i + 1 < n && s(i + 1) == '*') {
-        val start = i; i += 2
-        while (i + 1 < n && !(s(i) == '*' && s(i + 1) == '/')) i += 1
-        i = math.min(n, i + 2)
-        out += Opaque(start, i)
-      } else if (c.isLetter || c == '_' || c.isDigit) {
-        val start = i
-        while (i < n && (s(i).isLetterOrDigit || s(i) == '_')) i += 1
-        out += Word(start, i, s.substring(start, i))
-      } else {
-        out += Punct(i, i + 1, c); i += 1
-      }
-    }
-    out.result()
-  }
-
-  /** Index (in `toks`) just past the ')' matching the '(' at `open`. */
-  private def closeParen(toks: Vector[Tok], open: Int): Int = {
-    var depth = 0
-    var j = open
-    while (j < toks.length) {
-      toks(j) match {
-        case Punct(_, _, '(') => depth += 1
-        case Punct(_, _, ')') =>
-          depth -= 1
-          if (depth == 0) return j + 1
-        case _ =>
-      }
-      j += 1
-    }
-    fail("unbalanced parentheses")
-  }
-
-  private def isWord(t: Tok, up: String): Boolean = t match {
-    case Word(_, _, w) => w.equalsIgnoreCase(up)
-    case _ => false
-  }
-
   // ------------------------------------------------------------ CREATE TYPE
+
+  /** Split type DDL on top-level commas. Besides the walk's parens
+    * (DECIMAL(10,2)), '<' … '>' nest here (MAP<STRING, BIGINT>): only type
+    * DDL treats them as brackets. */
+  private def splitTypes(ddl: String): Seq[String] = {
+    val w = new Walk(ddl)
+    val angle = w.toks.scanLeft(0)(angleStep)
+    w.split(0, w.toks.length)(i => w.depth(i) == 0 && angle(i) == 0 && w.isPunct(i, ','))
+  }
+
+  private def angleStep(d: Int, t: Tok): Int = t match {
+    case Punct(_, _, '<') => d + 1
+    case Punct(_, _, '>') => d - 1
+    case _ => d
+  }
 
   private val CreateType =
     """(?is)^\s*CREATE\s+TYPE\s+([A-Za-z_][A-Za-z_0-9]*)\s*(?:<\s*([A-Za-z_][A-Za-z_0-9]*(?:\s*,\s*[A-Za-z_][A-Za-z_0-9]*)*)\s*>)?\s*=\s*(.+?)\s*;?\s*$""".r
@@ -214,46 +159,23 @@ object AdtSql {
         else paramsTxt.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
       if (params.map(_.toLowerCase).distinct.length != params.length)
         fail(s"duplicate type parameters in type $name<${params.mkString(", ")}>")
-      // split variants on top-level '|' (parens may nest DECIMAL(10,2) etc)
-      val parts = {
-        val b = Seq.newBuilder[String]
-        var depth = 0; var last = 0
-        for (i <- body.indices) body(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case '|' if depth == 0 => b += body.substring(last, i); last = i + 1
-          case _ =>
+      // variants split on top-level '|'; each is `Tag` or `Tag(<fields>)`
+      val variants = new Walk(body).splitTop('|').map { part =>
+        val pw = new Walk(part)
+        val n = pw.toks.length
+        pw.toks.headOption.collect { case Word(_, _, t) if !t.head.isDigit => t } match {
+          case Some(tag) if n == 1 => VariantDef(tag, Nil)
+          case Some(tag) if pw.isPunct(1, '(') && pw.close(1) == n - 1 =>
+            val fields = splitTypes(pw.span(2, n - 1)).filter(_.nonEmpty).map { f =>
+              lex(f) match {
+                case Word(_, _, fn) +: t +: _ => fn -> normType(f.substring(t.start), params)
+                case _ => fail(s"variant $tag: field '$f' needs '<name> <type>'")
+              }
+            }
+            if (fields.isEmpty) fail(s"variant $tag: empty payload list — drop the parens instead")
+            VariantDef(tag, fields)
+          case _ => fail(s"cannot parse variant '$part'")
         }
-        b += body.substring(last)
-        b.result().map(_.trim)
-      }
-      val VariantRe = """(?s)^([A-Za-z_][A-Za-z_0-9]*)\s*(?:\((.*)\))?$""".r
-      val variants = parts.map {
-        case VariantRe(tag, null) => VariantDef(tag, Nil)
-        case VariantRe(tag, fieldsTxt) =>
-          // split fields on commas at zero ()/<> depth — DECIMAL(10,2),
-          // MAP<STRING, BIGINT> and friends keep their inner commas
-          val fieldParts = {
-            val b = Seq.newBuilder[String]
-            var depth = 0; var last = 0
-            for (i <- fieldsTxt.indices) fieldsTxt(i) match {
-              case '(' | '<' => depth += 1
-              case ')' | '>' => depth -= 1
-              case ',' if depth == 0 => b += fieldsTxt.substring(last, i); last = i + 1
-              case _ =>
-            }
-            b += fieldsTxt.substring(last)
-            b.result().map(_.trim).filter(_.nonEmpty)
-          }
-          val fields = fieldParts.map { f =>
-            f.split("\\s+", 2) match {
-              case Array(fn, ft) => fn -> normType(ft, params)
-              case _ => fail(s"variant $tag: field '$f' needs '<name> <type>'")
-            }
-          }
-          if (fields.isEmpty) fail(s"variant $tag: empty payload list — drop the parens instead")
-          VariantDef(tag, fields)
-        case other => fail(s"cannot parse variant '$other'")
       }
       val tags = variants.map(_.tag.toLowerCase)
       if (tags.distinct != tags) fail(s"duplicate variant tags in type $name")
@@ -289,44 +211,25 @@ object AdtSql {
     (s"'tag', '${v.tag}'" +: payloads).mkString("named_struct(", ", ", ")")
   }
 
-  /** Split a constructor-call argument token span on top-level commas. */
-  private def splitArgs(text: String, inner: Vector[Tok]): Seq[String] =
-    if (inner.isEmpty) Seq.empty[String]
-    else {
-      val b = Seq.newBuilder[String]
-      var depth = 0
-      var segStart = inner.head.start
-      for (t <- inner) t match {
-        case Punct(p, _, ',') if depth == 0 =>
-          b += text.substring(segStart, p); segStart = p + 1
-        case Punct(_, _, '(') => depth += 1
-        case Punct(_, _, ')') => depth -= 1
-        case _ =>
-      }
-      b += text.substring(segStart, inner.last.end)
-      b.result().map(_.trim)
-    }
-
-  /** Index (in `toks`) just past the '>' matching the '<' at `open`, or
-    * -1 if none closes it (then the '<' was a comparison, not type
-    * arguments). Only '<'/'>' adjust depth — type-argument DDL contains
-    * no comparison operators, and parens (DECIMAL(10,2)) pass through
-    * untouched. */
-  private def closeAngle(toks: Vector[Tok], open: Int): Int = {
-    var depth = 0
-    var j = open
-    while (j < toks.length) {
-      toks(j) match {
-        case Punct(_, _, '<') => depth += 1
-        case Punct(_, _, '>') =>
-          depth -= 1
-          if (depth == 0) return j + 1
-        case _ =>
-      }
-      j += 1
-    }
-    -1
+  /** The argument texts of the call whose '(' is token `open`, and the
+    * index of its ')'. */
+  private def callArgs(w: Walk, open: Int): (Seq[String], Int) = {
+    val close = w.close(open)
+    if (close < 0) fail("unbalanced parentheses")
+    val args =
+      if (close == open + 1) Nil
+      else w.split(open + 1, close)(i => w.depth(i) == w.depth(open) + 1 && w.isPunct(i, ','))
+    (args, close)
   }
+
+  /** Index just past the '>' closing the '<' at token `open`, or -1 if
+    * none closes it (then the '<' was a comparison, not type arguments).
+    * Type-argument DDL contains no comparison operators. */
+  private def closeAngle(w: Walk, open: Int): Int =
+    w.toks.drop(open).scanLeft(0)(angleStep).indexWhere(_ == 0, 1) match {
+      case -1 => -1
+      case k => open + k
+    }
 
   /** Rewrite the FIRST `TypeName.Variant(args)` or
     * `TypeName<TypeArgs>.Variant(args)` call; None if there is none. A
@@ -335,70 +238,45 @@ object AdtSql {
     * inferred), and distinct instantiations coexist freely — each call
     * emits its own concrete struct DDL. */
   private def rewriteOneConstructor(spark: SparkSession, text: String): Option[String] = {
-    val toks = lex(text)
-    var j = 0
-    // --- generic form: Word '<' … '>' '.' Word '('
-    while (j + 1 < toks.length) {
-      (toks(j), toks(j + 1)) match {
-        case (Word(s0, _, tn), Punct(_, _, '<')) =>
-          val td = registry.get((spark, tn.toLowerCase))
-          val gEnd = if (td != null && td.params.nonEmpty) closeAngle(toks, j + 1) else -1
-          if (gEnd > 0) {
-            (toks.lift(gEnd), toks.lift(gEnd + 1), toks.lift(gEnd + 2)) match {
-              case (Some(Punct(_, _, '.')), Some(Word(_, _, vt)), Some(Punct(_, _, '('))) =>
-                // split type args on commas at zero <>/() depth
-                val inner = toks.slice(j + 2, gEnd - 1)
-                val typeArgs = {
-                  if (inner.isEmpty) fail(s"type ${td.name} needs type arguments")
-                  val b = Seq.newBuilder[String]
-                  var depth = 0
-                  var segStart = inner.head.start
-                  for (t <- inner) t match {
-                    case Punct(p, _, ',') if depth == 0 =>
-                      b += text.substring(segStart, p); segStart = p + 1
-                    case Punct(_, _, '(') | Punct(_, _, '<') => depth += 1
-                    case Punct(_, _, ')') | Punct(_, _, '>') => depth -= 1
-                    case _ =>
-                  }
-                  b += text.substring(segStart, inner.last.end)
-                  b.result().map(_.trim)
-                }
-                val mono = td.instantiate(typeArgs)
-                val v = mono.variant(vt).getOrElse(
-                  fail(s"type ${mono.name} has no variant $vt (has: ${mono.variants.map(_.tag).mkString(", ")})"))
-                val close = closeParen(toks, gEnd + 2)
-                val argToks = toks.slice(gEnd + 3, close - 1)
-                val args = splitArgs(text, argToks)
-                val repl = constructorSql(mono, v, args)
-                return Some(text.substring(0, s0) + repl + text.substring(toks(close - 1).end))
-              case _ => // a '<' comparison against a column named like the type
-            }
-          }
-        case _ =>
-      }
-      j += 1
+    val w = new Walk(text)
+    val toks = w.toks
+    def typeAt(j: Int): Option[TypeDef] = toks(j) match {
+      case Word(_, _, tn) => Option(registry.get((spark, tn.toLowerCase)))
+      case _ => None
     }
-    j = 0
-    while (j + 3 < toks.length) {
-      (toks(j), toks(j + 1), toks(j + 2), toks(j + 3)) match {
-        case (Word(s0, _, tn), Punct(_, _, '.'), Word(_, _, vt), Punct(_, _, '(')) =>
-          val td = registry.get((spark, tn.toLowerCase))
-          if (td != null && td.params.nonEmpty)
-            fail(s"type ${td.name} is generic over <${td.params.mkString(", ")}> — " +
-              s"instantiate the constructor: ${td.name}<…>.$vt(…)")
-          if (td != null) {
-            val v = td.variant(vt).getOrElse(
-              fail(s"type ${td.name} has no variant $vt (has: ${td.variants.map(_.tag).mkString(", ")})"))
-            val close = closeParen(toks, j + 3)
-            val args = splitArgs(text, toks.slice(j + 4, close - 1))
-            val repl = constructorSql(td, v, args)
-            return Some(text.substring(0, s0) + repl + text.substring(toks(close - 1).end))
-          }
-        case _ =>
-      }
-      j += 1
+    // `.Variant(` starting at token `dot`: the variant name
+    def variantAt(dot: Int): Option[String] = toks.lift(dot + 1) match {
+      case Some(Word(_, _, vt)) if w.isPunct(dot, '.') && w.isPunct(dot + 2, '(') => Some(vt)
+      case _ => None
     }
-    None
+    // the text with the call from token `from` to the ')' after `dot` lowered
+    def lower(td: TypeDef, from: Int, dot: Int, vt: String): String = {
+      val v = td.variant(vt).getOrElse(
+        fail(s"type ${td.name} has no variant $vt (has: ${td.variants.map(_.tag).mkString(", ")})"))
+      val (args, close) = callArgs(w, dot + 2)
+      text.substring(0, toks(from).start) + constructorSql(td, v, args) + text.substring(toks(close).end)
+    }
+    // generic form: Type '<' … '>' '.' Variant '('
+    val generic = toks.indices.iterator.flatMap { j =>
+      typeAt(j).filter(td => td.params.nonEmpty && w.isPunct(j + 1, '<')).flatMap { td =>
+        val gEnd = closeAngle(w, j + 1)
+        // no '.Variant(' after a closing '>': a '<' comparison against a
+        // column named like the type
+        (if (gEnd > 0) variantAt(gEnd) else None).map { vt =>
+          if (gEnd == j + 3) fail(s"type ${td.name} needs type arguments")
+          lower(td.instantiate(splitTypes(w.span(j + 2, gEnd - 1))), j, gEnd, vt)
+        }
+      }
+    }
+    val plain = toks.indices.iterator.flatMap { j =>
+      variantAt(j + 1).flatMap(vt => typeAt(j).map { td =>
+        if (td.params.nonEmpty)
+          fail(s"type ${td.name} is generic over <${td.params.mkString(", ")}> — " +
+            s"instantiate the constructor: ${td.name}<…>.$vt(…)")
+        lower(td, j, j + 1, vt)
+      })
+    }
+    (generic ++ plain).nextOption()
   }
 
   // ----------------------------------------------------------------- MATCH
@@ -406,89 +284,46 @@ object AdtSql {
   private final case class Arm(tag: String, binders: Seq[String], body: String)
 
   /** Rewrite the FIRST (leftmost) `MATCH (subj) WHEN … END`; None if absent.
-    * Nested MATCH/CASE inside arm bodies are tracked as opaque END-blocks
-    * and rewritten on later fixpoint passes.
+    * Its arms sit one level inside it; nested MATCH/CASE blocks in arm
+    * bodies sit deeper and are rewritten on later fixpoint passes.
     */
   private def rewriteOneMatch(spark: SparkSession, text: String): Option[String] = {
-    val toks = lex(text)
-    var m = toks.indexWhere(isWord(_, "MATCH"))
-    while (m >= 0) {
-      if (m + 1 < toks.length && toks(m + 1) == Punct(toks(m + 1).start, toks(m + 1).end, '(')) {
-        val subjEnd = closeParen(toks, m + 1)
-        val subj = text.substring(toks(m + 1).start, toks(subjEnd - 1).end)
-        // scan arms at top level: WHEN Tag[(b,…)] THEN body … [ELSE body] END
-        var j = subjEnd
-        var parenDepth = 0
-        var blockDepth = 0 // CASE/MATCH … END nesting inside bodies
-        val arms = Seq.newBuilder[Arm]
-        var elseBody: Option[String] = None
-        var curTag: String = null
-        var curBinders: Seq[String] = Nil
-        var bodyStart = -1
-        var inElse = false
-        def flush(endPos: Int): Unit = {
-          if (bodyStart < 0) fail("MATCH arm without THEN body")
-          val body = text.substring(bodyStart, endPos).trim
-          if (body.isEmpty) fail("empty MATCH arm body")
-          if (inElse) elseBody = Some(body) else arms += Arm(curTag, curBinders, body)
-          bodyStart = -1
-        }
-        while (j < toks.length) {
-          toks(j) match {
-            case Punct(_, _, '(') => parenDepth += 1; j += 1
-            case Punct(_, _, ')') => parenDepth -= 1; j += 1
-            case w: Word if parenDepth == 0 && (isWord(w, "CASE") || isWord(w, "MATCH")) =>
-              blockDepth += 1; j += 1
-            case w: Word if parenDepth == 0 && blockDepth > 0 && isWord(w, "END") =>
-              blockDepth -= 1; j += 1
-            case w: Word if parenDepth == 0 && blockDepth == 0 &&
-                (isWord(w, "WHEN") || isWord(w, "ELSE") || isWord(w, "END")) =>
-              if (bodyStart >= 0) flush(w.start)
-              else if (curTag != null || inElse) fail("MATCH arm without THEN")
-              if (isWord(w, "END")) {
-                // resolve + emit
-                val armList = arms.result()
-                if (armList.isEmpty) fail("MATCH needs at least one WHEN arm")
-                return Some(
-                  text.substring(0, toks(m).start) +
-                    lowerMatch(spark, subj, armList, elseBody) +
-                    text.substring(w.end))
-              } else if (isWord(w, "ELSE")) {
-                inElse = true; curTag = null
-                j += 1
-                bodyStart = if (j < toks.length) toks(j).start else fail("ELSE without body")
-              } else { // WHEN Tag [( binders )] THEN
-                inElse = false
-                j += 1
-                curTag = toks.lift(j) match {
-                  case Some(Word(_, _, t)) => t
-                  case _ => fail("WHEN must name a variant")
-                }
-                j += 1
-                curBinders = Nil
-                if (j < toks.length && toks(j).isInstanceOf[Punct] &&
-                    toks(j).asInstanceOf[Punct].ch == '(') {
-                  val bEnd = closeParen(toks, j)
-                  curBinders = toks.slice(j + 1, bEnd - 1).collect {
-                    case Word(_, _, b) => b
-                    case Punct(_, _, ',') => null
-                    case t => fail(s"binder list may only contain names: '${text.substring(t.start, t.end)}'")
-                  }.filter(_ != null).toSeq
-                  j = bEnd
-                }
-                if (!(j < toks.length && isWord(toks(j), "THEN")))
-                  fail(s"expected THEN after WHEN $curTag")
-                j += 1
-                bodyStart = if (j < toks.length) toks(j).start else fail("THEN without body")
-              }
-            case _ => j += 1
-          }
-        }
-        fail("MATCH without closing END")
+    val w = new Walk(text)
+    val toks = w.toks
+    toks.indices.find(m => w.isWord(m, "MATCH") && w.isPunct(m + 1, '(')).map { m =>
+      val subjEnd = w.close(m + 1)
+      val end = w.close(m)
+      if (subjEnd < 0 || !w.isWord(end, "END")) fail("MATCH without closing END")
+      // WHEN Tag[(b,…)] THEN body … [ELSE body] END
+      val marks = (subjEnd + 1 until end).filter(i =>
+        w.depth(i) == w.depth(m) + 1 && (w.isWord(i, "WHEN") || w.isWord(i, "ELSE")))
+      if (!w.isWord(subjEnd + 1, "WHEN")) fail("MATCH needs at least one WHEN arm")
+      if (marks.init.exists(w.isWord(_, "ELSE"))) fail("ELSE must be the last MATCH arm")
+      def body(from: Int, until: Int): String = w.span(from, until) match {
+        case "" => fail("empty MATCH arm body")
+        case b => b
       }
-      m = toks.indexWhere(isWord(_, "MATCH"), m + 1)
+      val arms = marks.zip(marks.tail :+ end).collect { case (a, next) if w.isWord(a, "WHEN") =>
+        val tag = toks(a + 1) match {
+          case Word(_, _, t) => t
+          case _ => fail("WHEN must name a variant")
+        }
+        val thenAt = if (w.isPunct(a + 2, '(')) w.close(a + 2) + 1 else a + 2
+        val binders = toks.slice(a + 3, thenAt - 1).filter {
+          case Punct(_, _, ',') => false
+          case _ => true
+        }.map {
+          case Word(_, _, b) => b
+          case t => fail(s"binder list may only contain names: '${text.substring(t.start, t.end)}'")
+        }
+        if (!w.isWord(thenAt, "THEN")) fail(s"expected THEN after WHEN $tag")
+        Arm(tag, binders, body(thenAt + 1, next))
+      }
+      val elseBody = marks.lastOption.filter(w.isWord(_, "ELSE")).map(e => body(e + 1, end))
+      text.substring(0, toks(m).start) +
+        lowerMatch(spark, w.span(m + 1, subjEnd + 1), arms, elseBody) +
+        text.substring(toks(end).end)
     }
-    None
   }
 
   /** Type-resolve the arms against the session catalog and emit the CASE.
@@ -541,16 +376,12 @@ object AdtSql {
       val body =
         if (sub.isEmpty) a.body
         else {
-          val bts = lex(a.body)
-          def isPunct(idx: Int, c: Char): Boolean = bts.lift(idx).exists {
-            case Punct(_, _, p) => p == c
-            case _ => false
-          }
+          val bw = new Walk(a.body)
           val sb = new StringBuilder
           var pos = 0
-          for (idx <- bts.indices) bts(idx) match {
+          for (idx <- bw.toks.indices) bw.toks(idx) match {
             case Word(s0, e0, wtx) if sub.contains(wtx.toLowerCase) &&
-                !isPunct(idx - 1, '.') && !isPunct(idx + 1, '(') =>
+                !bw.isPunct(idx - 1, '.') && !bw.isPunct(idx + 1, '(') =>
               sb.append(a.body.substring(pos, s0)).append(sub(wtx.toLowerCase)); pos = e0
             case _ =>
           }
@@ -581,14 +412,20 @@ object AdtSql {
     cur
   }
 
-  /** Run one statement with the ADT grammar enabled — CREATE TYPE registers
-    * and returns a one-row acknowledgement; anything else is rewritten and
-    * handed to `spark.sql`. Sessions built with `GraftExtensions` get this
-    * transparently inside plain `spark.sql`.
+  /** The text Spark parses in place of `text`: a CREATE TYPE (recognized
+    * from its first token, so comments may lead it) registers and becomes
+    * its one-row acknowledgement; anything else is lowered by [[rewrite]].
+    * The injected parser and [[sql]] both go through here.
     */
-  def sql(spark: SparkSession, text: String): DataFrame =
-    if (isCreateType(text)) {
-      val td = createType(spark, text)
-      spark.sql(s"SELECT '${td.name}' AS type_created")
-    } else spark.sql(rewrite(spark, text))
+  def lower(spark: SparkSession, text: String): String = {
+    val stmt = graft.SqlLex.trim(text)
+    if (isCreateType(stmt)) s"SELECT '${createType(spark, stmt).name}' AS type_created"
+    else rewrite(spark, text)
+  }
+
+  /** Run one statement with the ADT grammar enabled on any session —
+    * sessions built with `GraftExtensions` get the same transparently
+    * inside plain `spark.sql`.
+    */
+  def sql(spark: SparkSession, text: String): DataFrame = spark.sql(lower(spark, text))
 }

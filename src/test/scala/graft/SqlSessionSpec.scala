@@ -29,6 +29,67 @@ class SqlSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Sql.splitStatements("/* c1; */ SELECT 1;;") == Seq("/* c1; */ SELECT 1"))
   }
 
+  // Every text-level rewrite reads the statement through one lexer: a
+  // keyword, quote or paren inside a comment is never taken for SQL, a
+  // leading comment does not defeat statement dispatch, and only the ADT
+  // form `MATCH (` opens a block.
+  test("comments anywhere and a column named match, across every rewrite") {
+    val warehouse = Tables.scratchDir("graft_whlex").toString
+    val s = freshSession(warehouse)
+    Sql.execute(s, warehouse,
+      "CREATE TABLE lex_t USING parquet AS SELECT id AS k, id * 10 AS v FROM range(4)").collect()
+    def longs(sql: String): Seq[Seq[Long]] =
+      Sql.runSql(s, sql).collect().map(r => r.toSeq.map(_.asInstanceOf[Long])).toSeq
+    val rows: Seq[(String, () => Any, Any)] = Seq(
+      ("topLevelKeywordIndex skips a keyword in a block comment",
+        () => Sql.topLevelKeywordIndex("a = 1 /* where */ WHERE k = 2", "WHERE"), 18),
+      ("rewriteQualify ignores a keyword in a line comment",
+        () => Sql.rewriteQualify("SELECT a FROM t -- no qualify here\nORDER BY a"),
+        "SELECT a FROM t -- no qualify here\nORDER BY a"),
+      ("a '(' in a comment does not hide QUALIFY",
+        () => longs("SELECT k FROM lex_t -- (see note\nQUALIFY k = 1"), Seq(Seq(1L))),
+      ("Merge.parse reads past a comment before ON",
+        () => Merge.parse("MERGE INTO t USING s -- when in doubt\nON t.k = s.k WHEN MATCHED THEN DELETE")
+          .map(m => (m.sourceSql, m.sourceAlias, m.cond, m.matched)),
+        Some((Left("s"), "s", "t.k = s.k", Some(Merge.DeleteAction)))),
+      ("DISTINCT ON finds ORDER BY behind a comment",
+        () => longs("SELECT DISTINCT ON (p) p, k FROM (SELECT k % 2 AS p, k FROM lex_t) " +
+          "/* order matters */ ORDER BY p, k DESC"),
+        Seq(Seq(0L, 2L), Seq(1L, 3L))),
+      ("splitTopLevel does not split inside a comment",
+        () => Sql.splitTopLevel("a = 1, b = 2 -- , c = 3", ','), Seq("a = 1", "b = 2")),
+      ("a leading comment still dispatches MERGE",
+        () => {
+          Sql.execute(s, warehouse, "/* upsert */ MERGE INTO lex_t t USING (SELECT 1 AS k, 99 AS v) s " +
+            "ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v").collect()
+          s.sql("SELECT v FROM lex_t WHERE k = 1").head().getLong(0)
+        }, 99L),
+      ("a leading comment still records CREATE VIEW for restart",
+        () => {
+          Sql.execute(s, warehouse, "-- keep\nCREATE VIEW lex_v AS SELECT k FROM lex_t")
+          s.sql("DROP VIEW lex_v") // not through execute: the record stays
+          GraftCatalog.restore(s, warehouse)
+          s.catalog.tableExists("lex_v")
+        }, true),
+      ("a leading comment still records CREATE TYPE for restart",
+        () => {
+          Sql.execute(s, warehouse, "-- keep\nCREATE TYPE LexState = Up | Down")
+          GraftCatalog.restore(s, warehouse)._2
+        }, Seq("LexState")),
+      ("a column named match opens no block",
+        () => Merge.parse("MERGE INTO t USING s ON t.match = s.match WHEN MATCHED THEN DELETE")
+          .map(m => (m.cond, m.matched)),
+        Some(("t.match = s.match", Some(Merge.DeleteAction)))))
+    val wrong = rows.flatMap { case (what, got, want) =>
+      scala.util.Try(got()) match {
+        case scala.util.Success(v) if v == want => None
+        case other => Some(s"$what: want $want, got $other")
+      }
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+    s.stop()
+  }
+
   test("tables and types persist across a session restart") {
     val warehouse = Tables.scratchDir("graft_wh").toString
 
