@@ -41,14 +41,7 @@ object LocalSpark {
 
   /** Block until `spark`'s listener bus has delivered every queued event,
     * so listener counters read after an action include that action (the
-    * bus is async; `waitUntilEmpty` is private[spark], reached reflectively
-    * the way Spark's tests do). */
+    * bus is async). */
   def drainBus(spark: SparkSession): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethods.find(m =>
-        m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .foreach(_.invoke(bus))
-    } catch { case _: Exception => () }
+    org.apache.spark.sql.graft.Bridge.drainBus(spark)
 }

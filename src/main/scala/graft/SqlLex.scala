@@ -18,8 +18,12 @@ object SqlLex {
   final case class Punct(start: Int, end: Int, ch: Char) extends Tok
   final case class Opaque(start: Int, end: Int) extends Tok
 
-  def lex(s: String): Vector[Tok] = {
+  def lex(s: String): Vector[Tok] = scan(s)._1
+
+  /** `s`'s tokens, and the (start, end) span of each comment. */
+  private def scan(s: String): (Vector[Tok], Vector[(Int, Int)]) = {
     val out = Vector.newBuilder[Tok]
+    val comments = Vector.newBuilder[(Int, Int)]
     var i = 0
     val n = s.length
     while (i < n) {
@@ -37,11 +41,14 @@ object SqlLex {
         }
         out += Opaque(start, i)
       } else if (c == '-' && i + 1 < n && s(i + 1) == '-') {
+        val start = i
         while (i < n && s(i) != '\n') i += 1
+        comments += ((start, i))
       } else if (c == '/' && i + 1 < n && s(i + 1) == '*') {
-        i += 2
+        val start = i; i += 2
         while (i + 1 < n && !(s(i) == '*' && s(i + 1) == '/')) i += 1
         i = math.min(n, i + 2)
+        comments += ((start, i))
       } else if (c.isLetter || c == '_' || c.isDigit) {
         val start = i
         while (i < n && (s(i).isLetterOrDigit || s(i) == '_')) i += 1
@@ -50,19 +57,28 @@ object SqlLex {
         out += Punct(i, i + 1, c); i += 1
       }
     }
-    out.result()
+    (out.result(), comments.result())
   }
 
-  /** `stmt` as its tokens span it: whitespace and comments at either end
-    * and a final ';' drop, so a statement dispatches on its first keyword
-    * even behind a leading comment. */
+  /** `stmt` as its tokens span it, each comment between them one space:
+    * whitespace and comments at either end and a final ';' drop, so a
+    * statement dispatches on its first keyword even behind a leading
+    * comment, and a keyword head regex (`MERGE\s+INTO`) matches across a
+    * comment inside the head. */
   def trim(stmt: String): String = {
-    val t = lex(stmt)
+    val (t, comments) = scan(stmt)
     val n = t.lastOption match {
       case Some(Punct(_, _, ';')) => t.length - 1
       case _ => t.length
     }
-    if (n == 0) "" else stmt.substring(t.head.start, t(n - 1).end)
+    if (n == 0) ""
+    else {
+      val (from, until) = (t.head.start, t(n - 1).end)
+      val b = new StringBuilder
+      val last = comments.filter(c => c._1 > from && c._1 < until).foldLeft(from) {
+        case (at, (a, e)) => b.append(stmt.substring(at, a)).append(' '); e }
+      b.append(stmt.substring(last, until)).toString
+    }
   }
 
   /** `text`'s tokens with the nesting depth of each. A '(' or a block

@@ -98,55 +98,10 @@ object Similarity {
   private val K = 5
   private val Iters = 3
 
-  /** Quantized dimension table: one row per (vec_id, dim index, integer
-    * coordinate), the exact-arithmetic substrate for Lloyd iterations.
-    * round(x·1000) on the float-widened double is identical in both
-    * engines; |x| ≤ 303 on this data, so every later product stays far
-    * inside int64 AND double-exact range (see vec_kmeans_lloyd).
-    */
-  private[operators] def quantized(s: SparkSession, d: String): DataFrame =
-    Tables(s, d, "embeddings")
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "e")))
-      .select(col("vec_id"), col("i"),
-              round(col("e").cast("double") * 1000).cast("bigint").as("x"))
-
-  /** Initial centroid state: the K lexicographically-first vectors, each a
-    * singleton cluster keyed by its own vec_id.
-    */
-  private def seedState(s: SparkSession, d: String, q: DataFrame): DataFrame = {
-    val seeds = Tables(s, d, "embeddings")
-      .select(col("vec_id")).orderBy("vec_id").limit(K)
-    q.join(broadcast(seeds), "vec_id")
-      .select(col("vec_id").as("cluster"), col("i"),
-              col("x").as("cs"), lit(1L).as("cn"))
-  }
-
-  /** One Lloyd iteration: assign every vector to its nearest centroid (the
-    * k×dim state is BROADCAST, so the corpus never shuffles for the
-    * distance join), then re-derive the (Σx, n) state. Package-visible so
-    * ScaleSpec can gate the plan shape of the stage the operator's
-    * checkpoints would otherwise hide.
-    */
-  private[graft] def lloydStep(q: DataFrame, state: DataFrame): DataFrame = {
-    val assign = q.join(broadcast(state), "i")
-      .groupBy(col("vec_id"), col("cluster"))
-      .agg(sum((col("cn") * col("x") - col("cs")) *
-               (col("cn") * col("x") - col("cs"))).as("num"),
-           max(col("cn")).as("cn"))
-      .groupBy("vec_id")
-      .agg(min(struct((col("num").cast("double") /
-                       (col("cn") * col("cn")).cast("double")).as("d"),
-                      col("cluster").as("c"))).as("m"))
-      .select(col("vec_id"), col("m.c").as("cluster"))
-    assign.join(q, "vec_id")
-      .groupBy("cluster", "i")
-      .agg(sum(col("x")).as("cs"), count(lit(1)).as("cn"))
-  }
-
   /** Test probe: one un-checkpointed Lloyd stage over the real tables. */
   private[graft] def kmeansStageForPlan(s: SparkSession, d: String): DataFrame = {
-    val q = quantized(s, d)
-    lloydStep(q, seedState(s, d, q))
+    val q = VecIndex.quantized(s, d)
+    VecIndex.lloydStep(q, Nil)(VecIndex.seed(s, d, q, Nil, K))
   }
 
   val decls: Map[String, Decl] = declMap(
@@ -647,14 +602,10 @@ object Similarity {
     // iteration is one scan of the exploded fact plus ONE shuffle keyed
     // on vec_id (the assignment group-by); classic Lloyd-on-MapReduce.
     "vec_kmeans_lloyd" -> Decl(
-      (s, d) => {
-        val q = quantized(s, d).localCheckpoint(true)
-        Fixpoint(seedState(s, d, q), Nil, Iters, "k-means")(lloydStep(q, _))(
-            (_, pass) => pass == Iters)
-          .groupBy("cluster")
-          .agg(max(col("cn")).as("n"), sum(col("cs")).as("ssum"))
-          .orderBy("cluster")
-      },
+      (s, d) => VecIndex.lloyd(s, d, VecIndex.quantized(s, d), Nil, K, Iters, "k-means")
+        .groupBy("cluster")
+        .agg(max(col("cn")).as("n"), sum(col("cs")).as("ssum"))
+        .orderBy("cluster"),
       Some {
         val b = new StringBuilder(
           s"""WITH q AS (SELECT vec_id, u.i,
@@ -836,7 +787,7 @@ object Similarity {
     // shuffle — never a corpus×corpus join.
     "sim_matryoshka_recall" -> Decl(
       (s, d) => {
-        val q = quantized(s, d).localCheckpoint(true)
+        val q = VecIndex.quantized(s, d)
         val norms = q.groupBy("vec_id").agg(sum(col("x") * col("x")).as("n2"))
         val normsT = q.filter(col("i") < 16)
           .groupBy("vec_id").agg(sum(col("x") * col("x")).as("n2"))

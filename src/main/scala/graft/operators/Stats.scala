@@ -5730,8 +5730,8 @@ object Stats {
              |FROM c""".stripMargin)),
 
     // SemDeDup-style semantic-cluster dedup — cluster the embedding space
-    // (the same seeded 2-round Lloyd as sim_ann_ivf), then find near-dup
-    // pairs WITHIN clusters only: the pair space is bounded by cell size
+    // (by sim_ann_ivf's stored centroids, VecIndex.ivfCentroids), then find
+    // near-dup pairs WITHIN clusters only: the pair space is bounded by cell size
     // instead of corpus size, which is the published SemDeDup recipe for
     // billion-document semantic dedup (at 100 TB nlist grows with the
     // corpus to hold cell size constant — here it is the label-seeded cell
@@ -5746,16 +5746,7 @@ object Stats {
       (s, d) => {
         val n = s.sparkContext.defaultParallelism
         val emb = Tables(s, d, "embeddings")
-        var cent = PipelineExt.ivfCentroidOf(
-          emb.join(broadcast(PipelineExt.ivfLabelSeed(s, d)), "label")
-            .select(col("cid"), col("embedding")))
-          .localCheckpoint(true)
-        for (_ <- 1 to 2)
-          cent = PipelineExt.ivfCentroidOf(
-            emb.join(PipelineExt.ivfAssignLazy(s, d, cent), "vec_id")
-              .select(col("cid"), col("embedding")))
-            .localCheckpoint(true)
-        val rows = cent.select(col("cid"), col("centroid")).collect()
+        val rows = VecIndex.ivfCentroids(s, d).select(col("cid"), col("centroid")).collect()
           .sortBy(_.getInt(0))
         val cids = rows.map(_.getInt(0))
         val cents = rows.map(_.getSeq[Float](1).toArray)

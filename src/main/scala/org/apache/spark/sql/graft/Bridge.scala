@@ -22,6 +22,12 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Block until `spark`'s listener bus has delivered every queued event
+    * (`SparkContext.listenerBus` is `private[spark]`); throws if it does
+    * not drain within Spark's timeout. */
+  def drainBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** `cut` (a `localCheckpoint` result) with the optimizer's statistics
     * set to its measured row count. A checkpoint otherwise keeps the
     * estimate of the plan it cut, so a loop whose step joins each

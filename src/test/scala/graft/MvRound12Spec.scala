@@ -178,15 +178,8 @@ class MvRound12Spec extends AnyFunSuite with SharedSpark
           read.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
     }
     // drain the async bus of prior tests' backlog before arming, and of
-    // the refresh's own tail before reading the counter (the bus is
-    // private[spark]; tests reach it reflectively like Spark's own do)
-    def drainBus(): Unit = {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethods.find(m =>
-        m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .foreach(_.invoke(bus))
-    }
+    // the refresh's own tail before reading the counter
+    def drainBus(): Unit = org.apache.spark.sql.graft.Bridge.drainBus(spark)
     drainBus()
     spark.sparkContext.addSparkListener(listener)
     try {

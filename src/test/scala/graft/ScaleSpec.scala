@@ -31,10 +31,7 @@ class ScaleSpec extends AnyFunSuite with SharedSpark {
   // themselves cannot hide behind the checkpoint.
   test("checkpointed pair pipelines have no cartesian upstream of the checkpoint") {
     val ivfLazy = operators.PipelineExt.ivfAssignLazy(spark, sf,
-      operators.PipelineExt.ivfCentroidOf(
-        Tables(spark, sf, "embeddings")
-          .join(broadcast(operators.PipelineExt.ivfLabelSeed(spark, sf)), "label")
-          .select(col("cid"), col("embedding"))))
+      operators.VecIndex.ivfSeed(spark, sf))
     val lazyPipelines = Seq(
       "dedup_near_minhash" -> operators.Pipeline.minhashPairs(spark, sf),
       "dedup_simhash" -> operators.PipelineExt.simhashPairs(spark, sf),

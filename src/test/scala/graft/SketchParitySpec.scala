@@ -69,9 +69,7 @@ class SketchParitySpec extends AnyFunSuite with SharedSpark {
   test("CentroidAssign equals the broadcast-NL + max_by assignment") {
     import functions.VectorOps
     val emb = Tables(spark, sf, "embeddings")
-    val cent = operators.PipelineExt.ivfCentroidOf(
-      emb.join(broadcast(operators.PipelineExt.ivfLabelSeed(spark, sf)), "label")
-        .select(col("cid"), col("embedding")))
+    val cent = operators.VecIndex.ivfSeed(spark, sf)
     val relational = emb
       .crossJoin(broadcast(cent))
       .withColumn("sc", round(VectorOps.cosine(col("embedding"), col("centroid")), 6))

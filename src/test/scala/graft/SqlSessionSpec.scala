@@ -31,8 +31,8 @@ class SqlSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // Every text-level rewrite reads the statement through one lexer: a
   // keyword, quote or paren inside a comment is never taken for SQL, a
-  // leading comment does not defeat statement dispatch, and only the ADT
-  // form `MATCH (` opens a block.
+  // comment before or inside a statement's keyword head does not defeat
+  // statement dispatch, and only the ADT form `MATCH (` opens a block.
   test("comments anywhere and a column named match, across every rewrite") {
     val warehouse = Tables.scratchDir("graft_whlex").toString
     val s = freshSession(warehouse)
@@ -79,7 +79,83 @@ class SqlSessionSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("a column named match opens no block",
         () => Merge.parse("MERGE INTO t USING s ON t.match = s.match WHEN MATCHED THEN DELETE")
           .map(m => (m.cond, m.matched)),
-        Some(("t.match = s.match", Some(Merge.DeleteAction)))))
+        Some(("t.match = s.match", Some(Merge.DeleteAction)))),
+      // a comment inside each statement's keyword head
+      ("MERGE /* x */ INTO",
+        () => {
+          Sql.execute(s, warehouse, "MERGE /* x */ INTO lex_t t USING (SELECT 2 AS k, 77 AS v) s " +
+            "ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v").collect()
+          s.sql("SELECT v FROM lex_t WHERE k = 2").head().getLong(0)
+        }, 77L),
+      ("UPDATE t -- c SET",
+        () => {
+          Sql.execute(s, warehouse, "UPDATE lex_t -- c\nSET v = 55 WHERE k = 3").collect()
+          s.sql("SELECT v FROM lex_t WHERE k = 3").head().getLong(0)
+        }, 55L),
+      ("DELETE /* x */ FROM",
+        () => {
+          Sql.execute(s, warehouse, "DELETE /* x */ FROM lex_t WHERE k = 0").collect()
+          s.sql("SELECT count(*) FROM lex_t WHERE k = 0").head().getLong(0)
+        }, 0L),
+      ("CREATE /* x */ TYPE, recorded for restart",
+        () => {
+          Sql.execute(s, warehouse, "CREATE /* x */ TYPE LexDir = North | South")
+          GraftCatalog.restore(s, warehouse)._2.contains("LexDir")
+        }, true),
+      ("CREATE /* x */ VIEW, recorded for restart",
+        () => {
+          Sql.execute(s, warehouse, "CREATE /* x */ VIEW lex_v2 AS SELECT k FROM lex_t")
+          s.sql("DROP VIEW lex_v2")
+          GraftCatalog.restore(s, warehouse)
+          s.catalog.tableExists("lex_v2")
+        }, true),
+      ("CREATE VIEW IF /* x */ NOT EXISTS keeps the first record",
+        () => {
+          Sql.execute(s, warehouse, "CREATE VIEW lex_v3 AS SELECT k FROM lex_t")
+          Sql.execute(s, warehouse, "CREATE VIEW IF /* x */ NOT EXISTS lex_v3 AS SELECT v FROM lex_t")
+          s.sql("DROP VIEW lex_v3")
+          GraftCatalog.restore(s, warehouse)
+          val cols = s.table("lex_v3").columns.toSeq
+          Sql.execute(s, warehouse, "DROP VIEW lex_v3")
+          GraftCatalog.restore(s, warehouse)
+          (cols, s.catalog.tableExists("lex_v3"))
+        }, (Seq("k"), false)),
+      ("DROP /* x */ VIEW, forgotten for restart",
+        () => {
+          Sql.execute(s, warehouse, "CREATE VIEW lex_v4 AS SELECT k FROM lex_t")
+          Sql.execute(s, warehouse, "DROP /* x */ VIEW lex_v4")
+          GraftCatalog.restore(s, warehouse)
+          s.catalog.tableExists("lex_v4")
+        }, false),
+      ("DROP /* x */ TABLE, forgotten for restart",
+        () => {
+          s.range(3).write.parquet(s"$warehouse/lex_d")
+          s.catalog.createTable("lex_d", s"$warehouse/lex_d", "parquet")
+          Sql.execute(s, warehouse, "DROP /* x */ TABLE lex_d")
+          GraftCatalog.restore(s, warehouse)._1.contains("lex_d")
+        }, false),
+      ("ANALYZE /* x */ TABLE, recorded for restart",
+        () => {
+          Sql.execute(s, warehouse, "ANALYZE /* x */ TABLE lex_t COMPUTE STATISTICS")
+          val f = java.nio.file.Paths.get(warehouse, "_graft_stats.sql")
+          java.nio.file.Files.exists(f) && java.nio.file.Files.readString(f).contains("lex_t")
+        }, true),
+      ("CREATE /* x */ MATERIALIZED VIEW",
+        () => {
+          Sql.execute(s, warehouse, "CREATE /* x */ MATERIALIZED VIEW lex_mv AS " +
+            "SELECT k, count(*) AS n FROM lex_t GROUP BY k")
+          graft.plans.MvCatalog.recall(s, "lex_mv").isDefined
+        }, true),
+      ("REFRESH /* x */ MATERIALIZED VIEW",
+        () => Sql.execute(s, warehouse, "REFRESH /* x */ MATERIALIZED VIEW lex_mv").columns.toSeq,
+        Seq("k", "n")),
+      ("DROP /* x */ MATERIALIZED VIEW",
+        () => {
+          Sql.execute(s, warehouse, "CREATE MATERIALIZED VIEW lex_mv AS " +
+            "SELECT k, count(*) AS n FROM lex_t GROUP BY k")
+          Sql.execute(s, warehouse, "DROP /* x */ MATERIALIZED VIEW lex_mv")
+          graft.plans.MvCatalog.recall(s, "lex_mv").isEmpty
+        }, true))
     val wrong = rows.flatMap { case (what, got, want) =>
       scala.util.Try(got()) match {
         case scala.util.Success(v) if v == want => None
