@@ -21,9 +21,10 @@ import org.apache.spark.sql.execution.ExplainMode
   *     runs each key twice in one session — cold (planning, codegen
   *     compile, JIT, broadcast setup) against warm (steady-state
   *     execution) — printing each run's task CPU, wall time, jobs,
-  *     codegen compiles and their compile milliseconds, and lists the
-  *     warm run's five costliest stages (max ≫ total/tasks means one
-  *     straggler task).
+  *     codegen compiles and their compile milliseconds, then each stored
+  *     artifact build the run triggered (`Artifacts.builds`: ms, rows and
+  *     bytes), and lists the warm run's five costliest stages (max ≫
+  *     total/tasks means one straggler task).
   *
   * `sbt "runMain graft.Dev prof tpch_q8"`; the sf dir comes from
   * `SPARK_GRAFT_SF_DIR` and defaults to Bench's (sf0.1).
@@ -106,6 +107,7 @@ object Dev {
         jobs = 0; cpuNanos = 0L; perStage.clear(); stages.clear()
         val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val compileNs0 = CodeGenerator.compileTime
+        val built0 = Artifacts.builds.size
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
@@ -118,6 +120,8 @@ object Dev {
         spark.catalog.clearCache()
         println(f"[prof] $name%-30s $run cpu=${cpuNanos / 1e9}%.2fs wall=$wall%.2fs " +
                 s"jobs=$jobs compiles=$compiles compile_ms=$compileMs")
+        Artifacts.builds.drop(built0).filter(_.bytes > 0).foreach(b =>
+          println(s"[prof]   built ${b.key} ms=${b.ms} rows=${b.rows} bytes=${b.bytes}"))
       }
       stages.sortBy(-_._3).take(5).foreach { case (id, n, tot, mx) =>
         println(f"[prof]   stage $id%4d tasks=$n%3d total=${tot / 1e3}%.2fs max=${mx / 1e3}%.2fs")

@@ -77,7 +77,9 @@ object Graph {
     * marks the frontier (the pairs first reached at the previous hop).
     * Each hop expands only the frontier by one edge, keeps the pairs the
     * state does not hold yet as the new frontier, and is one [[Fixpoint]]
-    * generation hash-partitioned by (s, v), the anti-join's key. Every hop
+    * generation: the union of the state and the frontier, cut as it
+    * stands (only the seed is hash-partitioned by (s, v), the anti-join's
+    * key). Every hop
     * plans the same shape (no per-hop literal), so later hops reuse the
     * first hop's generated code. With `hops = Some(h)` the search stops
     * after hop h (the sampled keys' depth cap); with `None` it runs until a
@@ -98,7 +100,6 @@ object Graph {
         .join(st, Seq("s", "v"), "left_anti")
       st.select(col("s"), col("v"), col("dd"), lit(false).as("fr"))
         .unionAll(found.select(col("s"), col("v"), col("dd"), lit(true).as("fr")))
-        .repartition(n, col("s"), col("v"))
     }((r, pass) => r.getLong(0) == 0L || hops.contains(pass))
     dist.select(col("s"), col("v"), col("dd"))
   }

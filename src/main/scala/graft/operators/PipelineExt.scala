@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{Decl, Tables, declMap}
 import graft.functions.{TextOps, VectorOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -278,8 +278,7 @@ object PipelineExt {
     "sim_ann_ivf" -> Decl(
       (s, d) => {
         val emb = Tables(s, d, "embeddings")
-        val cent = VecIndex.ivfCentroids(s, d)
-        val cells = VecIndex.ivfCells(s, d) // final (vec_id, cid) routing
+        val (cent, cells) = VecIndex.ivf(s, d) // cells: final (vec_id, cid) routing
         val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
         val probes = cent.crossJoin(broadcast(q))
           .select(col("cid"), VectorOps.cosine(col("centroid"), col("qv")).as("cscore"))
@@ -683,17 +682,19 @@ object PipelineExt {
     * bit-compatible with the relational form (SketchParitySpec). LAZY in
     * the sense that the returned frame is uncheckpointed; the centroid
     * collect is the same materialization the broadcast required. */
-  private[graft] def ivfAssignLazy(s: SparkSession, d: String, cent: DataFrame): DataFrame = {
-    val rows = cent.select(col("cid"), col("centroid")).collect()
-      .sortBy(_.getInt(0))
-    val cids = rows.map(_.getInt(0))
-    val cents = rows.map(_.getSeq[Float](1).toArray)
+  private[graft] def ivfAssignLazy(s: SparkSession, d: String, cent: DataFrame): DataFrame =
     Tables(s, d, "embeddings")
       // explicit-count repartition: the corpus is one scan split — without
       // it the whole per-row assign pass runs on one core
       .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"),
-              VectorOps.centroidAssign(col("embedding"), cids, cents).as("cid"))
+      .select(col("vec_id"), centroidAssign(cent, col("embedding")).as("cid"))
+
+  /** Each `embedding`'s nearest cell in `cent(cid, centroid)`, collected
+    * once in cid order into the native `CentroidAssign` expression. */
+  private[graft] def centroidAssign(cent: DataFrame, embedding: Column): Column = {
+    val rows = cent.select(col("cid"), col("centroid")).collect().sortBy(_.getInt(0))
+    VectorOps.centroidAssign(embedding, rows.map(_.getInt(0)),
+                             rows.map(_.getSeq[Float](1).toArray))
   }
 
   /** LAZY 64-bit SimHash pair pipeline (hamming ≤ 3 via 4×16-bit banding),
@@ -746,19 +747,6 @@ object PipelineExt {
     * 5) but bounds the worst per-shingle fan-out at 32² rows.
     */
   private[graft] val MaxShingleDf = 32
-
-  /** LAZY bigram-Jaccard near-dup pairs (id_a < id_b, jaccard ≥ 0.2) within
-    * (lang, source) groups, NOT yet checkpointed — see [[ngramJaccardPairs]].
-    */
-  private[graft] def ngramJaccardPairsLazy(s: SparkSession, d: String): (DataFrame, Seq[DataFrame]) = {
-    val (base, cached) = ngramIntersectionsLazy(s, d)
-    val out = base
-      .withColumn("jaccard",
-        round(col("n").cast("double") / (col("sa") + col("sb") - col("n")).cast("double"), 6))
-      .filter(col("jaccard") >= 0.2)
-      .select("id_a", "id_b", "jaccard")
-    (out, cached)
-  }
 
   /** LAZY df-capped shingle-intersection table — (id_a < id_b, n, sa, sb)
     * within (lang, source) groups: the shared pair-generation core that

@@ -5730,7 +5730,7 @@ object Stats {
              |FROM c""".stripMargin)),
 
     // SemDeDup-style semantic-cluster dedup — cluster the embedding space
-    // (by sim_ann_ivf's stored centroids, VecIndex.ivfCentroids), then find
+    // (by sim_ann_ivf's stored centroids, VecIndex.ivf), then find
     // near-dup pairs WITHIN clusters only: the pair space is bounded by cell size
     // instead of corpus size, which is the published SemDeDup recipe for
     // billion-document semantic dedup (at 100 TB nlist grows with the
@@ -5746,10 +5746,7 @@ object Stats {
       (s, d) => {
         val n = s.sparkContext.defaultParallelism
         val emb = Tables(s, d, "embeddings")
-        val rows = VecIndex.ivfCentroids(s, d).select(col("cid"), col("centroid")).collect()
-          .sortBy(_.getInt(0))
-        val cids = rows.map(_.getInt(0))
-        val cents = rows.map(_.getSeq[Float](1).toArray)
+        val (cent, _) = VecIndex.ivf(s, d)
         val pert = emb.select(
           (col("vec_id") + 100000L).as("vec_id"),
           concat(array(element_at(col("embedding"), 2), element_at(col("embedding"), 1)),
@@ -5757,7 +5754,7 @@ object Stats {
         val assigned = emb.select(col("vec_id"), col("embedding")).unionAll(pert)
           .repartition(n, col("vec_id"))
           .select(col("vec_id"), col("embedding"),
-                  VectorOps.centroidAssign(col("embedding"), cids, cents).as("cid"))
+                  PipelineExt.centroidAssign(cent, col("embedding")).as("cid"))
           .repartition(n, col("cid"))
         assigned.as("a")
           .join(assigned.as("b").hint("shuffle_hash"),

@@ -201,7 +201,8 @@ object Fixpoint {
     (Bridge.measured(gen, row.getLong(0)), Row.fromSeq(row.toSeq.tail))
   }
 
-  private def release(gen: DataFrame): Unit = gen.queryExecution.logical match {
+  /** Drop a cut's checkpoint blocks (a no-op for any other plan). */
+  private[graft] def release(gen: DataFrame): Unit = gen.queryExecution.logical match {
     case r: LogicalRDD => r.rdd.unpersist(blocking = false)
     case _ =>
   }
@@ -460,9 +461,9 @@ object AnnIndex {
     * cid-partitioned cells are what persists; no probe ever re-runs a
     * k-means iteration. */
   def buildIvfIndex(s: SparkSession, d: String, warehouse: String): Unit = {
-    VecIndex.ivfCentroids(s, d)
-      .coalesce(1).write.mode("overwrite").parquet(s"$warehouse/ivf_centroids")
-    Tables(s, d, "embeddings").join(VecIndex.ivfCells(s, d), "vec_id")
+    val (cent, cells) = VecIndex.ivf(s, d)
+    cent.coalesce(1).write.mode("overwrite").parquet(s"$warehouse/ivf_centroids")
+    Tables(s, d, "embeddings").join(cells, "vec_id")
       .select(col("vec_id"), col("embedding"), col("cid"))
       .write.mode("overwrite").partitionBy("cid").parquet(s"$warehouse/ivf_cells")
   }
@@ -492,17 +493,18 @@ object AnnIndex {
 
 /** Shared df-capped co-purchase PAIR INDEX — the common machinery of the
   * customer-pair link-prediction keys (`graph_adamic_adar`,
-  * `graph_jaccard_neighbors`), built ONCE per (JVM, sf dir) and probed by
-  * every consumer (the AnnIndex warehouse precedent: round 11 computed
-  * this exchange independently in both keys, ~50 s of duplicated work in
-  * the driver bench).
+  * `graph_jaccard_neighbors`), stored ONCE per (JVM, sf dir) through
+  * `Artifacts.table` and probed by every consumer (round 11 computed this
+  * exchange independently in both keys, ~50 s of duplicated work in the
+  * driver bench).
   *
   *  - `pairs(a, b, common, aa_raw)` — each unordered customer pair
   *    (a < b) with its per-pair aggregates: common = #shared parts and
-  *    aa_raw = the UNROUNDED Adamic–Adar fold Σ 1/ln(df) in df order.
-  *    One co-partitioned self-join of the capped edges on the part;
-  *    per-part fan-out is ≤ C(MaxPartDf, 2) pairs — bounded by the cap,
-  *    never the corpus; total volume Σ C(df,2) ≤ (cap/2)·|edges|.
+  *    aa_raw = the UNROUNDED Adamic–Adar fold Σ 1/ln(df) in df order
+  *    ([[buildPairs]]). One co-partitioned self-join of the capped edges
+  *    on the part; per-part fan-out is ≤ C(MaxPartDf, 2) pairs — bounded
+  *    by the cap, never the corpus; total volume Σ C(df,2) ≤
+  *    (cap/2)·|edges|.
   *  - `deg(c, deg)` — per-customer distinct-part degree over the SAME
   *    capped graph (df ≤ cap, including df = 1 parts).
   */
@@ -514,58 +516,64 @@ object PairIndex {
 
   val MaxPartDf = 40
 
-  private def ensure(s: SparkSession, d: String): String =
-    Artifacts.dir("pairidx", d) { root =>
+  private def ensure(s: SparkSession, d: String): String => DataFrame =
+    Artifacts.table(s, "pairidx", d) { w =>
       val n = s.sparkContext.defaultParallelism
       // e(c, p, df): distinct edges hashed by part once — the distinct, the
       // df window and the pair self-join all reuse that partitioning, and
       // persist shares one materialization between deg and pairs
-      val e = Tables(s, d, "orders")
+      val e = w.temp(Tables(s, d, "orders")
         .join(Tables(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
         .repartition(n, col("p"))
         .distinct()
         .withColumn("df", count(lit(1)).over(Window.partitionBy("p")))
         .filter(col("df") <= MaxPartDf)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      e.groupBy("c").agg(count(lit(1)).as("deg"))
-        .write.parquet(s"$root/deg")
-      buildPairs(e).write.parquet(s"$root/pairs")
-      e.unpersist()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      w("deg", e.groupBy("c").agg(count(lit(1)).as("deg")))
+      w("pairs", buildPairs(e))
     }
 
   /** The per-pair aggregates over the df-capped edge table `e(c, p, df)`,
     * pre-aggregated PER PAIR so probes are pure scans + bounded top-k:
     *   common  = #shared parts
-    *   aa_raw  = Σ 1/ln(df) over the shared parts, folded in df order
-    *             through a df histogram h(k) = #shared parts with df = k:
-    *             ((0.0 + h(2)/ln 2) + h(3)/ln 3) + … — an empty slot adds
-    *             +0.0, so the sum is the sparse df-ordered fold bit for
-    *             bit. UNROUNDED; consumers round only after their top-k
-    *             cut (round(double, 6) is a per-row BigDecimal).
-    * The histogram is MaxPartDf − 1 LONG slots per pair, bounded by the cap.
+    *   aa_raw  = Σ 1/ln(df) over the shared parts, folded in df order:
+    *             each pair's (df, cnt) cells, cnt = #shared parts with
+    *             that df, are summed by one running window in df order,
+    *             ((cnt₁/ln df₁) + cnt₂/ln df₂) + …, and the pair's last
+    *             cell (no `lead`) carries the totals. UNROUNDED; consumers
+    *             round only after their top-k cut (round(double, 6) is a
+    *             per-row BigDecimal).
+    * The join rows are hashed by (a, b) once, so the cell count and the
+    * window share one exchange, and each pair carries at most
+    * MaxPartDf − 1 narrow cells.
     */
   private[graft] def buildPairs(e: DataFrame): DataFrame = {
-    val dfs = 2 to MaxPartDf
+    val n = e.sparkSession.sparkContext.defaultParallelism
+    val w = Window.partitionBy("a", "b").orderBy("df")
+    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     e.as("x").join(e.as("y"), col("x.p") === col("y.p") && col("x.c") < col("y.c"))
-      .groupBy(col("x.c").as("a"), col("y.c").as("b"))
-      .agg(count(lit(1)).as("common"),
-           dfs.map(k => count_if(col("x.df") === k).as(s"h$k")): _*)
-      .select(col("a"), col("b"), col("common"),
-              dfs.foldLeft(lit(0.0))((acc, k) =>
-                acc + col(s"h$k") / ln(lit(k.toDouble))).as("aa_raw"))
+      .select(col("x.c").as("a"), col("y.c").as("b"), col("x.df").as("df"))
+      .repartition(n, col("a"), col("b"))
+      .groupBy("a", "b", "df").agg(count(lit(1)).as("cnt"))
+      .select(col("a"), col("b"),
+              // a running sum is nullable; the stored column stays NOT NULL
+              coalesce(sum(col("cnt")).over(run), lit(0L)).as("common"),
+              sum(col("cnt") / ln(col("df"))).over(run).as("aa_raw"),
+              lead(col("df"), 1).over(w).as("next_df"))
+      .filter(col("next_df").isNull)
+      .drop("next_df")
   }
 
-  def pairs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensure(s, d)}/pairs")
-  def deg(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ensure(s, d)}/deg")
+  def pairs(s: SparkSession, d: String): DataFrame = ensure(s, d)("pairs")
+  def deg(s: SparkSession, d: String): DataFrame = ensure(s, d)("deg")
 }
 
 /** Shared df-capped shingle-intersection INDEX — the common core of the
   * three bigram-overlap dedup keys (`dedup_ngram_jaccard`,
-  * `dedup_containment`, `dedup_connected_components`), built ONCE per
-  * (JVM, sf dir) and probed by every consumer (round-12: each key
+  * `dedup_containment`, `dedup_connected_components`), stored ONCE per
+  * (JVM, sf dir) through `Artifacts.table` as the one table `inter` and
+  * probed by every consumer (round-12: each key
   * independently re-ran `PipelineExt.ngramIntersectionsLazy` — the shingle
   * explode, df aggregate, and inverted-index self-join, ~45 s of task CPU
   * per bench pass at sf0.1 — to finalize a different similarity formula
@@ -582,29 +590,27 @@ object ShingleIndex {
   /** The (id_a < id_b, n, sa, sb) pair universe within (lang, source)
     * groups: n = |shared df-capped shingles|, sa/sb = kept-shingle set
     * sizes of each side. */
-  def intersections(s: SparkSession, d: String): DataFrame = {
-    val root = Artifacts.dir("shingleidx", d) { r =>
+  def intersections(s: SparkSession, d: String): DataFrame =
+    Artifacts.table(s, "shingleidx", d) { w =>
       val (base, cached) = PipelineExt.ngramIntersectionsLazy(s, d)
-      base.write.parquet(s"$r/inter")
-      cached.foreach(_.unpersist())
-    }
-    s.read.parquet(s"$root/inter")
-  }
+      cached.foreach(w.temp)
+      w("inter", base)
+    }("inter")
 }
 
 /** The one vector quantizer: seed centroids, assign each vector to its
   * nearest centroid, recompute (Lloyd; the partition-by-reference-point
   * step under every clustering, PQ and IVF key). It owns the trainings and
-  * the artifacts they build, each ONCE per (JVM, sf dir) into
-  * `Artifacts.dir("vecidx_<family>")` and probed by every consumer (the
-  * PairIndex/ShingleIndex precedent):
+  * the artifacts they build, each stored ONCE per (JVM, sf dir) through
+  * `Artifacts.table(s, "vecidx_<family>", d)` and probed by every consumer
+  * (the PairIndex/ShingleIndex precedent); the trained states a family's
+  * later tables derive from are released once its tables are written:
   *  - `q`: the integer-quantized dimension table ([[quantized]]);
   *  - `pq`: `sim_ann_pq`'s subspace codebooks and codes ([[pq]]);
   *  - `ivfpq`: `sim_ann_ivfpq_residual`'s coarse centroids, residual
   *    codebooks and codes ([[ivfpq]]);
   *  - `ivf`: the float centroids and cell routing of `sim_ann_ivf`,
-  *    `dedup_semantic_cluster` and `AnnIndex.buildIvfIndex`
-  *    ([[ivfCentroids]], [[ivfCells]]).
+  *    `dedup_semantic_cluster` and `AnnIndex.buildIvfIndex` ([[ivf]]).
   *
   * Integer grid: points are `(vec_id, keys…, i, x)` rows, and a centroid
   * state is `(keys…, cluster, i, cs, cn)` — per dimension either the exact
@@ -623,17 +629,14 @@ object VecIndex {
     * `s_id = i div 8`: round(x·1000) on the float-widened double is
     * identical in both engines, and |x| ≤ 303 on this data, so every later
     * product stays far inside int64 AND double-exact range. */
-  private[graft] def quantized(s: SparkSession, d: String): DataFrame = {
-    val root = Artifacts.dir("vecidx_q", d) { r =>
-      Tables(s, d, "embeddings")
+  private[graft] def quantized(s: SparkSession, d: String): DataFrame =
+    Artifacts.table(s, "vecidx_q", d) { w =>
+      w("q", Tables(s, d, "embeddings")
         .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "e")))
         .select(col("vec_id"), col("i"),
                 round(col("e").cast("double") * 1000).cast("bigint").as("x"),
-                expr("i div 8").as("s_id"))
-        .write.parquet(s"$r/q")
-    }
-    s.read.parquet(s"$root/q")
-  }
+                expr("i div 8").as("s_id")))
+    }("q")
 
   /** Seed state: the `k` lowest vec_ids' points, each a singleton cluster
     * keyed by its own vec_id. */
@@ -697,14 +700,13 @@ object VecIndex {
     * k = 4 exact Lloyd of 2 passes — and every vector's codes
     * `(vec_id, s_id, code)`. */
   private[graft] def pq(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val root = Artifacts.dir("vecidx_pq", d) { r =>
+    val t = Artifacts.table(s, "vecidx_pq", d) { w =>
       val q = quantized(s, d)
-      val state = lloyd(s, d, q, Seq("s_id"), 4, 2, "PQ codebooks")
-      state.write.parquet(s"$r/state")
-      nearest(q, state, Seq("s_id")).withColumnRenamed("cluster", "code")
-        .write.parquet(s"$r/codes")
+      val state = w.temp(lloyd(s, d, q, Seq("s_id"), 4, 2, "PQ codebooks"))
+      w("state", state)
+      w("codes", nearest(q, state, Seq("s_id")).withColumnRenamed("cluster", "code"))
     }
-    (s.read.parquet(s"$root/state"), s.read.parquet(s"$root/codes"))
+    (t("state"), t("codes"))
   }
 
   /** IVF-PQ: coarse centroids `(cell, i, cc)` (k = 4), residual codebooks
@@ -712,29 +714,25 @@ object VecIndex {
     * `(vec_id, cell, s_id, code)`; both trainings are 2 rounded-mean
     * passes, so every value is an integer on the milli grid. */
   private[graft] def ivfpq(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
-    val root = Artifacts.dir("vecidx_ivfpq", d) { r =>
+    val t = Artifacts.table(s, "vecidx_ivfpq", d) { w =>
       val q = quantized(s, d)
-      val coarse = lloyd(s, d, q, Nil, 4, 2, "IVFPQ coarse quantizer", rounded = true)
-      coarse.select(col("cluster").as("cell"), col("i"), col("cs").as("cc"))
-        .write.parquet(s"$r/coarse")
+      val coarse = w.temp(lloyd(s, d, q, Nil, 4, 2, "IVFPQ coarse quantizer", rounded = true))
+      w("coarse", coarse.select(col("cluster").as("cell"), col("i"), col("cs").as("cc")))
       // integer residuals vs the assigned cell's centroid
-      val resid = q.join(nearest(q, coarse, Nil), "vec_id")
+      val resid = w.temp(q.join(nearest(q, coarse, Nil), "vec_id")
         .join(broadcast(coarse), Seq("cluster", "i"))
         .select(col("vec_id"), col("cluster").as("cell"), col("s_id"), col("i"),
                 (col("x") - col("cs")).as("x"))
-        .localCheckpoint(true)
+        .localCheckpoint(true))
       // 8-entry codebooks are the practical floor: k=4 measured recall
       // 0.13 at sf0.001, k=8 clears the 0.15 bound, broadcast stays tiny
-      val cb = lloyd(s, d, resid, Seq("s_id"), 8, 2, "IVFPQ residual codebooks",
-                     rounded = true)
-      cb.select(col("s_id"), col("cluster").as("code"), col("i"), col("cs").as("cb"))
-        .write.parquet(s"$r/cb")
-      nearest(resid, cb, Seq("s_id"), Seq("vec_id", "cell"))
-        .withColumnRenamed("cluster", "code")
-        .write.parquet(s"$r/codes")
+      val cb = w.temp(lloyd(s, d, resid, Seq("s_id"), 8, 2, "IVFPQ residual codebooks",
+                            rounded = true))
+      w("cb", cb.select(col("s_id"), col("cluster").as("code"), col("i"), col("cs").as("cb")))
+      w("codes", nearest(resid, cb, Seq("s_id"), Seq("vec_id", "cell"))
+        .withColumnRenamed("cluster", "code"))
     }
-    (s.read.parquet(s"$root/coarse"), s.read.parquet(s"$root/cb"),
-     s.read.parquet(s"$root/codes"))
+    (t("coarse"), t("cb"), t("codes"))
   }
 
   /** IVF seed centroids `(cid, centroid)`: each label's mean vector. */
@@ -743,26 +741,20 @@ object VecIndex {
       Tables(s, d, "embeddings").join(broadcast(PipelineExt.ivfLabelSeed(s, d)), "label")
         .select(col("cid"), col("embedding")))
 
-  /** The IVF artifact directory: the label-seeded float centroids after 2
-    * Lloyd passes, and the final (vec_id, cid) routing of every vector. */
-  private def ivf(s: SparkSession, d: String): String =
-    Artifacts.dir("vecidx_ivf", d) { r =>
+  /** IVF: the label-seeded float centroids `(cid, centroid)` after 2
+    * Lloyd passes, and every vector's final cell `(vec_id, cid)`. */
+  private[graft] def ivf(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val t = Artifacts.table(s, "vecidx_ivf", d) { w =>
       val emb = Tables(s, d, "embeddings")
       val step = (c: DataFrame) => PipelineExt.ivfCentroidOf(
         emb.join(PipelineExt.ivfAssignLazy(s, d, c), "vec_id").select(col("cid"), col("embedding")))
-      val cent = Fixpoint(ivfSeed(s, d).localCheckpoint(true), Nil, 2, "IVF k-means")(step)(
-        (_, pass) => pass == 2)
-      cent.write.parquet(s"$r/cent")
-      PipelineExt.ivfAssignLazy(s, d, cent).write.parquet(s"$r/cells")
+      val cent = w.temp(Fixpoint(w.temp(ivfSeed(s, d).localCheckpoint(true)), Nil, 2,
+                                 "IVF k-means")(step)((_, pass) => pass == 2))
+      w("cent", cent)
+      w("cells", PipelineExt.ivfAssignLazy(s, d, cent))
     }
-
-  /** The trained IVF centroids `(cid, centroid)`. */
-  private[graft] def ivfCentroids(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ivf(s, d)}/cent")
-
-  /** Every vector's IVF cell `(vec_id, cid)`. */
-  private[graft] def ivfCells(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${ivf(s, d)}/cells")
+    (t("cent"), t("cells"))
+  }
 }
 
 /** Per-enum-key cumulative weight over a DATA-DERIVED value grid — the

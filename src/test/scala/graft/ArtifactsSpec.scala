@@ -5,7 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The build-once memo's contract: builds may nest (even on keys whose
   * hash codes collide), concurrent callers of one key share ONE build, a
-  * failed build caches nothing, and a stopped session's entries go.
+  * failed build caches nothing, and a stopped session's entries go. A
+  * stored table reads back with the schema it was written with and starts
+  * no job, its build record counts exactly the rows and part-file bytes it
+  * wrote, and nothing the build persisted outlives it.
   */
 class ArtifactsSpec extends AnyFunSuite with SharedSpark {
 
@@ -38,7 +41,7 @@ class ArtifactsSpec extends AnyFunSuite with SharedSpark {
     threads.foreach(_.join(30000))
     assert(seen.size == 4 && seen.toArray.forall(_ == "v"))
     assert(built.get == 1, s"${built.get} builds for one key")
-    assert(Artifacts.builds.count(_._1 == key.toString) == 1)
+    assert(Artifacts.builds.count(_.key == key.toString) == 1)
   }
 
   test("a build that throws caches nothing; the next caller retries") {
@@ -48,6 +51,58 @@ class ArtifactsSpec extends AnyFunSuite with SharedSpark {
     }
     assert(Artifacts.memo(key)(7) == 7)
     assert(Artifacts.memo(key)(8) == 7)
+  }
+
+  // two small tables stored under a fresh name, as one build
+  private def stored(tag: String): (String, String => org.apache.spark.sql.DataFrame) = {
+    val name = s"spec_${tag}_${System.nanoTime()}"
+    (name, Artifacts.table(spark, name, "no-sf") { w =>
+      w("a", spark.range(0, 100, 1, 3).toDF("id"))
+      w("b", spark.range(7).selectExpr("id", "CAST(id AS DOUBLE) / 3 AS x"))
+    })
+  }
+
+  private def dirOf(df: org.apache.spark.sql.DataFrame): java.nio.file.Path =
+    java.nio.file.Paths.get(new java.net.URI(df.inputFiles.head)).getParent
+
+  test("reading a stored table starts no job and keeps the written schema") {
+    val sf = "/root/testdata/sf0.001"
+    graft.operators.PairIndex.pairs(spark, sf).schema
+    assert(jobsOf(graft.operators.PairIndex.deg(spark, sf)) == 0,
+           "reading the stored degree table started a job")
+    val (_, t) = stored("read")
+    var a: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { a = t("a") } == 0, "a first read of a stored table started a job")
+    Seq(a, t("b"), graft.operators.PairIndex.pairs(spark, sf),
+        graft.operators.PairIndex.deg(spark, sf)).foreach { df =>
+      assert(df.schema == spark.read.parquet(dirOf(df).toString).schema,
+             s"${dirOf(df)} reads with a schema other than its files'")
+    }
+    assert(a.count() == 100)
+  }
+
+  test("a stored build records its rows and part-file bytes exactly") {
+    val (name, t) = stored("record")
+    val b = Artifacts.builds.filter(_.key == ("stored", name, "no-sf").toString)
+    assert(b.size == 1, s"${b.size} records for one stored build")
+    assert(b.head.rows == t("a").count() + t("b").count())
+    val parts = Seq("a", "b").flatMap { n =>
+      java.nio.file.Files.list(dirOf(t(n))).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.startsWith("part-"))
+    }
+    assert(parts.nonEmpty && b.head.bytes == parts.map(java.nio.file.Files.size(_)).sum)
+  }
+
+  test("a build's persisted and checkpointed temporaries are released when it ends") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Artifacts.table(spark, s"spec_temp_${System.nanoTime()}", "no-sf") { w =>
+      val p = w.temp(spark.range(10).toDF("id").persist())
+      val c = w.temp(spark.range(5).toDF("id").localCheckpoint(true))
+      w("t", p.join(c, "id"))
+    }
+    val kept = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(kept.isEmpty, s"RDDs ${kept.mkString(", ")} outlived their build")
   }
 
   test("entries keyed by a stopped session are evicted") {

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class PairIndexSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
-  private def builds = Artifacts.builds.count(_._1 == ("dir", "pairidx", sf).toString)
+  private def builds = Artifacts.builds.count(_.key == ("stored", "pairidx", sf).toString)
 
   test("one build serves adamic-adar, jaccard, and direct probes") {
     val before = builds

@@ -35,7 +35,7 @@ class ScaleSpec extends AnyFunSuite with SharedSpark {
     val lazyPipelines = Seq(
       "dedup_near_minhash" -> operators.Pipeline.minhashPairs(spark, sf),
       "dedup_simhash" -> operators.PipelineExt.simhashPairs(spark, sf),
-      "dedup_ngram_jaccard" -> operators.PipelineExt.ngramJaccardPairsLazy(spark, sf),
+      "dedup_ngram_jaccard" -> operators.PipelineExt.ngramIntersectionsLazy(spark, sf),
       "sim_ann_ivf (one Lloyd round)" -> ((ivfLazy, Seq.empty[org.apache.spark.sql.DataFrame])))
     val offenders = lazyPipelines.flatMap { case (name, (df, cached)) =>
       val plan = df.queryExecution.executedPlan.toString
@@ -353,7 +353,7 @@ class ScaleSpec extends AnyFunSuite with SharedSpark {
     // shuffle) rather than in the logical plan on top of it
     Seq("dedup_near_minhash" -> operators.Pipeline.minhashPairs(spark, sf),
         "dedup_simhash" -> operators.PipelineExt.simhashPairs(spark, sf),
-        "dedup_ngram_jaccard" -> operators.PipelineExt.ngramJaccardPairsLazy(spark, sf))
+        "dedup_ngram_jaccard" -> operators.PipelineExt.ngramIntersectionsLazy(spark, sf))
       .foreach { case (name, (df, cached)) =>
         val plan = df.queryExecution.optimizedPlan
         val reps = plan.collect {
@@ -450,7 +450,7 @@ class ScaleSpec extends AnyFunSuite with SharedSpark {
   // aggregate + `df <= 32` filter must appear inside a cached plan (proof
   // the cap is upstream of the pair fan-out, not applied to its output).
   test("ngram-Jaccard caps shingle document frequency upstream of the self-join") {
-    val (pairs, cached) = operators.PipelineExt.ngramJaccardPairsLazy(spark, sf)
+    val (pairs, cached) = operators.PipelineExt.ngramIntersectionsLazy(spark, sf)
     val plan = pairs.queryExecution.optimizedPlan
     val cachedPlans = plan.collect {
       case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ShingleIndexSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
-  private def builds = Artifacts.builds.count(_._1 == ("dir", "shingleidx", sf).toString)
+  private def builds = Artifacts.builds.count(_.key == ("stored", "shingleidx", sf).toString)
 
   test("one build serves jaccard, containment, and connected components") {
     val before = builds

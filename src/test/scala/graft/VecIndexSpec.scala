@@ -18,8 +18,8 @@ class VecIndexSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
   private val families =
-    Set("q", "pq", "ivfpq", "ivf").map(f => ("dir", s"vecidx_$f", sf).toString)
-  private def builds = Artifacts.builds.count(b => families(b._1))
+    Set("q", "pq", "ivfpq", "ivf").map(f => ("stored", s"vecidx_$f", sf).toString)
+  private def builds = Artifacts.builds.count(b => families(b.key))
 
   test("one build serves the whole ANN ladder, twice over") {
     val before = builds
@@ -52,5 +52,17 @@ class VecIndexSpec extends AnyFunSuite with SharedSpark {
     dedup(spark, sf).collect()
     val warm = jobsOf(dedup(spark, sf).collect())
     assert(warm <= 10, s"warm dedup_semantic_cluster ran $warm jobs")
+  }
+
+  // a warm probe reads its stored tables without a job each: pq reads the
+  // quantized table, the codebooks and the codes; ivfpq four tables.
+  // Counted under count(), as `graft.Dev prof` runs keys
+  test("warm ANN probes start no job to read their stored tables") {
+    Seq("sim_ann_pq" -> 7, "sim_ann_ivfpq_residual" -> 9).foreach { case (key, bound) =>
+      val q = SparkEntry.queries(key)
+      q(spark, sf).count()
+      val warm = jobsOf(q(spark, sf).count())
+      assert(warm <= bound, s"warm $key ran $warm jobs, bound $bound")
+    }
   }
 }
